@@ -38,11 +38,13 @@ dominant symbol in real telemetry) are consumed in bulk numpy fills via a
 set-bit index; only non-repeat entries pay a Python iteration (measured
 45× on repeat-heavy series, ≈par on fully dense ones — BENCH/NOTES.md).
 
-Spark integration: ``encode_segments`` groups points into
-(group…, tier-window) segments via ``applyInPandas`` — the Arrow-batched
-vectorized-UDF boundary BASELINE.json's input_hint mandates (no per-row
-Python) — emitting one BinaryType blob per segment. ``decode_segments``
-inverts it. Round-trip is bit-exact (NaNs included: payloads are raw
+Spark integration: ``encode_segments`` shuffles points on (group…,
+tier-window segment), sorts each partition and encodes it in ONE
+``mapInArrow`` call — the Arrow-batched vectorized-UDF boundary
+BASELINE.json's input_hint mandates (no per-row Python), paid per batch
+rather than per segment; segments are cut by vectorized key-change
+detection, one BinaryType blob each. ``decode_segments`` inverts it.
+Round-trip is bit-exact (NaNs included: payloads are raw
 float64 bit patterns).
 """
 
@@ -52,6 +54,8 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -420,25 +424,22 @@ def encode_segments(
     t_col: str,
     value_col: str,
     segment_width: int,
-    coarse_partitions: int | None = 256,
 ) -> DataFrame:
     """(group…, t, v) points → one Gorilla blob per (group…, segment window).
 
-    Arrow-batched ``applyInPandas``; explicit ``seg_start =
-    floor(t/width)*width`` key keeps segments bounded and partition-
-    prunable. Null values are stored as NaN bit patterns (restored as
-    nulls on decode).
+    Explicit ``seg_start = floor(t/width)*width`` key keeps segments
+    bounded and partition-prunable. Null values are stored as NaN bit
+    patterns (restored as nulls on decode); null group keys are kept.
 
-    ``coarse_partitions`` (default 256): instead of one pandas call per
-    SEGMENT (hundreds of thousands of tiny groups → per-group Arrow/pandas
-    overhead dominates, measured ~250 µs/group), shuffle on
-    ``hash(group, seg) % coarse_partitions`` and encode ALL segments of a
-    coarse bucket in one pandas call (pandas C-level groupby inside).
-    Same output, ~5× faster at 10^5 segments; also the shape that scales —
-    the shuffle key count is capped, and a hot url's segments spread over
-    buckets by the seg component of the hash. ``None`` → per-segment
-    groups (reference shape, used by tests for equivalence)."""
+    One path, paid per Arrow batch rather than per segment: shuffle on
+    (group…, seg), sort each partition by (group…, seg, t), then one
+    ``mapInArrow`` call per partition cuts its batches into segments by
+    vectorized key-change detection (:func:`_segment_starts`) and encodes
+    each. A segment split across two batches is carried into the next.
+    Arrow, not pandas, so keys compare and come back in their exact type
+    (a nullable long key would turn float64 in pandas)."""
     gv = list(group_vars)
+    keys = [*gv, "__seg"]
     seg = (F.floor(F.col(t_col) / F.lit(segment_width)) * segment_width).cast("long")
     pts = points.select(*gv, seg.alias("__seg"), F.col(t_col).alias("__t"),
                         F.col(value_col).cast("double").alias("__v"))
@@ -447,57 +448,75 @@ def encode_segments(
         + [SEGMENT_SUFFIX_SCHEMA]
     )
 
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__t")
-        ts = pdf["__t"].to_numpy(dtype=np.int64)
-        vals = pdf["__v"].to_numpy(dtype=np.float64)  # nulls → NaN
-        row = {g: [pdf[g].iloc[0]] for g in gv}
-        row.update(
-            seg_start=[int(pdf["__seg"].iloc[0])],
-            n_points=[len(ts)],
-            t_min=[int(ts[0])], t_max=[int(ts[-1])],
-            codec=["gorilla-v1"],
-            blob=[gorilla_encode(ts, vals)],
-        )
-        return pd.DataFrame(row)
+    def enc(batches):
+        open_: list[pa.Table] = []  # pieces of the segment still open
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
+            if not tbl.num_rows:
+                continue
+            starts = _segment_starts(tbl, keys, open_[-1] if open_ else None)
+            if not len(starts):
+                open_.append(tbl)
+                continue
+            if open_:
+                yield from _encode_runs(
+                    pa.concat_tables([*open_, tbl.slice(0, starts[0])]), [0], gv)
+            if len(starts) > 1:
+                yield from _encode_runs(
+                    tbl.slice(starts[0], starts[-1] - starts[0]), starts[:-1] - starts[0], gv)
+            open_ = [tbl.slice(starts[-1])]
+        if open_:
+            yield from _encode_runs(pa.concat_tables(open_), [0], gv)
 
-    if coarse_partitions is None:
-        return pts.groupBy(*gv, "__seg").applyInPandas(enc, schema=out_schema)
-
-    def enc_many(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*gv, "__seg", "__t"], kind="mergesort")
-        cols: dict[str, list] = {g: [] for g in gv}
-        segs: list[int] = []
-        npts: list[int] = []
-        tmin: list[int] = []
-        tmax: list[int] = []
-        blobs: list[bytes] = []
-        # dropna=False: Spark's groupBy keeps null group keys; the pandas
-        # default would silently DROP those points from the encoded output
-        for key, sub in pdf.groupby([*gv, "__seg"], sort=False, dropna=False):
-            if not isinstance(key, tuple):  # single grouping column
-                key = (key,)
-            ts = sub["__t"].to_numpy(dtype=np.int64)
-            vals = sub["__v"].to_numpy(dtype=np.float64)
-            for g, kv in zip(gv, key):
-                cols[g].append(kv)
-            segs.append(int(key[-1]))
-            npts.append(len(ts))
-            tmin.append(int(ts[0]))
-            tmax.append(int(ts[-1]))
-            blobs.append(gorilla_encode(ts, vals))
-        return pd.DataFrame({
-            **cols, "seg_start": segs, "n_points": npts,
-            "t_min": tmin, "t_max": tmax,
-            "codec": ["gorilla-v1"] * len(segs), "blob": blobs,
-        })
-
-    part = F.pmod(F.xxhash64(*gv, F.col("__seg")), F.lit(coarse_partitions))
     return (
-        pts.withColumn("__p", part)
-        .groupBy("__p")
-        .applyInPandas(enc_many, schema=out_schema)
+        pts.repartition(*keys)
+        .sortWithinPartitions(*keys, "__t")
+        .mapInArrow(enc, schema=out_schema)
     )
+
+
+def _segment_starts(tbl: pa.Table, keys: Sequence[str], prev: pa.Table | None) -> np.ndarray:
+    """Rows of ``tbl`` where a new segment begins: a key differs from the
+    row before (nulls equal nulls, NaN equals NaN, as in Spark's grouping).
+    Row 0 is compared with the last row of ``prev``, the segment left open
+    by the previous batch; without ``prev`` it always begins one."""
+    if prev is not None:
+        tbl = pa.concat_tables([prev.slice(prev.num_rows - 1).select(keys), tbl.select(keys)])
+    n = tbl.num_rows
+    change = np.zeros(n, dtype=bool)
+    change[0] = True
+    for k in keys:
+        col = tbl.column(k)
+        cur, before = col.slice(1), col.slice(0, n - 1)
+        differs = pc.fill_null(pc.not_equal(cur, before), False)
+        if pa.types.is_floating(col.type):
+            both_nan = pc.fill_null(pc.and_(pc.is_nan(cur), pc.is_nan(before)), False)
+            differs = pc.and_not(differs, both_nan)
+        differs = pc.or_(differs, pc.not_equal(pc.is_null(cur), pc.is_null(before)))
+        change[1:] |= differs.to_numpy()
+    return np.flatnonzero(change[1:] if prev is not None else change)
+
+
+def _encode_runs(tbl: pa.Table, starts, group_vars: Sequence[str]):
+    """Encode the segments of ``tbl``, one beginning at each of ``starts``
+    (ascending, the first 0) and running to the next; yields the output
+    record batches."""
+    starts = np.asarray(starts, dtype=np.int64)
+    ends = np.append(starts[1:], tbl.num_rows)
+    ts = tbl.column("__t").to_numpy()
+    vals = pc.fill_null(tbl.column("__v"), np.nan).to_numpy()  # nulls → NaN
+    first = pa.array(starts)
+    out = {g: tbl.column(g).take(first) for g in group_vars}
+    out.update(
+        seg_start=tbl.column("__seg").take(first),
+        n_points=pa.array(ends - starts),
+        t_min=pa.array(ts[starts]),
+        t_max=pa.array(ts[ends - 1]),
+        codec=pa.array(["gorilla-v1"] * len(starts), pa.string()),
+        blob=pa.array([gorilla_encode(ts[a:b], vals[a:b]) for a, b in zip(starts, ends)],
+                      pa.binary()),
+    )
+    yield from pa.table(out).to_batches()
 
 
 def decode_segments(

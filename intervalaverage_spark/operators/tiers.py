@@ -26,6 +26,11 @@ State schema per (group_vars…, ws, we):
     sum_wv_<v>, nobs_<v>                     — weighted-mean state
     prefix_<v>, suffix_<v>, best_<v>         — maxgap state
 
+``rollup_tiers`` computes every tier from raw in one plan (x × tiers, the
+window width a column keyed by tier) — the incremental job's single tier
+pass. ``rollup_cascade`` merges a finer tier's state instead, for when raw
+has aged out.
+
 ``finalize`` turns state into reference-semantics points (same columns as
 :func:`interval_average`), optionally gap-filling empty windows against a
 dense per-key grid (unmatched-y semantics, src/code.cpp:32-50).
@@ -37,7 +42,7 @@ reference's single-pass run accumulation — differential-tested).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -132,7 +137,7 @@ def _state_agg(
 
 def rollup_from_raw(
     x: DataFrame,
-    width: int,
+    width: int | Column,
     value_vars: Sequence[str],
     group_vars: Sequence[str] = (),
     interval_vars: tuple[str, str] = ("start", "end"),
@@ -149,7 +154,11 @@ def rollup_from_raw(
     per interval (shareable with neighboring intervals) go through the
     shuffled aggregate — ~2 rows/interval instead of len/width. At 10^7+
     windows this removes a 10^7-group hash aggregate from the hot path
-    (measured ~6× on the 1h tier)."""
+    (measured ~6× on the 1h tier).
+
+    ``width`` may be a Column over ``group_vars`` (a per-row window width,
+    as :func:`rollup_tiers` passes); every window expression then reads it
+    per row, and the group keys keep rows of different widths apart."""
     group_vars, value_vars = list(group_vars), list(value_vars)
     s, e = (F.col(interval_vars[0]).cast("long"), F.col(interval_vars[1]).cast("long"))
     base = x.select(
@@ -212,6 +221,31 @@ def rollup_from_raw(
         ]
     interior = it.select(*icols)
     return boundary.unionByName(interior)
+
+
+def rollup_tiers(
+    x: DataFrame,
+    widths: Mapping[str, int],
+    value_vars: Sequence[str],
+    group_vars: Sequence[str] = (),
+) -> DataFrame:
+    """Every tier from raw in ONE plan: the state of each tier name →
+    width in ``widths``, tagged with the tier name in column ``tier``.
+
+    x × tiers: each raw row is repeated once per tier, and one
+    :func:`rollup_from_raw` runs over the result with the window width a
+    column (a CASE on the tier) and the tier added to the window and group
+    keys. Rows of tier ``t`` equal ``rollup_from_raw(x, widths[t], …)``
+    (tested). One plan instead of one per tier: x is scanned once, the
+    boundary windows of all tiers share one exchange, and the result is
+    persisted, counted and written once."""
+    tier = F.col("tier")
+    (name0, w0), *rest = widths.items()
+    width = F.when(tier == name0, F.lit(w0))
+    for name, w in rest:
+        width = width.when(tier == name, F.lit(w))
+    tagged = x.select("*", F.explode(F.array(*map(F.lit, widths))).alias("tier"))
+    return rollup_from_raw(tagged, width, value_vars, [*group_vars, "tier"])
 
 
 def rollup_cascade(

@@ -25,13 +25,20 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
+import pyarrow as pa
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-MANIFEST_SCHEMA = (
-    "tier string, p long, input_fingerprint long, input_rows long, "
-    "output_rows long, output_checksum long"
+#: one row per (tier, bucket); Arrow types map to string, long × 5
+MANIFEST_ARROW = pa.schema(
+    [("tier", pa.string())]
+    + [(c, pa.int64()) for c in ("p", "input_fingerprint", "input_rows", "output_rows",
+                                 "output_checksum")]
 )
+MANIFEST_SCHEMA = from_arrow_schema(MANIFEST_ARROW)
 
 
 def with_bucket(df: DataFrame, key_col: str, n_buckets: int, out: str = "p") -> DataFrame:
@@ -54,22 +61,54 @@ def fingerprint_partitions(df: DataFrame, part_col: str = "p") -> DataFrame:
     )
 
 
+class ManifestError(RuntimeError):
+    """The lineage manifest exists but cannot be read."""
+
+
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
+    """The lineage manifest under ``path``, read once into a driver-side
+    frame (per-bucket metadata, small by construction).
+
+    A missing ``_lineage`` is a first run: an empty manifest, no Spark job.
+    One that exists but cannot be read raises :class:`ManifestError` —
+    treating it as empty would silently recompute every bucket."""
     mpath = os.path.join(path, "_lineage")
+    fs, hpath = _hadoop_path(spark, mpath)
+    if not fs.exists(hpath):
+        return _manifest_frame(spark, [])
     try:
-        return spark.read.parquet(mpath)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        rows = spark.read.schema(MANIFEST_SCHEMA).parquet(mpath).collect()
+    except (PySparkException, Py4JJavaError) as e:  # a failed scan or analysis
+        raise ManifestError(
+            f"lineage manifest {mpath} is unreadable ({type(e).__name__}); "
+            "delete it to recompute every bucket"
+        ) from e
+    return _manifest_frame(spark, rows)
 
 
-def write_manifest(manifest: DataFrame, path: str) -> None:
-    # Manifest rows are per-bucket metadata (small by construction). The
-    # merged plan may lazily READ the _lineage dir being overwritten, so
-    # materialize on the driver first (read-then-overwrite-same-path).
-    spark = manifest.sparkSession
-    rows = manifest.collect()
-    snap = spark.createDataFrame(rows, manifest.schema) if rows else spark.createDataFrame([], MANIFEST_SCHEMA)
-    snap.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_lineage"))
+def write_manifest(
+    manifest: DataFrame | Sequence[Sequence],
+    path: str,
+    spark: SparkSession | None = None,
+) -> None:
+    """Overwrite the manifest with ``manifest``: rows already on the driver
+    (in MANIFEST_ARROW column order; pass ``spark``), or a Spark-planned
+    frame. A planned frame may lazily READ the _lineage dir being
+    overwritten, so it is collected first (read-then-overwrite-same-path)."""
+    if isinstance(manifest, DataFrame):
+        spark = manifest.sparkSession
+        manifest = manifest.select(*MANIFEST_ARROW.names).collect()
+    _manifest_frame(spark, manifest).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(path, "_lineage"))
+
+
+def _manifest_frame(spark: SparkSession, rows: Sequence[Sequence]) -> DataFrame:
+    """Driver-side manifest rows as a frame, shipped to the JVM as Arrow: a
+    frame made from a Python list would start Python workers in every job
+    that reads it."""
+    cols = list(zip(*rows)) or [()] * len(MANIFEST_ARROW)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, MANIFEST_ARROW)], schema=MANIFEST_ARROW))
 
 
 def plan_resume(
@@ -108,16 +147,19 @@ def vanished_buckets(input_fps: DataFrame, manifest: DataFrame, tier: str) -> li
     return sorted(int(r["p"]) for r in gone.collect())
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop API —
+    filesystem-agnostic (local/HDFS/object store), driver-side."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def delete_partition_dirs(spark: SparkSession, root: str, subdirs: Sequence[str]) -> None:
-    """Remove partition directories (e.g. ``tier=1d/p=3``) through the
-    Hadoop FileSystem API — filesystem-agnostic (local/HDFS/object store),
-    driver-side metadata operation. Used to clear stale partitions of
-    vanished buckets."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    """Remove partition directories (e.g. ``tier=1d/p=3``) — a driver-side
+    metadata operation. Used to clear stale partitions of vanished
+    buckets."""
     for sub in subdirs:
-        p = jvm.org.apache.hadoop.fs.Path(os.path.join(root, sub))
-        fs = p.getFileSystem(conf)
+        fs, p = _hadoop_path(spark, os.path.join(root, sub))
         if fs.exists(p):
             fs.delete(p, True)
 

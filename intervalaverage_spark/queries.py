@@ -821,7 +821,7 @@ def q_retention_plan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_gorilla_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode the deduped hourly event points into Gorilla segment blobs
-    (weekly segments, coarse-bucketed applyInPandas) and decode them back:
+    (weekly segments, one mapInArrow call per partition) and decode them back:
     the oracle is simply the raw point set, so the blobs' bit-exactness is
     driver-checked, not just pytest-checked."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
@@ -836,8 +836,7 @@ def q_gorilla_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "h")
         .agg(F.min("value").alias("v"))
     )
-    segs = encode_segments(pts, ["user_id"], "h", "v", segment_width=168,
-                           coarse_partitions=64)
+    segs = encode_segments(pts, ["user_id"], "h", "v", segment_width=168)
     back = decode_segments(segs, ["user_id"], t_col="h", value_col="v")
     return back.select("user_id", F.col("h").alias("t"), F.round("v", 6).alias("v"))
 

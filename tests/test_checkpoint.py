@@ -2,11 +2,17 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.jobs.rollup import finalize_tier, run_rollup
+from intervalaverage_spark.jobs import rollup as rollup_job
+from intervalaverage_spark.jobs.rollup import VALUE_VARS, finalize_tier, run_rollup
+from intervalaverage_spark.operators import tiers as tiers_mod
+from intervalaverage_spark.plans import checkpoint as ckpt
 from intervalaverage_spark.sources.webts import synth_webpages
+from tests.test_differential import assert_frames_match
 
 
 @pytest.fixture()
@@ -112,3 +118,87 @@ def test_resume_after_single_bucket_mutation(spark, out_root):
     pre = run_rollup(spark, pages, out_root=None, n_buckets=8, tiers=("1d",))
     assert pre["tiers"]["1d"]["points"] > 0  # sanity: the job ran
     assert a.filter(F.col("p") == victim_p).count() > 0
+
+
+def _mutate_one_url(pages):
+    victim = pages.select("url").first()["url"]
+    return pages.withColumn(
+        "text",
+        F.when(F.col("url") == victim, F.concat(F.col("text"), F.lit(" EDITED")))
+        .otherwise(F.col("text")),
+    )
+
+
+def test_cascade_resume_matches_clean_and_direct(spark, out_root):
+    """strategy="cascade" with out_root: a resume after a one-bucket
+    mutation equals a clean cascade run, and its finalized 30d equals the
+    direct strategy's (integer columns exactly, sums to 1e-9)."""
+    pages = synth_webpages(spark, n_pages=40, n_domains=6, seed=5)
+    mutated = _mutate_one_url(pages)
+    kw = dict(n_buckets=8, tiers=("1h", "1d", "30d"))
+    run_rollup(spark, pages, out_root=out_root, strategy="cascade", **kw)
+    r = run_rollup(spark, mutated, out_root=out_root, strategy="cascade", **kw)
+    assert r["buckets"]["todo"] == 1 and r["buckets"]["skipped"] == 7, r
+
+    clean, direct = out_root + "_cascade_clean", out_root + "_direct"
+    run_rollup(spark, mutated, out_root=clean, strategy="cascade", **kw)
+    run_rollup(spark, mutated, out_root=direct, strategy="direct", **kw)
+    keys = ["url", "lang", "p", "start", "end"]
+    for tier in kw["tiers"]:
+        assert_frames_match(finalize_tier(spark, out_root, tier),
+                            finalize_tier(spark, clean, tier), set(VALUE_VARS), keys)
+    assert_frames_match(finalize_tier(spark, out_root, "30d"),
+                        finalize_tier(spark, direct, "30d"), set(VALUE_VARS), keys)
+
+
+def test_direct_run_is_one_tier_pass(spark, out_root, monkeypatch):
+    """One direct run_rollup builds one tier plan and writes it once."""
+    calls = {"rollup_from_raw": 0, "write_partitioned": 0}
+
+    def counting(mod, name):
+        fn = getattr(mod, name)
+
+        def wrapped(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+        monkeypatch.setattr(mod, name, wrapped)
+
+    for mod, name in ((tiers_mod, "rollup_from_raw"), (rollup_job, "rollup_from_raw"),
+                      (ckpt, "write_partitioned")):
+        counting(mod, name)
+    pages = synth_webpages(spark, n_pages=20, n_domains=4, seed=5)
+    r = run_rollup(spark, pages, out_root=out_root, n_buckets=4)
+    assert calls == {"rollup_from_raw": 1, "write_partitioned": 1}
+    assert all(r["tiers"][t]["points"] > 0 for t in ("1h", "1d", "30d"))
+    assert {d for d in os.listdir(out_root) if d.startswith("tier=")} == {
+        "tier=1h", "tier=1d", "tier=30d"}
+
+
+def test_missing_manifest_is_empty_without_a_job(spark, tmp_path):
+    sc = spark.sparkContext
+    sc.setJobGroup("read-missing-manifest", "read_manifest on a fresh root")
+    try:
+        m = ckpt.read_manifest(spark, str(tmp_path / "fresh"))
+        assert sc.statusTracker().getJobIdsForGroup("read-missing-manifest") == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert m.count() == 0 and m.columns == [
+        "tier", "p", "input_fingerprint", "input_rows", "output_rows", "output_checksum"]
+
+
+def test_corrupt_manifest_raises(spark, out_root):
+    """An unreadable _lineage must stop the run with a named error, not
+    pass for a first run and silently recompute every bucket."""
+    pages = synth_webpages(spark, n_pages=20, n_domains=4, seed=5)
+    run_rollup(spark, pages, out_root=out_root, n_buckets=4, tiers=("1d",))
+    lineage = os.path.join(out_root, "_lineage")
+    for f in os.listdir(lineage):
+        if f.endswith(".crc"):
+            os.remove(os.path.join(lineage, f))
+        elif f.endswith(".parquet"):
+            with open(os.path.join(lineage, f), "wb") as fh:
+                fh.write(b"not a parquet file")
+    with pytest.raises(ckpt.ManifestError, match="unreadable"):
+        ckpt.read_manifest(spark, out_root)
+    with pytest.raises(ckpt.ManifestError):
+        run_rollup(spark, pages, out_root=out_root, n_buckets=4, tiers=("1d",))

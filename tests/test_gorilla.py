@@ -57,31 +57,71 @@ def test_spark_segments_roundtrip(spark):
     assert sp["blob"].map(len).sum() < 16 * len(rows)
 
 
-def test_null_group_keys_survive_both_paths(spark):
-    """pandas groupby's default dropna=True would silently lose points
-    whose group key is null; both encode paths must keep them."""
-    pts = spark.createDataFrame(
-        [("a", 1, 1.0), (None, 2, 2.0), (None, 3, 3.0)],
-        "url string, t long, v double",
-    )
-    for cp in (None, 5):
-        segs = encode_segments(pts, ["url"], "t", "v", 86400, coarse_partitions=cp)
-        assert segs.toPandas()["n_points"].sum() == 3, f"coarse_partitions={cp}"
-        back = decode_segments(segs, ["url"])
-        assert back.count() == 3
-        assert back.filter("url IS NULL").count() == 2
+def _segment_reference(rows, width):
+    """(key, seg_start) → blob by encoding each segment alone, sorted by t."""
+    segs: dict = {}
+    for key, t, v in rows:
+        segs.setdefault((key, t // width * width), []).append((t, v))
+    out = {}
+    for k, pts in segs.items():
+        pts.sort(key=lambda p: p[0])
+        ts = np.array([t for t, _ in pts], dtype=np.int64)
+        vals = np.array([np.nan if v is None else v for _, v in pts], dtype=np.float64)
+        out[k] = (len(pts), gorilla_encode(ts, vals))
+    return out
 
 
-def test_coarse_and_per_segment_paths_identical(spark):
-    rng = np.random.default_rng(7)
+def _encoded(segs, key):
+    return {(r[key], r["seg_start"]): (r["n_points"], bytes(r["blob"]))
+            for r in segs.collect()}
+
+
+def test_null_group_keys_survive(spark):
+    """Null keys form their own segment and keep their points; long keys
+    stay exact (2^62 and 2^62 + 1 are the same float64, so a key cast to
+    float would merge their segments)."""
+    big = 2**62
+    rows = [(big, 1, 1.0), (big + 1, 2, 2.0), (None, 2, 2.0), (None, 3, 3.0)]
+    pts = spark.createDataFrame(rows, "k long, t long, v double")
+    segs = encode_segments(pts, ["k"], "t", "v", 86400)
+    assert _encoded(segs, "k") == _segment_reference(rows, 86400)
+    back = decode_segments(segs, ["k"])
+    assert back.count() == 4
+    assert back.filter("k IS NULL").count() == 2
+
+
+def _random_rows(seed, keys, n):
+    rng = np.random.default_rng(seed)
     rows = []
-    for u in ("a", "b", "c"):
-        t = np.cumsum(rng.integers(60, 7200, 200)).astype(int)
-        v = rng.normal(0, 5, 200)
-        rows += [(u, int(tt), float(vv)) for tt, vv in zip(t, v)]
+    for u in keys:
+        t = np.cumsum(rng.integers(60, 7200, n)).astype(int)
+        v = rng.normal(0, 5, n)
+        v[rng.random(n) < 0.1] = np.nan
+        rows += [(u, int(tt), None if np.isnan(vv) else float(vv)) for tt, vv in zip(t, v)]
+    return rows
+
+
+def test_blobs_identical_to_per_segment_encode(spark):
+    rows = _random_rows(7, ("a", "b", "c", None), 300)
     pts = spark.createDataFrame(rows, "url string, t long, v double")
-    per_seg = encode_segments(pts, ["url"], "t", "v", 86400, coarse_partitions=None)
-    coarse = encode_segments(pts, ["url"], "t", "v", 86400, coarse_partitions=7)
-    a = sorted(map(str, per_seg.collect()))
-    b = sorted(map(str, coarse.collect()))
-    assert a == b
+    got = _encoded(encode_segments(pts, ["url"], "t", "v", 86400), "url")
+    assert got == _segment_reference(rows, 86400)
+
+
+def test_batch_split_segments(spark):
+    """Arrow batches of 5 rows: segments of up to 10 points span two or
+    three batches, and shorter ones share a batch; every segment must come
+    out whole and identical."""
+    rows = _random_rows(11, ("a", "b", None), 200)
+    pts = spark.createDataFrame(rows, "url string, t long, v double")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        got = _encoded(encode_segments(pts, ["url"], "t", "v", 6 * 3600), "url")
+    finally:
+        spark.conf.set(key, prev)
+    want = _segment_reference(rows, 6 * 3600)
+    sizes = [n for n, _ in want.values()]
+    assert max(sizes) > 5 and min(sizes) < 5
+    assert got == want

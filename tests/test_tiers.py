@@ -11,9 +11,12 @@ from pyspark.sql import functions as F
 from intervalaverage_spark import interval_average, tier_grid
 from intervalaverage_spark.operators.tiers import (
     finalize,
+    TIER_WIDTHS,
     rollup_cascade,
     rollup_from_raw,
+    rollup_tiers,
 )
+from intervalaverage_spark.plans import checkpoint as ckpt
 from intervalaverage_spark.sources.webts import observation_intervals, synth_webpages
 from tests.conftest import rows
 from tests.test_differential import assert_frames_match
@@ -78,6 +81,30 @@ def test_three_tier_cascade(spark, web_x):
     a = finalize(st3, 30 * 86400, VV, GV, required_percentage=80)
     b = finalize(direct, 30 * 86400, VV, GV, required_percentage=80)
     assert_frames_match(a, b, set(VV), [*GV, "start", "end"])
+
+
+def _checksum(df):
+    """(rows, modular sum of row hashes over sorted columns) — order-free."""
+    h = F.xxhash64(*sorted(df.columns)).cast("decimal(38,0)")
+    r = df.agg(F.count(F.lit(1)).alias("n"), F.sum(h).alias("h")).first()
+    return r["n"], int(r["h"] or 0) % 9223372036854775783
+
+
+def test_fused_tier_pass_equals_each_tier_alone(spark, web_x, tmp_path):
+    """Each tier=<t> state the fused pass writes equals rollup_from_raw for
+    that tier alone — double and exact-decimal value columns alike."""
+    x = ckpt.with_bucket(
+        web_x.withColumn("dec", (F.col("text_bytes") / 7).cast("decimal(18,6)")), "url", 4)
+    vv, gv = [*VV, "dec"], [*GV, "p"]
+    tiers = {t: TIER_WIDTHS[t] for t in ("1h", "1d", "30d")}
+    root = str(tmp_path / "fused")
+    ckpt.write_partitioned(rollup_tiers(x, tiers, vv, gv), root, ("tier", "p"))
+    for tier, width in tiers.items():
+        written = spark.read.parquet(f"{root}/tier={tier}").withColumn(
+            "p", F.col("p").cast("long"))
+        alone = rollup_from_raw(x, width, vv, gv)
+        assert written.schema["sum_wv_dec"].dataType == alone.schema["sum_wv_dec"].dataType
+        assert _checksum(written) == _checksum(alone), tier
 
 
 def test_nonaligned_boundaries_split_weights(spark):

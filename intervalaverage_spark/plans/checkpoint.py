@@ -86,19 +86,10 @@ def read_manifest(spark: SparkSession, path: str) -> DataFrame:
     return _manifest_frame(spark, rows)
 
 
-def write_manifest(
-    manifest: DataFrame | Sequence[Sequence],
-    path: str,
-    spark: SparkSession | None = None,
-) -> None:
-    """Overwrite the manifest with ``manifest``: rows already on the driver
-    (in MANIFEST_ARROW column order; pass ``spark``), or a Spark-planned
-    frame. A planned frame may lazily READ the _lineage dir being
-    overwritten, so it is collected first (read-then-overwrite-same-path)."""
-    if isinstance(manifest, DataFrame):
-        spark = manifest.sparkSession
-        manifest = manifest.select(*MANIFEST_ARROW.names).collect()
-    _manifest_frame(spark, manifest).coalesce(1).write.mode("overwrite").parquet(
+def write_manifest(rows: Sequence[Sequence], path: str, spark: SparkSession) -> None:
+    """Overwrite the manifest with driver-side ``rows`` (in MANIFEST_ARROW
+    column order)."""
+    _manifest_frame(spark, rows).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "_lineage"))
 
 
@@ -164,19 +155,9 @@ def delete_partition_dirs(spark: SparkSession, root: str, subdirs: Sequence[str]
             fs.delete(p, True)
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    part_cols: Sequence[str] = ("p",),
-    dynamic: bool = True,
-) -> None:
-    """Partitioned parquet write; with ``dynamic``, only partitions present
-    in ``df`` are overwritten (exact-resume rewrite granularity)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    if dynamic:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.partitionBy(*part_cols).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+def write_partitioned(df: DataFrame, path: str, part_cols: Sequence[str] = ("p",)) -> None:
+    """Partitioned parquet write that overwrites only the partitions present
+    in ``df`` (exact-resume rewrite granularity). Dynamic overwrite is set on
+    this writer alone, so other writes on the session keep their mode."""
+    df.write.partitionBy(*part_cols).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic").parquet(path)

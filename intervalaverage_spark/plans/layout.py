@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.plans.checkpoint import with_bucket
+from intervalaverage_spark.plans.checkpoint import with_bucket, write_partitioned
 from intervalaverage_spark.plans.rangejoin import fdiv
 
 DAY = 86400
@@ -42,14 +42,7 @@ def write_tier(
     df = state
     if "p" not in df.columns:
         df = with_bucket(df, url_col, n_buckets)
-    df = df.withColumn("d", fdiv(F.col(ws_col), DAY))
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.partitionBy("d", "p").mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_partitioned(df.withColumn("d", fdiv(F.col(ws_col), DAY)), path, ("d", "p"))
 
 
 def read_tier(

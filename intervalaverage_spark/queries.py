@@ -27,6 +27,7 @@ from intervalaverage_spark import (
     tier_grid,
 )
 from intervalaverage_spark.functions.gorilla import decode_segments, encode_segments
+from intervalaverage_spark.jobs.rollup import rollup_intervals
 from intervalaverage_spark.operators.asof import asof_join
 from intervalaverage_spark.operators.analytics import (
     rate,
@@ -645,37 +646,30 @@ FROM y JOIN xi ON xi.custkey = y.custkey AND xi.e >= y.ys AND xi.s <= y.ye
 
 
 def q_checkpoint_tier_1d_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The lineage-checkpoint write/resume path, driver-checked: bucket the
-    hourly x table on user_id, write the 1d tier state partitioned by
-    bucket with a fingerprint manifest, run plan_resume against it (must
-    skip every bucket — same input), read the state back from disk and
-    finalize. The oracle is the plain 1d tier SQL, so the whole
-    write → manifest → resume-plan → read → finalize loop must be exact."""
-    from intervalaverage_spark.plans import checkpoint as ckpt
-
+    """The lineage-checkpoint write/resume path, oracle-checked: the 1d tier
+    of the hourly x table through the job's rollup (bucketed on user_id,
+    written partitioned by bucket with a fingerprint manifest), then a
+    second run on the same input (must skip every bucket), then the state
+    read back from disk and finalized. The oracle is the plain 1d tier SQL,
+    so the whole write → manifest → resume → read → finalize loop must be
+    exact."""
     x = events_x(spark, sf_dir).withColumnRenamed("v", "value").withColumn(
         "value", F.col("value").cast(_VALUE_DEC)
     )
-    xb = ckpt.with_bucket(x, "user_id", 8)
     tmp = _scratch_dir("ckpt")
-    fps = ckpt.fingerprint_partitions(xb)
-    st = rollup_from_raw(xb, 24, ["value"], ["user_id", "p"])
-    ckpt.write_partitioned(st, f"{tmp}/tier_1d", ("p",))
-    ckpt.write_manifest(
-        fps.select(
-            F.lit("input").alias("tier"), "p",
-            F.col("fingerprint").alias("input_fingerprint"),
-            F.col("rows").alias("input_rows"),
-            F.lit(None).cast("long").alias("output_rows"),
-            F.lit(None).cast("long").alias("output_checksum"),
-        ),
-        tmp,
-    )
-    todo, skipped = ckpt.plan_resume(fps, ckpt.read_manifest(spark, tmp), "input")
-    assert todo == [] and len(skipped) == 8, (todo, skipped)
-    state = spark.read.parquet(f"{tmp}/tier_1d")
+    _ckpt_rollup_1d(spark, x, tmp)
+    b = _ckpt_rollup_1d(spark, x, tmp)["buckets"]
+    assert b["todo"] == 0 and b["skipped"] == 8, b
+    state = spark.read.parquet(f"{tmp}/tier=1d")
     out = finalize(state, 24, ["value"], ["user_id"], required_percentage=0)
     return _points_select(out)
+
+
+def _ckpt_rollup_1d(spark: SparkSession, x: DataFrame, out_root: str) -> dict:
+    """The rollup job's tier → write → lineage pipeline for the 1d tier of
+    the hourly events x table, over 8 user_id buckets."""
+    return rollup_intervals(spark, x, {"1d": 24}, ["value"], ["user_id"], "user_id", 8,
+                            out_root)
 
 
 # ------------------------------------------- Gorilla + streaming (oracled)
@@ -684,13 +678,13 @@ def q_checkpoint_resume_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resume economics made driver-visible: full write → mutate →
     resume cycle with the job metrics AS the result rows.
 
-    Run 1 checkpoints the 1d tier over 8 url-hash-style buckets (all 8
+    Run 1 checkpoints the 1d tier over 8 user_id buckets (all 8
     recomputed — empty manifest). Then ONE user's values are mutated and
     run 2 re-plans against the manifest: exactly the mutated user's
     bucket recomputes, the other 7 skip, and dynamic partition overwrite
     rewrites only that directory. ``resume_matches_direct`` witnesses
-    that the resumed state (7 old dirs + 1 recomputed) equals a direct
-    rollup of the mutated input — compared by order-insensitive modular
+    that the resumed state (7 old dirs + 1 recomputed) equals a clean
+    run over the mutated input — compared by order-insensitive modular
     row-hash checksum, the same construction the lineage fingerprint
     uses (plans/checkpoint.py fingerprint_partitions).
 
@@ -698,44 +692,20 @@ def q_checkpoint_resume_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot reproduce — the driver records the rows-only check, and the
     metrics themselves are deterministic (seeded fixture, fixed bucket
     count)."""
-    from intervalaverage_spark.plans import checkpoint as ckpt
-
     x = events_x(spark, sf_dir).withColumnRenamed("v", "value").withColumn(
         "value", F.col("value").cast(_VALUE_DEC)
     )
-    xb = ckpt.with_bucket(x, "user_id", 8)
-    tmp = _scratch_dir("resume")
-
-    def manifest_rows(fps):
-        return fps.select(
-            F.lit("1d").alias("tier"), "p",
-            F.col("fingerprint").alias("input_fingerprint"),
-            F.col("rows").alias("input_rows"),
-            F.lit(None).cast("long").alias("output_rows"),
-            F.lit(None).cast("long").alias("output_checksum"),
-        )
-
-    # run 1: empty manifest — everything recomputes
-    fps1 = ckpt.fingerprint_partitions(xb)
-    todo1, skipped1 = ckpt.plan_resume(fps1, ckpt.read_manifest(spark, tmp), "1d")
-    st1 = rollup_from_raw(xb, 24, ["value"], ["user_id", "p"])
-    ckpt.write_partitioned(st1, f"{tmp}/tier_1d", ("p",))
-    ckpt.write_manifest(manifest_rows(fps1), tmp)
+    tmp, clean = _scratch_dir("resume"), _scratch_dir("resume_clean")
+    b1 = _ckpt_rollup_1d(spark, x, tmp)["buckets"]
 
     # mutate one deterministic user's series → exactly one dirty bucket
     uid = x.agg(F.min("user_id")).first()[0]
-    mut = xb.withColumn(
+    mut = x.withColumn(
         "value",
         F.when(F.col("user_id") == uid, F.col("value") + 1).otherwise(F.col("value")),
     )
-    fps2 = ckpt.fingerprint_partitions(mut)
-    todo2, skipped2 = ckpt.plan_resume(fps2, ckpt.read_manifest(spark, tmp), "1d")
-    st2 = rollup_from_raw(
-        mut.filter(F.col("p").isin([int(p) for p in todo2])),
-        24, ["value"], ["user_id", "p"],
-    )
-    ckpt.write_partitioned(st2, f"{tmp}/tier_1d", ("p",))
-    ckpt.write_manifest(manifest_rows(fps2), tmp)
+    b2 = _ckpt_rollup_1d(spark, mut, tmp)["buckets"]
+    _ckpt_rollup_1d(spark, mut, clean)
 
     def checksum(df: DataFrame) -> int:
         cols = sorted(df.columns)
@@ -747,14 +717,12 @@ def q_checkpoint_resume_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()
         return (row["c"], row["n"])
 
-    resumed = spark.read.parquet(f"{tmp}/tier_1d").withColumn(
-        "p", F.col("p").cast("long"))
-    direct = rollup_from_raw(mut, 24, ["value"], ["user_id", "p"])
-    match = checksum(resumed.select(*sorted(direct.columns))) == checksum(direct)
+    match = checksum(spark.read.parquet(f"{tmp}/tier=1d")) == checksum(
+        spark.read.parquet(f"{clean}/tier=1d"))
 
     return spark.createDataFrame(
-        [("run1_cold", len(todo1), len(skipped1), bool(match)),
-         ("run2_after_one_user_mutation", len(todo2), len(skipped2), bool(match))],
+        [("run1_cold", b1["todo"], b1["skipped"], match),
+         ("run2_after_one_user_mutation", b2["todo"], b2["skipped"], match)],
         "run string, buckets_recomputed int, buckets_skipped int, "
         "resume_matches_direct boolean",
     )

@@ -7,12 +7,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.jobs import rollup as rollup_job
-from intervalaverage_spark.jobs.rollup import VALUE_VARS, finalize_tier, run_rollup
+import __spark_entry__ as entrymod
+from intervalaverage_spark.jobs.rollup import finalize_tier, run_rollup
 from intervalaverage_spark.operators import tiers as tiers_mod
 from intervalaverage_spark.plans import checkpoint as ckpt
 from intervalaverage_spark.sources.webts import synth_webpages
-from tests.test_differential import assert_frames_match
+from tests.test_entry_contract import SF_DIR
 
 
 @pytest.fixture()
@@ -120,39 +120,8 @@ def test_resume_after_single_bucket_mutation(spark, out_root):
     assert a.filter(F.col("p") == victim_p).count() > 0
 
 
-def _mutate_one_url(pages):
-    victim = pages.select("url").first()["url"]
-    return pages.withColumn(
-        "text",
-        F.when(F.col("url") == victim, F.concat(F.col("text"), F.lit(" EDITED")))
-        .otherwise(F.col("text")),
-    )
-
-
-def test_cascade_resume_matches_clean_and_direct(spark, out_root):
-    """strategy="cascade" with out_root: a resume after a one-bucket
-    mutation equals a clean cascade run, and its finalized 30d equals the
-    direct strategy's (integer columns exactly, sums to 1e-9)."""
-    pages = synth_webpages(spark, n_pages=40, n_domains=6, seed=5)
-    mutated = _mutate_one_url(pages)
-    kw = dict(n_buckets=8, tiers=("1h", "1d", "30d"))
-    run_rollup(spark, pages, out_root=out_root, strategy="cascade", **kw)
-    r = run_rollup(spark, mutated, out_root=out_root, strategy="cascade", **kw)
-    assert r["buckets"]["todo"] == 1 and r["buckets"]["skipped"] == 7, r
-
-    clean, direct = out_root + "_cascade_clean", out_root + "_direct"
-    run_rollup(spark, mutated, out_root=clean, strategy="cascade", **kw)
-    run_rollup(spark, mutated, out_root=direct, strategy="direct", **kw)
-    keys = ["url", "lang", "p", "start", "end"]
-    for tier in kw["tiers"]:
-        assert_frames_match(finalize_tier(spark, out_root, tier),
-                            finalize_tier(spark, clean, tier), set(VALUE_VARS), keys)
-    assert_frames_match(finalize_tier(spark, out_root, "30d"),
-                        finalize_tier(spark, direct, "30d"), set(VALUE_VARS), keys)
-
-
 def test_direct_run_is_one_tier_pass(spark, out_root, monkeypatch):
-    """One direct run_rollup builds one tier plan and writes it once."""
+    """One run_rollup builds one tier plan and writes it once."""
     calls = {"rollup_from_raw": 0, "write_partitioned": 0}
 
     def counting(mod, name):
@@ -163,8 +132,7 @@ def test_direct_run_is_one_tier_pass(spark, out_root, monkeypatch):
             return fn(*args, **kwargs)
         monkeypatch.setattr(mod, name, wrapped)
 
-    for mod, name in ((tiers_mod, "rollup_from_raw"), (rollup_job, "rollup_from_raw"),
-                      (ckpt, "write_partitioned")):
+    for mod, name in ((tiers_mod, "rollup_from_raw"), (ckpt, "write_partitioned")):
         counting(mod, name)
     pages = synth_webpages(spark, n_pages=20, n_domains=4, seed=5)
     r = run_rollup(spark, pages, out_root=out_root, n_buckets=4)
@@ -202,3 +170,11 @@ def test_corrupt_manifest_raises(spark, out_root):
         ckpt.read_manifest(spark, out_root)
     with pytest.raises(ckpt.ManifestError):
         run_rollup(spark, pages, out_root=out_root, n_buckets=4, tiers=("1d",))
+
+
+def test_resume_metrics_query_rows(spark):
+    """checkpoint_resume_metrics has no oracle, so its answer is pinned:
+    a cold run recomputes all 8 buckets, one mutated user dirties one."""
+    q = entrymod.queries()["checkpoint_resume_metrics"]
+    rows = [tuple(r) for r in q(spark, SF_DIR).collect()]
+    assert rows == [("run1_cold", 8, 0, True), ("run2_after_one_user_mutation", 1, 7, True)]

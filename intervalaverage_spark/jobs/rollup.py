@@ -11,8 +11,11 @@ and resume.
 :func:`rollup_intervals` is the one tier → write → lineage pipeline, for
 any interval table: the job, the bench and the checkpoint queries all call
 it. Every tier is built from the raw intervals in one plan, persisted and
-counted in one job and written once as ``tier=<t>/p=<b>``; the manifest is
-read once and rewritten once. At web-crawl visit density the hour-grid
+counted in one job and written once as ``tier=<t>/p=<b>``. The lineage
+manifest ``_lineage/manifest.parquet`` is read once and rewritten once (temp
+file, then rename), both on the driver with no Spark job; which buckets to
+recompute, skip or clear is decided on the driver from it and the collected
+per-bucket fingerprints. At web-crawl visit density the hour-grid
 state is ~170× denser than raw (each ~9-day validity interval covers ~220
 hour windows), so building 1d from raw shuffles two orders of magnitude
 fewer rows than merging it from the 1h state (measured 4.7 s vs 180 s at
@@ -67,9 +70,9 @@ def rollup_intervals(
     returns a metrics report.
 
     With ``out_root``, the states are written as ``tier=<t>/p=<b>`` with a
-    lineage manifest under ``_lineage``: a re-run recomputes only buckets
-    whose input fingerprint changed, and clears the partitions of buckets
-    whose input vanished. ``report["tiers"][t]["seconds"]`` is the shared
+    lineage manifest ``_lineage/manifest.parquet``: a re-run recomputes
+    only buckets whose input fingerprint changed, and clears the partitions
+    of buckets whose input vanished. ``report["tiers"][t]["seconds"]`` is the shared
     tier-pass time, the same for every tier."""
     t_start = time.time()
     report: dict = {"tiers": {}, "buckets": {"n": n_buckets}}
@@ -80,21 +83,22 @@ def rollup_intervals(
 
     x = ckpt.with_bucket(x, key, n_buckets)
     if out_root:
-        fps = ckpt.fingerprint_partitions(x).cache()
+        # the resume decision's one Spark query; the rest works on driver rows
+        fps = ckpt.fingerprint_partitions(x).collect()
         manifest = ckpt.read_manifest(spark, out_root)
+        if not manifest:
+            # state without a manifest (an older layout, a crash inside its
+            # rename): each written bucket's fingerprint is unknown
+            manifest = [("input", p, None, None, None, None)
+                        for p in ckpt.written_buckets(spark, out_root)]
         todo, skipped = ckpt.plan_resume(fps, manifest, tier="input")
         # buckets whose input disappeared entirely emit no fingerprint row:
         # clear their stale tier partitions + manifest entries
         vanished = ckpt.vanished_buckets(fps, manifest, tier="input")
-        # the old manifest is read once, before any write, and merged with
-        # this run's fingerprints on the driver
-        fresh = [("input", int(r["p"]), int(r["fingerprint"]), int(r["rows"]), None, None)
-                 for r in fps.collect()]
-        replaced = {(t, p) for t, p, *_ in fresh}
+        fresh = [("input", p, fp, n, None, None) for p, fp, n in fps]
+        replaced = {r[:2] for r in fresh}
         manifest_rows = [
-            tuple(r) for r in manifest.collect()
-            if (r["tier"], r["p"]) not in replaced and r["p"] not in vanished
-        ] + fresh
+            r for r in manifest if r[:2] not in replaced and r[1] not in vanished] + fresh
         if vanished:
             ckpt.delete_partition_dirs(
                 spark, out_root, [f"tier={t}/p={b}" for t in widths for b in vanished])

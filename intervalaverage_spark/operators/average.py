@@ -89,8 +89,9 @@ def _prep(
     return df.select(*keep, s.alias(s_alias), e.alias(e_alias))
 
 
-def _wv_term(w: Column, v: str, dt: T.DataType) -> Column:
-    """The per-pair weighted-value term ``w·v``.
+def _wv_sql(w: str, v: str, dt: T.DataType) -> str:
+    """The per-pair weighted-value term ``w·v`` as SQL text: ``w`` is a SQL
+    expression, ``v`` a quoted column name of type ``dt``.
 
     DecimalType values accumulate EXACTLY: weights are integers, so
     ``Σ decimal(w·v)`` is order-free and engine-portable (the determinism
@@ -104,24 +105,30 @@ def _wv_term(w: Column, v: str, dt: T.DataType) -> Column:
     10^min(37−p, 19) − 1 time units (p ≤ 18 covers any 64-bit length;
     p = 27, the max, still allows 10^10 − 1). Beyond that bound ANSI mode
     raises a cast error — loud, never a silently dropped term."""
-    if isinstance(dt, T.DecimalType):
-        if dt.precision > 27:
-            raise ValueError(
-                f"decimal value columns need precision <= 27 (got {dt}); "
-                "rescale so w*v fits decimal(38, s) exactly"
-            )
-        wprec = min(37 - dt.precision, 19)
-        return (F.col(v) * w.cast(f"decimal({wprec},0)")).cast(f"decimal(38,{dt.scale})")
-    return w * F.col(v)
+    if not isinstance(dt, T.DecimalType):
+        return f"({w}) * {v}"
+    if dt.precision > 27:
+        raise ValueError(
+            f"decimal value columns need precision <= 27 (got {dt}); "
+            "rescale so w*v fits decimal(38, s) exactly"
+        )
+    wprec = min(37 - dt.precision, 19)
+    return f"CAST({v} * CAST({w} AS DECIMAL({wprec},0)) AS DECIMAL(38,{dt.scale}))"
 
 
-def _mean_of(swv: Column, nobs: Column, dt: T.DataType) -> Column:
-    """Σw·v / Σw as a double. Decimal sums are exact, so the quotient is a
-    deterministic function of the data alone (cast-to-double then one IEEE
-    division), independent of partitioning and engine."""
+def _mean_sql(swv: str, nobs: str, dt: T.DataType) -> str:
+    """Σw·v / Σw as a double, over the SQL expressions ``swv`` and
+    ``nobs``. Decimal sums are exact, so the quotient is a deterministic
+    function of the data alone (cast-to-double then one IEEE division),
+    independent of partitioning and engine."""
     if isinstance(dt, T.DecimalType):
-        swv = swv.cast("double")
-    return swv / nobs
+        swv = f"CAST({swv} AS DOUBLE)"
+    return f"{swv} / {nobs}"
+
+
+def _q(*parts: str) -> str:
+    """The column name ``parts`` joined, as a quoted SQL identifier."""
+    return "`" + "".join(parts).replace("`", "``") + "`"
 
 
 def interval_average(
@@ -239,7 +246,9 @@ def interval_average(
     matched = F.col("__ia_xs").isNotNull()
     os_ = F.when(matched, F.greatest(F.col("__ia_xs"), F.col("__ia_ys")))
     oe_ = F.when(matched, F.least(F.col("__ia_xe"), F.col("__ia_ye")))
-    w = oe_ - os_ + 1
+    w_sql = ("CASE WHEN __ia_xs IS NOT NULL "
+             "THEN least(__ia_xe, __ia_ye) - greatest(__ia_xs, __ia_ys) + 1 END")
+    w = F.expr(w_sql)
     gkeys = [*group_vars, "__ia_ys", "__ia_ye"]
 
     # maxgap gap-state (src/code.cpp:91-167 semantics, tiers.py:66-99
@@ -270,7 +279,8 @@ def interval_average(
     ]
     for v in value_vars:
         nn = F.col(v).isNotNull()
-        aggs.append(F.sum(F.when(nn, _wv_term(w, v, x.schema[v].dataType))).alias(f"__ia_swv_{v}"))
+        wv = F.expr(_wv_sql(w_sql, _q(v), x.schema[v].dataType))
+        aggs.append(F.sum(F.when(nn, wv)).alias(f"__ia_swv_{v}"))
         aggs.append(F.sum(F.when(nn, w)).alias(f"__ia_nobs_{v}"))
         aggs.append(F.max(F.when(nn, oe_)).alias(f"__ia_last_{v}"))
         aggs.append(F.max(F.col(f"__ia_gap_{v}")).alias(f"__ia_maxg_{v}"))
@@ -307,9 +317,7 @@ def interval_average(
         ]
     for v in value_vars:
         nobs = F.coalesce(F.col(f"__ia_nobs_{v}"), F.lit(0)).cast("long")
-        avg = _mean_of(
-            F.col(f"__ia_swv_{v}"), F.col(f"__ia_nobs_{v}"), x.schema[v].dataType
-        )
+        avg = F.expr(_mean_sql(_q("__ia_swv_", v), _q("__ia_nobs_", v), x.schema[v].dataType))
         masked = F.when(
             (nobs > 0)
             & (F.lit(100.0) * nobs / ydur >= F.lit(float(required_percentage))),

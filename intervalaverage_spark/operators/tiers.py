@@ -31,6 +31,11 @@ window width a column keyed by tier) — the incremental job's single tier
 pass. ``rollup_cascade`` merges a finer tier's state instead, for when raw
 has aged out.
 
+Every stage is built from SQL text — one ``selectExpr``, or ``F.expr``
+inside ``agg`` — with each column name quoted by :func:`_q`: a Column
+object per operator costs one driver → JVM round trip, and at thousands of
+them plan building outweighed the incremental job's work on its data.
+
 ``finalize`` turns state into reference-semantics points (same columns as
 :func:`interval_average`), optionally gap-filling empty windows against a
 dense per-key grid (unmatched-y semantics, src/code.cpp:32-50).
@@ -44,104 +49,90 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
 
-from intervalaverage_spark.operators.average import _mean_of, _wv_term
+from intervalaverage_spark.operators.average import _mean_sql, _q, _wv_sql
 from intervalaverage_spark.operators.grid import tier_grid
-from intervalaverage_spark.plans.rangejoin import fdiv
-
-
-def _zero_like(dt: T.DataType) -> Column:
-    """Typed zero for Σw·v state: keeps coalesce from silently coercing an
-    exact decimal sum back to double (DecimalType = the exact-arithmetic
-    path, see operators/average.py _wv_term)."""
-    if isinstance(dt, T.DecimalType):
-        return F.lit(0).cast(f"decimal(38,{dt.scale})")
-    return F.lit(0.0)
+from intervalaverage_spark.plans.rangejoin import fdiv_sql
 
 #: tier name → window width in integer time units (seconds)
 TIER_WIDTHS: dict[str, int] = {"1h": 3600, "1d": 86400, "30d": 30 * 86400}
 
 
+def _zero(dt: T.DataType) -> str:
+    """Typed zero for Σw·v state: keeps coalesce from silently coercing an
+    exact decimal sum back to double (DecimalType = the exact-arithmetic
+    path, see operators/average.py _wv_sql)."""
+    return f"CAST(0 AS DECIMAL(38,{dt.scale}))" if isinstance(dt, T.DecimalType) else "0D"
+
+
+def _bounds(width: str) -> tuple[str, str, str]:
+    """SQL of window ``__k``'s first and last unit and of its length."""
+    return (f"CAST(__k * {width} AS BIGINT)", f"CAST((__k + 1) * {width} - 1 AS BIGINT)",
+            f"CAST({width} AS BIGINT)")
+
 
 def _state_agg(
-    exploded: DataFrame,
+    rows: DataFrame,
+    width: str,
     group_vars: Sequence[str],
-    value_vars: Sequence[str],
-    width: int,
+    order: str,
+    span: tuple[str, str, str],
+    parts: Mapping[str, tuple[str, ...]],
 ) -> DataFrame:
-    """Tier-1 aggregate: groupBy (groups, window-id) over exploded rows
-    carrying (os, oe) coverage + per-v payloads, emit the state table.
+    """Fold ``rows`` into the state of their window ``__k`` per group —
+    the shared tail of tier-1 (rows = raw coverage pieces) and the cascade
+    (rows = child windows). All arguments are SQL text.
+
+    ``span`` is a row's (covered units, first, last covered unit); ``parts``
+    maps each value var to the row's (first, last unit covered for it,
+    longest inner gap run, Σw·v, Σw, zero of Σw·v), NULL where the row does
+    not cover the var; ``order`` orders the rows inside a window.
 
     PERF: gap state is computed with a window function + plain min/max
     aggregates — whole-stage-codegen throughout, no collect_list, no
     higher-order folds (interpreted HOFs cost ~5µs/row × rows, dominating
     the tier at 10^7+ windows). The window and the groupBy share the
     (groups, __k) partitioning, so this is still ONE exchange."""
-    os_, oe_ = F.col("__os"), F.col("__oe")
-    w = oe_ - os_ + 1
-    ws = (F.col("__k") * width).cast("long")
-    wspec = (
-        Window.partitionBy(*group_vars, "__k")
-        .orderBy("__os")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    gap_cols = []
-    for v in value_vars:
-        nn = ~F.col(f"__na_{v}")
-        # last covered-for-v end before this row (x non-overlapping → max);
-        # ws-1 seed makes the first gap include the window lead-in
-        prev_end = F.max(F.when(nn, oe_)).over(wspec)
-        gap_cols.append(
-            F.when(nn, os_ - F.coalesce(prev_end, ws - 1) - 1).alias(f"__gap_{v}")
-        )
-    exploded = exploded.select("*", *gap_cols)
+    keys = [*map(_q, group_vars), "__k"]
+    ws, we, ln = _bounds(width)
+    over = (f"OVER (PARTITION BY {', '.join(keys)} ORDER BY {order} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)")
+    gaps = []
+    aggs = [f"sum({span[0]}) AS xduration", f"min({span[1]}) AS xminstart",
+            f"max({span[2]}) AS xmaxend"]
+    for v, (first, last, inner, swv, nob, _) in parts.items():
+        # the gap run ending at each covered row: its first unit − the last
+        # covered unit before it − 1 (the ws−1 seed folds the window lead-in
+        # in); a child's inner best competes as-is (greatest skips NULL)
+        run = f"{first} - coalesce(max({last}) {over}, {ws} - 1) - 1"
+        gaps.append(f"CASE WHEN {first} IS NOT NULL THEN greatest({run}, {inner}) END "
+                    f"AS {_q('__gap_', v)}")
+        aggs += [f"sum({swv}) AS {_q('sum_wv_', v)}", f"sum({nob}) AS {_q('nobs_', v)}",
+                 f"min({first}) AS {_q('__first_', v)}", f"max({last}) AS {_q('__last_', v)}",
+                 f"max({_q('__gap_', v)}) AS {_q('__maxg_', v)}"]
+    agg = rows.selectExpr("*", *gaps).groupBy(*keys).agg(*map(F.expr, aggs))
 
-    aggs = [
-        F.sum(w).alias("xduration"),
-        F.min(os_).alias("xminstart"),
-        F.max(oe_).alias("xmaxend"),
-    ]
-    swv_types = {v: exploded.schema[f"__swv_{v}"].dataType for v in value_vars}
-    for v in value_vars:
-        nn = ~F.col(f"__na_{v}")
-        aggs += [
-            F.sum(F.when(nn, F.col(f"__swv_{v}"))).alias(f"sum_wv_{v}"),
-            F.sum(F.when(nn, F.col(f"__nob_{v}"))).alias(f"nobs_{v}"),
-            F.min(F.when(nn, os_)).alias(f"__first_{v}"),
-            F.max(F.when(nn, oe_)).alias(f"__last_{v}"),
-            F.max(F.col(f"__gap_{v}")).alias(f"__maxg_{v}"),
-        ]
-    agg = exploded.groupBy(*group_vars, "__k").agg(*aggs)
-
-    ws = (F.col("__k") * width).cast("long")
-    we = ((F.col("__k") + 1) * width - 1).cast("long")
-    ln = F.lit(width).cast("long")
-    out = [*(F.col(g) for g in group_vars), ws.alias("ws"), we.alias("we"),
-           "xduration", "xminstart", "xmaxend"]
-    for v in value_vars:
-        suffix = F.when(F.col(f"__last_{v}").isNull(), ln).otherwise(we - F.col(f"__last_{v}"))
-        out += [
-            F.coalesce(F.col(f"sum_wv_{v}"), _zero_like(swv_types[v])).alias(f"sum_wv_{v}"),
-            F.coalesce(F.col(f"nobs_{v}"), F.lit(0)).cast("long").alias(f"nobs_{v}"),
-            F.coalesce(F.col(f"__first_{v}") - ws, ln).alias(f"prefix_{v}"),
-            suffix.alias(f"suffix_{v}"),
-            F.greatest(F.coalesce(F.col(f"__maxg_{v}"), F.lit(0)), suffix).alias(f"best_{v}"),
-        ]
-    return agg.select(*out)
-
+    out = [*keys[:-1], f"{ws} AS ws", f"{we} AS we", "xduration", "xminstart", "xmaxend"]
+    for v, (*_, zero) in parts.items():
+        last = _q("__last_", v)
+        suffix = f"CASE WHEN {last} IS NULL THEN {ln} ELSE {we} - {last} END"
+        out += [f"coalesce({_q('sum_wv_', v)}, {zero}) AS {_q('sum_wv_', v)}",
+                f"CAST(coalesce({_q('nobs_', v)}, 0) AS BIGINT) AS {_q('nobs_', v)}",
+                f"coalesce({_q('__first_', v)} - {ws}, {ln}) AS {_q('prefix_', v)}",
+                f"{suffix} AS {_q('suffix_', v)}",
+                f"greatest(coalesce({_q('__maxg_', v)}, 0), {suffix}) AS {_q('best_', v)}"]
+    return agg.selectExpr(*out)
 
 
 def rollup_from_raw(
     x: DataFrame,
-    width: int | Column,
+    width: int | str,
     value_vars: Sequence[str],
     group_vars: Sequence[str] = (),
     interval_vars: tuple[str, str] = ("start", "end"),
-    interior_partitions: int | None = None,
 ) -> DataFrame:
     """Tier-1: raw NON-OVERLAPPING intervals → per-window state.
 
@@ -156,71 +147,41 @@ def rollup_from_raw(
     windows this removes a 10^7-group hash aggregate from the hot path
     (measured ~6× on the 1h tier).
 
-    ``width`` may be a Column over ``group_vars`` (a per-row window width,
-    as :func:`rollup_tiers` passes); every window expression then reads it
-    per row, and the group keys keep rows of different widths apart."""
-    group_vars, value_vars = list(group_vars), list(value_vars)
-    s, e = (F.col(interval_vars[0]).cast("long"), F.col(interval_vars[1]).cast("long"))
-    base = x.select(
-        *group_vars, *value_vars,
-        s.alias("__xs"), e.alias("__xe"),
-        fdiv(s, width).alias("__k0"), fdiv(e, width).alias("__k1"),
-    )
+    ``width`` may be a SQL expression over ``group_vars`` (a per-row window
+    width, as :func:`rollup_tiers` passes); every window expression then
+    reads it per row, and the group keys keep rows of different widths
+    apart."""
+    dts = {v: x.schema[v].dataType for v in value_vars}
+    g, vq = [*map(_q, group_vars)], [*map(_q, value_vars)]
+    width = f"({width})"
+    ws, we, ln = _bounds(width)
+    xs, xe = (f"CAST({_q(c)} AS BIGINT)" for c in interval_vars)
+    base = x.selectExpr(*g, *vq, f"{xs} AS __xs", f"{xe} AS __xe",
+                        f"{fdiv_sql(xs, width)} AS __k0", f"{fdiv_sql(xe, width)} AS __k1")
 
     # --- boundary windows: first and last window of each interval
-    kb = F.explode(F.array_distinct(F.array(F.col("__k0"), F.col("__k1")))).alias("__k")
-    b = base.select(*group_vars, *value_vars, "__xs", "__xe", kb)
-    ws = (F.col("__k") * width).cast("long")
-    we = ((F.col("__k") + 1) * width - 1).cast("long")
-    os_ = F.greatest(F.col("__xs"), ws)
-    oe_ = F.least(F.col("__xe"), we)
-    cols = [*group_vars, "__k", os_.alias("__os"), oe_.alias("__oe")]
-    for v in value_vars:
-        wt = oe_ - os_ + 1
-        cols += [
-            _wv_term(wt, v, x.schema[v].dataType).alias(f"__swv_{v}"),
-            wt.alias(f"__nob_{v}"),
-            F.col(v).isNull().alias(f"__na_{v}"),
-        ]
-    boundary = _state_agg(b.select(*cols), group_vars, value_vars, width)
+    pieces = base.selectExpr(
+        *g, *vq, "__xs", "__xe", "explode(array_distinct(array(__k0, __k1))) AS __k",
+    ).selectExpr(*g, *vq, "__k", f"greatest(__xs, {ws}) AS __os", f"least(__xe, {we}) AS __oe")
+    dur, parts = "__oe - __os + 1", {}
+    for v, qv in zip(value_vars, vq):
+        cov = f"CASE WHEN {qv} IS NOT NULL THEN"
+        parts[v] = (f"{cov} __os END", f"{cov} __oe END", "NULL",
+                    f"{cov} {_wv_sql(dur, qv, dts[v])} END", f"{cov} {dur} END", _zero(dts[v]))
+    boundary = _state_agg(pieces, width, group_vars, "__os", (dur, "__os", "__oe"), parts)
 
     # --- interior windows: fully covered by this single interval
-    it = base.filter(F.col("__k1") > F.col("__k0") + 1)
-    if interior_partitions:
-        # Escape hatch, OFF by default: the interior branch is NARROW, so
-        # its task count = the raw scan's split count. If the raw table
-        # arrives in fewer splits than cores (one giant unsplittable file,
-        # a tiny-but-dense table), the ~len/width×-amplified explode+write
-        # serializes; round-robin repartitioning the FILTERED pre-explode
-        # rows (only long intervals shuffle — cheap) restores parallelism.
-        # When splits ≥ cores this knob LOSES (measured 3.2× slower at 4
-        # cores, BENCH/interior_repartition_probe.py): the extra exchange
-        # destroys url clustering, and the exploded writes lose their
-        # run-length/dict locality. Leave it None unless the input layout
-        # is known-degenerate.
-        it = it.repartition(interior_partitions)
-    it = it.select(
-        *group_vars, *value_vars,
-        F.explode(F.sequence(F.col("__k0") + 1, F.col("__k1") - 1)).alias("__k"),
-    )
-    iws = (F.col("__k") * width).cast("long")
-    iwe = ((F.col("__k") + 1) * width - 1).cast("long")
-    ln = F.lit(width).cast("long")
-    zero = F.lit(0).cast("long")
-    icols = [*(F.col(g) for g in group_vars), iws.alias("ws"), iwe.alias("we"),
-             ln.alias("xduration"), iws.alias("xminstart"), iwe.alias("xmaxend")]
-    for v in value_vars:
-        na = F.col(v).isNull()
-        icols += [
-            F.when(na, _zero_like(x.schema[v].dataType))
-            .otherwise(_wv_term(ln, v, x.schema[v].dataType)).alias(f"sum_wv_{v}"),
-            F.when(na, zero).otherwise(ln).alias(f"nobs_{v}"),
-            F.when(na, ln).otherwise(zero).alias(f"prefix_{v}"),
-            F.when(na, ln).otherwise(zero).alias(f"suffix_{v}"),
-            F.when(na, ln).otherwise(zero).alias(f"best_{v}"),
+    interior = [*g, f"{ws} AS ws", f"{we} AS we", f"{ln} AS xduration",
+                f"{ws} AS xminstart", f"{we} AS xmaxend"]
+    for v, qv in zip(value_vars, vq):
+        na = f"CASE WHEN {qv} IS NULL THEN"
+        interior += [
+            f"{na} {_zero(dts[v])} ELSE {_wv_sql(ln, qv, dts[v])} END AS {_q('sum_wv_', v)}",
+            f"{na} 0L ELSE {ln} END AS {_q('nobs_', v)}",
+            *(f"{na} {ln} ELSE 0L END AS {_q(p, v)}" for p in ("prefix_", "suffix_", "best_")),
         ]
-    interior = it.select(*icols)
-    return boundary.unionByName(interior)
+    return boundary.unionByName(base.filter("__k1 > __k0 + 1").selectExpr(
+        *g, *vq, "explode(sequence(__k0 + 1, __k1 - 1)) AS __k").selectExpr(*interior))
 
 
 def rollup_tiers(
@@ -234,17 +195,16 @@ def rollup_tiers(
 
     x × tiers: each raw row is repeated once per tier, and one
     :func:`rollup_from_raw` runs over the result with the window width a
-    column (a CASE on the tier) and the tier added to the window and group
+    SQL ``CASE`` on the tier and the tier added to the window and group
     keys. Rows of tier ``t`` equal ``rollup_from_raw(x, widths[t], …)``
     (tested). One plan instead of one per tier: x is scanned once, the
     boundary windows of all tiers share one exchange, and the result is
     persisted, counted and written once."""
-    tier = F.col("tier")
-    (name0, w0), *rest = widths.items()
-    width = F.when(tier == name0, F.lit(w0))
-    for name, w in rest:
-        width = width.when(tier == name, F.lit(w))
-    tagged = x.select("*", F.explode(F.array(*map(F.lit, widths))).alias("tier"))
+    # the tier names as SQL string literals
+    lits = ["'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'" for t in widths]
+    width = " ".join(["CASE tier", *(f"WHEN {t} THEN {w}" for t, w in zip(lits, widths.values())),
+                      "END"])
+    tagged = x.selectExpr("*", f"explode(array({', '.join(lits)})) AS tier")
     return rollup_from_raw(tagged, width, value_vars, [*group_vars, "tier"])
 
 
@@ -256,80 +216,24 @@ def rollup_cascade(
     group_vars: Sequence[str] = (),
 ) -> DataFrame:
     """Tier-k → tier-(k+1): merge child states into parent windows.
-    ``to_width`` must be a multiple of ``from_width`` (epoch-aligned tiling)."""
+    ``to_width`` must be a multiple of ``from_width`` (epoch-aligned tiling).
+
+    Same window+aggregate shape as tier-1 (:func:`_state_agg`): each child
+    covers v over ``[ws + prefix, we − suffix]`` and its inner best run
+    competes as-is; an all-gap child contributes nothing (its gap is
+    covered by its neighbors' gap terms)."""
     if to_width % from_width:
         raise ValueError(f"{to_width} not a multiple of {from_width}: tiers must tile")
-    group_vars, value_vars = list(group_vars), list(value_vars)
-    k = fdiv(F.col("ws"), to_width).alias("__k")
-    ln = F.col("we") - F.col("ws") + 1
-    cols = [*group_vars, k, F.col("ws"), F.col("we"),
-            F.col("xminstart").alias("__os_raw"), F.col("xmaxend").alias("__oe_raw"),
-            "xduration"]
+    schema = state.schema
+    parts = {}
     for v in value_vars:
-        # child coverage span for v: [ws+prefix, we-suffix]; all-gap child
-        # contributes nothing (its gap is covered by neighbors' gap terms)
-        has_cov = F.col(f"prefix_{v}") < ln
-        cols += [
-            F.when(has_cov, F.col("ws") + F.col(f"prefix_{v}")).alias(f"__cs_{v}"),
-            F.when(has_cov, F.col("we") - F.col(f"suffix_{v}")).alias(f"__ce_{v}"),
-            F.when(has_cov, F.col(f"best_{v}")).alias(f"__ib_{v}"),
-            F.col(f"sum_wv_{v}").alias(f"__swv_{v}"),
-            F.col(f"nobs_{v}").alias(f"__nob_{v}"),
-        ]
-    child = state.select(*cols)
-
-    # same window+aggregate shape as tier-1's _state_agg: the gap run ending
-    # at each covered child = child coverage start − previous covered child's
-    # coverage end − 1 (parent_ws−1 seed folds the lead-in gap in); a child's
-    # internal best competes as-is. All codegen, no arrays.
-    pws = (F.col("__k") * to_width).cast("long")
-    wspec = (
-        Window.partitionBy(*group_vars, "__k")
-        .orderBy("ws")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    gap_cols = []
-    for v in value_vars:
-        prev_ce = F.max(F.col(f"__ce_{v}")).over(wspec)
-        run = F.col(f"__cs_{v}") - F.coalesce(prev_ce, pws - 1) - 1
-        gap_cols.append(
-            F.when(F.col(f"__cs_{v}").isNotNull(),
-                   F.greatest(run, F.col(f"__ib_{v}"))).alias(f"__gap_{v}")
-        )
-    child = child.select("*", *gap_cols)
-
-    aggs = [
-        F.sum("xduration").alias("xduration"),
-        F.min("__os_raw").alias("xminstart"),
-        F.max("__oe_raw").alias("xmaxend"),
-    ]
-    for v in value_vars:
-        aggs += [
-            F.sum(f"__swv_{v}").alias(f"sum_wv_{v}"),
-            F.sum(f"__nob_{v}").alias(f"nobs_{v}"),
-            F.min(f"__cs_{v}").alias(f"__first_{v}"),
-            F.max(f"__ce_{v}").alias(f"__last_{v}"),
-            F.max(f"__gap_{v}").alias(f"__maxg_{v}"),
-        ]
-    agg = child.groupBy(*group_vars, "__k").agg(*aggs)
-
-    ws = (F.col("__k") * to_width).cast("long")
-    we = ((F.col("__k") + 1) * to_width - 1).cast("long")
-    pln = F.lit(to_width).cast("long")
-    out = [*(F.col(g) for g in group_vars), ws.alias("ws"), we.alias("we"),
-           "xduration", "xminstart", "xmaxend"]
-    for v in value_vars:
-        suffix = F.when(F.col(f"__last_{v}").isNull(), pln).otherwise(we - F.col(f"__last_{v}"))
-        out += [
-            F.coalesce(
-                F.col(f"sum_wv_{v}"), _zero_like(state.schema[f"sum_wv_{v}"].dataType)
-            ).alias(f"sum_wv_{v}"),
-            F.coalesce(F.col(f"nobs_{v}"), F.lit(0)).cast("long").alias(f"nobs_{v}"),
-            F.coalesce(F.col(f"__first_{v}") - ws, pln).alias(f"prefix_{v}"),
-            suffix.alias(f"suffix_{v}"),
-            F.greatest(F.coalesce(F.col(f"__maxg_{v}"), F.lit(0)), suffix).alias(f"best_{v}"),
-        ]
-    return agg.select(*out)
+        cov = f"CASE WHEN {_q('prefix_', v)} < we - ws + 1 THEN"
+        parts[v] = (f"{cov} ws + {_q('prefix_', v)} END", f"{cov} we - {_q('suffix_', v)} END",
+                    f"{cov} {_q('best_', v)} END", _q("sum_wv_", v), _q("nobs_", v),
+                    _zero(schema[f"sum_wv_{v}"].dataType))
+    width = f"({to_width})"
+    rows = state.selectExpr("*", f"{fdiv_sql('ws', width)} AS __k")
+    return _state_agg(rows, width, group_vars, "ws", ("xduration", "xminstart", "xmaxend"), parts)
 
 
 def finalize(
@@ -361,31 +265,19 @@ def finalize(
         state = grid.join(st, cond, "left").drop(
             "__f_ws", "__f_we", *[f"__f_{g}" for g in group_vars]
         )
-    ydur = (F.col("we") - F.col("ws") + 1).cast("long")
-    out: list[Column] = [F.col(g) for g in group_vars]
-    out += [F.col("ws").alias(s_out), F.col("we").alias(e_out)]
+    schema = state.schema
+    ydur = "CAST(we - ws + 1 AS BIGINT)"
+    out = [*map(_q, group_vars), f"ws AS {_q(s_out)}", f"we AS {_q(e_out)}"]
     for v in value_vars:
-        nobs = F.coalesce(F.col(f"nobs_{v}"), F.lit(0))
-        avg = _mean_of(
-            F.col(f"sum_wv_{v}"), F.col(f"nobs_{v}"),
-            state.schema[f"sum_wv_{v}"].dataType,
-        )
-        out.append(
-            F.when(
-                (nobs > 0)
-                & (F.lit(100.0) * nobs / ydur >= F.lit(float(required_percentage))),
-                avg,
-            ).cast("double").alias(v)
-        )
-    out.append(ydur.alias("yduration"))
-    out.append(F.coalesce(F.col("xduration"), F.lit(0)).cast("long").alias("xduration"))
-    out += [
-        F.coalesce(F.col(f"nobs_{v}"), F.lit(0)).cast("long").alias(f"nobs_{v}")
-        for v in value_vars
-    ]
-    out += [F.col("xminstart"), F.col("xmaxend")]
-    out += [
-        F.coalesce(F.col(f"best_{v}"), ydur).cast("long").alias(f"maxgap_{v}")
-        for v in value_vars
-    ]
-    return state.select(*out)
+        nobs = _q("nobs_", v)
+        mean = _mean_sql(_q("sum_wv_", v), nobs, schema[f"sum_wv_{v}"].dataType)
+        keep = (f"coalesce({nobs}, 0) > 0 AND 100.0D * coalesce({nobs}, 0) / {ydur} >= "
+                f"{float(required_percentage)!r}D")
+        out.append(f"CAST(CASE WHEN {keep} THEN {mean} END AS DOUBLE) AS {_q(v)}")
+    out += [f"{ydur} AS yduration", "CAST(coalesce(xduration, 0) AS BIGINT) AS xduration"]
+    out += [f"CAST(coalesce({_q('nobs_', v)}, 0) AS BIGINT) AS {_q('nobs_', v)}"
+            for v in value_vars]
+    out += ["xminstart", "xmaxend"]
+    out += [f"CAST(coalesce({_q('best_', v)}, {ydur}) AS BIGINT) AS {_q('maxgap_', v)}"
+            for v in value_vars]
+    return state.selectExpr(*out)

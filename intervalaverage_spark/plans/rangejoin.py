@@ -52,6 +52,11 @@ def fdiv(c: Column, w: int) -> Column:
     return F.call_function("div", cl - F.pmod(cl, F.lit(w)), F.lit(w))
 
 
+def fdiv_sql(c: str, w: str) -> str:
+    """:func:`fdiv` as SQL text over the SQL expressions ``c`` and ``w``."""
+    return f"div(CAST({c} AS BIGINT) - pmod(CAST({c} AS BIGINT), {w}), {w})"
+
+
 def estimate_bucket_width(
     x: DataFrame, start: str, end: str, sample_fraction: int = 16,
     cap: int = 100_000,

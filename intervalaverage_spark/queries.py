@@ -118,7 +118,7 @@ def _ia_oracle_from(x_sql: str, k: str, width: int, rp: float, sparse: bool) -> 
     Σw·v accumulates in DECIMAL(38,12) — weights are exact integers, so the
     sum is exact, order-free and engine-independent; the compared ``value``
     is then one deterministic decimal→double cast + one IEEE division.
-    Mirrors the Spark side exactly (operators/average.py _wv_term/_mean_of
+    Mirrors the Spark side exactly (operators/average.py _wv_sql/_mean_sql
     on the DECIMAL(26,12)-cast value column)."""
     value = (
         f"CASE WHEN COALESCE(a.nobs, 0) > 0 AND "

@@ -49,7 +49,7 @@ def stream_hourly_state(
     src = visits.withWatermark(ts_col, delay)
     # DecimalType values keep exact (order-independent) sums — the same
     # exact-arithmetic contract as the batch tiers (operators/average.py
-    # _wv_term); everything else sums as double.
+    # _wv_sql); everything else sums as double.
     from pyspark.sql import types as T
 
     v = F.col(value_col)

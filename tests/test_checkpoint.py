@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -11,13 +12,35 @@ import __spark_entry__ as entrymod
 from intervalaverage_spark.jobs.rollup import finalize_tier, run_rollup
 from intervalaverage_spark.operators import tiers as tiers_mod
 from intervalaverage_spark.plans import checkpoint as ckpt
-from intervalaverage_spark.sources.webts import synth_webpages
+from intervalaverage_spark.sources.webts import observation_intervals, synth_webpages
 from tests.test_entry_contract import SF_DIR
+from tests.test_tiers import _checksum
 
 
 @pytest.fixture()
 def out_root(tmp_path):
     return str(tmp_path / "tiers")
+
+
+@contextlib.contextmanager
+def spark_jobs(spark, group):
+    """Collects the ids of the Spark jobs started inside the block."""
+    sc, ids = spark.sparkContext, []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        ids += sc.statusTracker().getJobIdsForGroup(group)
+        sc.setJobGroup(None, None)
+
+
+def _mutate_one_url(pages):
+    """``pages`` with one url's text edited, and that url's bucket of 8."""
+    victim = pages.select("url").first()["url"]
+    victim_p = ckpt.with_bucket(pages.filter(F.col("url") == victim), "url", 8).first()["p"]
+    return pages.withColumn("text", F.when(
+        F.col("url") == victim, F.concat(F.col("text"), F.lit(" EDITED"))).otherwise(
+        F.col("text"))), victim_p
 
 
 def test_resume_skips_unchanged(spark, out_root):
@@ -143,15 +166,33 @@ def test_direct_run_is_one_tier_pass(spark, out_root, monkeypatch):
 
 
 def test_missing_manifest_is_empty_without_a_job(spark, tmp_path):
-    sc = spark.sparkContext
-    sc.setJobGroup("read-missing-manifest", "read_manifest on a fresh root")
-    try:
+    with spark_jobs(spark, "read-missing-manifest") as jobs:
         m = ckpt.read_manifest(spark, str(tmp_path / "fresh"))
-        assert sc.statusTracker().getJobIdsForGroup("read-missing-manifest") == []
-    finally:
-        sc.setJobGroup(None, None)
-    assert m.count() == 0 and m.columns == [
+    assert jobs == []
+    assert m == [] and ckpt.MANIFEST_ARROW.names == [
         "tier", "p", "input_fingerprint", "input_rows", "output_rows", "output_checksum"]
+
+
+def test_manifest_io_and_resume_plan_run_no_job(spark, out_root):
+    """Only the fingerprint aggregate runs on Spark: reading and writing
+    the manifest and both resume decisions are driver work."""
+    pages = synth_webpages(spark, n_pages=20, n_domains=4, seed=5)
+    run_rollup(spark, pages, out_root=out_root, n_buckets=4, tiers=("1d",))
+    fps = ckpt.fingerprint_partitions(
+        ckpt.with_bucket(observation_intervals(pages, unit=1), "url", 4)).collect()
+    jobs = {}
+    with spark_jobs(spark, "read_manifest") as jobs["read_manifest"]:
+        m = ckpt.read_manifest(spark, out_root)
+    with spark_jobs(spark, "plan_resume") as jobs["plan_resume"]:
+        todo, skipped = ckpt.plan_resume(fps, m, "input")
+    with spark_jobs(spark, "vanished_buckets") as jobs["vanished_buckets"]:
+        gone = ckpt.vanished_buckets(fps, m, "input")
+    with spark_jobs(spark, "write_manifest") as jobs["write_manifest"]:
+        ckpt.write_manifest(m[1:], out_root, spark)
+    assert all(ids == [] for ids in jobs.values()), jobs
+    assert todo == [] and gone == [] and skipped == sorted(r[1] for r in m)
+    assert all(len(r) == len(ckpt.MANIFEST_ARROW) and r[0] == "input" for r in m)
+    assert ckpt.read_manifest(spark, out_root) == m[1:]
 
 
 def test_corrupt_manifest_raises(spark, out_root):
@@ -170,6 +211,103 @@ def test_corrupt_manifest_raises(spark, out_root):
         ckpt.read_manifest(spark, out_root)
     with pytest.raises(ckpt.ManifestError):
         run_rollup(spark, pages, out_root=out_root, n_buckets=4, tiers=("1d",))
+
+
+def test_mistyped_manifest_raises(spark, out_root):
+    """A manifest column of the wrong type is unreadable too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(out_root, "_lineage"))
+    cols = {c: pa.array([1], pa.int64()) for c in ckpt.MANIFEST_ARROW.names}
+    cols.update(tier=pa.array(["input"]), p=pa.array(["x"]))
+    pq.write_table(pa.table(cols), os.path.join(out_root, ckpt.MANIFEST))
+    with pytest.raises(ckpt.ManifestError, match="unreadable"):
+        ckpt.read_manifest(spark, out_root)
+
+
+def test_crash_before_the_manifest_write_recomputes_on_rerun(spark, out_root, monkeypatch):
+    """A run that dies after its tier write but before its manifest write
+    leaves the old fingerprints on record: the re-run recomputes the dirty
+    bucket and its state equals a clean run's."""
+    pages = synth_webpages(spark, n_pages=40, n_domains=6, seed=5)
+    run_rollup(spark, pages, out_root=out_root, n_buckets=8, tiers=("1d",))
+    mutated, _ = _mutate_one_url(pages)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the manifest write")
+
+    monkeypatch.setattr(ckpt, "write_manifest", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        run_rollup(spark, mutated, out_root=out_root, n_buckets=8, tiers=("1d",))
+    monkeypatch.undo()
+
+    r = run_rollup(spark, mutated, out_root=out_root, n_buckets=8, tiers=("1d",))
+    assert (r["buckets"]["todo"], r["buckets"]["skipped"]) == (1, 7), r
+    clean = out_root + "_clean"
+    run_rollup(spark, mutated, out_root=clean, n_buckets=8, tiers=("1d",))
+    assert _checksum(spark.read.parquet(f"{out_root}/tier=1d")) == _checksum(
+        spark.read.parquet(f"{clean}/tier=1d"))
+
+
+def test_failed_manifest_rename_keeps_the_old_manifest(spark, out_root, monkeypatch):
+    """A manifest write that dies after writing its temp file, in the
+    rename, leaves the old manifest readable, and the re-run makes the same
+    resume decision the failed run made."""
+    pages = synth_webpages(spark, n_pages=40, n_domains=6, seed=5)
+    run_rollup(spark, pages, out_root=out_root, n_buckets=8, tiers=("1d",))
+    old = ckpt.read_manifest(spark, out_root)
+    mutated, victim_p = _mutate_one_url(pages)
+    plans, plan_resume, rename_over = [], ckpt.plan_resume, ckpt._rename_over
+
+    def recording(*args, **kwargs):
+        plans.append(plan_resume(*args, **kwargs))
+        return plans[-1]
+
+    def crash(*args, **kwargs):
+        raise OSError("rename failed")
+
+    monkeypatch.setattr(ckpt, "plan_resume", recording)
+    monkeypatch.setattr(ckpt, "_rename_over", crash)
+    with pytest.raises(OSError, match="rename failed"):
+        run_rollup(spark, mutated, out_root=out_root, n_buckets=8, tiers=("1d",))
+    tmp = os.path.join(out_root, "_lineage", "manifest.parquet.tmp")
+    assert os.path.exists(tmp)
+    assert ckpt.read_manifest(spark, out_root) == old
+
+    monkeypatch.setattr(ckpt, "_rename_over", rename_over)
+    r = run_rollup(spark, mutated, out_root=out_root, n_buckets=8, tiers=("1d",))
+    assert plans[0] == plans[1] and plans[0][0] == [victim_p], plans
+    assert (r["buckets"]["todo"], r["buckets"]["skipped"]) == (1, 7), r
+    assert not os.path.exists(tmp)
+
+
+def test_root_without_manifest_clears_vanished_bucket(spark, out_root):
+    """A root whose state has no manifest — written when ``_lineage`` held
+    Spark ``part-*`` files, or left by a crash between the manifest's
+    delete and rename — recomputes the buckets that still have input and
+    clears the partitions of the one whose input vanished."""
+    pages = synth_webpages(spark, n_pages=40, n_domains=6, seed=5)
+    run_rollup(spark, pages, out_root=out_root, n_buckets=8, tiers=("1d",))
+    lineage = os.path.join(out_root, "_lineage")
+    old_rows = ckpt.read_manifest(spark, out_root)
+    spark.createDataFrame(old_rows, "tier string, p long, input_fingerprint long, "
+                          "input_rows long, output_rows long, output_checksum long").write.mode(
+        "overwrite").parquet(lineage)
+    assert ckpt.read_manifest(spark, out_root) == []
+
+    gone_p = old_rows[0][1]
+    kept = ckpt.with_bucket(pages, "url", 8).filter(F.col("p") != gone_p).drop("p")
+    r = run_rollup(spark, kept, out_root=out_root, n_buckets=8, tiers=("1d",))
+    assert (r["buckets"]["todo"], r["buckets"]["skipped"], r["buckets"]["vanished"]) == (
+        len(old_rows) - 1, 0, 1), r
+    assert not os.path.exists(os.path.join(out_root, "tier=1d", f"p={gone_p}"))
+    assert sorted(p for _, p, *_ in ckpt.read_manifest(spark, out_root)) == sorted(
+        p for _, p, *_ in old_rows if p != gone_p)
+    clean = out_root + "_clean"
+    run_rollup(spark, kept, out_root=clean, n_buckets=8, tiers=("1d",))
+    assert _checksum(spark.read.parquet(f"{out_root}/tier=1d")) == _checksum(
+        spark.read.parquet(f"{clean}/tier=1d"))
 
 
 def test_resume_metrics_query_rows(spark):

@@ -148,7 +148,7 @@ def test_named_interval_vars_rejected(spark, xy):
 
 
 def test_decimal_weight_width_adapts_to_value_precision(spark):
-    """_wv_term widens the weight cast to min(37−p, 19) digits: a
+    """_wv_sql widens the weight cast to min(37−p, 19) digits: a
     low-precision value column supports intervals far beyond the old
     1e10-unit bound (ADVICE r2: nanosecond-domain lengths overflowed
     decimal(10,0)). 12-digit weight × decimal(6,2) value must be exact."""

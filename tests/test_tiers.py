@@ -5,10 +5,14 @@ consistency; weighted-mean associativity via carried sums)."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
+from py4j import protocol
 from pyspark.sql import functions as F
 
 from intervalaverage_spark import interval_average, tier_grid
+from intervalaverage_spark.jobs.rollup import finalize_tier
 from intervalaverage_spark.operators.tiers import (
     finalize,
     TIER_WIDTHS,
@@ -105,6 +109,69 @@ def test_fused_tier_pass_equals_each_tier_alone(spark, web_x, tmp_path):
         alone = rollup_from_raw(x, width, vv, gv)
         assert written.schema["sum_wv_dec"].dataType == alone.schema["sum_wv_dec"].dataType
         assert _checksum(written) == _checksum(alone), tier
+
+
+#: plain → awkward column names: reserved words, a space, backticks
+AWKWARD = {"url": "select", "lang": "la`ng", "text_bytes": "text bytes",
+           "crawl_gap": "crawl`gap", "start": "from", "end": "to"}
+
+
+def _awkward(col):
+    """The awkward name of a plain output column (state and points)."""
+    for prefix in ("", "sum_wv_", "nobs_", "prefix_", "suffix_", "best_", "maxgap_"):
+        if col.startswith(prefix) and col[len(prefix):] in AWKWARD:
+            return prefix + AWKWARD[col[len(prefix):]]
+    return col
+
+
+def test_awkward_column_names_are_quoted(spark, web_x):
+    """Group, value and interval columns named after a reserved word, with
+    a space or with a backtick give the plain-name state and points. The
+    tier pass reads ``start``/``end``; the interval names go through
+    ``rollup_from_raw`` and ``finalize``."""
+    tiers = {t: TIER_WIDTHS[t] for t in ("1h", "1d", "30d")}
+
+    def run(x, name):
+        gv, vv, iv = [name(g) for g in GV], [name(v) for v in VV], (name("start"), name("end"))
+        state = rollup_tiers(x.withColumnsRenamed(dict(zip(iv, ("start", "end")))), tiers, vv, gv)
+        points = finalize(state.filter(F.col("tier") == "1d"), TIER_WIDTHS["1d"], vv,
+                          [*gv, "tier"], required_percentage=50, interval_vars_out=iv)
+        return state, points, rollup_from_raw(x, TIER_WIDTHS["1d"], vv, gv, iv)
+
+    plain = run(web_x, lambda c: c)
+    awkward = run(web_x.select(*(F.col(c).alias(AWKWARD.get(c, c)) for c in web_x.columns)),
+                  AWKWARD.get)
+    for p, a in zip(plain, awkward):
+        assert a.columns == [_awkward(c) for c in p.columns]
+        assert _checksum(a.toDF(*p.columns)) == _checksum(p)
+
+
+def test_plans_build_in_few_py4j_calls(spark, web_x, tmp_path, monkeypatch):
+    """The tier and finalize plans are SQL text: building them (not running
+    them) takes a bounded number of driver → JVM calls, where a Column per
+    operator took about 3.3k and 740."""
+    x = ckpt.with_bucket(web_x, "url", 4)
+    tiers = {t: TIER_WIDTHS[t] for t in ("1h", "1d", "30d")}
+    root = str(tmp_path / "state")
+    ckpt.write_partitioned(rollup_tiers(x, tiers, VV, [*GV, "p"]), root, ("tier", "p"))
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, calls = client.send_command, threading.get_ident(), []
+
+    def counting(command, *args, **kwargs):
+        # object releases come from py4j's finalizer thread, not the build
+        if threading.get_ident() == me and not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    rollup_tiers(x, tiers, VV, [*GV, "p"])
+    n_tiers = len(calls)
+    calls.clear()
+    finalize_tier(spark, root, "1d")
+    n_finalize = len(calls)
+    monkeypatch.undo()
+    assert n_tiers <= 300 and n_finalize <= 60, (n_tiers, n_finalize)
 
 
 def test_nonaligned_boundaries_split_weights(spark):

@@ -24,14 +24,16 @@ def plan_of(df) -> str:
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    # Plan-audit mode (round-8): the dedup detectors materialize their
-    # shared intermediates with localCheckpoint, which truncates the lazy
-    # plan to the post-checkpoint stub — disable checkpointing here so
-    # PLANS.md asserts on the FULL pipeline shape (identical expressions,
-    # identical results; see dedup._ckpt).
-    os.environ["IA_NO_LOCAL_CKPT"] = "1"
+    # Plan-audit mode: the dedup detectors materialize their shared
+    # intermediates with localCheckpoint, which truncates the lazy plan to
+    # the post-checkpoint stub — patch it to the identity here so PLANS.md
+    # asserts on the FULL pipeline shape (identical expressions, identical
+    # results; see dedup._ckpt).
     from intervalaverage_spark import queries as q
+    from intervalaverage_spark.functions import dedup
     from intervalaverage_spark.session import get_spark
+
+    dedup._ckpt = lambda df: df
 
     spark = get_spark(app_name="plans", master="local[8]", shuffle_partitions=16)
     sections = []

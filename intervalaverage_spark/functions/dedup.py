@@ -32,27 +32,25 @@ payload extension (north_rule axes A+B).
 from __future__ import annotations
 
 import math
-import os
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from intervalaverage_spark.functions.textstats import bind_once, tokens
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
-    """Materialize a shared intermediate once (``localCheckpoint``) —
-    round-8: the detectors reference their exploded-shingle / band-index /
-    candidate tables from several plan branches, and without
-    materialization every branch re-ran the full upstream pipeline (the
-    round-start minhash plan scanned the source 24×; guide §3.3).
+    """Materialize a shared intermediate once (``localCheckpoint``): the
+    detectors reference their exploded-shingle, band-index and candidate
+    tables from several plan branches, and without materialization every
+    branch re-runs the full upstream pipeline (the minhash plan once
+    scanned the source 24×).
 
-    ``IA_NO_LOCAL_CKPT=1`` disables it (identical results, lazily
-    recomputed branches) — the plan-audit mode BENCH/dump_plans.py uses so
-    PLANS.md can assert on the FULL pipeline shape instead of the
-    checkpointed stub."""
-    if os.environ.get("IA_NO_LOCAL_CKPT") == "1":
-        return df
+    The one materialization path. Results never depend on it: patching
+    ``dedup._ckpt`` to the identity gives the same rows from the full lazy
+    plan, which is how BENCH/dump_plans.py audits the uncheckpointed plan
+    shape. A scoped, lazy ``persist()`` in its place measured slower
+    (BENCH/NOTES.md)."""
     return df.localCheckpoint()
 
 
@@ -78,6 +76,20 @@ def shingles(col: Column | str, n: int = 3) -> Column:
         return F.array_distinct(F.when(k >= n, grams).otherwise(whole))
 
     return bind_once(tokens(col), body)
+
+
+def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """The exploded ``(id, sh)`` table: one row per distinct shingle of
+    each doc. Only these two columns: a sibling ``size(shingles())`` in the
+    generate projection would re-evaluate per output row (~90× slower)."""
+    return df.select(F.col(id_col).alias("id"),
+                     F.explode(shingles(text_col, n)).alias("sh"))
+
+
+def _stop_list(sh: DataFrame, max_df: int) -> DataFrame:
+    """Shingles of an ``(id, sh)`` table whose document frequency exceeds
+    ``max_df`` (one column ``sh``)."""
+    return sh.groupBy("sh").count().filter(F.col("count") > max_df).select("sh")
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -117,11 +129,9 @@ def ngram_jaccard_pairs(
     full-shingle arrays never shuffle; output (id1, id2, jaccard) with
     id1 < id2.
 
-    The explode carries ONLY (id, shingle): a sibling ``size(shingles())``
-    column in the generate projection is re-evaluated per OUTPUT row —
-    O(doc_len²) per doc, measured ~90× slower at 2000 docs — so ``|A|``
-    is instead recovered as rows-per-id from the exploded table itself
-    (shingle sets are distinct by construction).
+    ``|A|`` is recovered as rows-per-id from the exploded
+    :func:`_shingle_rows` table (shingle sets are distinct by
+    construction).
 
     The exploded table is localCheckpoint-materialized once: the plan
     references it five times (sizes, hot list, both self-join sides, hot
@@ -129,15 +139,11 @@ def ngram_jaccard_pairs(
     tokenize+shingle scan — the round-start physical plan scanned the
     source 20× (guide §3.3: materialise shared intermediates).
     """
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(text_col, n)).alias("sh"),
-    ).transform(_ckpt)
+    sh = _shingle_rows(df, id_col, text_col, n).transform(_ckpt)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     kept = sh
     if max_df is not None:
-        hot = (sh.groupBy("sh").count().filter(F.col("count") > max_df)
-               .select("sh").transform(_ckpt))
+        hot = _stop_list(sh, max_df).transform(_ckpt)
         kept = sh.join(F.broadcast(hot), "sh", "left_anti")
     a, b = kept.alias("a"), kept.alias("b")
     common = (
@@ -196,9 +202,10 @@ def prefix_jaccard_pairs(
       join at all, which is exactly what the cap tried to approximate;
     * **length filter**: ``t·|A| ≤ |B| ≤ |A|/t`` as a join predicate
       (decimal arithmetic — no float-boundary leaks);
-    * **exact verify**: candidates re-score by full-set
-      ``array_intersect`` (the LSH path's verify idiom), so precision
-      is 1.0 and the reported jaccard is the true one.
+    * **exact verify**: candidates re-score through
+      :func:`_verify_jaccard`, the same full-set ``array_intersect``
+      verify the LSH paths use, so precision is 1.0 and the reported
+      jaccard is the true one.
 
     Both ⌈t·|A|⌉ and the length bounds are computed in DECIMAL so the
     candidate SET is deterministic cross-run (``0.3·10`` never becomes
@@ -226,12 +233,8 @@ def prefix_jaccard_pairs(
     t_floor = math.floor(float(threshold) * 1_000_000) / 1_000_000
     td = F.lit(t_floor).cast("decimal(9,6)")
     # one materialized shingle table: the plan otherwise re-runs the
-    # tokenize+shingle explode for the df fold, the rank window and the
-    # verify arrays (round-start plan: 12 source scans — guide §3.3)
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(text_col, n)).alias("sh"),
-    ).transform(_ckpt)
+    # tokenize+shingle explode for the df fold and the rank window
+    sh = _shingle_rows(df, id_col, text_col, n).transform(_ckpt)
     # document frequency attached via a count-over-window on the shingle
     # partitioning instead of a groupBy + join back: one exchange of the
     # shingle table replaces the aggregate exchange PLUS the sort-merge
@@ -290,34 +293,7 @@ def prefix_jaccard_pairs(
         .distinct()
         .transform(_ckpt)
     )
-    # verify arrays only for docs that appear in ≥1 candidate pair (the
-    # _verify_jaccard idiom): the array-bearing aggregate runs over
-    # O(candidate docs), not O(corpus), and is materialized once instead
-    # of once per join side
-    cand_ids = (
-        cand.select(F.col("id1").alias("id"))
-        .unionByName(cand.select(F.col("id2").alias("id")))
-        .distinct()
-    )
-    arrs = sh.join(cand_ids, "id", "left_semi").groupBy("id").agg(
-        F.collect_set("sh").alias("shs"),
-        F.count(F.lit(1)).alias("sz"),
-    ).transform(_ckpt)
-    scored = (
-        cand
-        .join(arrs.select(F.col("id").alias("id1"),
-                          F.col("shs").alias("shs1"),
-                          F.col("sz").alias("sz1")), "id1")
-        .join(arrs.select(F.col("id").alias("id2"),
-                          F.col("shs").alias("shs2"),
-                          F.col("sz").alias("sz2")), "id2")
-        .withColumn("common", F.size(F.array_intersect("shs1", "shs2")))
-    )
-    j = F.col("common") / (F.col("sz1") + F.col("sz2") - F.col("common"))
-    return (
-        scored.select("id1", "id2", F.round(j, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verify_jaccard(df, cand, id_col, text_col, n, threshold)
 
 
 # ------------------------------------------------------- MinHash + LSH
@@ -336,9 +312,7 @@ def hot_shingles(
     list the existing signatures used — the precondition for
     ``incremental == full-recompute`` equality. Refresh it (and re-sign)
     on the cadence the corpus' boilerplate drifts."""
-    sh = df.select(F.col(id_col).alias("id"),
-                   F.explode(shingles(text_col, n)).alias("sh"))
-    return sh.groupBy("sh").count().filter(F.col("count") > max_df).select("sh")
+    return _stop_list(_shingle_rows(df, id_col, text_col, n), max_df)
 
 
 def minhash_signature(
@@ -369,17 +343,12 @@ def minhash_signature(
     against the index's frozen stop list, not its own tiny histogram."""
     if max_df is not None and stop_shingles is not None:
         raise ValueError("pass max_df OR stop_shingles, not both")
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(text_col, n)).alias("sh"),
-    )
+    sh = _shingle_rows(df, id_col, text_col, n)
     if max_df is not None:
         # the stop list derives from sh AND sh feeds the anti-join below:
         # materialize once instead of exploding the corpus twice
         sh = sh.transform(_ckpt)
-        stop_shingles = (
-            sh.groupBy("sh").count().filter(F.col("count") > max_df).select("sh")
-        )
+        stop_shingles = _stop_list(sh, max_df)
     if stop_shingles is not None:
         sh = sh.join(F.broadcast(stop_shingles.select("sh")), "sh", "left_anti")
     aggs = [
@@ -678,12 +647,16 @@ def dedup_clusters(
     each round every node takes the min of its own and its neighbors'
     labels, until a round changes nothing. Rounds = component diameter
     (duplicate clusters are dense, so a handful); each round is one
-    equi-join + one groupBy, all JVM. ``localCheckpoint`` truncates the
-    per-round lineage so plans stay O(1). The convergence probe is a
-    bounded ``limit(1).count()`` — metadata, not a data read. (Compare
-    GraphX/GraphFrames connected components — same algorithm family,
-    expressed on DataFrames so Catalyst/AQE handle the physical plan.)
-    Docs with no pairs stay their own singleton cluster.
+    equi-join + one groupBy, all JVM, materialized by an eager
+    ``localCheckpoint`` that truncates the per-round lineage so plans stay
+    O(1). The convergence test rides on that same job: an ``Observation``
+    counts the nodes whose label is new (an id that appears only in
+    ``pairs``) or lower than the node's previous label, and the loop stops
+    when the count is 0. Only ``<`` is applied to ids, so any orderable id
+    type works (string, long, decimal, date). (Compare GraphX/GraphFrames
+    connected components — same algorithm family, expressed on DataFrames
+    so Catalyst/AQE handle the physical plan.) Docs with no pairs stay
+    their own singleton cluster.
 
     Non-convergence is an ERROR, never silence: a component whose diameter
     exceeds ``max_iter`` (a pathological near-dup chain) would otherwise
@@ -697,30 +670,24 @@ def dedup_clusters(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
     labels = nodes.select(F.col(id_col).alias("n"), F.col(id_col).alias("lab"))
-
-    def _label_sum(lab_df: DataFrame):
-        # decimal(38,0) so the fold cannot overflow at any id magnitude
-        return lab_df.agg(
-            F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")).first()["s"]
-
-    # Convergence probe (round-8): min-label propagation is MONOTONE —
-    # every node's label is non-increasing — so a round changed nothing
-    # iff Σ labels is unchanged. One scalar aggregate over the freshly
-    # checkpointed labels replaces the previous per-round join-and-compare
-    # job (same decision, exactly).
-    prev_sum = _label_sum(labels)
     changed = -1
     for _ in range(max_iter):
+        # ``own`` carries each node's previous label through the groupBy;
+        # it is NULL for a node first reached by propagation this round
         prop = (
             edges.join(labels.withColumnRenamed("n", "src"), "src")
-            .select(F.col("dst").alias("n"), "lab")
+            .select(F.col("dst").alias("n"), "lab", F.lit(None).alias("own"))
         )
-        new_labels = (
-            labels.unionByName(prop).groupBy("n").agg(F.min("lab").alias("lab"))
+        obs = Observation()
+        labels = (
+            labels.select("n", "lab", F.col("lab").alias("own"))
+            .unionByName(prop)
+            .groupBy("n").agg(F.min("lab").alias("lab"), F.max("own").alias("own"))
+            .observe(obs, F.count_if(F.col("own").isNull()
+                                     | (F.col("lab") < F.col("own"))).alias("changed"))
+            .select("n", "lab")
         ).localCheckpoint()
-        new_sum = _label_sum(new_labels)
-        changed = 0 if new_sum == prev_sum else 1
-        labels, prev_sum = new_labels, new_sum
+        changed = obs.get["changed"]
         if changed == 0:
             break
     if changed != 0:

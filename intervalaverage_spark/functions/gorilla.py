@@ -53,7 +53,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -525,30 +524,27 @@ def decode_segments(
     t_col: str = "t",
     value_col: str = "v",
 ) -> DataFrame:
-    """Inverse of :func:`encode_segments`: blobs → (group…, t, v) points."""
+    """Inverse of :func:`encode_segments`: blobs → (group…, t, v) points.
+
+    Each segment row decodes on its own, so this is one ``mapInArrow`` per
+    Arrow batch with no shuffle and no grouping. Group keys repeat with
+    Arrow ``take``, keeping their exact type; NaN payloads (how nulls are
+    stored) come back as null values."""
     gv = list(group_vars)
     out_schema = ", ".join(
         [f"`{g}` {segments.schema[g].dataType.simpleString()}" for g in gv]
         + [f"`{t_col}` long", f"`{value_col}` double"]
     )
 
-    def dec(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one pass over the blob column (no iterrows — per-row Series
-        # construction dominates); group keys fan out via np.repeat
-        ts_parts: list[np.ndarray] = []
-        v_parts: list[np.ndarray] = []
-        counts: list[int] = []
-        for blob in pdf["blob"]:
-            ts, vals = gorilla_decode(bytes(blob))
-            ts_parts.append(ts)
-            v_parts.append(vals)
-            counts.append(len(ts))
-        if not counts:
-            return pd.DataFrame({**{g: [] for g in gv}, t_col: [], value_col: []})
-        reps = np.asarray(counts)
-        out = {g: np.repeat(pdf[g].to_numpy(), reps) for g in gv}
-        out[t_col] = np.concatenate(ts_parts)
-        out[value_col] = np.concatenate(v_parts)
-        return pd.DataFrame(out)
+    def dec(batches):
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            parts = [gorilla_decode(blob) for blob in batch.column("blob").to_pylist()]
+            rows = np.repeat(np.arange(batch.num_rows), [len(ts) for ts, _ in parts])
+            out = {g: batch.column(g).take(pa.array(rows)) for g in gv}
+            out[t_col] = pa.array(np.concatenate([ts for ts, _ in parts]))
+            out[value_col] = pa.array(np.concatenate([v for _, v in parts]), from_pandas=True)
+            yield from pa.table(out).to_batches()
 
-    return segments.groupBy(*gv).applyInPandas(dec, schema=out_schema)
+    return segments.select(*gv, "blob").mapInArrow(dec, schema=out_schema)

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from intervalaverage_spark.session import get_spark
@@ -18,3 +20,15 @@ def rows(df, *order):
     if order:
         data.sort(key=lambda d: tuple((d[k] is None, d[k]) for k in order))
     return data
+
+
+@contextlib.contextmanager
+def spark_jobs(spark, group):
+    """Collects the ids of the Spark jobs started inside the block."""
+    sc, ids = spark.sparkContext, []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        ids += sc.statusTracker().getJobIdsForGroup(group)
+        sc.setJobGroup(None, None)

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 import pytest
@@ -13,6 +12,7 @@ from intervalaverage_spark.jobs.rollup import finalize_tier, run_rollup
 from intervalaverage_spark.operators import tiers as tiers_mod
 from intervalaverage_spark.plans import checkpoint as ckpt
 from intervalaverage_spark.sources.webts import observation_intervals, synth_webpages
+from tests.conftest import spark_jobs
 from tests.test_entry_contract import SF_DIR
 from tests.test_tiers import _checksum
 
@@ -20,18 +20,6 @@ from tests.test_tiers import _checksum
 @pytest.fixture()
 def out_root(tmp_path):
     return str(tmp_path / "tiers")
-
-
-@contextlib.contextmanager
-def spark_jobs(spark, group):
-    """Collects the ids of the Spark jobs started inside the block."""
-    sc, ids = spark.sparkContext, []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        ids += sc.statusTracker().getJobIdsForGroup(group)
-        sc.setJobGroup(None, None)
 
 
 def _mutate_one_url(pages):

@@ -125,3 +125,20 @@ def test_batch_split_segments(spark):
     sizes = [n for n, _ in want.values()]
     assert max(sizes) > 5 and min(sizes) < 5
     assert got == want
+
+
+def test_decode_keeps_exact_keys_without_a_shuffle(spark):
+    """Decode is one Arrow map per batch: nullable long keys near 2^62 and
+    a null key come back exact, null values come back null, and the
+    decode plan has no Exchange."""
+    big = 2**62
+    rows = [(big, 1, 1.0), (big, 90000, None), (big + 1, 2, 2.5),
+            (None, 2, 2.0), (None, 3, None)]
+    pts = spark.createDataFrame(rows, "k long, t long, v double")
+    enc = encode_segments(pts, ["k"], "t", "v", 86400)
+    segs = spark.createDataFrame(enc.collect(), enc.schema)
+    back = decode_segments(segs, ["k"])
+    assert back.schema.simpleString() == "struct<k:bigint,t:bigint,v:double>"
+    key = lambda r: (r[0] is None, r[0] or 0, r[1])  # noqa: E731
+    assert sorted(map(tuple, back.collect()), key=key) == sorted(rows, key=key)
+    assert "Exchange" not in back._jdf.queryExecution().executedPlan().toString()

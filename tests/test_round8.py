@@ -8,14 +8,13 @@ tests pin the specific equivalences the round introduced:
   short, long, null and null-element vectors;
 * the cogrouped Arrow rerank (knn_join) == the same top-k with
   degenerate rows present (no crash, degenerate rows never rank);
-* ``IA_NO_LOCAL_CKPT=1`` (plan-audit mode) changes plans, never results;
-* ``dedup_clusters``' monotone-sum convergence probe converges a long
-  chain to the same labels the definition demands.
+* plan-audit mode (``dedup._ckpt`` patched to the identity) changes
+  plans, never results;
+* ``dedup_clusters``' convergence probe converges a long chain to the
+  same labels the definition demands.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -131,26 +130,23 @@ def test_knn_join_literal_equals_broadcast_after_cogroup(spark):
     assert ra == rb
 
 
-def test_plan_audit_mode_identical_results(spark):
-    """IA_NO_LOCAL_CKPT=1 disables the detectors' materialization but may
-    not change a single output row."""
+def test_plan_audit_mode_identical_results(spark, monkeypatch):
+    """Patching ``dedup._ckpt`` to the identity removes the detectors'
+    materialization but may not change a single output row."""
     from intervalaverage_spark.functions import dedup as dd
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     with_ckpt = sorted(map(tuple, dd.prefix_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.5).collect()))
-    os.environ["IA_NO_LOCAL_CKPT"] = "1"
-    try:
-        without = sorted(map(tuple, dd.prefix_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.5).collect()))
-    finally:
-        os.environ.pop("IA_NO_LOCAL_CKPT", None)
+    monkeypatch.setattr(dd, "_ckpt", lambda df: df)
+    without = sorted(map(tuple, dd.prefix_jaccard_pairs(
+        docs, "doc_id", "text", n=3, threshold=0.5).collect()))
     assert with_ckpt == without
 
 
 def test_dedup_clusters_sum_probe_long_chain(spark):
     """A 12-node path graph needs several propagation rounds — the
-    monotone-sum probe must keep iterating until true convergence and
+    convergence probe must keep iterating until true convergence and
     produce the textbook component labels."""
     from intervalaverage_spark.functions.dedup import dedup_clusters
 

@@ -643,20 +643,20 @@ def dedup_clusters(
     dedup pipeline actually needs after pair generation — keep one doc per
     cluster, drop the rest.
 
-    Spark-first iterative min-label propagation: labels start as the id,
-    each round every node takes the min of its own and its neighbors'
-    labels, until a round changes nothing. Rounds = component diameter
-    (duplicate clusters are dense, so a handful); each round is one
-    equi-join + one groupBy, all JVM, materialized by an eager
-    ``localCheckpoint`` that truncates the per-round lineage so plans stay
-    O(1). The convergence test rides on that same job: an ``Observation``
-    counts the nodes whose label is new (an id that appears only in
-    ``pairs``) or lower than the node's previous label, and the loop stops
-    when the count is 0. Only ``<`` is applied to ids, so any orderable id
-    type works (string, long, decimal, date). (Compare GraphX/GraphFrames
-    connected components — same algorithm family, expressed on DataFrames
-    so Catalyst/AQE handle the physical plan.) Docs with no pairs stay
-    their own singleton cluster.
+    Spark-first iterative min-label propagation: every id of ``nodes`` or
+    of ``pairs`` starts labelled with itself, and each round every id takes
+    the min of its own and its neighbors' labels, until a round changes
+    nothing. Rounds = component diameter (duplicate clusters are dense, so
+    a handful); each round is one equi-join + one groupBy, all JVM,
+    materialized by an eager ``localCheckpoint`` that truncates the
+    per-round lineage so plans stay O(1). The convergence test rides on
+    that same job: an ``Observation`` counts the ids whose label is lower
+    than their previous label, and the loop stops when the count is 0.
+    Only ``<`` is applied to ids, so any orderable id type works (string,
+    long, decimal, date). (Compare GraphX/GraphFrames connected components
+    — same algorithm family, expressed on DataFrames so Catalyst/AQE handle
+    the physical plan.) Docs with no pairs stay their own singleton
+    cluster.
 
     Non-convergence is an ERROR, never silence: a component whose diameter
     exceeds ``max_iter`` (a pathological near-dup chain) would otherwise
@@ -669,11 +669,14 @@ def dedup_clusters(
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
-    labels = nodes.select(F.col(id_col).alias("n"), F.col(id_col).alias("lab"))
+    labels = (
+        nodes.select(F.col(id_col).alias("n"))
+        .unionByName(edges.select(F.col("src").alias("n")))
+        .distinct().select("n", F.col("n").alias("lab"))
+    )
     changed = -1
     for _ in range(max_iter):
-        # ``own`` carries each node's previous label through the groupBy;
-        # it is NULL for a node first reached by propagation this round
+        # ``own`` carries each id's previous label through the groupBy
         prop = (
             edges.join(labels.withColumnRenamed("n", "src"), "src")
             .select(F.col("dst").alias("n"), "lab", F.lit(None).alias("own"))
@@ -683,8 +686,7 @@ def dedup_clusters(
             labels.select("n", "lab", F.col("lab").alias("own"))
             .unionByName(prop)
             .groupBy("n").agg(F.min("lab").alias("lab"), F.max("own").alias("own"))
-            .observe(obs, F.count_if(F.col("own").isNull()
-                                     | (F.col("lab") < F.col("own"))).alias("changed"))
+            .observe(obs, F.count_if(F.col("lab") < F.col("own")).alias("changed"))
             .select("n", "lab")
         ).localCheckpoint()
         changed = obs.get["changed"]

@@ -4,7 +4,7 @@ Reproduces ``intervalaverage::intervalaverage`` (reference:
 R/intervalaverage_functions.R:201-489 + fused C++ kernel src/code.cpp:7-185)
 as a lazy DataFrame plan:
 
-    range join (x onto deduped y)  →  grouped aggregate  →  join-back to y
+    range join (x onto deduped y)  →  window state fold  →  point projection
 
 Semantics (all intervals closed, length = end-start+1):
   * one output row per deduplicated y row
@@ -25,18 +25,13 @@ Semantics (all intervals closed, length = end-start+1):
   * unmatched y row: values NULL, xduration=0, nobs=0, xminstart/xmaxend
     NULL, maxgap = yduration   (src/code.cpp:32-50)
 
-Scale notes: everything except maxgap is a plain shuffled partial-aggregate
-(map-side combine, whole-stage codegen). maxgap uses the same window-
-function gap-state formulation as the tier engine (operators/tiers.py
-``_state_agg``): per covered row, the uncovered run ENDING at that row is
-``os − previous covered oe − 1`` via ``max(...) over (rows unbounded
-preceding, -1)``, seeded at ``ys − 1`` so the lead-in counts; the final
-maxgap is ``greatest(max(run), ye − last covered oe)``. NA-value rows are
-simply "not covered", which merges NA stretches with adjacent structural
-gaps for free (src/code.cpp:145-156 semantics). Pure whole-stage codegen —
-no collect_list, no higher-order fold, no per-y arrays — and the window's
-partitioning is the exact (groups, ys, ye) exchange the groupBy reuses, so
-it costs zero extra shuffles.
+Scale notes: the fold and the point projection are the tier engine's
+(operators/fold.py ``_state_agg`` and ``_points``). Each deduped y row is
+a window ``[ys, ye]``, and its range-join pairs, clipped to it, are the
+rows folded into its state — maxgap included, by the fold's gap-state
+window, which shares the groupBy's (groups, ys, ye) exchange. A tier
+(operators/tiers.py) is therefore this operator against a tier grid by
+construction; the weight, mean and gap rules have one definition.
 
 Exactness: when a value column is DecimalType, Σw·v accumulates in
 DECIMAL (weights are exact integers) — order-independent and bit-identical
@@ -53,8 +48,8 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from intervalaverage_spark.operators.tiers import _fold_pieces, _points, _q
 from intervalaverage_spark.plans.rangejoin import range_join
 from intervalaverage_spark.validation import (
     IntervalSchemaError,
@@ -63,10 +58,6 @@ from intervalaverage_spark.validation import (
 )
 
 _EPOCH = "1970-01-01"
-
-
-def _to_int_days(c: Column) -> Column:
-    return F.datediff(c, F.lit(_EPOCH).cast("date")).cast("long")
 
 
 def _from_int_days(c: Column) -> Column:
@@ -78,57 +69,20 @@ def _prep(
     interval_vars: Sequence[str],
     s_alias: str,
     e_alias: str,
-    keep: Sequence[str],
+    keep: Sequence[str] | Mapping[str, str],
     is_date: bool,
 ) -> DataFrame:
-    s, e = (F.col(interval_vars[0]), F.col(interval_vars[1]))
+    """The ``keep`` columns (or, for a mapping, each column under its
+    alias) and the interval bounds as BIGINT ``s_alias``/``e_alias``; DATE
+    bounds become days since the epoch. Any column name is accepted."""
+    names = keep if isinstance(keep, Mapping) else {c: c for c in keep}
+    bounds = [_q(c) for c in interval_vars]
     if is_date:
-        s, e = _to_int_days(s), _to_int_days(e)
-    else:
-        s, e = s.cast("long"), e.cast("long")
-    return df.select(*keep, s.alias(s_alias), e.alias(e_alias))
-
-
-def _wv_sql(w: str, v: str, dt: T.DataType) -> str:
-    """The per-pair weighted-value term ``w·v`` as SQL text: ``w`` is a SQL
-    expression, ``v`` a quoted column name of type ``dt``.
-
-    DecimalType values accumulate EXACTLY: weights are integers, so
-    ``Σ decimal(w·v)`` is order-free and engine-portable (the determinism
-    contract the driver-compare queries rely on).
-
-    Weight-magnitude contract: the weight (interval length) is cast to the
-    WIDEST decimal the value precision leaves room for —
-    ``decimal(min(37 − p, 19), 0)`` — so the product stays an exact
-    decimal(38, s) (Spark multiply precision = p1 + p2 + 1). A value
-    column of precision p therefore supports interval lengths up to
-    10^min(37−p, 19) − 1 time units (p ≤ 18 covers any 64-bit length;
-    p = 27, the max, still allows 10^10 − 1). Beyond that bound ANSI mode
-    raises a cast error — loud, never a silently dropped term."""
-    if not isinstance(dt, T.DecimalType):
-        return f"({w}) * {v}"
-    if dt.precision > 27:
-        raise ValueError(
-            f"decimal value columns need precision <= 27 (got {dt}); "
-            "rescale so w*v fits decimal(38, s) exactly"
-        )
-    wprec = min(37 - dt.precision, 19)
-    return f"CAST({v} * CAST({w} AS DECIMAL({wprec},0)) AS DECIMAL(38,{dt.scale}))"
-
-
-def _mean_sql(swv: str, nobs: str, dt: T.DataType) -> str:
-    """Σw·v / Σw as a double, over the SQL expressions ``swv`` and
-    ``nobs``. Decimal sums are exact, so the quotient is a deterministic
-    function of the data alone (cast-to-double then one IEEE division),
-    independent of partitioning and engine."""
-    if isinstance(dt, T.DecimalType):
-        swv = f"CAST({swv} AS DOUBLE)"
-    return f"{swv} / {nobs}"
-
-
-def _q(*parts: str) -> str:
-    """The column name ``parts`` joined, as a quoted SQL identifier."""
-    return "`" + "".join(parts).replace("`", "``") + "`"
+        bounds = [f"datediff({b}, DATE'{_EPOCH}')" for b in bounds]
+    return df.selectExpr(
+        *(_q(c) if c == a else f"{_q(c)} AS {_q(a)}" for c, a in names.items()),
+        *(f"CAST({b} AS BIGINT) AS {a}" for b, a in zip(bounds, (s_alias, e_alias))),
+    )
 
 
 def interval_average(
@@ -201,18 +155,21 @@ def interval_average(
             "execute on action)"
         )
 
-    xp = _prep(x, iv, "__ia_xs", "__ia_xe", [*group_vars, *value_vars], x_dates)
-    yp_all = _prep(y, iv, "__ia_ys", "__ia_ye", group_vars, y_dates)
-    yp = yp_all.dropDuplicates([*group_vars, "__ia_ys", "__ia_ye"])
+    # group columns travel under internal names on both sides, so no group
+    # name can collide with a join or state column (ws, we, …)
+    xg = [f"__ia_xg{i}" for i in range(len(group_vars))]
+    yg = [f"__ia_yg{i}" for i in range(len(group_vars))]
+    xp = _prep(x, iv, "__ia_xs", "__ia_xe",
+               {**dict(zip(group_vars, xg)), **{v: v for v in value_vars}}, x_dates)
+    yp_all = _prep(y, iv, "__ia_ys", "__ia_ye", dict(zip(group_vars, yg)), y_dates)
+    yp = yp_all.dropDuplicates([*yg, "__ia_ys", "__ia_ye"])
     if validate:
         # ONE aggregation job for the dup warning (count + distinct-count
         # fused; the struct keeps null group keys countable — bare
         # count_distinct skips any-null rows)
         counts = yp_all.agg(
             F.count(F.lit(1)).alias("n"),
-            F.count_distinct(
-                F.struct(*[F.col(c) for c in (*group_vars, "__ia_ys", "__ia_ye")])
-            ).alias("nd"),
+            F.count_distinct(F.struct(*yg, "__ia_ys", "__ia_ye")).alias("nd"),
         ).first()
         if counts["nd"] < counts["n"]:
             warnings.warn(
@@ -224,125 +181,42 @@ def interval_average(
 
     # --- RIGHT range join: x pairs onto deduped y, unmatched y kept with
     # null x columns (the reference's right-join semantics, :412-430,
-    # expressed directly — no second join-back needed: null-x rows
-    # contribute nothing to any aggregate below, and the per-bucket
-    # duplicates of an unmatched y collapse in the same groupBy).
-    xg = [f"__ia_xg{i}" for i in range(len(group_vars))]
-    xr = xp.select(
-        *[F.col(g).alias(a) for g, a in zip(group_vars, xg)],
-        *value_vars, "__ia_xs", "__ia_xe",
-    )
+    # expressed directly — no second join-back needed: null-x rows cover
+    # nothing, and the per-bucket duplicates of an unmatched y collapse in
+    # the fold's groupBy).
     pairs = range_join(
-        xr, yp,
+        xp, yp,
         ("__ia_xs", "__ia_xe"), ("__ia_ys", "__ia_ye"),
-        group_vars=dict(zip(xg, group_vars)),
+        group_vars=dict(zip(xg, yg)),
         strategy=strategy, bucket_width=bucket_width, salt=salt,
         hot_threshold=hot_threshold,
         how="right",
-    ).drop(*xg)
-
-    # greatest/least SKIP nulls in Spark, so the right join's x-null rows
-    # would otherwise clip to the full y window — gate on a matched x
-    matched = F.col("__ia_xs").isNotNull()
-    os_ = F.when(matched, F.greatest(F.col("__ia_xs"), F.col("__ia_ys")))
-    oe_ = F.when(matched, F.least(F.col("__ia_xe"), F.col("__ia_ye")))
-    w_sql = ("CASE WHEN __ia_xs IS NOT NULL "
-             "THEN least(__ia_xe, __ia_ye) - greatest(__ia_xs, __ia_ys) + 1 END")
-    w = F.expr(w_sql)
-    gkeys = [*group_vars, "__ia_ys", "__ia_ye"]
-
-    # maxgap gap-state (src/code.cpp:91-167 semantics, tiers.py:66-99
-    # formulation): for each COVERED pair row, the uncovered run ending at
-    # it = os − (max covered oe among earlier rows) − 1, seeded ys−1 so the
-    # lead-in counts. x rows are non-overlapping, so ordering by xs orders
-    # the clipped overlaps too. Shares the groupBy's exchange.
-    wspec = (
-        Window.partitionBy(*gkeys)
-        .orderBy("__ia_xs")
-        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    gap_cols = []
-    for v in value_vars:
-        nn = F.col(v).isNotNull()
-        prev_end = F.max(F.when(nn, oe_)).over(wspec)
-        gap_cols.append(
-            F.when(nn, os_ - F.coalesce(prev_end, F.col("__ia_ys") - 1) - 1).alias(
-                f"__ia_gap_{v}"
-            )
-        )
-    pairs = pairs.select("*", *gap_cols)
-
-    aggs = [
-        F.sum(w).alias("__ia_xdur"),
-        F.min(os_).alias("__ia_xmin"),
-        F.max(oe_).alias("__ia_xmax"),
-    ]
-    for v in value_vars:
-        nn = F.col(v).isNotNull()
-        wv = F.expr(_wv_sql(w_sql, _q(v), x.schema[v].dataType))
-        aggs.append(F.sum(F.when(nn, wv)).alias(f"__ia_swv_{v}"))
-        aggs.append(F.sum(F.when(nn, w)).alias(f"__ia_nobs_{v}"))
-        aggs.append(F.max(F.when(nn, oe_)).alias(f"__ia_last_{v}"))
-        aggs.append(F.max(F.col(f"__ia_gap_{v}")).alias(f"__ia_maxg_{v}"))
-
-    agg = pairs.groupBy(*gkeys).agg(*aggs)
-    # tail run (ye − last covered oe, no −1: src/code.cpp:162-167) merged
-    # with the best interior run; all-NA/no-match groups stay NULL and the
-    # output coalesces them to yduration.
-    mg = [
-        F.greatest(
-            F.col(f"__ia_maxg_{v}"), F.col("__ia_ye") - F.col(f"__ia_last_{v}")
-        ).alias(f"__ia_mg_{v}")
-        for v in value_vars
-    ]
-    joined = agg.select(
-        *gkeys, "__ia_xdur", "__ia_xmin", "__ia_xmax",
-        *[c for v in value_vars for c in (f"__ia_swv_{v}", f"__ia_nobs_{v}")],
-        *mg,
+    # each y row is a window and its pairs, clipped to it, the fold's
+    # pieces; greatest/least SKIP nulls, so the unmatched rows would
+    # otherwise clip to the full y window — gate on a matched x
+    pieces = pairs.selectExpr(
+        *yg, *map(_q, value_vars), "__ia_ys", "__ia_ye",
+        "CASE WHEN __ia_xs IS NOT NULL THEN greatest(__ia_xs, __ia_ys) END AS __os",
+        "CASE WHEN __ia_xs IS NOT NULL THEN least(__ia_xe, __ia_ye) END AS __oe",
     )
+    # an empty Σw·v stays NULL (keep_sums)
+    state = _fold_pieces(pieces, yg, ["__ia_ys", "__ia_ye"],
+                         ("__ia_ys", "__ia_ye", "(__ia_ye - __ia_ys + 1)"),
+                         {v: x.schema[v].dataType for v in value_vars}, zero="NULL")
 
-    ydur = (F.col("__ia_ye") - F.col("__ia_ys") + 1).cast("long")
-    out_cols: list[Column] = [F.col(g) for g in group_vars]
     if y_dates:
-        out_cols += [
-            _from_int_days(F.col("__ia_ys")).alias(iv[0]),
-            _from_int_days(F.col("__ia_ye")).alias(iv[1]),
-        ]
+        start, end, xmin, xmax = (
+            f"date_add(DATE'{_EPOCH}', CAST({c} AS INT)) AS {_q(a)}"
+            for c, a in zip(("ws", "we", "xminstart", "xmaxend"), (*iv, "xminstart", "xmaxend"))
+        )
     else:
-        s_t = y.schema[iv[0]].dataType.simpleString()
-        e_t = y.schema[iv[1]].dataType.simpleString()
-        out_cols += [
-            F.col("__ia_ys").cast(s_t).alias(iv[0]),
-            F.col("__ia_ye").cast(e_t).alias(iv[1]),
-        ]
-    for v in value_vars:
-        nobs = F.coalesce(F.col(f"__ia_nobs_{v}"), F.lit(0)).cast("long")
-        avg = F.expr(_mean_sql(_q("__ia_swv_", v), _q("__ia_nobs_", v), x.schema[v].dataType))
-        masked = F.when(
-            (nobs > 0)
-            & (F.lit(100.0) * nobs / ydur >= F.lit(float(required_percentage))),
-            avg,
-        ).cast("double")
-        out_cols.append(masked.alias(v))
-    out_cols.append(ydur.alias("yduration"))
-    out_cols.append(F.coalesce(F.col("__ia_xdur"), F.lit(0)).cast("long").alias("xduration"))
-    for v in value_vars:
-        out_cols.append(
-            F.coalesce(F.col(f"__ia_nobs_{v}"), F.lit(0)).cast("long").alias(f"nobs_{v}")
-        )
-    xmin, xmax = F.col("__ia_xmin"), F.col("__ia_xmax")
-    if y_dates:
-        xmin, xmax = _from_int_days(xmin), _from_int_days(xmax)
-    out_cols += [xmin.alias("xminstart"), xmax.alias("xmaxend")]
-    for v in value_vars:
-        out_cols.append(
-            F.coalesce(F.col(f"__ia_mg_{v}"), ydur).cast("long").alias(f"maxgap_{v}")
-        )
-    if keep_sums:
-        out_cols += [F.col(f"__ia_swv_{v}").alias(f"sum_wv_{v}") for v in value_vars]
-
-    out = joined.select(*out_cols)
-    return out.orderBy(*group_vars, *iv) if sort else out
+        start, end = (f"CAST({c} AS {y.schema[a].dataType.simpleString()}) AS {_q(a)}"
+                      for c, a in zip(("ws", "we"), iv))
+        xmin, xmax = "xminstart", "xmaxend"
+    out = _points(state, value_vars, [f"{a} AS {_q(g)}" for a, g in zip(yg, group_vars)],
+                  (start, end, xmin, xmax), required_percentage, sums=keep_sums)
+    return out.orderBy(*map(_q, [*group_vars, *iv])) if sort else out
 
 
 def interval_average_slow(

@@ -26,6 +26,12 @@ State schema per (group_vars…, ws, we):
     sum_wv_<v>, nobs_<v>                     — weighted-mean state
     prefix_<v>, suffix_<v>, best_<v>         — maxgap state
 
+One fold builds it, :func:`_state_agg`, for tier-1's boundary windows, for
+the cascade and for ``interval_average``, whose windows are its deduped y
+rows; :func:`_points` projects it onto points for ``finalize`` and
+``interval_average``. The weight, mean, gap and state rules therefore have
+one definition, here.
+
 ``rollup_tiers`` computes every tier from raw in one plan (x × tiers, the
 window width a column keyed by tier) — the incremental job's single tier
 pass. ``rollup_cascade`` merges a finer tier's state instead, for when raw
@@ -36,9 +42,9 @@ inside ``agg`` — with each column name quoted by :func:`_q`: a Column
 object per operator costs one driver → JVM round trip, and at thousands of
 them plan building outweighed the incremental job's work on its data.
 
-``finalize`` turns state into reference-semantics points (same columns as
-:func:`interval_average`), optionally gap-filling empty windows against a
-dense per-key grid (unmatched-y semantics, src/code.cpp:32-50).
+``finalize`` turns state into reference-semantics points, optionally
+gap-filling empty windows against a dense per-key grid (unmatched-y
+semantics, src/code.cpp:32-50).
 
 Reference parity: weighted means/nobs per src/code.cpp:133-144; maxgap per
 src/code.cpp:91-167 (the (prefix,suffix,best) fold is equivalent to the
@@ -53,7 +59,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from intervalaverage_spark.operators.average import _mean_sql, _q, _wv_sql
 from intervalaverage_spark.operators.grid import tier_grid
 from intervalaverage_spark.plans.rangejoin import fdiv_sql
 
@@ -61,10 +66,52 @@ from intervalaverage_spark.plans.rangejoin import fdiv_sql
 TIER_WIDTHS: dict[str, int] = {"1h": 3600, "1d": 86400, "30d": 30 * 86400}
 
 
+def _q(*parts: str) -> str:
+    """The column name ``parts`` joined, as a quoted SQL identifier."""
+    return "`" + "".join(parts).replace("`", "``") + "`"
+
+
+def _wv_sql(w: str, v: str, dt: T.DataType) -> str:
+    """The per-pair weighted-value term ``w·v`` as SQL text: ``w`` is a SQL
+    expression, ``v`` a quoted column name of type ``dt``.
+
+    DecimalType values accumulate EXACTLY: weights are integers, so
+    ``Σ decimal(w·v)`` is order-free and engine-portable (the determinism
+    contract the driver-compare queries rely on).
+
+    Weight-magnitude contract: the weight (interval length) is cast to the
+    WIDEST decimal the value precision leaves room for —
+    ``decimal(min(37 − p, 19), 0)`` — so the product stays an exact
+    decimal(38, s) (Spark multiply precision = p1 + p2 + 1). A value
+    column of precision p therefore supports interval lengths up to
+    10^min(37−p, 19) − 1 time units (p ≤ 18 covers any 64-bit length;
+    p = 27, the max, still allows 10^10 − 1). Beyond that bound ANSI mode
+    raises a cast error — loud, never a silently dropped term."""
+    if not isinstance(dt, T.DecimalType):
+        return f"({w}) * {v}"
+    if dt.precision > 27:
+        raise ValueError(
+            f"decimal value columns need precision <= 27 (got {dt}); "
+            "rescale so w*v fits decimal(38, s) exactly"
+        )
+    wprec = min(37 - dt.precision, 19)
+    return f"CAST({v} * CAST({w} AS DECIMAL({wprec},0)) AS DECIMAL(38,{dt.scale}))"
+
+
+def _mean_sql(swv: str, nobs: str, dt: T.DataType) -> str:
+    """Σw·v / Σw as a double, over the SQL expressions ``swv`` and
+    ``nobs``. Decimal sums are exact, so the quotient is a deterministic
+    function of the data alone (cast-to-double then one IEEE division),
+    independent of partitioning and engine."""
+    if isinstance(dt, T.DecimalType):
+        swv = f"CAST({swv} AS DOUBLE)"
+    return f"{swv} / {nobs}"
+
+
 def _zero(dt: T.DataType) -> str:
     """Typed zero for Σw·v state: keeps coalesce from silently coercing an
     exact decimal sum back to double (DecimalType = the exact-arithmetic
-    path, see operators/average.py _wv_sql)."""
+    path, see :func:`_wv_sql`)."""
     return f"CAST(0 AS DECIMAL(38,{dt.scale}))" if isinstance(dt, T.DecimalType) else "0D"
 
 
@@ -76,28 +123,31 @@ def _bounds(width: str) -> tuple[str, str, str]:
 
 def _state_agg(
     rows: DataFrame,
-    width: str,
     group_vars: Sequence[str],
+    window: Sequence[str],
+    bounds: tuple[str, str, str],
     order: str,
     span: tuple[str, str, str],
     parts: Mapping[str, tuple[str, ...]],
 ) -> DataFrame:
-    """Fold ``rows`` into the state of their window ``__k`` per group —
-    the shared tail of tier-1 (rows = raw coverage pieces) and the cascade
-    (rows = child windows). All arguments are SQL text.
+    """Fold ``rows`` into the state of their window per group. All
+    arguments but ``group_vars`` (column names) are SQL text.
 
-    ``span`` is a row's (covered units, first, last covered unit); ``parts``
-    maps each value var to the row's (first, last unit covered for it,
-    longest inner gap run, Σw·v, Σw, zero of Σw·v), NULL where the row does
-    not cover the var; ``order`` orders the rows inside a window.
+    ``window`` are the key columns that tell a group's windows apart and
+    ``bounds`` the window's (first unit, last unit, length) over them.
+    ``span`` is a row's (covered units, first, last covered unit), NULL
+    where the row covers nothing; ``parts`` maps each value var to the
+    row's (first, last unit covered for it, longest inner gap run, Σw·v,
+    Σw, Σw·v of a window no row covers it in), NULL where the row does not
+    cover the var; ``order`` orders the rows inside a window.
 
     PERF: gap state is computed with a window function + plain min/max
     aggregates — whole-stage-codegen throughout, no collect_list, no
     higher-order folds (interpreted HOFs cost ~5µs/row × rows, dominating
     the tier at 10^7+ windows). The window and the groupBy share the
-    (groups, __k) partitioning, so this is still ONE exchange."""
-    keys = [*map(_q, group_vars), "__k"]
-    ws, we, ln = _bounds(width)
+    (groups, window) partitioning, so this is still ONE exchange."""
+    keys = [*map(_q, group_vars), *window]
+    ws, we, ln = bounds
     over = (f"OVER (PARTITION BY {', '.join(keys)} ORDER BY {order} "
             "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)")
     gaps = []
@@ -115,7 +165,8 @@ def _state_agg(
                  f"max({_q('__gap_', v)}) AS {_q('__maxg_', v)}"]
     agg = rows.selectExpr("*", *gaps).groupBy(*keys).agg(*map(F.expr, aggs))
 
-    out = [*keys[:-1], f"{ws} AS ws", f"{we} AS we", "xduration", "xminstart", "xmaxend"]
+    out = [*map(_q, group_vars), f"{ws} AS ws", f"{we} AS we", "xduration", "xminstart",
+           "xmaxend"]
     for v, (*_, zero) in parts.items():
         last = _q("__last_", v)
         suffix = f"CASE WHEN {last} IS NULL THEN {ln} ELSE {we} - {last} END"
@@ -125,6 +176,66 @@ def _state_agg(
                 f"{suffix} AS {_q('suffix_', v)}",
                 f"greatest(coalesce({_q('__maxg_', v)}, 0), {suffix}) AS {_q('best_', v)}"]
     return agg.selectExpr(*out)
+
+
+def _fold_pieces(
+    pieces: DataFrame,
+    group_vars: Sequence[str],
+    window: Sequence[str],
+    bounds: tuple[str, str, str],
+    dts: Mapping[str, T.DataType],
+    zero: str | None = None,
+) -> DataFrame:
+    """:func:`_state_agg` over clipped pieces of raw intervals: rows that
+    cover ``[__os, __oe]`` of their window (both NULL for a row that
+    covers nothing) and carry the value columns ``dts`` maps to their
+    types. A row whose value is NULL covers nothing for that value, which
+    merges NA stretches with adjacent gaps (src/code.cpp:145-156).
+    ``zero`` is the SQL of Σw·v for a window no row covers a value in, by
+    default the typed zero of :func:`_zero`."""
+    dur, parts = "__oe - __os + 1", {}
+    for v, dt in dts.items():
+        cov = f"CASE WHEN {_q(v)} IS NOT NULL THEN"
+        parts[v] = (f"{cov} __os END", f"{cov} __oe END", "NULL",
+                    f"{cov} {_wv_sql(dur, _q(v), dt)} END", f"{cov} {dur} END",
+                    zero or _zero(dt))
+    return _state_agg(pieces, group_vars, window, bounds, "__os", (dur, "__os", "__oe"), parts)
+
+
+def _points(
+    state: DataFrame,
+    value_vars: Sequence[str],
+    keys: Sequence[str],
+    bounds: tuple[str, str, str, str],
+    required_percentage: float,
+    sums: bool = False,
+) -> DataFrame:
+    """State → reference-semantics points: ``(*keys, start, end,
+    *value_vars, yduration, xduration, nobs_*, xminstart, xmaxend,
+    maxgap_*)``, then ``sum_wv_*`` when ``sums``. ``keys`` are the SQL
+    select items of the group columns and ``bounds`` those of (start, end,
+    xminstart, xmaxend). A window with no state (a gap-filled one) reads
+    as unmatched: value NULL, xduration 0, nobs 0, maxgap yduration
+    (src/code.cpp:32-50)."""
+    schema = state.schema
+    ydur = "CAST(we - ws + 1 AS BIGINT)"
+    out = [*keys, *bounds[:2]]
+    for v in value_vars:
+        nobs = _q("nobs_", v)
+        mean = _mean_sql(_q("sum_wv_", v), nobs, schema[f"sum_wv_{v}"].dataType)
+        # strict < drops the window (R/intervalaverage_functions.R:466-469)
+        keep = (f"coalesce({nobs}, 0) > 0 AND 100.0D * coalesce({nobs}, 0) / {ydur} >= "
+                f"{float(required_percentage)!r}D")
+        out.append(f"CAST(CASE WHEN {keep} THEN {mean} END AS DOUBLE) AS {_q(v)}")
+    out += [f"{ydur} AS yduration", "CAST(coalesce(xduration, 0) AS BIGINT) AS xduration"]
+    out += [f"CAST(coalesce({_q('nobs_', v)}, 0) AS BIGINT) AS {_q('nobs_', v)}"
+            for v in value_vars]
+    out += bounds[2:]
+    out += [f"CAST(coalesce({_q('best_', v)}, {ydur}) AS BIGINT) AS {_q('maxgap_', v)}"
+            for v in value_vars]
+    if sums:
+        out += [_q("sum_wv_", v) for v in value_vars]
+    return state.selectExpr(*out)
 
 
 def rollup_from_raw(
@@ -154,7 +265,7 @@ def rollup_from_raw(
     dts = {v: x.schema[v].dataType for v in value_vars}
     g, vq = [*map(_q, group_vars)], [*map(_q, value_vars)]
     width = f"({width})"
-    ws, we, ln = _bounds(width)
+    bounds = ws, we, ln = _bounds(width)
     xs, xe = (f"CAST({_q(c)} AS BIGINT)" for c in interval_vars)
     base = x.selectExpr(*g, *vq, f"{xs} AS __xs", f"{xe} AS __xe",
                         f"{fdiv_sql(xs, width)} AS __k0", f"{fdiv_sql(xe, width)} AS __k1")
@@ -163,12 +274,7 @@ def rollup_from_raw(
     pieces = base.selectExpr(
         *g, *vq, "__xs", "__xe", "explode(array_distinct(array(__k0, __k1))) AS __k",
     ).selectExpr(*g, *vq, "__k", f"greatest(__xs, {ws}) AS __os", f"least(__xe, {we}) AS __oe")
-    dur, parts = "__oe - __os + 1", {}
-    for v, qv in zip(value_vars, vq):
-        cov = f"CASE WHEN {qv} IS NOT NULL THEN"
-        parts[v] = (f"{cov} __os END", f"{cov} __oe END", "NULL",
-                    f"{cov} {_wv_sql(dur, qv, dts[v])} END", f"{cov} {dur} END", _zero(dts[v]))
-    boundary = _state_agg(pieces, width, group_vars, "__os", (dur, "__os", "__oe"), parts)
+    boundary = _fold_pieces(pieces, group_vars, ["__k"], bounds, dts)
 
     # --- interior windows: fully covered by this single interval
     interior = [*g, f"{ws} AS ws", f"{we} AS we", f"{ln} AS xduration",
@@ -233,7 +339,8 @@ def rollup_cascade(
                     _zero(schema[f"sum_wv_{v}"].dataType))
     width = f"({to_width})"
     rows = state.selectExpr("*", f"{fdiv_sql('ws', width)} AS __k")
-    return _state_agg(rows, width, group_vars, "ws", ("xduration", "xminstart", "xmaxend"), parts)
+    return _state_agg(rows, group_vars, ["__k"], _bounds(width), "ws",
+                      ("xduration", "xminstart", "xmaxend"), parts)
 
 
 def finalize(
@@ -265,19 +372,6 @@ def finalize(
         state = grid.join(st, cond, "left").drop(
             "__f_ws", "__f_we", *[f"__f_{g}" for g in group_vars]
         )
-    schema = state.schema
-    ydur = "CAST(we - ws + 1 AS BIGINT)"
-    out = [*map(_q, group_vars), f"ws AS {_q(s_out)}", f"we AS {_q(e_out)}"]
-    for v in value_vars:
-        nobs = _q("nobs_", v)
-        mean = _mean_sql(_q("sum_wv_", v), nobs, schema[f"sum_wv_{v}"].dataType)
-        keep = (f"coalesce({nobs}, 0) > 0 AND 100.0D * coalesce({nobs}, 0) / {ydur} >= "
-                f"{float(required_percentage)!r}D")
-        out.append(f"CAST(CASE WHEN {keep} THEN {mean} END AS DOUBLE) AS {_q(v)}")
-    out += [f"{ydur} AS yduration", "CAST(coalesce(xduration, 0) AS BIGINT) AS xduration"]
-    out += [f"CAST(coalesce({_q('nobs_', v)}, 0) AS BIGINT) AS {_q('nobs_', v)}"
-            for v in value_vars]
-    out += ["xminstart", "xmaxend"]
-    out += [f"CAST(coalesce({_q('best_', v)}, {ydur}) AS BIGINT) AS {_q('maxgap_', v)}"
-            for v in value_vars]
-    return state.selectExpr(*out)
+    return _points(state, value_vars, [*map(_q, group_vars)],
+                   (f"ws AS {_q(s_out)}", f"we AS {_q(e_out)}", "xminstart", "xmaxend"),
+                   required_percentage)

@@ -118,7 +118,7 @@ def _ia_oracle_from(x_sql: str, k: str, width: int, rp: float, sparse: bool) -> 
     Σw·v accumulates in DECIMAL(38,12) — weights are exact integers, so the
     sum is exact, order-free and engine-independent; the compared ``value``
     is then one deterministic decimal→double cast + one IEEE division.
-    Mirrors the Spark side exactly (operators/average.py _wv_sql/_mean_sql
+    Mirrors the Spark side exactly (operators/tiers.py _wv_sql/_mean_sql
     on the DECIMAL(26,12)-cast value column)."""
     value = (
         f"CASE WHEN COALESCE(a.nobs, 0) > 0 AND "
@@ -437,7 +437,7 @@ FROM y LEFT JOIN agg a ON a.user_id = y.user_id AND a.ys = y.ys AND a.ye = y.ye
 # The reference exercises IDate intervals heavily
 # (test-intervalaverage_functions.R:454-546); these entries run the
 # operators on true DateType inputs (the int-days coerce/restore path,
-# operators/average.py _to_int_days/_from_int_days) end-to-end. Dates are
+# operators/average.py _prep/_from_int_days) end-to-end. Dates are
 # projected to ISO strings ONLY in the final compare select — strings are
 # the one date representation pandas renders identically for both engines.
 

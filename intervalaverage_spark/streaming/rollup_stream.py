@@ -48,7 +48,7 @@ def stream_hourly_state(
     gv = list(group_vars)
     src = visits.withWatermark(ts_col, delay)
     # DecimalType values keep exact (order-independent) sums — the same
-    # exact-arithmetic contract as the batch tiers (operators/average.py
+    # exact-arithmetic contract as the batch tiers (operators/tiers.py
     # _wv_sql); everything else sums as double.
     from pyspark.sql import types as T
 

@@ -10,22 +10,21 @@ import pytest
 from intervalaverage_spark.functions.dedup import dedup_clusters
 from tests.conftest import spark_jobs
 
-#: eight ascending ids per type; ids[6] is unused and ids[7] appears only
-#: in ``pairs``, never in ``nodes``
+#: ten ascending ids per type; ids[6] is unused, and ids[0], ids[7],
+#: ids[8] and ids[9] appear only in ``pairs``, never in ``nodes``
 IDS = {
-    "string": ("string", [chr(ord("a") + i) for i in range(8)]),
-    "long": ("long", [2**62 + i for i in range(8)]),
+    "string": ("string", [chr(ord("a") + i) for i in range(10)]),
+    "long": ("long", [2**62 + i for i in range(10)]),
     "decimal": ("decimal(38,1)",
-                [decimal.Decimal("12345678901234567890.5") + i for i in range(8)]),
+                [decimal.Decimal("12345678901234567890.5") + i for i in range(10)]),
     "date": ("date", [datetime.date(2024, 1, 1) + datetime.timedelta(days=i)
-                      for i in range(8)]),
+                      for i in range(10)]),
 }
 
 
 def _components(node_ids, pairs):
-    """Union-find reference: id → (min node id of its component, size).
-    An id seen only in ``pairs`` belongs to its component; a component
-    with no node at all is not labelled, as labels start from the nodes."""
+    """Union-find reference: id → (min id of its component, size). An id
+    seen only in ``pairs`` belongs to its component like a node does."""
     parent = {v: v for v in [*node_ids, *(v for p in pairs for v in p)]}
 
     def find(v):
@@ -41,22 +40,20 @@ def _components(node_ids, pairs):
         comp.setdefault(find(v), []).append(v)
     out = {}
     for members in comp.values():
-        labelled = [v for v in members if v in node_ids]
-        if labelled:
-            out.update({v: (min(labelled), len(members)) for v in members})
+        out.update({v: (min(members), len(members)) for v in members})
     return out
 
 
 @pytest.mark.parametrize("kind", sorted(IDS))
 def test_dedup_clusters_every_orderable_id_type(spark, kind):
     """Only ``<`` is applied to ids: string, long, decimal and date ids
-    match the union-find reference. The chain ids[2]–ids[1]–ids[0] and the
-    bridge ids[3]–ids[7]–ids[4] through an id missing from ``nodes`` take
-    3 rounds; in round 1 the only change of the bridge is ids[7] joining
-    the labels, which must not end the loop."""
+    match the union-find reference. Ids missing from ``nodes`` count: the
+    chain ids[2]–ids[1]–ids[0] takes its label from ids[0], the bridge
+    ids[3]–ids[7]–ids[4] runs through ids[7], and ids[8]–ids[9] is a
+    cluster of its own. The chain and the bridge take 3 rounds."""
     typ, v = IDS[kind]
-    node_ids = v[:6]
-    pairs = [(v[1], v[2]), (v[0], v[1]), (v[3], v[7]), (v[7], v[4])]
+    node_ids = v[1:6]
+    pairs = [(v[1], v[2]), (v[0], v[1]), (v[3], v[7]), (v[7], v[4]), (v[8], v[9])]
     nodes = spark.createDataFrame([(x,) for x in node_ids], f"doc_id {typ}")
     pdf = spark.createDataFrame(pairs, f"id1 {typ}, id2 {typ}")
     got = {r["doc_id"]: (r["canonical_id"], r["cluster_size"])

@@ -146,15 +146,8 @@ def test_awkward_column_names_are_quoted(spark, web_x):
         assert _checksum(a.toDF(*p.columns)) == _checksum(p)
 
 
-def test_plans_build_in_few_py4j_calls(spark, web_x, tmp_path, monkeypatch):
-    """The tier and finalize plans are SQL text: building them (not running
-    them) takes a bounded number of driver → JVM calls, where a Column per
-    operator took about 3.3k and 740."""
-    x = ckpt.with_bucket(web_x, "url", 4)
-    tiers = {t: TIER_WIDTHS[t] for t in ("1h", "1d", "30d")}
-    root = str(tmp_path / "state")
-    ckpt.write_partitioned(rollup_tiers(x, tiers, VV, [*GV, "p"]), root, ("tier", "p"))
-
+def _py4j_calls(spark, monkeypatch, build):
+    """The driver → JVM calls ``build()`` makes on this thread."""
     client = spark.sparkContext._gateway._gateway_client
     send, me, calls = client.send_command, threading.get_ident(), []
 
@@ -164,14 +157,34 @@ def test_plans_build_in_few_py4j_calls(spark, web_x, tmp_path, monkeypatch):
             calls.append(command)
         return send(command, *args, **kwargs)
 
-    monkeypatch.setattr(client, "send_command", counting)
-    rollup_tiers(x, tiers, VV, [*GV, "p"])
-    n_tiers = len(calls)
-    calls.clear()
-    finalize_tier(spark, root, "1d")
-    n_finalize = len(calls)
-    monkeypatch.undo()
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        build()
+    return len(calls)
+
+
+def test_plans_build_in_few_py4j_calls(spark, web_x, tmp_path, monkeypatch):
+    """The tier and finalize plans are SQL text: building them (not running
+    them) takes a bounded number of driver → JVM calls, where a Column per
+    operator took about 3.3k and 740."""
+    x = ckpt.with_bucket(web_x, "url", 4)
+    tiers = {t: TIER_WIDTHS[t] for t in ("1h", "1d", "30d")}
+    root = str(tmp_path / "state")
+    ckpt.write_partitioned(rollup_tiers(x, tiers, VV, [*GV, "p"]), root, ("tier", "p"))
+
+    n_tiers = _py4j_calls(spark, monkeypatch, lambda: rollup_tiers(x, tiers, VV, [*GV, "p"]))
+    n_finalize = _py4j_calls(spark, monkeypatch, lambda: finalize_tier(spark, root, "1d"))
     assert n_tiers <= 300 and n_finalize <= 60, (n_tiers, n_finalize)
+
+
+def test_interval_average_plan_builds_in_few_py4j_calls(spark, web_x, monkeypatch):
+    """interval_average folds its pairs with the tier fold, all SQL text:
+    building its plan with two value columns takes 321 driver → JVM calls,
+    where its own Column-built window and aggregate took 1,974."""
+    grid, _ = _grid_for(spark, web_x, 3600)
+    n = _py4j_calls(spark, monkeypatch, lambda: interval_average(
+        web_x, grid, ("start", "end"), VV, GV, validate=False, strategy="sortmerge"))
+    assert n <= 500, n
 
 
 def test_nonaligned_boundaries_split_weights(spark):

@@ -26,12 +26,17 @@ Semantics (all intervals closed, length = end-start+1):
     NULL, maxgap = yduration   (src/code.cpp:32-50)
 
 Scale notes: the fold and the point projection are the tier engine's
-(operators/fold.py ``_state_agg`` and ``_points``). Each deduped y row is
-a window ``[ys, ye]``, and its range-join pairs, clipped to it, are the
-rows folded into its state — maxgap included, by the fold's gap-state
-window, which shares the groupBy's (groups, ys, ye) exchange. A tier
-(operators/tiers.py) is therefore this operator against a tier grid by
-construction; the weight, mean and gap rules have one definition.
+(operators/tiers.py ``_fold_pieces`` over ``_state_agg``, and ``_points``).
+Each deduped y row is a window ``[ys, ye]``, and its range-join pairs,
+clipped to it, are the rows folded into its state — maxgap included, by
+the fold's gap-state window, which shares the groupBy's (groups, ys, ye)
+exchange. A tier (operators/tiers.py) is therefore this operator against a
+tier grid by construction; the weight, mean and gap rules have one
+definition.
+
+Both operators here enter through ``validation.enter``: the plan runs over
+internal column names, so any group or value name works, and the last
+projection restores the user's names and bound types.
 
 Exactness: when a value column is DecimalType, Σw·v accumulates in
 DECIMAL (weights are exact integers) — order-independent and bit-identical
@@ -46,43 +51,18 @@ import datetime
 import warnings
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.operators.tiers import _fold_pieces, _points, _q
+from intervalaverage_spark.operators.tiers import _fold_pieces, _points
 from intervalaverage_spark.plans.rangejoin import range_join
 from intervalaverage_spark.validation import (
     IntervalSchemaError,
+    _over,
+    _q,
     check_intervals,
-    check_schema,
+    enter,
 )
-
-_EPOCH = "1970-01-01"
-
-
-def _from_int_days(c: Column) -> Column:
-    return F.date_add(F.lit(_EPOCH).cast("date"), c.cast("int"))
-
-
-def _prep(
-    df: DataFrame,
-    interval_vars: Sequence[str],
-    s_alias: str,
-    e_alias: str,
-    keep: Sequence[str] | Mapping[str, str],
-    is_date: bool,
-) -> DataFrame:
-    """The ``keep`` columns (or, for a mapping, each column under its
-    alias) and the interval bounds as BIGINT ``s_alias``/``e_alias``; DATE
-    bounds become days since the epoch. Any column name is accepted."""
-    names = keep if isinstance(keep, Mapping) else {c: c for c in keep}
-    bounds = [_q(c) for c in interval_vars]
-    if is_date:
-        bounds = [f"datediff({b}, DATE'{_EPOCH}')" for b in bounds]
-    return df.selectExpr(
-        *(_q(c) if c == a else f"{_q(c)} AS {_q(a)}" for c, a in names.items()),
-        *(f"CAST({b} AS BIGINT) AS {a}" for b, a in zip(bounds, (s_alias, e_alias))),
-    )
 
 
 def interval_average(
@@ -129,14 +109,8 @@ def interval_average(
             "interval_average — named x→y interval mappings are "
             "intersect-only (reference R/intervalaverage_functions.R:233-234)"
         )
-    group_vars = list(group_vars)
-    value_vars = list(value_vars)
-    iv = list(interval_vars)
-    x_dates = check_schema(x, iv, group_vars, value_vars)
-    y_dates = check_schema(y, iv, group_vars)
-    if x_dates != y_dates:
-        raise ValueError("x and y interval columns must share a class (int vs date)")
-
+    group_vars, iv = list(group_vars), list(interval_vars)
+    ent = enter(x, iv, group_vars, value_vars, y=y, reserved_ok=False)
     if validate:
         check_intervals(
             x, iv[0], iv[1], group_vars,
@@ -155,26 +129,17 @@ def interval_average(
             "execute on action)"
         )
 
-    # group columns travel under internal names on both sides, so no group
-    # name can collide with a join or state column (ws, we, …)
-    xg = [f"__ia_xg{i}" for i in range(len(group_vars))]
-    yg = [f"__ia_yg{i}" for i in range(len(group_vars))]
-    xp = _prep(x, iv, "__ia_xs", "__ia_xe",
-               {**dict(zip(group_vars, xg)), **{v: v for v in value_vars}}, x_dates)
-    yp_all = _prep(y, iv, "__ia_ys", "__ia_ye", dict(zip(group_vars, yg)), y_dates)
-    yp = yp_all.dropDuplicates([*yg, "__ia_ys", "__ia_ye"])
+    xg, yg, xv = ent.cols("xg"), ent.cols("yg"), ent.cols("xv")
+    yp = ent.y.dropDuplicates([*yg, "__ys", "__ye"])
     if validate:
         # ONE aggregation job for the dup warning (count + distinct-count
         # fused; the struct keeps null group keys countable — bare
         # count_distinct skips any-null rows)
-        counts = yp_all.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.struct(*yg, "__ia_ys", "__ia_ye")).alias("nd"),
-        ).first()
-        if counts["nd"] < counts["n"]:
+        n, nd = ent.y.selectExpr(
+            "count(1)", f"count(DISTINCT struct({', '.join([*yg, '__ys', '__ye'])}))").first()
+        if nd < n:
             warnings.warn(
-                f"y contained {counts['n'] - counts['nd']} duplicate rows; "
-                "duplicates removed "
+                f"y contained {n - nd} duplicate rows; duplicates removed "
                 "(reference: R/intervalaverage_functions.R:315-322)",
                 stacklevel=2,
             )
@@ -185,8 +150,8 @@ def interval_average(
     # nothing, and the per-bucket duplicates of an unmatched y collapse in
     # the fold's groupBy).
     pairs = range_join(
-        xp, yp,
-        ("__ia_xs", "__ia_xe"), ("__ia_ys", "__ia_ye"),
+        ent.x, yp,
+        ("__xs", "__xe"), ("__ys", "__ye"),
         group_vars=dict(zip(xg, yg)),
         strategy=strategy, bucket_width=bucket_width, salt=salt,
         hot_threshold=hot_threshold,
@@ -196,26 +161,17 @@ def interval_average(
     # pieces; greatest/least SKIP nulls, so the unmatched rows would
     # otherwise clip to the full y window — gate on a matched x
     pieces = pairs.selectExpr(
-        *yg, *map(_q, value_vars), "__ia_ys", "__ia_ye",
-        "CASE WHEN __ia_xs IS NOT NULL THEN greatest(__ia_xs, __ia_ys) END AS __os",
-        "CASE WHEN __ia_xs IS NOT NULL THEN least(__ia_xe, __ia_ye) END AS __oe",
+        *yg, *xv, "__ys", "__ye",
+        "CASE WHEN __xs IS NOT NULL THEN greatest(__xs, __ys) END AS __os",
+        "CASE WHEN __xs IS NOT NULL THEN least(__xe, __ye) END AS __oe",
     )
     # an empty Σw·v stays NULL (keep_sums)
-    state = _fold_pieces(pieces, yg, ["__ia_ys", "__ia_ye"],
-                         ("__ia_ys", "__ia_ye", "(__ia_ye - __ia_ys + 1)"),
-                         {v: x.schema[v].dataType for v in value_vars}, zero="NULL")
-
-    if y_dates:
-        start, end, xmin, xmax = (
-            f"date_add(DATE'{_EPOCH}', CAST({c} AS INT)) AS {_q(a)}"
-            for c, a in zip(("ws", "we", "xminstart", "xmaxend"), (*iv, "xminstart", "xmaxend"))
-        )
-    else:
-        start, end = (f"CAST({c} AS {y.schema[a].dataType.simpleString()}) AS {_q(a)}"
-                      for c, a in zip(("ws", "we"), iv))
-        xmin, xmax = "xminstart", "xmaxend"
-    out = _points(state, value_vars, [f"{a} AS {_q(g)}" for a, g in zip(yg, group_vars)],
-                  (start, end, xmin, xmax), required_percentage, sums=keep_sums)
+    state = _fold_pieces(pieces, yg, ["__ys", "__ye"], ("__ys", "__ye", "(__ye - __ys + 1)"),
+                         {v: x.schema[ent.names[v]].dataType for v in xv}, zero="NULL")
+    out = _points(state, {v: ent.names[v] for v in xv}, ent.user(*yg),
+                  (ent.bound("ws", iv[0], "__ys"), ent.bound("we", iv[1], "__ye"),
+                   ent.bound("xminstart", "xminstart"), ent.bound("xmaxend", "xmaxend")),
+                  required_percentage, sums=keep_sums)
     return out.orderBy(*map(_q, [*group_vars, *iv])) if sort else out
 
 
@@ -234,86 +190,44 @@ def interval_average_slow(
     :func:`interval_average` (islands-trick maxgap instead of the fold).
     Test/small-scale use only (memory: one row per covered time unit).
     """
-    group_vars = list(group_vars)
-    value_vars = list(value_vars)
-    iv = list(interval_vars)
-    x_dates = check_schema(x, iv, group_vars, value_vars)
-    y_dates = check_schema(y, iv, group_vars)
+    group_vars, iv = list(group_vars), list(interval_vars)
+    ent = enter(x, iv, group_vars, value_vars, y=y, reserved_ok=False)
+    xg, yg, xv = ent.cols("xg"), ent.cols("yg"), ent.cols("xv")
+    ykeys = [*yg, "__ys", "__ye"]
 
-    xp = _prep(x, iv, "__s", "__e", [*group_vars, *value_vars], x_dates)
-    yp = _prep(y, iv, "__s", "__e", group_vars, y_dates).dropDuplicates()
+    xx = ent.x.selectExpr(*xg, *xv, "explode(sequence(__xs, __xe)) AS __xt", "1 AS __m")
+    grid = ent.y.dropDuplicates().selectExpr(*ykeys, "explode(sequence(__ys, __ye)) AS __t")
+    on = " AND ".join(["__t = __xt", *(f"{a} <=> {b}" for a, b in zip(yg, xg))])
+    j = grid.join(xx, F.expr(on), "left")
 
-    xx = xp.select(
-        *group_vars, *value_vars,
-        F.explode(F.sequence("__s", "__e")).alias("__t"),
-        F.lit(1).alias("__m"),
-    )
-    grid = yp.select(
-        *group_vars, "__s", "__e", F.explode(F.sequence("__s", "__e")).alias("__t")
-    )
-    xg = [f"__xg{i}" for i in range(len(group_vars))]
-    xxr = xx.select(*[F.col(g).alias(a) for g, a in zip(group_vars, xg)], *value_vars, "__t", "__m")
-    cond = grid["__t"] == xxr["__t"]
-    for g, a in zip(group_vars, xg):
-        cond = grid[g].eqNullSafe(xxr[a]) & cond
-    j = grid.join(xxr, cond, "left").drop(xxr["__t"]).drop(*xg)
-
-    ykeys = [*group_vars, "__s", "__e"]
-    aggs = [
-        F.count("__m").alias("xduration"),
-        F.min(F.when(F.col("__m").isNotNull(), F.col("__t"))).alias("__xmin"),
-        F.max(F.when(F.col("__m").isNotNull(), F.col("__t"))).alias("__xmax"),
-    ]
-    for v in value_vars:
-        aggs += [
-            F.avg(v).alias(f"__avg_{v}"),
-            F.count(v).alias(f"nobs_{v}"),
-        ]
-    agg = j.groupBy(*ykeys).agg(*aggs)
+    aggs = ["count(__m) AS xduration",
+            "min(CASE WHEN __m IS NOT NULL THEN __t END) AS __xmin",
+            "max(CASE WHEN __m IS NOT NULL THEN __t END) AS __xmax"]
+    for v in xv:
+        aggs += [f"avg({v}) AS __avg{v}", f"count({v}) AS __nobs{v}"]
+    agg = j.groupBy(*ykeys).agg(*map(F.expr, aggs))
 
     # maxgap via gaps-and-islands over the dense unit grid
-    for v in value_vars:
-        unc = j.filter(F.col("__m").isNull() | F.col(v).isNull())
-        wspec = Window.partitionBy(*ykeys).orderBy("__t")
+    rk = [f"__r{i}" for i in range(len(ykeys))]
+    for v in xv:
         runs = (
-            unc.withColumn("__grp", F.col("__t") - F.row_number().over(wspec))
-            .groupBy(*ykeys, "__grp").agg(F.count("*").alias("__len"))
-            .groupBy(*ykeys).agg(F.max("__len").alias(f"maxgap_{v}"))
+            j.where(f"__m IS NULL OR {v} IS NULL")
+            .selectExpr(*ykeys, f"__t - row_number() {_over(ykeys, '__t')} AS __grp")
+            .groupBy(*ykeys, "__grp").agg(F.expr("count(1) AS __len"))
+            .groupBy(*ykeys).agg(F.expr(f"max(__len) AS __maxgap{v}"))
+            .toDF(*rk, f"__maxgap{v}")
         )
-        rr = runs
-        for k in ykeys:
-            rr = rr.withColumnRenamed(k, f"__r_{k}")
-        c = F.lit(True)
-        for k in ykeys:
-            c = c & agg[k].eqNullSafe(rr[f"__r_{k}"])
-        agg = agg.join(rr, c, "left").drop(*[f"__r_{k}" for k in ykeys])
+        on = " AND ".join(f"{k} <=> {r}" for k, r in zip(ykeys, rk))
+        agg = agg.join(runs, F.expr(on), "left").drop(*rk)
 
-    ydur = (F.col("__e") - F.col("__s") + 1).cast("long")
-    out: list[Column] = [F.col(g) for g in group_vars]
-    if y_dates:
-        out += [_from_int_days(F.col("__s")).alias(iv[0]), _from_int_days(F.col("__e")).alias(iv[1])]
-    else:
-        out += [
-            F.col("__s").cast(y.schema[iv[0]].dataType.simpleString()).alias(iv[0]),
-            F.col("__e").cast(y.schema[iv[1]].dataType.simpleString()).alias(iv[1]),
-        ]
-    for v in value_vars:
-        nobs = F.col(f"nobs_{v}")
-        out.append(
-            F.when(
-                (nobs > 0)
-                & (F.lit(100.0) * nobs / ydur >= F.lit(float(required_percentage))),
-                F.col(f"__avg_{v}"),
-            ).cast("double").alias(v)
-        )
-    out += [ydur.alias("yduration"), F.col("xduration").cast("long").alias("xduration")]
-    out += [F.col(f"nobs_{v}").cast("long").alias(f"nobs_{v}") for v in value_vars]
-    xmin, xmax = F.col("__xmin"), F.col("__xmax")
-    if y_dates:
-        xmin, xmax = _from_int_days(xmin), _from_int_days(xmax)
-    out += [xmin.alias("xminstart"), xmax.alias("xmaxend")]
-    out += [
-        F.coalesce(F.col(f"maxgap_{v}"), F.lit(0)).cast("long").alias(f"maxgap_{v}")
-        for v in value_vars
-    ]
-    return agg.select(*out).orderBy(*group_vars, *iv)
+    ydur = "CAST(__ye - __ys + 1 AS BIGINT)"
+    rp = float(required_percentage)
+    out = [*ent.user(*yg), ent.bound("__ys", iv[0], "__ys"), ent.bound("__ye", iv[1], "__ye")]
+    out += [f"CAST(CASE WHEN __nobs{v} > 0 AND 100.0D * __nobs{v} / {ydur} >= {rp!r}D "
+            f"THEN __avg{v} END AS DOUBLE) AS {_q(ent.names[v])}" for v in xv]
+    out += [f"{ydur} AS yduration", "CAST(xduration AS BIGINT) AS xduration"]
+    out += [f"CAST(__nobs{v} AS BIGINT) AS {_q('nobs_', ent.names[v])}" for v in xv]
+    out += [ent.bound("__xmin", "xminstart"), ent.bound("__xmax", "xmaxend")]
+    out += [f"CAST(coalesce(__maxgap{v}, 0) AS BIGINT) AS {_q('maxgap_', ent.names[v])}"
+            for v in xv]
+    return agg.selectExpr(*out).orderBy(*map(_q, [*group_vars, *iv]))

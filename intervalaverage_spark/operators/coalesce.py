@@ -25,11 +25,24 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.operators.average import _from_int_days, _prep
-from intervalaverage_spark.validation import check_schema
+from intervalaverage_spark.validation import Entry, _over, _q, enter
+
+#: window frames of the running scans
+_BEFORE = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+_UPTO = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+
+
+def _finish(ent: Entry, df: DataFrame, out: tuple[str, str], bounds: tuple[str, str],
+            rest: tuple[str, ...], sort: bool) -> DataFrame:
+    """``(*group_vars, *out, *rest)``: the groups under the user's names,
+    the BIGINT SQL ``bounds`` as ``out`` (dates restored) and the SQL
+    select items ``rest``; sorted by groups and start when ``sort``."""
+    xg = ent.cols("xg")
+    df = df.selectExpr(*ent.user(*xg), *map(ent.bound, bounds, out), *rest)
+    return df.orderBy(*map(_q, [*ent.keys("x")[2], out[0]])) if sort else df
 
 
 def interval_coalesce(
@@ -54,46 +67,26 @@ def interval_coalesce(
     row and everything before it exceeds this many units (0 = touching
     intervals merge; -1 = only true overlaps merge).
     """
-    iv, gv = list(interval_vars), list(group_vars)
-    out_s, out_e = interval_vars_out
-    is_date = check_schema(x, iv, gv, reserved_ok=True)
+    ent = enter(x, interval_vars, group_vars)
     if adjacency_gap < -1:
         raise ValueError(f"adjacency_gap must be >= -1, got {adjacency_gap}")
-    xp = _prep(x, iv, "__s", "__e", gv, is_date)
-
-    w = Window.partitionBy(*gv).orderBy("__s", "__e")
-    prev_max_end = F.max("__e").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    new_island = F.when(
-        prev_max_end.isNull() | (F.col("__s") > prev_max_end + 1 + adjacency_gap),
-        1,
-    ).otherwise(0)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # per-row NEW coverage: points past the running max end (0 if fully
-    # inside previous coverage) — sums to the exact union size
-    contrib = F.greatest(
-        F.lit(0).cast("long"),
-        F.col("__e")
-        - F.greatest(F.col("__s"), F.coalesce(prev_max_end + 1, F.col("__s")))
-        + 1,
+    xg = ent.cols("xg")
+    order = "__xs, __xe"
+    # __pm: the running max end before the row; a row past it by more than
+    # the gap opens an island, and its NEW coverage is what lies past it
+    # (0 if fully inside) — summing to the exact union size
+    isl = ent.x.selectExpr(
+        *xg, "__xs", "__xe", f"max(__xe) {_over(xg, order, _BEFORE)} AS __pm",
+    ).selectExpr(
+        *xg, "__xs", "__xe",
+        f"sum(CASE WHEN __pm IS NULL OR __xs > __pm + 1 + {int(adjacency_gap)} THEN 1 ELSE 0 END) "
+        f"{_over(xg, order, _UPTO)} AS __island",
+        "greatest(0L, __xe - greatest(__xs, coalesce(__pm + 1, __xs)) + 1) AS __new_cov",
     )
-    isl = xp.select(
-        *gv, "__s", "__e",
-        F.sum(new_island).over(run).alias("__island"),
-        contrib.alias("__new_cov"),
-    )
-    agg = isl.groupBy(*gv, "__island").agg(
-        F.min("__s").alias("__os"),
-        F.max("__e").alias("__oe"),
-        F.count(F.lit(1)).alias("n_intervals"),
-        F.sum("__new_cov").alias("covered"),
-    )
-    s_col, e_col = F.col("__os"), F.col("__oe")
-    if is_date:
-        s_col, e_col = _from_int_days(s_col), _from_int_days(e_col)
-    out = agg.select(
-        *gv, s_col.alias(out_s), e_col.alias(out_e), "n_intervals", "covered"
-    )
-    return out.orderBy(*gv, out_s) if sort else out
+    agg = isl.groupBy(*xg, "__island").agg(*map(F.expr, [
+        "min(__xs) AS __os", "max(__xe) AS __oe", "count(1) AS n_intervals",
+        "sum(__new_cov) AS covered"]))
+    return _finish(ent, agg, interval_vars_out, ("__os", "__oe"), ("n_intervals", "covered"), sort)
 
 
 def interval_gaps(
@@ -128,33 +121,15 @@ def interval_gaps(
     hours have no readings?"), retention-ledger audit (uncovered
     time between checkpointed tiers), crawl-snapshot staleness runs.
     """
-    iv, gv = list(interval_vars), list(group_vars)
-    out_s, out_e = interval_vars_out
-    is_date = check_schema(x, iv, gv, reserved_ok=True)
+    ent = enter(x, interval_vars, group_vars)
     if min_gap < 1:
         raise ValueError(f"min_gap must be >= 1, got {min_gap}")
-    xp = _prep(x, iv, "__s", "__e", gv, is_date)
-
-    w = Window.partitionBy(*gv).orderBy("__s", "__e")
-    prev_max_end = F.max("__e").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    g = xp.select(
-        *gv,
-        (prev_max_end + 1).alias("__gs"),
-        (F.col("__s") - 1).alias("__ge"),
-    ).where(
-        F.col("__gs").isNotNull()
-        & (F.col("__ge") - F.col("__gs") + 1 >= min_gap)
-    )
-    s_col, e_col = F.col("__gs"), F.col("__ge")
-    if is_date:
-        s_col, e_col = _from_int_days(s_col), _from_int_days(e_col)
-    out = g.select(
-        *gv,
-        s_col.alias(out_s),
-        e_col.alias(out_e),
-        (F.col("__ge") - F.col("__gs") + 1).alias("gap_len"),
-    )
-    return out.orderBy(*gv, out_s) if sort else out
+    xg = ent.cols("xg")
+    g = ent.x.selectExpr(
+        *xg, f"max(__xe) {_over(xg, '__xs, __xe', _BEFORE)} + 1 AS __gs", "__xs - 1 AS __ge",
+    ).where(f"__gs IS NOT NULL AND __ge - __gs + 1 >= {int(min_gap)}")
+    return _finish(ent, g, interval_vars_out, ("__gs", "__ge"), ("__ge - __gs + 1 AS gap_len",),
+                   sort)
 
 
 def interval_concurrency(
@@ -196,50 +171,17 @@ def interval_concurrency(
     (politeness auditing), overlapping-session load per user, how many
     retention tiers cover an hour, max simultaneous validity versions.
     """
-    iv, gv = list(interval_vars), list(group_vars)
-    out_s, out_e = interval_vars_out
-    is_date = check_schema(x, iv, gv, reserved_ok=True)
-    xp = _prep(x, iv, "__s", "__e", gv, is_date)
-
-    ev = xp.select(
-        *gv,
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("__s").alias("t"),
-                    F.lit(1).cast("long").alias("d"),
-                ),
-                F.struct(
-                    (F.col("__e") + 1).alias("t"),
-                    F.lit(-1).cast("long").alias("d"),
-                ),
-            )
-        ).alias("__ev"),
-    ).select(*gv, F.col("__ev.t").alias("__t"), F.col("__ev.d").alias("__d"))
-    net = (
-        ev.groupBy(*gv, "__t")
-        .agg(F.sum("__d").alias("__delta"))
-        .where(F.col("__delta") != 0)
-    )
-    w = Window.partitionBy(*gv).orderBy("__t")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    segs = net.select(
-        *gv,
-        "__t",
-        F.sum("__delta").over(run).alias("__depth"),
-        F.lead("__t").over(w).alias("__nt"),
-    ).where(F.col("__depth") >= 1)
+    ent = enter(x, interval_vars, group_vars)
+    xg = ent.cols("xg")
+    ev = ent.x.selectExpr(*xg, "inline(array(named_struct('__t', __xs, '__d', 1L), "
+                               "named_struct('__t', __xe + 1, '__d', -1L)))")
+    net = ev.groupBy(*xg, "__t").agg(F.expr("sum(__d) AS __delta")).where("__delta != 0")
+    segs = net.selectExpr(
+        *xg, "__t", f"sum(__delta) {_over(xg, '__t', _UPTO)} AS __depth",
+        f"lead(__t) {_over(xg, '__t')} AS __nt",
+    ).where("__depth >= 1")
     # every depth>=1 event has a successor: deltas sum to 0 per key and
     # the maximal t (= max end + 1, never also a start) is pure −1, so
     # the last event row always carries depth 0
-    s_col, e_col = F.col("__t"), F.col("__nt") - 1
-    if is_date:
-        s_col, e_col = _from_int_days(s_col), _from_int_days(e_col)
-    out = segs.select(
-        *gv,
-        s_col.alias(out_s),
-        e_col.alias(out_e),
-        F.col("__depth").alias("n_open"),
-        (F.col("__nt") - F.col("__t")).alias("seg_len"),
-    )
-    return out.orderBy(*gv, out_s) if sort else out
+    return _finish(ent, segs, interval_vars_out, ("__t", "__nt - 1"),
+                   ("__depth AS n_open", "__nt - __t AS seg_len"), sort)

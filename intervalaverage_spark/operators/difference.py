@@ -25,8 +25,10 @@ The reference has no difference operator; its users compose it from
 audited operators glued by ~40 lines (SURVEY.md §2.4 extension).
 
 Closed-interval semantics match every other operator: subtracting
-[4,6] from [1,9] leaves [1,3] and [7,9]; DATE intervals coerce and
-restore likewise; mixed int/date classes raise.
+[4,6] from [1,9] leaves [1,3] and [7,9]; mixed int/date classes raise.
+The composition runs over the internal names of ``validation.enter``
+(DATE bounds as days), and the last projection restores the user's
+names and dates.
 """
 
 from __future__ import annotations
@@ -36,13 +38,12 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.operators.average import _from_int_days, _prep
 from intervalaverage_spark.operators.coalesce import (
     interval_coalesce,
     interval_gaps,
 )
 from intervalaverage_spark.operators.intersect import interval_intersect
-from intervalaverage_spark.validation import check_schema
+from intervalaverage_spark.validation import _q, enter
 
 
 def interval_difference(
@@ -63,91 +64,37 @@ def interval_difference(
     maximal uncovered piece; x rows fully covered by y emit nothing;
     x rows in keys without any y emit themselves whole. Duplicate /
     overlapping rows are fine on BOTH sides (each x row subtracts the
-    same fused y cover independently).
+    same fused y cover independently). Keys match null-safely, as in
+    the range join.
     """
-    if isinstance(interval_vars, Mapping):
-        x_iv = list(interval_vars.keys())
-        y_iv = list(interval_vars.values())
-    else:
-        x_iv = y_iv = list(interval_vars)
-    if isinstance(group_vars, Mapping):
-        x_gv, y_gv = list(group_vars.keys()), list(group_vars.values())
-    else:
-        x_gv = y_gv = list(group_vars)
+    ent = enter(x, interval_vars, group_vars, y=y, keep="x")
+    xg, yg = ent.cols("xg"), ent.cols("yg")
 
-    x_dates = check_schema(x, x_iv, x_gv, reserved_ok=True)
-    y_dates = check_schema(y, y_iv, y_gv, reserved_ok=True)
-    if x_dates != y_dates:
-        raise ValueError(
-            "x and y interval columns must share a class (int vs date)"
-        )
+    # key's x-span: the universe the complement is bounded by
+    span = ent.x.groupBy(*xg).agg(F.expr("min(__xs) AS __lo"), F.expr("max(__xe) AS __hi"))
 
-    # key's x-span (int domain): the universe the complement is bounded by
-    xp = _prep(x, x_iv, "__d_xs", "__d_xe", x_gv, x_dates)
-    span = xp.groupBy(*x_gv).agg(
-        F.min("__d_xs").alias("__d_lo"), F.max("__d_xe").alias("__d_hi")
-    )
-
-    # y fused to disjoint islands, renamed to x key names, clipped to span
-    yc = interval_coalesce(
-        y, y_iv, y_gv, interval_vars_out=("__d_is", "__d_ie"), sort=False
-    ).select(*y_gv, "__d_is", "__d_ie")
-    yc = _prep(yc, ("__d_is", "__d_ie"), "__d_s", "__d_e", y_gv, y_dates)
-    yc = yc.select(
-        *[F.col(g).alias(a) for g, a in zip(y_gv, x_gv)], "__d_s", "__d_e"
-    )
-    clipped = (
-        yc.join(span, x_gv)
-        .where(
-            (F.col("__d_e") >= F.col("__d_lo"))
-            & (F.col("__d_s") <= F.col("__d_hi"))
-        )
-        .select(
-            *x_gv,
-            F.greatest("__d_s", "__d_lo").alias("__d_s"),
-            F.least("__d_e", "__d_hi").alias("__d_e"),
-        )
-    )
+    # y fused to disjoint islands, clipped to its key's span
+    yc = interval_coalesce(ent.y, ("__ys", "__ye"), yg, interval_vars_out=("__ys", "__ye"),
+                           sort=False)
+    on = " AND ".join([*(f"{a} <=> {b}" for a, b in zip(yg, xg)), "__ye >= __lo", "__ys <= __hi"])
+    clipped = yc.join(span, F.expr(on)).selectExpr(
+        *xg, "greatest(__ys, __lo) AS __s", "least(__ye, __hi) AS __e")
     # sentinels just outside the span: gaps() then yields the bounded
     # complement INCLUDING leading/trailing free runs (and the whole
     # span when the key has no y at all)
-    sentinels = span.select(
-        *x_gv,
-        (F.col("__d_lo") - 1).alias("__d_s"),
-        (F.col("__d_lo") - 1).alias("__d_e"),
-    ).unionByName(
-        span.select(
-            *x_gv,
-            (F.col("__d_hi") + 1).alias("__d_s"),
-            (F.col("__d_hi") + 1).alias("__d_e"),
-        )
-    )
-    free = interval_gaps(
-        clipped.unionByName(sentinels),
-        ("__d_s", "__d_e"),
-        x_gv,
-        interval_vars_out=("__d_fs", "__d_fe"),
-        sort=False,
-    ).select(*x_gv, "__d_fs", "__d_fe")
-    if x_dates:
-        free = free.select(
-            *x_gv,
-            _from_int_days(F.col("__d_fs")).alias("__d_fs"),
-            _from_int_days(F.col("__d_fe")).alias("__d_fe"),
-        )
+    sentinels = span.selectExpr(
+        *xg, "inline(array(named_struct('__s', __lo - 1, '__e', __lo - 1), "
+                          "named_struct('__s', __hi + 1, '__e', __hi + 1)))")
+    free = interval_gaps(clipped.unionByName(sentinels), ("__s", "__e"), xg,
+                         interval_vars_out=("__fs", "__fe"), sort=False)
 
     # the one real join: the engine's bucketed range join via intersect
     out = interval_intersect(
-        x,
-        free,
-        {x_iv[0]: "__d_fs", x_iv[1]: "__d_fe"},
-        group_vars=dict(zip(x_gv, x_gv)),
-        interval_vars_out=interval_vars_out,
-        validate=False,
-        strategy=strategy,
-        bucket_width=bucket_width,
-        sort=False,
-    )
+        ent.x, free.drop("gap_len"), {"__xs": "__fs", "__xe": "__fe"},
+        group_vars=dict(zip(xg, xg)), interval_vars_out=("__os", "__oe"),
+        validate=False, strategy=strategy, bucket_width=bucket_width, sort=False,
+    ).selectExpr(*ent.user(*xg), *map(ent.bound, ("__os", "__oe"), interval_vars_out),
+                 *ent.user(*ent.cols("xc")))
     if sort:
-        out = out.orderBy(*x_gv, *interval_vars_out)
+        out = out.orderBy(*map(_q, [*ent.keys("x")[2], *interval_vars_out]))
     return out

@@ -6,20 +6,20 @@ clip ``[max(starts), min(ends)]`` (pmax/pmin at :195-199), carrying all
 non-join columns from both sides. Interval and group vars may be *named*
 mappings x→y (:34-43, 117-118, 153-154).
 
-Spark-first: one inner range join (bucketed at scale) + one ``select`` with
-``greatest``/``least`` — Catalyst handles the rest.
+Spark-first: ``validation.enter`` puts both sides under internal names,
+one inner range join (bucketed at scale) pairs them, and one SQL
+projection clips the pair and restores the user's names.
 """
 
 from __future__ import annotations
 
+import datetime
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from intervalaverage_spark.operators.average import _from_int_days, _prep
 from intervalaverage_spark.plans.rangejoin import range_join
-from intervalaverage_spark.validation import check_intervals, check_schema
+from intervalaverage_spark.validation import _q, check_intervals, enter
 
 
 def interval_intersect(
@@ -38,65 +38,25 @@ def interval_intersect(
 ) -> DataFrame:
     """Inner range join + clip. Output columns: ``(*group_vars(y names),
     *interval_vars_out, *other x cols, *other y cols)``. Name collisions
-    between non-key x and y columns must be resolved by the caller
-    (the reference errors likewise via data.table join rules).
+    between non-key x and y columns raise ``IntervalSchemaError`` (the
+    reference errors likewise via data.table join rules).
     ``sort=False`` skips the final reference-parity orderBy (one whole
     extra range-exchange + sort at scale) for order-insensitive callers."""
-    if isinstance(interval_vars, Mapping):
-        x_iv = list(interval_vars.keys())
-        y_iv = list(interval_vars.values())
-    else:
-        x_iv = y_iv = list(interval_vars)
-    if isinstance(group_vars, Mapping):
-        x_gv, y_gv = list(group_vars.keys()), list(group_vars.values())
-    else:
-        x_gv = y_gv = list(group_vars)
-    out_s, out_e = interval_vars_out
-
-    x_dates = check_schema(x, x_iv, x_gv, reserved_ok=True)
-    y_dates = check_schema(y, y_iv, y_gv, reserved_ok=True)
-    if x_dates != y_dates:
-        raise ValueError("x and y interval columns must share a class (int vs date)")
+    ent = enter(x, interval_vars, group_vars, y=y, keep="xy")
     if validate:
-        check_intervals(x, x_iv[0], x_iv[1], x_gv, label="x")
-        check_intervals(y, y_iv[0], y_iv[1], y_gv, label="y")
+        check_intervals(x, *ent.keys("x"), label="x")
+        check_intervals(y, *ent.keys("y"), label="y")
     if verbose:
         # reference prints processing info (R/intervalintersect.r:49, :119)
-        import datetime
+        print(f"{datetime.datetime.now()} interval_intersect: strategy={strategy} "
+              f"groups={ent.keys('x')[2] or None}")
 
-        print(
-            f"{datetime.datetime.now()} interval_intersect: strategy={strategy} "
-            f"groups={list(gmap_desc) if (gmap_desc := dict(zip(x_gv, y_gv))) else None}"
-        )
-
-    x_rest = [c for c in x.columns if c not in (*x_iv, *x_gv)]
-    y_rest = [c for c in y.columns if c not in (*y_iv, *y_gv)]
-    collide = (set(x_rest) & set(y_rest)) | (set(x_rest) & set(y_gv))
-    if collide:
-        raise ValueError(f"non-key column name collision between x and y: {sorted(collide)}")
-
-    xg = [f"__ii_xg{i}" for i in range(len(x_gv))]
-    xp = _prep(x, x_iv, "__ii_xs", "__ii_xe", [*x_gv, *x_rest], x_dates)
-    xp = xp.select(*[F.col(g).alias(a) for g, a in zip(x_gv, xg)], *x_rest, "__ii_xs", "__ii_xe")
-    yp = _prep(y, y_iv, "__ii_ys", "__ii_ye", [*y_gv, *y_rest], y_dates)
-
-    pairs = range_join(
-        xp, yp,
-        ("__ii_xs", "__ii_xe"), ("__ii_ys", "__ii_ye"),
-        group_vars=dict(zip(xg, y_gv)),
-        strategy=strategy, bucket_width=bucket_width, salt=salt,
-        hot_threshold=hot_threshold,
-    ).drop(*xg)
-
-    clip_s = F.greatest(F.col("__ii_xs"), F.col("__ii_ys"))
-    clip_e = F.least(F.col("__ii_xe"), F.col("__ii_ye"))
-    if x_dates:
-        clip_s, clip_e = _from_int_days(clip_s), _from_int_days(clip_e)
-    out = pairs.select(
-        *y_gv,
-        clip_s.alias(out_s),
-        clip_e.alias(out_e),
-        *x_rest,
-        *y_rest,
-    )
-    return out.orderBy(*y_gv, out_s, out_e) if sort else out
+    yg = ent.cols("yg")
+    pairs = range_join(ent.x, ent.y, ("__xs", "__xe"), ("__ys", "__ye"),
+                       group_vars=dict(zip(ent.cols("xg"), yg)), strategy=strategy,
+                       bucket_width=bucket_width, salt=salt, hot_threshold=hot_threshold)
+    out = pairs.selectExpr(
+        *ent.user(*yg), *map(ent.bound, ("greatest(__xs, __ys)", "least(__xe, __ye)"),
+                             interval_vars_out),
+        *ent.user(*ent.cols("xc"), *ent.cols("yc")))
+    return out.orderBy(*map(_q, [*ent.keys("y")[2], *interval_vars_out])) if sort else out

@@ -14,18 +14,18 @@ original row's interval exactly. Algorithm (endpoint sweep, Spark-first):
      (:806-809); drop inverted candidates (:811)
   4. inner range join of candidate fragments back onto the original rows
      (``foverlaps`` :817) — fragments inherit every covering source row.
+All SQL text over ``validation.enter``'s internal names; the last
+projection restores the user's names and bound types.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from intervalaverage_spark.operators.average import _from_int_days, _prep
 from intervalaverage_spark.plans.rangejoin import range_join
-from intervalaverage_spark.validation import check_intervals, check_schema
+from intervalaverage_spark.validation import _over, _q, check_intervals, enter
 
 
 def isolate_overlaps(
@@ -43,64 +43,31 @@ def isolate_overlaps(
     covering source row), sorted like the reference (:818-826);
     ``sort=False`` drops that final global sort for order-insensitive
     callers (saves a full range-exchange pass at scale)."""
-    iv = list(interval_vars)
-    gv = list(group_vars)
-    out_s, out_e = interval_vars_out
-    if out_s in x.columns or out_e in x.columns:
-        raise ValueError(f"interval_vars_out {interval_vars_out} collide with x columns")
-    is_date = check_schema(x, iv, gv, reserved_ok=True)
+    (iv, gv), (out_s, out_e) = (list(interval_vars), list(group_vars)), interval_vars_out
+    ent = enter(x, iv, gv, keep="x", out=interval_vars_out)
     if validate:
         check_intervals(x, iv[0], iv[1], gv, label="x")
 
-    rest = [c for c in x.columns if c not in (*iv, *gv)]
-    xp = _prep(x, iv, "__io_s", "__io_e", [*gv, *rest], is_date)
+    # endpoint sweep, starts (__end = 0) first; the fragments' groups are
+    # __fg… so the join back onto x does not resolve them against x's
+    xg = ent.cols("xg")
+    fg = [f"__fg{i}" for i in range(len(xg))]
+    pts = ent.x.selectExpr(
+        *(f"{g} AS {f}" for g, f in zip(xg, fg)),
+        "inline(array(named_struct('__v', __xs, '__end', 0), "
+        "named_struct('__v', __xe, '__end', 1)))",
+    ).distinct()
+    over = _over(fg, "__v, __end")
+    frags = pts.selectExpr(
+        *fg,
+        "CASE WHEN __end = 0 THEN __v ELSE __v + 1 END AS __fs",
+        f"lead(__v) {over} - CASE WHEN lead(__end) {over} = 1 THEN 0 ELSE 1 END AS __fe",
+    ).where("__fs <= __fe").distinct()
 
-    # endpoint sweep: starts (is_end=0) before ends (is_end=1) at same value
-    pts = xp.select(
-        *gv,
-        F.explode(
-            F.array(
-                F.struct(F.col("__io_s").alias("value"), F.lit(0).alias("is_end")),
-                F.struct(F.col("__io_e").alias("value"), F.lit(1).alias("is_end")),
-            )
-        ).alias("p"),
-    ).select(*gv, F.col("p.value").alias("value"), F.col("p.is_end").alias("is_end")).distinct()
-
-    w = Window.partitionBy(*gv).orderBy("value", "is_end")
-    swept = pts.select(
-        *gv, "value", "is_end",
-        F.lead("value").over(w).alias("nxt_value"),
-        F.lead("is_end").over(w).alias("nxt_is_end"),
-    ).filter(F.col("nxt_value").isNotNull())
-
-    frag_s = F.when(F.col("is_end") == 0, F.col("value")).otherwise(F.col("value") + 1)
-    frag_e = F.when(F.col("nxt_is_end") == 1, F.col("nxt_value")).otherwise(
-        F.col("nxt_value") - 1
-    )
-    frags = (
-        swept.select(*gv, frag_s.alias("__io_fs"), frag_e.alias("__io_fe"))
-        .filter(F.col("__io_fs") <= F.col("__io_fe"))
-        .distinct()
-    )
-
-    fg = [f"__io_fg{i}" for i in range(len(gv))]
-    frags_r = frags.select(*[F.col(g).alias(a) for g, a in zip(gv, fg)], "__io_fs", "__io_fe")
-    joined = range_join(
-        frags_r, xp,
-        ("__io_fs", "__io_fe"), ("__io_s", "__io_e"),
-        group_vars=dict(zip(fg, gv)),
-        strategy=strategy, bucket_width=bucket_width,
-    ).drop(*fg)
-
-    fs, fe = F.col("__io_fs"), F.col("__io_fe")
-    s0, e0 = F.col("__io_s"), F.col("__io_e")
-    if is_date:
-        fs, fe, s0, e0 = map(_from_int_days, (fs, fe, s0, e0))
-    else:
-        st = x.schema[iv[0]].dataType.simpleString()
-        et = x.schema[iv[1]].dataType.simpleString()
-        fs, fe, s0, e0 = fs.cast(st), fe.cast(et), s0.cast(st), e0.cast(et)
-    out = joined.select(
-        *gv, fs.alias(out_s), fe.alias(out_e), s0.alias(iv[0]), e0.alias(iv[1]), *rest
-    )
-    return out.orderBy(*gv, out_s, out_e, iv[0], iv[1]) if sort else out
+    joined = range_join(frags, ent.x, ("__fs", "__fe"), ("__xs", "__xe"),
+                        group_vars=dict(zip(fg, xg)), strategy=strategy, bucket_width=bucket_width)
+    out = joined.selectExpr(
+        *ent.user(*xg), *map(ent.bound, ("__fs", "__fe", "__xs", "__xe"),
+                             (out_s, out_e, *iv), ("__xs", "__xe") * 2),
+        *ent.user(*ent.cols("xc")))
+    return out.orderBy(*map(_q, [*gv, out_s, out_e, *iv])) if sort else out

@@ -61,14 +61,10 @@ from pyspark.sql import types as T
 
 from intervalaverage_spark.operators.grid import tier_grid
 from intervalaverage_spark.plans.rangejoin import fdiv_sql
+from intervalaverage_spark.validation import _q
 
 #: tier name → window width in integer time units (seconds)
 TIER_WIDTHS: dict[str, int] = {"1h": 3600, "1d": 86400, "30d": 30 * 86400}
-
-
-def _q(*parts: str) -> str:
-    """The column name ``parts`` joined, as a quoted SQL identifier."""
-    return "`" + "".join(parts).replace("`", "``") + "`"
 
 
 def _wv_sql(w: str, v: str, dt: T.DataType) -> str:
@@ -204,7 +200,7 @@ def _fold_pieces(
 
 def _points(
     state: DataFrame,
-    value_vars: Sequence[str],
+    value_vars: Mapping[str, str],
     keys: Sequence[str],
     bounds: tuple[str, str, str, str],
     required_percentage: float,
@@ -212,7 +208,8 @@ def _points(
 ) -> DataFrame:
     """State → reference-semantics points: ``(*keys, start, end,
     *value_vars, yduration, xduration, nobs_*, xminstart, xmaxend,
-    maxgap_*)``, then ``sum_wv_*`` when ``sums``. ``keys`` are the SQL
+    maxgap_*)``, then ``sum_wv_*`` when ``sums``. ``value_vars`` maps each
+    value var of the state to its output name; ``keys`` are the SQL
     select items of the group columns and ``bounds`` those of (start, end,
     xminstart, xmaxend). A window with no state (a gap-filled one) reads
     as unmatched: value NULL, xduration 0, nobs 0, maxgap yduration
@@ -220,21 +217,21 @@ def _points(
     schema = state.schema
     ydur = "CAST(we - ws + 1 AS BIGINT)"
     out = [*keys, *bounds[:2]]
-    for v in value_vars:
+    for v, o in value_vars.items():
         nobs = _q("nobs_", v)
         mean = _mean_sql(_q("sum_wv_", v), nobs, schema[f"sum_wv_{v}"].dataType)
         # strict < drops the window (R/intervalaverage_functions.R:466-469)
         keep = (f"coalesce({nobs}, 0) > 0 AND 100.0D * coalesce({nobs}, 0) / {ydur} >= "
                 f"{float(required_percentage)!r}D")
-        out.append(f"CAST(CASE WHEN {keep} THEN {mean} END AS DOUBLE) AS {_q(v)}")
+        out.append(f"CAST(CASE WHEN {keep} THEN {mean} END AS DOUBLE) AS {_q(o)}")
     out += [f"{ydur} AS yduration", "CAST(coalesce(xduration, 0) AS BIGINT) AS xduration"]
-    out += [f"CAST(coalesce({_q('nobs_', v)}, 0) AS BIGINT) AS {_q('nobs_', v)}"
-            for v in value_vars]
+    out += [f"CAST(coalesce({_q('nobs_', v)}, 0) AS BIGINT) AS {_q('nobs_', o)}"
+            for v, o in value_vars.items()]
     out += bounds[2:]
-    out += [f"CAST(coalesce({_q('best_', v)}, {ydur}) AS BIGINT) AS {_q('maxgap_', v)}"
-            for v in value_vars]
+    out += [f"CAST(coalesce({_q('best_', v)}, {ydur}) AS BIGINT) AS {_q('maxgap_', o)}"
+            for v, o in value_vars.items()]
     if sums:
-        out += [_q("sum_wv_", v) for v in value_vars]
+        out += [f"{_q('sum_wv_', v)} AS {_q('sum_wv_', o)}" for v, o in value_vars.items()]
     return state.selectExpr(*out)
 
 
@@ -372,6 +369,6 @@ def finalize(
         state = grid.join(st, cond, "left").drop(
             "__f_ws", "__f_we", *[f"__f_{g}" for g in group_vars]
         )
-    return _points(state, value_vars, [*map(_q, group_vars)],
+    return _points(state, {v: v for v in value_vars}, [*map(_q, group_vars)],
                    (f"ws AS {_q(s_out)}", f"we AS {_q(e_out)}", "xminstart", "xmaxend"),
                    required_percentage)

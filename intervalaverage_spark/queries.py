@@ -437,7 +437,7 @@ FROM y LEFT JOIN agg a ON a.user_id = y.user_id AND a.ys = y.ys AND a.ye = y.ye
 # The reference exercises IDate intervals heavily
 # (test-intervalaverage_functions.R:454-546); these entries run the
 # operators on true DateType inputs (the int-days coerce/restore path,
-# operators/average.py _prep/_from_int_days) end-to-end. Dates are
+# validation.enter and Entry.bound) end-to-end. Dates are
 # projected to ISO strings ONLY in the final compare select — strings are
 # the one date representation pandas renders identically for both engines.
 

@@ -1,18 +1,21 @@
-"""Input validation mirroring the reference's error contract.
+"""The interval operators' one entry layer and the reference's error contract.
 
 The reference front-loads ~20 error checks so its kernels can be check-free
-(R/intervalaverage_functions.R:218-338, technicaloverview.Rmd:79). We do the
-same split: cheap driver-side schema assertions (no job), plus ONE Spark job
-per table for the data-dependent checks (null/inverted bounds, exact
-duplicates, within-group overlap) fused into a single window pass.
+(R/intervalaverage_functions.R:218-338, technicaloverview.Rmd:79). So do we:
+driver-side schema checks (no job) in :func:`enter`, which also aliases the
+columns an operator reads to internal names in one quoted ``selectExpr``,
+and ONE Spark job per table for the data-dependent checks. Kernels are SQL
+text over the internal names, and :class:`Entry` restores the user's names
+in the final projection: no user name is ever parsed as a column path, so
+any name works (``a.b``, ``g`x``, ``ws``, …).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -20,6 +23,9 @@ INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 #: output names the operators create; rejected as input columns
 #: (reference: R/intervalaverage_functions.R:236-240)
 RESERVED = ("yduration", "xduration", "xminstart", "xmaxend")
+
+#: DATE bounds travel as days since this day
+_EPOCH = "1970-01-01"
 
 
 class IntervalSchemaError(ValueError):
@@ -30,8 +36,15 @@ class IntervalDataError(ValueError):
     """Data-level violation (null/inverted bounds, dups, overlaps)."""
 
 
-def _dtype(df: DataFrame, col: str) -> T.DataType:
-    return df.schema[col].dataType
+def _q(*parts: str) -> str:
+    """The column name ``parts`` joined, as a quoted SQL identifier."""
+    return "`" + "".join(parts).replace("`", "``") + "`"
+
+
+def _over(keys: Sequence[str], order: str, frame: str = "") -> str:
+    """SQL window clause partitioned by the SQL expressions ``keys``."""
+    part = f"PARTITION BY {', '.join(keys)} " if keys else ""
+    return f"OVER ({part}ORDER BY {order} {frame})"
 
 
 def check_schema(
@@ -41,13 +54,10 @@ def check_schema(
     value_vars: Sequence[str] = (),
     reserved_ok: bool = False,
 ) -> bool:
-    """Driver-side (no job) schema checks. Returns True if the interval
-    columns are DateType (caller must coerce to int days and restore).
-
-    Reference checks: cols exist & disjoint roles
-    (R/intervalaverage_functions.R:233-262), interval cols integer/IDate and
-    same class (:272-284), reserved names absent (:236-240).
-    """
+    """Driver-side (no job) schema checks; True if the intervals are dates.
+    Reference: cols exist & disjoint roles (R/intervalaverage_functions.R:
+    233-262), interval cols integer/IDate and same class (:272-284),
+    reserved names absent (:236-240)."""
     iv = list(interval_vars)
     if len(iv) != 2:
         raise IntervalSchemaError(f"interval_vars must be length 2, got {iv}")
@@ -56,9 +66,7 @@ def check_schema(
     if missing:
         raise IntervalSchemaError(f"columns not in DataFrame: {missing}")
     if len(set(all_cols)) != len(all_cols):
-        raise IntervalSchemaError(
-            "interval_vars, group_vars, value_vars must be mutually disjoint"
-        )
+        raise IntervalSchemaError("interval_vars, group_vars, value_vars must be mutually disjoint")
     if not reserved_ok:
         bad = [c for c in df.columns if c in RESERVED or c.startswith(("nobs_", "maxgap_"))]
         if bad:
@@ -66,17 +74,16 @@ def check_schema(
                 f"reserved output names present in input: {bad} "
                 f"(reference rejects these: R/intervalaverage_functions.R:236-240)"
             )
-    t0, t1 = _dtype(df, iv[0]), _dtype(df, iv[1])
+    t0, t1 = (df.schema[c].dataType for c in iv)
     both_date = isinstance(t0, T.DateType) and isinstance(t1, T.DateType)
-    both_int = isinstance(t0, INTEGRAL_TYPES) and isinstance(t1, INTEGRAL_TYPES)
-    if not (both_date or both_int):
+    if not (both_date or isinstance(t0, INTEGRAL_TYPES) and isinstance(t1, INTEGRAL_TYPES)):
         raise IntervalSchemaError(
             f"interval columns must both be integral or both DateType, got "
             f"({t0.simpleString()}, {t1.simpleString()}); discretize continuous "
             f"time first (reference: technicaloverview.Rmd:35-36)"
         )
     for v in value_vars:
-        if not isinstance(_dtype(df, v), (T.NumericType,)):
+        if not isinstance(df.schema[v].dataType, T.NumericType):
             raise IntervalSchemaError(f"value_var {v} must be numeric")
     return both_date
 
@@ -98,35 +105,107 @@ def check_intervals(
       * exact duplicate (group,start,end) rows (:307-312)
       * within-group interval overlap — closed intervals, so touching
         endpoints overlap (:324-338, src/Cisoverlapping.cpp:16-21)
+    Names are quoted and the offending row read back positionally.
     """
-    def as_long(c: str) -> F.Column:
-        if isinstance(_dtype(df, c), T.DateType):
-            return F.unix_date(F.col(c))  # DATE can't CAST to BIGINT (ANSI)
-        return F.col(c).cast("long")
-
-    s, e = as_long(start), as_long(end)
-    problems = [
-        F.when(F.col(start).isNull() | F.col(end).isNull(), F.lit("null interval bound")),
-        F.when(s > e, F.lit("interval start > end")),
-    ]
-    if forbid_duplicates or require_non_overlapping:
-        w = Window.partitionBy(*[F.col(g) for g in group_vars]).orderBy(s, e)
-        prev_s, prev_e = F.lag(s).over(w), F.lag(e).over(w)
-        if forbid_duplicates:
-            problems.append(
-                F.when((prev_s == s) & (prev_e == e), F.lit("exact duplicate interval row"))
-            )
-        if require_non_overlapping:
-            # sorted by (start,end): any overlap shows up between neighbors
-            problems.append(F.when(s <= prev_e, F.lit("overlapping intervals within group")))
-    prob = F.coalesce(*problems) if len(problems) > 1 else problems[0]
-    bad = df.select(prob.alias("problem"), *group_vars, start, end).filter(
-        F.col("problem").isNotNull()
-    )
-    row = bad.limit(1).collect()
+    s, e = _q(start), _q(end)
+    over = _over([*map(_q, group_vars)], f"{s}, {e}")
+    problems = [f"CASE WHEN {s} IS NULL OR {e} IS NULL THEN 'null interval bound' END",
+                f"CASE WHEN {s} > {e} THEN 'interval start > end' END"]
+    if forbid_duplicates:
+        problems.append(f"CASE WHEN lag({s}) {over} = {s} AND lag({e}) {over} = {e} "
+                        "THEN 'exact duplicate interval row' END")
+    if require_non_overlapping:
+        # sorted by (start,end): any overlap shows up between neighbors
+        problems.append(f"CASE WHEN {s} <= lag({e}) {over} "
+                        "THEN 'overlapping intervals within group' END")
+    cols = [*group_vars, start, end]
+    row = (df.selectExpr(f"coalesce({', '.join(problems)}) AS __problem",
+                         *(f"{_q(c)} AS __c{i}" for i, c in enumerate(cols)))
+           .where("__problem IS NOT NULL").limit(1).collect())
     if row:
-        r = row[0]
+        problem, *values = row[0]
         raise IntervalDataError(
-            f"invalid intervals in {label}: {r['problem']} at "
-            f"{ {k: r[k] for k in r.asDict() if k != 'problem'} }"
-        )
+            f"invalid intervals in {label}: {problem} at {dict(zip(cols, values))}")
+
+
+@dataclass(frozen=True)
+class Entry:
+    """Inputs under internal names: side ``p`` (x, and y if given) holds
+    group columns ``__pg0…``, carried columns ``__pc0…``, values ``__pv0…``
+    and BIGINT bounds ``__ps``, ``__pe`` (dates as days). ``names`` maps them
+    to the user's names, ``types`` the bounds to the user's SQL types."""
+
+    x: DataFrame
+    y: DataFrame | None
+    is_date: bool
+    names: dict[str, str]
+    types: dict[str, str]
+
+    def cols(self, kind: str) -> list[str]:
+        """The internal names of ``kind``: ``"xg"``, ``"yc"``, ``"xv"``, …"""
+        return [c for c in self.names if c.startswith("__" + kind)]
+
+    def keys(self, p: str) -> tuple[str, str, list[str]]:
+        """Side ``p``'s user (start, end, group columns)."""
+        return (self.names[f"__{p}s"], self.names[f"__{p}e"],
+                [self.names[g] for g in self.cols(p + "g")])
+
+    def user(self, *cols: str) -> list[str]:
+        """Select items restoring the user's names of internal ``cols``."""
+        return [f"{c} AS {_q(self.names[c])}" for c in cols]
+
+    def bound(self, sql: str, name: str, like: str | None = None) -> str:
+        """Select item of the BIGINT bound ``sql`` as ``name``: a DATE for
+        date intervals, else of bound ``like``'s type (BIGINT if None)."""
+        if self.is_date:
+            sql = f"date_add(DATE'{_EPOCH}', CAST({sql} AS INT))"
+        elif like is not None:
+            sql = f"CAST({sql} AS {self.types[like]})"
+        return f"{sql} AS {_q(name)}"
+
+
+def enter(
+    x: DataFrame,
+    interval_vars: Sequence[str] | Mapping[str, str],
+    group_vars: Sequence[str] | Mapping[str, str] = (),
+    value_vars: Sequence[str] = (),
+    y: DataFrame | None = None,
+    keep: str = "",
+    out: tuple[str, str] | None = None,
+    reserved_ok: bool = True,
+) -> Entry:
+    """Schema checks, then x (and y) under internal names. ``interval_vars``
+    and ``group_vars`` may map x names to y names; ``keep`` names the sides
+    (``"x"``, ``"xy"``) whose other columns the output carries; ``out``
+    are output bound names that must not be any x column's."""
+    (x_iv, y_iv), (x_gv, y_gv) = (
+        (list(n), list(n.values() if isinstance(n, Mapping) else n))
+        for n in (interval_vars, group_vars))
+    is_date = check_schema(x, x_iv, x_gv, value_vars, reserved_ok)
+    if y is not None and check_schema(y, y_iv, y_gv, reserved_ok=reserved_ok) != is_date:
+        raise IntervalSchemaError("x and y interval columns must share a class (int vs date)")
+    if out is not None and set(out) & set(x.columns):
+        raise IntervalSchemaError(f"interval_vars_out {out} collide with x columns")
+    x_rest = [c for c in x.columns if c not in (*x_iv, *x_gv)] if "x" in keep else []
+    y_rest = [c for c in y.columns if c not in (*y_iv, *y_gv)] if "y" in keep else []
+    if collide := set(x_rest) & {*y_rest, *y_gv} if "y" in keep else set():
+        raise IntervalSchemaError(
+            f"non-key column name collision between x and y: {sorted(collide)}")
+
+    names: dict[str, str] = {}
+    types: dict[str, str] = {}
+
+    def alias(df: DataFrame, p: str, iv, gv, rest, values) -> DataFrame:
+        cols = {f"__{p}{k}{i}": c for k, cs in (("g", gv), ("c", rest), ("v", values))
+                for i, c in enumerate(cs)}
+        bounds = {f"__{p}s": iv[0], f"__{p}e": iv[1]}
+        names.update(cols, **bounds)
+        types.update({a: df.schema[c].dataType.simpleString() for a, c in bounds.items()})
+        day = "datediff({}, DATE'" + _EPOCH + "')" if is_date else "{}"
+        return df.selectExpr(*(f"{_q(c)} AS {a}" for a, c in cols.items()),
+                             *(f"CAST({day.format(_q(c))} AS BIGINT) AS {a}"
+                               for a, c in bounds.items()))
+
+    return Entry(alias(x, "x", x_iv, x_gv, x_rest, value_vars),
+                 None if y is None else alias(y, "y", y_iv, y_gv, y_rest, ()),
+                 is_date, names, types)

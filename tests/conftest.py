@@ -1,8 +1,10 @@
 from __future__ import annotations
 
 import contextlib
+import threading
 
 import pytest
+from py4j import protocol
 
 from intervalaverage_spark.session import get_spark
 
@@ -32,3 +34,20 @@ def spark_jobs(spark, group):
     finally:
         ids += sc.statusTracker().getJobIdsForGroup(group)
         sc.setJobGroup(None, None)
+
+
+def _py4j_calls(spark, monkeypatch, build):
+    """The driver → JVM calls ``build()`` makes on this thread."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, calls = client.send_command, threading.get_ident(), []
+
+    def counting(command, *args, **kwargs):
+        # object releases come from py4j's finalizer thread, not the build
+        if threading.get_ident() == me and not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        build()
+    return len(calls)

@@ -97,28 +97,29 @@ def test_average_no_groups_fast_vs_slow(spark):
 
 
 def test_average_accepts_any_column_name(spark):
-    """Group columns named like the fold's window and tier keys (``ws``,
-    ``we``, ``tier``, ``__k``) and value columns named ``ws`` or with a
-    backtick give the rows of the plain-name run."""
+    """Group columns named like the fold's window and tier keys, SQL
+    keywords, check or sweep columns, or with a backtick or a dot, and
+    value columns named ``ws`` or with a backtick, give the rows of the
+    plain-name run — from the fast path and from the slow oracle."""
     xpd = random_interval_table(15, 80, 3, non_overlapping=True)
     ypd = random_interval_table(16, 30, 3, value_cols=())
     x = spark.createDataFrame(xpd)
     y = spark.createDataFrame(ypd[["id1", "start", "end"]])
 
-    def run(name):
+    def run(op, name):
         g, v1, v2 = (name.get(c, c) for c in ("id1", "value1", "value2"))
-        return interval_average(
-            x.withColumnsRenamed(name), y.withColumnsRenamed(name), ("start", "end"),
-            [v1, v2], [g], required_percentage=50)
+        return op(x.withColumnsRenamed(name), y.withColumnsRenamed(name), ("start", "end"),
+                  [v1, v2], [g], required_percentage=50)
 
-    plain = run({})
-    for name in ({"id1": "ws"}, {"id1": "we"}, {"id1": "tier"}, {"id1": "__k"},
-                 {"value1": "ws"}, {"value1": "la`ng"}):
-        got = run(name)
+    plain = run(interval_average, {})
+    groups = ["ws", "we", "tier", "__k", "select", "problem", "value", "p", "__s", "g`x", "a.b"]
+    for name in ({"value1": "ws"}, {"value1": "la`ng"}, *({"id1": g} for g in groups)):
         old, new = next(iter(name.items()))
-        assert got.columns == [c.replace(old, new) for c in plain.columns], name
-        assert_frames_match(got.toDF(*plain.columns), plain, {"value1", "value2"},
-                            ["id1", "start", "end"])
+        for op in (interval_average, interval_average_slow):
+            got = run(op, name)
+            assert got.columns == [c.replace(old, new) for c in plain.columns], (op, name)
+            assert_frames_match(got.toDF(*plain.columns), plain, {"value1", "value2"},
+                                ["id1", "start", "end"])
 
 
 def test_strategies_agree(spark):

@@ -12,7 +12,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from intervalaverage_spark import interval_average
+from intervalaverage_spark import interval_average, interval_intersect, isolate_overlaps
+from intervalaverage_spark.operators.difference import interval_difference
 from intervalaverage_spark.validation import (
     IntervalDataError,
     IntervalSchemaError,
@@ -89,6 +90,10 @@ def test_mixed_interval_classes_rejected(spark, xy):
     # x DateType vs y LongType → class mismatch
     with pytest.raises(ValueError, match="class"):
         interval_average(xd, y, ("start", "end"), ["v"], ["g"])
+    # a named IntervalSchemaError, from every two-table operator
+    for op in (interval_intersect, interval_difference):
+        with pytest.raises(IntervalSchemaError, match="class"):
+            op(xd, y, ("start", "end"), ["g"])
 
 
 def test_float_interval_cols_rejected(spark, xy):
@@ -108,6 +113,11 @@ def test_role_overlap_rejected(spark, xy):
     x, y = xy
     with pytest.raises(IntervalSchemaError, match="disjoint"):
         check_schema(x, ("start", "end"), ["start"], ["v"])
+    # output columns that would collide are named schema errors too
+    with pytest.raises(IntervalSchemaError, match="collision"):
+        interval_intersect(x, y.withColumn("v", F.lit(0.0)), ("start", "end"), ["g"])
+    with pytest.raises(IntervalSchemaError, match="collide"):
+        isolate_overlaps(x, ("start", "end"), ["g"], interval_vars_out=("v", "e"))
 
 
 def test_check_intervals_reports_first_problem(spark):

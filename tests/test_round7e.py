@@ -501,14 +501,15 @@ def test_difference_tiles_with_intersection(spark):
 
 def test_difference_edges(spark):
     x = spark.createDataFrame(
-        [("cov", 2, 8), ("noy", 1, 4)], ["k", "s", "e"]
+        [("cov", 2, 8), ("noy", 1, 4), (None, 3, 5)], ["k", "s", "e"]
     )
-    y = spark.createDataFrame([("cov", 0, 99)], ["k", "bs", "be"])
+    y = spark.createDataFrame([("cov", 0, 99), (None, 0, 4)], ["k", "bs", "be"])
     got = rows(
         interval_difference(x, y, {"s": "bs", "e": "be"}, ["k"]), "k"
     )
-    # fully covered emits nothing; key without y emits itself whole
-    assert got == [{"k": "noy", "start": 1, "end": 4}]
+    # fully covered emits nothing; key without y emits itself whole; a
+    # NULL key is a key like any other, as in the range join
+    assert got == [{"k": "noy", "start": 1, "end": 4}, {"k": None, "start": 5, "end": 5}]
 
 
 def test_difference_dates_round_trip(spark):

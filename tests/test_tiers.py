@@ -5,10 +5,7 @@ consistency; weighted-mean associativity via carried sums)."""
 
 from __future__ import annotations
 
-import threading
-
 import pytest
-from py4j import protocol
 from pyspark.sql import functions as F
 
 from intervalaverage_spark import interval_average, tier_grid
@@ -22,7 +19,7 @@ from intervalaverage_spark.operators.tiers import (
 )
 from intervalaverage_spark.plans import checkpoint as ckpt
 from intervalaverage_spark.sources.webts import observation_intervals, synth_webpages
-from tests.conftest import rows
+from tests.conftest import _py4j_calls, rows
 from tests.test_differential import assert_frames_match
 
 VV = ["text_bytes", "crawl_gap"]
@@ -144,23 +141,6 @@ def test_awkward_column_names_are_quoted(spark, web_x):
     for p, a in zip(plain, awkward):
         assert a.columns == [_awkward(c) for c in p.columns]
         assert _checksum(a.toDF(*p.columns)) == _checksum(p)
-
-
-def _py4j_calls(spark, monkeypatch, build):
-    """The driver → JVM calls ``build()`` makes on this thread."""
-    client = spark.sparkContext._gateway._gateway_client
-    send, me, calls = client.send_command, threading.get_ident(), []
-
-    def counting(command, *args, **kwargs):
-        # object releases come from py4j's finalizer thread, not the build
-        if threading.get_ident() == me and not command.startswith(protocol.MEMORY_COMMAND_NAME):
-            calls.append(command)
-        return send(command, *args, **kwargs)
-
-    with monkeypatch.context() as m:
-        m.setattr(client, "send_command", counting)
-        build()
-    return len(calls)
 
 
 def test_plans_build_in_few_py4j_calls(spark, web_x, tmp_path, monkeypatch):

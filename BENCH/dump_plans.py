@@ -224,8 +224,8 @@ def main() -> None:
         ),
     )
 
-    # 8. as-of join, bucketed skew path: the only join is a spread
-    # equi-join on (key, bucket) — never a BNLJ/cartesian
+    # 8. as-of join, bucketed skew path: the only join is the carry's
+    # equi-join on the (key, bucket) struct — never a BNLJ/cartesian
     add(
         "asof_join bucketed (time-sliced skew path)",
         q.q_asof_next_purchase_events(spark, sf),
@@ -233,16 +233,17 @@ def main() -> None:
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct",
                   "BatchEvalPython", "FlatMapGroupsInPandas"],
         note=(
-            "Hot keys are time-sliced: windows partition on (key, bucket), "
-            "the cross-bucket carry runs at bucket granularity (~n_buckets "
-            "rows per key), and the only join is an equi-join back on "
-            "(key, bucket) — exactly the composite key the data model "
-            "already spreads."
+            "Hot keys are time-sliced (plans/slices.py): windows partition "
+            "on the (key, bucket) struct `__sk`, the cross-bucket carry runs "
+            "at bucket granularity (~n_buckets rows per key), and the only "
+            "join is the carry's equi-join back on `__sk` — null-safe, as "
+            "struct equality matches NULL keys, and already satisfied by "
+            "the window's partitioning on the row side."
         ),
     )
 
-    # 9. fills: windows + (since round 4) the bucketed locf's carry
-    # equi-join — never BNLJ, never python
+    # 9. fills: windows + the bucketed locf's carry equi-join — never
+    # BNLJ, never python
     add(
         "locf(bucketed)/nocb/interpolate over the dense 1d grid",
         q.q_fill_daily_events(spark, sf),
@@ -253,9 +254,9 @@ def main() -> None:
         note=(
             "NOCB and interpolation are last(ignorenulls) windows over the "
             "key partitioning; LOCF runs the time-sliced skew path here "
-            "(driver-oracled), adding its 1-row-per-(key, bucket) carry "
-            "equi-join — a plain shuffled join on (key, bucket), nothing "
-            "serializes on a hot key."
+            "(driver-oracled, plans/slices.py), adding its "
+            "1-row-per-(key, bucket) carry equi-join on the (key, bucket) "
+            "struct — nothing serializes on a hot key."
         ),
     )
 
@@ -270,11 +271,11 @@ def main() -> None:
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct",
                   "BatchEvalPython", "FlatMapGroupsInPandas"],
         note=(
-            "Hot-key sessionization: sessions computed per (key, "
-            "day-bucket), then a gaps-and-islands pass over ONE row per "
-            "bucket decides cross-bucket continuation and the global-id "
-            "offsets; ids equal the flat window's exactly "
-            "(hypothesis-tested)."
+            "Hot-key sessionization (plans/slices.py): sessions computed "
+            "per (key, day-bucket), then a gaps-and-islands pass over ONE "
+            "row per bucket decides cross-bucket continuation and the "
+            "global-id offsets (one window spec, two levels); ids equal the "
+            "flat window's exactly, NULL keys included (hypothesis-tested)."
         ),
     )
 
@@ -395,9 +396,10 @@ def main() -> None:
             "The fill window re-keys by (user, day-bucket) so a hot key "
             "spreads across its time buckets; the cross-bucket carry is a "
             "1-row-per-(key, bucket) aggregate + window + equi join — "
-            "every stage keyed by (key, bucket), nothing serializes on a "
-            "single hot key. Same bucket+carry design as the as-of join; "
-            "rate() shares it (operators/analytics.py)."
+            "every stage but the tiny bucket scan keyed by (key, bucket), "
+            "nothing serializes on a single hot key. One helper "
+            "(plans/slices.time_sliced) serves the as-of join, the fills, "
+            "rate, sessionize and rolling_decomposable."
         ),
     )
 
@@ -458,7 +460,8 @@ def main() -> None:
         + ("OK" if ok18 else "VIOLATION") + "\n\n"
         "When the caller guarantees one row per (key, t) the collapse "
         "aggregate AND the final equi join back to the input are skipped; "
-        "the frame results are emitted straight off the as-of output. "
+        "the frame results are emitted straight off the sweep's running "
+        "sums. "
         f"Exchange count: collapsed mode = {nx_jb}, assume_unique mode = "
         f"{nx_d} (strictly fewer: {'PASS' if ok18 else 'FAIL'}). The "
         "driver queries rolling_1h_decomposable / rolling_1h_minmax run "
@@ -477,8 +480,8 @@ def main() -> None:
         note=(
             "Same union-window + bucket-granularity carry as the events "
             "as-of, at 300× the left cardinality: every window partitions "
-            "by (suppkey, 4-week bucket); the carry join is equi on the "
-            "same composite key. Scan reads only (l_suppkey, l_shipdate, "
+            "by the (suppkey, 4-week bucket) struct; the carry join is equi "
+            "on the same struct. Scan reads only (l_suppkey, l_shipdate, "
             "l_orderkey, l_linenumber, l_extendedprice)."
         ),
     )

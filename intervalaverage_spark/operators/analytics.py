@@ -8,23 +8,25 @@ no UDFs; the only non-codegen node is the percentile buffer (see
 :func:`windowed_percentiles` for the exact/approx trade-off).
 
 Skew: a window partitioned only by the group key puts an entire hot key
-in one task. :func:`rate` takes ``bucket_width`` — the same time-slicing
-skew path as ``operators/asof.py`` (bucket the window by
-``(key, floor(t/width))``, resolve the cross-bucket boundary with a
-1-row-per-bucket carry) — so a hot key spreads across its time buckets.
-Equality with the flat path is property-tested
-(tests/test_property_hypothesis.py).
+in one task. :func:`rate` and :func:`rolling_decomposable` take
+``bucket_width``: their windows run per ``(key, floor(t/width))`` through
+:func:`~intervalaverage_spark.plans.slices.time_sliced`, which carries
+the cross-bucket boundary (the previous point; the running sums of the
+earlier buckets) from a 1-row-per-bucket table — so a hot key spreads
+across its time buckets. Equality with the flat path, NULL keys
+included, is property-tested (tests/test_property_hypothesis.py).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from intervalaverage_spark.plans.rangejoin import fdiv
-from intervalaverage_spark.validation import IntervalDataError, IntervalSchemaError
+from intervalaverage_spark.plans.slices import time_sliced
+from intervalaverage_spark.validation import IntervalDataError, IntervalSchemaError, _q
 
 _AGGS = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max, "count": F.count}
 
@@ -46,17 +48,19 @@ def check_unique_ts(df: DataFrame, ts_col: str, group_vars: Sequence[str]) -> No
     once — the eager analogue of the reference's non-overlap validation
     (R/intervalaverage_functions.R:307-338, skippable there too). One
     aggregate + head(1): the collect is bounded to a single row."""
+    cols = [*group_vars, ts_col]
     dup = (
-        df.groupBy(*group_vars, ts_col)
+        df.selectExpr(*(f"{_q(c)} AS __c{i}" for i, c in enumerate(cols)))
+        .groupBy(*(f"__c{i}" for i in range(len(cols))))
         .count()
         .filter(F.col("count") > 1)
         .head(1)
     )
     if dup:
-        keys = {c: dup[0][c] for c in (*group_vars, ts_col)}
+        *values, n = dup[0]
         raise IntervalDataError(
-            f"duplicate (key, {ts_col}) rows — e.g. {keys} appears "
-            f"{dup[0]['count']} times; the matched predecessor would be "
+            f"duplicate (key, {ts_col}) rows — e.g. {dict(zip(cols, values))} appears "
+            f"{n} times; the matched predecessor would be "
             "sort-order-dependent. Dedup upstream or aggregate first."
         )
 
@@ -86,11 +90,10 @@ def rate(
 
     ``bucket_width`` (the skew path): partition the window by
     ``(key, floor(t/width))`` instead of key alone, so a hot key spreads
-    across its time buckets. The predecessor of each bucket's first row
-    is resolved by a carry table of ONE row per (key, bucket) — the last
-    point of each bucket, scanned with a window over buckets — joined
-    back on (key, bucket). Two cheap exchanges + one equi join, all
-    spread; identical results to the flat path (property-tested)."""
+    across its time buckets; the predecessor of each bucket's first row is
+    the previous bucket's last point, carried by
+    :func:`~intervalaverage_spark.plans.slices.time_sliced`. Identical
+    results to the flat path (property-tested)."""
     if counter_reset not in ("none", "zero"):
         raise IntervalSchemaError(
             f"counter_reset must be none/zero, got {counter_reset!r}")
@@ -99,44 +102,20 @@ def rate(
     _no_clash(df, out_col)
     if validate:
         check_unique_ts(df, ts_col, group_vars)
-    t = F.col(ts_col).cast("long")
-    v = F.col(value_col).cast("double")
-    orig_cols = df.columns
-
-    if bucket_width is None:
-        w = Window.partitionBy(*group_vars).orderBy(t)
-        prev = F.lag(F.struct(t.alias("t"), v.alias("v"))).over(w)
-        src = df
-    else:
-        if bucket_width <= 0:
-            raise IntervalSchemaError(
-                f"bucket_width must be positive, got {bucket_width}")
-        _no_clash(df, "__rbk", "__rcarry")
-        src = df.withColumn("__rbk", fdiv(t, bucket_width))
-        wb = Window.partitionBy(*group_vars, "__rbk").orderBy(t)
-        inb = F.lag(F.struct(t.alias("t"), v.alias("v"))).over(wb)
-        # carry: last point of each (key, bucket); the predecessor of a
-        # bucket's first row is the previous PRESENT bucket's last point
-        # (every bucket key in the carry table holds >=1 row, so lag(1)
-        # over buckets is exactly "last point in any earlier bucket").
-        b = src.groupBy(*group_vars, "__rbk").agg(
-            F.max_by(F.struct(t.alias("t"), v.alias("v")), t).alias("__blast")
-        )
-        wc = Window.partitionBy(*group_vars).orderBy("__rbk")
-        carry = b.select(
-            *group_vars, "__rbk", F.lag("__blast").over(wc).alias("__rcarry")
-        )
-        src = src.join(carry, on=[*group_vars, "__rbk"], how="left")
-        prev = F.when(inb.isNull(), F.col("__rcarry")).otherwise(inb)
-
-    pt, pv = prev.getField("t"), prev.getField("v")
-    dv = (
-        F.when(v >= pv, v - pv).otherwise(v)
-        if counter_reset == "zero" else v - pv
-    )
-    return src.select(
-        *orig_cols, F.when(t > pt, dv / (t - pt)).alias(out_col)
-    )
+    t = f"CAST({_q(ts_col)} AS BIGINT)"
+    v = f"CAST({_q(value_col)} AS DOUBLE)"
+    pt = f"named_struct('t', {t}, 'v', {v})"
+    s = time_sliced(
+        df, [*map(_q, group_vars)], t, bucket_width,
+        window=lambda p: {"__prev": f"lag({pt}) OVER ({p} ORDER BY {t})"},
+        summary={"__last": f"max_by({pt}, {t})"},
+        back=lambda w: {"__carry": f"last(__last) {w}"})
+    prev = "__prev" if bucket_width is None else "coalesce(__prev, __carry)"
+    dv = (f"CASE WHEN {v} >= {prev}.v THEN {v} - {prev}.v ELSE {v} END"
+          if counter_reset == "zero" else f"{v} - {prev}.v")
+    return s.selectExpr(
+        *map(_q, df.columns),
+        f"CASE WHEN {t} > {prev}.t THEN ({dv}) / ({t} - {prev}.t) END AS {_q(out_col)}")
 
 
 def rolling(
@@ -158,8 +137,8 @@ def rolling(
     ``window``-worth of ROWS per bucket boundary (not 1 row) — at that
     point the carry IS the hot partition. For the decomposable aggregates
     (sum/count/mean) use :func:`rolling_decomposable`, which sidesteps
-    the frame entirely via bucketed prefix sums + a bucketed as-of
-    lookup; min/max genuinely need this direct frame (non-invertible),
+    the frame entirely via a bucketed sweep-line running sum; min/max
+    genuinely need this direct frame (non-invertible),
     where hot-key mitigation is the key model itself (url-hash keys) or
     pre-aggregating to a coarser tier first."""
     group_vars = list(group_vars)
@@ -201,39 +180,38 @@ def rolling_decomposable(
 
     A RANGE frame's carry is a window-full of rows, so time-slicing the
     window directly is hopeless (see :func:`rolling`). But sum/count/mean
-    are DECOMPOSABLE: ``frame(t) = prefix(t) − prefix(pred(t − w − 1))``,
-    and both pieces bucket cleanly:
+    are DECOMPOSABLE: a point enters the frame at its own time and leaves
+    it ``w + 1`` later, so the frame is a sweep line — a running sum of
+    ``+v`` events at ``t`` and ``−v`` events at ``t + w + 1`` (the
+    leaving events sort first at equal times):
 
     1. collapse to one row per (key, t): ``s_t = Σv, c_t = count(v)`` —
        a plain shuffled aggregate (also makes duplicate timestamps share
        one frame result, exactly the RANGE-frame contract);
-    2. running prefix per key — computed per (key, time-bucket) with a
-       1-row-per-bucket offset table when ``bucket_width`` is set (the
-       locf carry construction with SUM instead of LAST);
-    3. the ``prefix`` just before the frame start is an as-of lookup of
-       the prefix table against itself at ``t − w − 1`` —
-       :func:`~intervalaverage_spark.operators.asof.asof_join`, which has
-       its own bucketed path;
-    4. join the per-t frame results back to the input rows on (key, t).
+    2. add the leaving events and run the two sums per key — per (key,
+       time-bucket) through
+       :func:`~intervalaverage_spark.plans.slices.time_sliced` when
+       ``bucket_width`` is set, the earlier buckets' totals carried in;
+    3. join the per-t frame results back to the input rows on (key, t).
 
     Appends ``<value>_roll_<agg>`` (matching :func:`rolling`'s naming);
     outputs are double — same as :func:`rolling`, which also casts values
     to double before aggregating. Numerics: bit-identical to
     :func:`rolling` when the double-cast values are integers or
-    integer-valued doubles within 2**53 — prefix subtraction is then
+    integer-valued doubles within 2**53 — the running sums are then
     exact. For general doubles (and for decimals, which the double cast
     truncates to 53-bit significands) results can differ from the direct
     frame sum in the last ulps (different addition order). Integer time
-    domain required (``t − w − 1`` predecessor logic).
+    domain required (``t + w + 1`` leaving times).
 
     ``assume_unique_ts=True`` declares the input already holds at most
     one row per (key, t): the collapse aggregate AND the final join-back
     (an avoidable full equi-join in that common shape — tier outputs,
-    deduped series) are both skipped; the prefix/as-of stages carry the
-    input rows directly, saving one shuffle + one join. Results are
-    undefined if the promise is broken — pass ``validate=True`` to check
-    it eagerly (one bounded aggregate, the reference's skippable
-    eager-validation split)."""
+    deduped series) are both skipped; the input rows are the entering
+    events, saving one shuffle + one join. Results are undefined if the
+    promise is broken — pass ``validate=True`` to check it eagerly (one
+    bounded aggregate, the reference's skippable eager-validation
+    split)."""
     group_vars = list(group_vars)
     _need(df, ts_col, value_col, *group_vars)
     allowed = ("sum", "count", "mean")
@@ -244,110 +222,53 @@ def rolling_decomposable(
             "(min/max need the direct rolling())")
     if window < 0:
         raise IntervalSchemaError(f"window must be >= 0, got {window}")
-    _no_clash(df, *[f"{value_col}_roll_{a}" for a in aggs])
-    _no_clash(df, "__rd_t", "__rd_cs", "__rd_cc", "__rd_ps", "__rd_pc")
-    t = F.col(ts_col).cast("long")
-    v = F.col(value_col).cast("double")
+    roll = [f"{value_col}_roll_{a}" for a in aggs]
+    _no_clash(df, *roll)
+    t, v = f"CAST({_q(ts_col)} AS BIGINT)", f"CAST({_q(value_col)} AS DOUBLE)"
 
     if assume_unique_ts:
         if validate:
             check_unique_ts(df, ts_col, group_vars)
-        _no_clash(df, "__s", "__c", "__q", "__bk", "__bs", "__bc", "__os", "__oc")
         # 1 row per (key, t) promised: the input rows ARE the per-t points,
         # so skip both the collapse aggregate and the final join-back.
-        pts = df.select(
-            "*", t.alias("__rd_t"), v.alias("__s"),
-            F.when(v.isNotNull(), F.lit(1)).otherwise(F.lit(0))
-            .cast("long").alias("__c"),
-        )
+        keys = group_vars
+        _no_clash(df, "__rd_t", "__rd_in", "__s", "__c")
+        pts = df.selectExpr("*", f"{t} AS __rd_t", f"{v} AS __s",
+                            f"CAST({v} IS NOT NULL AS BIGINT) AS __c")
     else:
-        pts = df.select(*group_vars, t.alias("__rd_t"), v.alias("__v")).groupBy(
-            *group_vars, "__rd_t"
-        ).agg(F.sum("__v").alias("__s"), F.count("__v").alias("__c"))
-    keep = [c for c in pts.columns if c not in ("__s", "__c")]
+        keys = [f"__k{i}" for i in range(len(group_vars))]
+        _no_clash(df, "__rd_t", *keys)
+        pts = df.selectExpr(*(f"{_q(g)} AS {k}" for g, k in zip(group_vars, keys)),
+                            f"{t} AS __rd_t", f"{v} AS __v").groupBy(*keys, "__rd_t").agg(
+            F.expr("sum(__v) AS __s"), F.expr("count(__v) AS __c"))
+    leave = pts.selectExpr(*map(_q, keys), f"__rd_t + {int(window) + 1} AS __rd_t",
+                           "0 AS __rd_in", "-__s AS __s", "-__c AS __c")
+    ev = pts.selectExpr("*", "1 AS __rd_in").unionByName(leave, allowMissingColumns=True)
 
-    if bucket_width is None:
-        wcum = (
-            Window.partitionBy(*group_vars)
-            .orderBy("__rd_t")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        pref = pts.select(
-            *keep,
-            F.sum("__s").over(wcum).alias("__rd_cs"),
-            F.sum("__c").over(wcum).alias("__rd_cc"),
-        )
-    else:
-        if bucket_width <= 0:
-            raise IntervalSchemaError(
-                f"bucket_width must be positive, got {bucket_width}")
-        bk = fdiv(F.col("__rd_t"), bucket_width)
-        p2 = pts.withColumn("__bk", bk)
-        b = p2.groupBy(*group_vars, "__bk").agg(
-            F.sum("__s").alias("__bs"), F.sum("__c").alias("__bc"))
-        woff = (
-            Window.partitionBy(*group_vars)
-            .orderBy("__bk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        off = b.select(
-            *group_vars, "__bk",
-            F.coalesce(F.sum("__bs").over(woff), F.lit(0.0)).alias("__os"),
-            F.coalesce(F.sum("__bc").over(woff), F.lit(0).cast("long")).alias("__oc"),
-        )
-        wcb = (
-            Window.partitionBy(*group_vars, "__bk")
-            .orderBy("__rd_t")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # coalesce BOTH terms: a bucket prefix of only-NULL __s must not
-        # wipe out the carried offset (NULL-frame semantics are restored
-        # downstream by the fc > 0 guard, so 0 is safe here)
-        pref = p2.join(off, on=[*group_vars, "__bk"], how="left").select(
-            *keep,
-            (F.col("__os") + F.coalesce(F.sum("__s").over(wcb), F.lit(0.0)))
-            .alias("__rd_cs"),
-            (F.col("__oc") + F.sum("__c").over(wcb)).alias("__rd_cc"),
-        )
-
-    from intervalaverage_spark.operators.asof import asof_join
-
-    q = pref.select(
-        "*", (F.col("__rd_t") - F.lit(int(window)) - 1).alias("__q")
-    )
-    slim = pref.select(
-        *group_vars, "__rd_t",
-        F.col("__rd_cs").alias("__rd_ps"), F.col("__rd_cc").alias("__rd_pc"),
-    )
-    m = asof_join(
-        q, slim,
-        on=group_vars, left_ts="__q", right_ts="__rd_t",
-        right_cols=["__rd_ps", "__rd_pc"], direction="backward",
-        bucket_width=bucket_width, suffix="__m",
-    )
-    fs = F.col("__rd_cs") - F.coalesce(F.col("__rd_ps__m"), F.lit(0.0))
-    fc = (F.col("__rd_cc") - F.coalesce(F.col("__rd_pc__m"), F.lit(0))).cast("long")
+    run = "ORDER BY __rd_t, __rd_in ROWS UNBOUNDED PRECEDING"
+    s = time_sliced(
+        ev, [*map(_q, keys)], "__rd_t", bucket_width,
+        window=lambda p: {"__ws": f"sum(__s) OVER ({p} {run})",
+                          "__wc": f"sum(__c) OVER ({p} {run})"},
+        summary={"__bs": "sum(__s)", "__bc": "sum(__c)"},
+        back=lambda w: {"__os": f"coalesce(sum(__bs) {w}, 0D)",
+                        "__oc": f"coalesce(sum(__bc) {w}, 0L)"})
+    # with buckets, add the earlier buckets' totals; coalesce the bucket's own
+    # sum: an only-NULL one must not wipe out the carried total (NULL-frame
+    # semantics are restored by the fc > 0 guard, so 0 is safe here)
+    fs, fc = (("__ws", "__wc") if bucket_width is None
+              else ("(__os + coalesce(__ws, 0D))", "(__oc + __wc)"))
     # an all-NULL (or empty) frame must yield NULL sum/mean like the
     # direct RANGE frame does — X − X = 0 would be wrong
-    exprs = {"sum": F.when(fc > 0, fs), "count": fc,
-             "mean": F.when(fc > 0, fs / fc)}
-    frame_cols = [exprs[a].alias(f"{value_col}_roll_{a}") for a in aggs]
+    exprs = {"sum": f"CASE WHEN {fc} > 0 THEN {fs} END", "count": f"CAST({fc} AS BIGINT)",
+             "mean": f"CASE WHEN {fc} > 0 THEN {fs} / {fc} END"}
+    frame_cols = [f"{exprs[a]} AS {_q(r)}" for a, r in zip(aggs, roll)]
+    s = s.where("__rd_in = 1")
     if assume_unique_ts:
-        # m carries every original input column through the as-of's left
-        # payload — emit directly, zero join-back.
-        return m.select(*[F.col(c) for c in df.columns], *frame_cols)
-    frame = m.select(*group_vars, "__rd_t", *frame_cols)
-    from functools import reduce
-
-    cond = reduce(
-        lambda a_, b_: a_ & b_,
-        [df[g].eqNullSafe(frame[g]) for g in group_vars] + [t == frame["__rd_t"]],
-    )
-    out = df.join(frame, on=cond, how="left")
-    return out.select(
-        *[df[c] for c in df.columns],
-        *[frame[f"{value_col}_roll_{a}"] for a in aggs],
-    )
+        return s.selectExpr(*map(_q, df.columns), *frame_cols)
+    frame = s.selectExpr(*keys, "__rd_t", *frame_cols)
+    on = " AND ".join([*(f"{_q(g)} <=> {k}" for g, k in zip(group_vars, keys)), f"{t} = __rd_t"])
+    return df.join(frame, F.expr(on), "left").selectExpr(*map(_q, [*df.columns, *roll]))
 
 
 def rolling_minmax(
@@ -362,7 +283,7 @@ def rolling_minmax(
 ) -> DataFrame:
     """Time-RANGE rolling min/max with FULL hot-key spreading — the
     skew path for the NON-invertible aggregates that
-    :func:`rolling_decomposable`'s prefix-subtraction cannot serve (you
+    :func:`rolling_decomposable`'s running sums cannot serve (you
     cannot "subtract" an expired point from a running min).
 
     The classic two-block decomposition (the O(n) sliding-window-min

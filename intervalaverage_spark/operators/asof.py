@@ -16,15 +16,13 @@ Spark-first design — **zero join in the default path**:
   no per-key binary search. (A join-based as-of needs an equi+range
   non-equi join and a per-pair argmax — strictly more shuffles.)
 
-* ``bucket_width`` (the skew path): a window partitioned only by key puts
-  an entire hot key in one task. Bucketing partitions the window by
-  ``(key, floor(t/width))`` so a hot key spreads across its time buckets;
-  cross-bucket carry (a left row whose bucket holds no earlier right row)
-  is resolved by the SAME union-window trick run at bucket granularity —
-  per (key, bucket) the right side collapses to its last payload first,
-  so the carry scan touches ~n_buckets rows per key, not n_rows. Two
-  exchanges + one equi join on (key, bucket) — all spread. Equality with
-  the flat path is property-tested (tests/test_pipeline_ops.py).
+* ``bucket_width`` (the skew path): the window runs per (key, time
+  bucket) and a left row whose bucket holds no earlier right row takes
+  its match from :func:`~intervalaverage_spark.plans.slices.time_sliced`
+  — per (key, bucket) the right side collapses to its last payload, so
+  the carry scan touches ~n_buckets rows per key, not n_rows. Equality
+  with the flat path, NULL keys included, is property-tested
+  (tests/test_asof_fill.py, tests/test_property_hypothesis.py).
 
 100 TB: both paths shuffle each row exactly once on a composite key the
 data model already spreads (url-hash × time); no driver collect, no
@@ -35,11 +33,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from intervalaverage_spark.plans.rangejoin import fdiv
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.plans.slices import time_sliced
+from intervalaverage_spark.validation import IntervalSchemaError, _q
 
 
 def asof_join(
@@ -93,99 +90,37 @@ def asof_join(
 
         check_unique_ts(right, right_ts, on)
 
-    pay = F.struct(
-        F.col(right_ts).cast("long").alias("__rt"),
-        *[F.col(c).alias(c) for c in right_cols],
-    )
-    left_pay_cols = [c for c in left.columns]
-    # field list built as ONE join so an empty right_cols yields the valid
-    # "struct<__rt:bigint>" (not a trailing comma → opaque DDL parse error)
-    rpay_ddl = "struct<" + ",".join(
-        ["__rt:bigint"]
-        + [f"`{c}`:{right.schema[c].dataType.simpleString()}" for c in right_cols]
-    ) + ">"
-    l2 = left.select(
-        *on,
-        F.col(left_ts).cast("long").alias("__t"),
-        F.lit(1).alias("__side"),
-        F.struct(*[F.col(c).alias(c) for c in left_pay_cols]).alias("__lpay"),
-        F.lit(None).cast(rpay_ddl).alias("__rpay"),
-    )
-    r2 = right.select(
-        *on,
-        F.col(right_ts).cast("long").alias("__t"),
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(l2.schema["__lpay"].dataType.simpleString()).alias("__lpay"),
-        pay.alias("__rpay"),
-    )
-    u = l2.unionByName(r2)
+    # both sides under internal names: keys __k<i>, time __t (negated for
+    # forward = backward on the mirrored axis; right rows still sort first
+    # at equal time via __side), payloads as structs of positional fields
+    keys = [f"__k{i}" for i in range(len(on))]
+    neg = "-" if direction == "forward" else ""
 
-    # forward = backward on the mirrored time axis: negate t (right rows
-    # still sort first at equal |t| via __side) and every comparison below
-    # is unchanged.
-    if direction == "forward":
-        u = u.withColumn("__t", -F.col("__t"))
+    def side(df: DataFrame, ts: str, n: int, pay: str, cols: list[str]) -> DataFrame:
+        fields = ", ".join(f"'c{i}', {c}" for i, c in enumerate(cols))
+        return df.selectExpr(*(f"{_q(c)} AS {k}" for c, k in zip(on, keys)),
+                             f"{neg}CAST({_q(ts)} AS BIGINT) AS __t", f"{n} AS __side",
+                             f"named_struct({fields}) AS {pay}")
 
-    if bucket_width is None:
-        w = (
-            Window.partitionBy(*on)
-            .orderBy("__t", "__side")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        matched = u.select(
-            "*", F.last("__rpay", ignorenulls=True).over(w).alias("__m")
-        ).filter(F.col("__side") == 1)
-    else:
-        bk = fdiv(F.col("__t"), bucket_width)
-        u = u.withColumn("__bk", bk)
-        wb = (
-            Window.partitionBy(*on, "__bk")
-            .orderBy("__t", "__side")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        inb = u.select(
-            "*", F.last("__rpay", ignorenulls=True).over(wb).alias("__inb")
-        ).filter(F.col("__side") == 1)
-
-        # cross-bucket carry at bucket granularity: right collapses to its
-        # per-(key, bucket) last payload (max mirrored __t — unique per the
-        # input contract), left collapses to its distinct buckets; left bucket
-        # rows sort BEFORE right bucket rows at equal bucket, so the carry
-        # a left row sees is "last right payload in any bucket < mine".
-        rb = (
-            u.filter(F.col("__side") == 0)
-            .groupBy(*on, "__bk")
-            .agg(F.max_by("__rpay", F.col("__t")).alias("__blast"))
-            .select(*on, "__bk", F.lit(1).alias("__bs"), "__blast")
-        )
-        lb = (
-            u.filter(F.col("__side") == 1)
-            .select(*on, "__bk").distinct()
-            .select(*on, "__bk", F.lit(0).alias("__bs"),
-                    F.lit(None).cast(rb.schema["__blast"].dataType.simpleString())
-                    .alias("__blast"))
-        )
-        wc = (
-            Window.partitionBy(*on)
-            .orderBy("__bk", "__bs")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        carry = (
-            lb.unionByName(rb)
-            .select("*", F.last("__blast", ignorenulls=True).over(wc).alias("__carry"))
-            .filter(F.col("__bs") == 0)
-            .select(*on, "__bk", "__carry")
-        )
-        matched = inb.join(carry, on=[*on, "__bk"], how="left").withColumn(
-            "__m", F.coalesce(F.col("__inb"), F.col("__carry"))
-        )
-
-    m = F.col("__m")
+    rcols = [f"CAST({_q(right_ts)} AS BIGINT)", *map(_q, right_cols)]
+    u = side(left, left_ts, 1, "__lpay", [*map(_q, left.columns)]).unionByName(
+        side(right, right_ts, 0, "__rpay", rcols), allowMissingColumns=True)
+    # a slice's last right payload, field by field: primitive fields keep
+    # the aggregate hash-based (a struct buffer would sort every row)
+    rt = "CASE WHEN __side = 0 THEN __t END"
+    last = ", ".join(f"'c{i}', __l{i}" for i in range(len(rcols)))
+    s = time_sliced(
+        u, keys, "__t", bucket_width,
+        window=lambda p: {"__m": "last(__rpay, true) OVER "
+                                 f"({p} ORDER BY __t, __side ROWS UNBOUNDED PRECEDING)"},
+        summary={"__lt": f"max({rt})",
+                 **{f"__l{i}": f"max_by(__rpay.c{i}, {rt})" for i in range(len(rcols))}},
+        back=lambda w: {"__carry": f"last(CASE WHEN __lt IS NOT NULL THEN "
+                                   f"named_struct({last}) END, true) {w}"})
+    m = "__m" if bucket_width is None else "coalesce(__m, __carry)"
     if tolerance is not None:
-        # distance on the (possibly mirrored) axis: __t - __rt >= 0 always
-        dist = F.col("__t") - (m.getField("__rt") * (-1 if direction == "forward" else 1))
-        m = F.when(dist <= F.lit(int(tolerance)), m)
-    out = [F.col(f"__lpay.{c}").alias(c) for c in left_pay_cols]
-    out.append(m.getField("__rt").alias(f"{right_ts}{suffix}"))
-    out += [m.getField(c).alias(f"{c}{suffix}") for c in right_cols]
-    return matched.select(*out)
+        # distance on the (possibly mirrored) axis: __t ∓ rt >= 0 always
+        m = f"CASE WHEN __t {'+' if neg else '-'} {m}.c0 <= {int(tolerance)} THEN {m} END"
+    return s.where("__side = 1").selectExpr(f"{m} AS __m", "__lpay").selectExpr(
+        *(f"__lpay.c{i} AS {_q(c)}" for i, c in enumerate(left.columns)),
+        *(f"__m.c{i} AS {_q(c + suffix)}" for i, c in enumerate([right_ts, *right_cols])))

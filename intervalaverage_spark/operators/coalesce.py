@@ -67,7 +67,7 @@ def interval_coalesce(
     row and everything before it exceeds this many units (0 = touching
     intervals merge; -1 = only true overlaps merge).
     """
-    ent = enter(x, interval_vars, group_vars)
+    ent = enter(x, interval_vars, group_vars, out=(*interval_vars_out, "n_intervals", "covered"))
     if adjacency_gap < -1:
         raise ValueError(f"adjacency_gap must be >= -1, got {adjacency_gap}")
     xg = ent.cols("xg")
@@ -121,7 +121,7 @@ def interval_gaps(
     hours have no readings?"), retention-ledger audit (uncovered
     time between checkpointed tiers), crawl-snapshot staleness runs.
     """
-    ent = enter(x, interval_vars, group_vars)
+    ent = enter(x, interval_vars, group_vars, out=(*interval_vars_out, "gap_len"))
     if min_gap < 1:
         raise ValueError(f"min_gap must be >= 1, got {min_gap}")
     xg = ent.cols("xg")
@@ -171,7 +171,7 @@ def interval_concurrency(
     (politeness auditing), overlapping-session load per user, how many
     retention tiers cover an hour, max simultaneous validity versions.
     """
-    ent = enter(x, interval_vars, group_vars)
+    ent = enter(x, interval_vars, group_vars, out=(*interval_vars_out, "n_open", "seg_len"))
     xg = ent.cols("xg")
     ev = ent.x.selectExpr(*xg, "inline(array(named_struct('__t', __xs, '__d', 1L), "
                                "named_struct('__t', __xe + 1, '__d', -1L)))")

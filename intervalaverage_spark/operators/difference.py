@@ -67,7 +67,7 @@ def interval_difference(
     same fused y cover independently). Keys match null-safely, as in
     the range join.
     """
-    ent = enter(x, interval_vars, group_vars, y=y, keep="x")
+    ent = enter(x, interval_vars, group_vars, y=y, keep="x", out=interval_vars_out)
     xg, yg = ent.cols("xg"), ent.cols("yg")
 
     # key's x-span: the universe the complement is bounded by

@@ -17,133 +17,98 @@ the group key, no join, no UDF. At 10^12 rows the window partitions by
 the same (url-hash) key the tier tables are already laid out on, so with
 a bucketed/partitioned layout the exchange disappears entirely.
 
-Skew (``bucket_width``): a window partitioned only by key puts an entire
-hot key in one task. Passing ``bucket_width`` re-partitions the window by
-``(key, floor(order/width))`` — a hot key spreads across its time
-buckets — and resolves cross-bucket fills with a carry table of ONE row
-per (key, bucket): the last (locf) / first (nocb) / both (interpolate)
-non-null observation of each bucket, runs of which are scanned with a
-window over buckets and joined back on (key, bucket). Two cheap
-exchanges + one equi join, all spread; identical results to the flat
-path (property-tested, tests/test_property_hypothesis.py). Same design
-as operators/asof.py's bucket+carry.
+Skew (``bucket_width``): the windows run per (key, time bucket) through
+:func:`~intervalaverage_spark.plans.slices.time_sliced`, whose carry
+holds, per (key, bucket), the last (locf) / first (nocb) / both
+(interpolate) non-null observation of each value, scanned over the
+key's earlier / later buckets. Identical results to the flat path,
+NULL keys included (property-tested, tests/test_property_hypothesis.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+import pyspark.sql.types as T
+from pyspark.sql import DataFrame
 
-from intervalaverage_spark.plans.rangejoin import fdiv
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.plans.slices import time_sliced
+from intervalaverage_spark.validation import IntervalSchemaError, _q
+
+#: per scan direction: window order, the bucket's pick, and the carry scan
+_DIRS = {"prev": ("", "max_by", "back"), "next": (" DESC", "min_by", "fwd")}
 
 
-def _order_distance_col(df: DataFrame, order_col: str,
-                        bucket_width: int | None) -> Column:
-    """Order expression used for ``limit`` distance arithmetic. Numeric
-    order columns keep their NATIVE type on the flat path (a long cast
-    would silently truncate a double order column, changing limit
-    semantics); timestamp columns are cast to long (epoch seconds)
-    because their native difference is a DayTimeIntervalType that cannot
-    be compared to the integer ``limit`` (round-5 ADVICE — the
-    native-type change broke timestamp callers). Date columns go through
-    ``unix_date`` (epoch DAYS): Spark 3+/4 forbids a date→numeric cast
-    outright (DATATYPE_MISMATCH, round-6 ADVICE), and the day unit is
-    what a daily-grid ``limit`` means. The bucketed path always
-    long-izes the order: its carry timestamps are long."""
-    import pyspark.sql.types as T
-
-    dt = df.schema[order_col].dataType
+def _order_distance(df: DataFrame, order_col: str, bucketed: bool) -> str:
+    """SQL of the order used for ``limit`` distances and carried times.
+    Numeric order columns keep their NATIVE type on the flat path (a long
+    cast would silently truncate a double order column, changing limit
+    semantics); timestamp columns are cast to long (epoch seconds) because
+    their native difference is an interval that cannot be compared to the
+    integer ``limit``. Date columns go through ``unix_date`` (epoch DAYS):
+    Spark 3+/4 forbids a date→numeric cast outright, and the day unit is
+    what a daily-grid ``limit`` means. The bucketed path always long-izes
+    the order: its carry times are long."""
+    dt, o = df.schema[order_col].dataType, _q(order_col)
     if isinstance(dt, T.DateType):
-        return F.unix_date(F.col(order_col))
-    if bucket_width is not None or isinstance(
-            dt, (T.TimestampType, T.TimestampNTZType)):
-        return F.col(order_col).cast("long")
-    return F.col(order_col)
+        return f"unix_date({o})"
+    if bucketed or isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        return f"CAST({o} AS BIGINT)"
+    return o
 
 
-def _check(
+def _fill(
     df: DataFrame,
     order_col: str,
     value_cols: Sequence[str],
     group_vars: Sequence[str],
     out_suffix: str,
     bucket_width: int | None,
-):
+    t: str,
+    dirs: Sequence[str],
+    emit: Callable[[str, dict[str, tuple[str, str]]], str],
+) -> DataFrame:
+    """``df`` plus ``<v><out_suffix>`` = ``emit(v, seen)`` per value column,
+    where ``seen[d]`` is the SQL (value, ``t``) of the nearest non-NULL
+    observation in direction ``d`` of ``dirs`` ("prev": at or before the
+    row, "next": at or after it) — one window per direction, the carry
+    from other buckets filling in when ``bucket_width`` slices them."""
+    group_vars, value_cols = list(group_vars), list(value_cols)
     for c in (order_col, *value_cols, *group_vars):
         if c not in df.columns:
             raise IntervalSchemaError(f"missing column {c!r}")
     clash = [f"{v}{out_suffix}" for v in value_cols if f"{v}{out_suffix}" in df.columns]
     if clash:
         raise IntervalSchemaError(f"output column(s) {clash} already exist")
-    if bucket_width is not None and bucket_width <= 0:
-        raise IntervalSchemaError(f"bucket_width must be positive, got {bucket_width}")
+    vs = [*map(_q, value_cols)]
 
+    def window(p: str) -> dict[str, str]:
+        out = {}
+        for d in dirs:
+            w = f"OVER ({p} ORDER BY {_q(order_col)}{_DIRS[d][0]} ROWS UNBOUNDED PRECEDING)"
+            for i, v in enumerate(vs):
+                out[f"__{d}v{i}"] = f"last({v}, true) {w}"
+                out[f"__{d}t{i}"] = f"last(CASE WHEN {v} IS NOT NULL THEN {t} END, true) {w}"
+        return out
 
-def _with_carry(
-    df: DataFrame,
-    order_col: str,
-    value_cols: Sequence[str],
-    group_vars: Sequence[str],
-    bucket_width: int,
-    backward: bool,
-    forward: bool,
-) -> DataFrame:
-    """Append ``__fbk`` (time bucket) plus, per value column, the
-    cross-bucket carry structs ``__cb_<v>`` (nearest non-null observation
-    in any strictly EARLIER bucket: ``struct<t, v>``) and/or ``__cf_<v>``
-    (strictly LATER bucket). One groupBy to a 1-row-per-(key, bucket)
-    table, one window over buckets on it, one equi join back — every
-    stage keyed by (key, bucket), so the hot key stays spread."""
-    import pyspark.sql.types as T
+    def carry(side: str) -> Callable[[str], dict[str, str]]:
+        return lambda w: {f"__{d}c{i}": f"last(__{d}b{i}, true) {w}"
+                          for d in dirs if _DIRS[d][2] == side for i in range(len(vs))}
 
-    # DateType cannot cast to numeric on Spark 3+/4 — epoch days instead,
-    # matching _order_distance_col so carry t and src_t share a domain.
-    if isinstance(df.schema[order_col].dataType, T.DateType):
-        t = F.unix_date(F.col(order_col))
-    else:
-        t = F.col(order_col).cast("long")
-    reserved = ["__fbk"] + [f"__cb_{v}" for v in value_cols] + [f"__cf_{v}" for v in value_cols]
-    clash = [c for c in reserved if c in df.columns]
-    if clash:
-        raise IntervalSchemaError(f"internal column(s) {clash} already exist in input")
-    src = df.withColumn("__fbk", fdiv(t, bucket_width))
-
-    aggs = []
-    for v in value_cols:
-        nn_t = F.when(F.col(v).isNotNull(), t)
-        pt = F.struct(t.alias("t"), F.col(v).alias("v"))
-        if backward:
-            aggs.append(F.max_by(pt, nn_t).alias(f"__bl_{v}"))
-        if forward:
-            aggs.append(F.min_by(pt, nn_t).alias(f"__bf_{v}"))
-    b = src.groupBy(*group_vars, "__fbk").agg(*aggs)
-
-    carry_cols: list[Column] = [*[F.col(g) for g in group_vars], F.col("__fbk")]
-    if backward:
-        wb = (
-            Window.partitionBy(*group_vars)
-            .orderBy("__fbk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry_cols += [
-            F.last(f"__bl_{v}", ignorenulls=True).over(wb).alias(f"__cb_{v}")
-            for v in value_cols
-        ]
-    if forward:
-        wf = (
-            Window.partitionBy(*group_vars)
-            .orderBy(F.desc("__fbk"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry_cols += [
-            F.last(f"__bf_{v}", ignorenulls=True).over(wf).alias(f"__cf_{v}")
-            for v in value_cols
-        ]
-    carry = b.select(*carry_cols)
-    return src.join(carry, on=[*group_vars, "__fbk"], how="left")
+    s = time_sliced(
+        df, [*map(_q, group_vars)], _order_distance(df, order_col, True), bucket_width, window,
+        summary={f"__{d}b{i}": f"{_DIRS[d][1]}(named_struct('t', {t}, 'v', {v}), "
+                               f"CASE WHEN {v} IS NOT NULL THEN {t} END)"
+                 for d in dirs for i, v in enumerate(vs)},
+        back=carry("back"), fwd=carry("fwd"))
+    cols = []
+    for i, v in enumerate(value_cols):
+        seen = {d: (f"__{d}v{i}", f"__{d}t{i}") for d in dirs}
+        if bucket_width is not None:
+            seen = {d: (f"CASE WHEN {dt} IS NULL THEN __{d}c{i}.v ELSE {dv} END",
+                        f"coalesce({dt}, __{d}c{i}.t)") for d, (dv, dt) in seen.items()}
+        cols.append(f"{emit(_q(v), seen)} AS {_q(v + out_suffix)}")
+    return s.selectExpr(*map(_q, df.columns), *cols)
 
 
 def locf(
@@ -160,40 +125,18 @@ def locf(
     many order-units past the observation (NULL again beyond it) — the
     distance is measured in the order column's OWN type for numeric
     order columns (exact for doubles too) and in long epoch units for
-    timestamp/date ones (see :func:`_order_distance_col`); the bucketed
-    path casts to long (its carry timestamps are long), so it requires
-    an integer order domain anyway (``fdiv``). ``bucket_width``:
-    time-sliced skew path (module docstring)."""
-    group_vars, value_cols = list(group_vars), list(value_cols)
-    _check(df, order_col, value_cols, group_vars, out_suffix, bucket_width)
-    orig_cols = df.columns
-    if bucket_width is None:
-        src, part = df, list(group_vars)
-    else:
-        src = _with_carry(df, order_col, value_cols, group_vars, bucket_width,
-                          backward=True, forward=False)
-        part = [*group_vars, "__fbk"]
-    w = (
-        Window.partitionBy(*part)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # native-type order for numerics, long for timestamp/date (helper)
-    ot = _order_distance_col(df, order_col, bucket_width)
-    cols: list[Column] = []
-    for v in value_cols:
-        filled = F.last(v, ignorenulls=True).over(w)
-        src_t = F.last(
-            F.when(F.col(v).isNotNull(), ot), ignorenulls=True
-        ).over(w)
-        if bucket_width is not None:
-            cb = F.col(f"__cb_{v}")
-            filled = F.when(src_t.isNull(), cb.getField("v")).otherwise(filled)
-            src_t = F.coalesce(src_t, cb.getField("t"))
-        if limit is not None:
-            filled = F.when(ot - src_t <= F.lit(int(limit)), filled)
-        cols.append(filled.alias(f"{v}{out_suffix}"))
-    return src.select(*orig_cols, *cols)
+    timestamp/date ones (see :func:`_order_distance`); the bucketed
+    path casts to long (its carry times are long), so it requires
+    an integer order domain anyway. ``bucket_width``: time-sliced skew
+    path (module docstring)."""
+    t = _order_distance(df, order_col, bucket_width is not None)
+
+    def emit(v: str, seen: dict[str, tuple[str, str]]) -> str:
+        pv, pt = seen["prev"]
+        return pv if limit is None else f"CASE WHEN {t} - {pt} <= {int(limit)} THEN {pv} END"
+
+    return _fill(df, order_col, value_cols, group_vars, out_suffix, bucket_width, t,
+                 ["prev"], emit)
 
 
 def nocb(
@@ -209,36 +152,14 @@ def nocb(
     order axis (same single-exchange plan, descending sort; same
     ``bucket_width`` skew path with the carry scanned from LATER
     buckets)."""
-    group_vars, value_cols = list(group_vars), list(value_cols)
-    _check(df, order_col, value_cols, group_vars, out_suffix, bucket_width)
-    orig_cols = df.columns
-    if bucket_width is None:
-        src, part = df, list(group_vars)
-    else:
-        src = _with_carry(df, order_col, value_cols, group_vars, bucket_width,
-                          backward=False, forward=True)
-        part = [*group_vars, "__fbk"]
-    w = (
-        Window.partitionBy(*part)
-        .orderBy(F.desc(order_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # mirror of locf: numeric native / timestamp long (helper)
-    ot = _order_distance_col(df, order_col, bucket_width)
-    cols: list[Column] = []
-    for v in value_cols:
-        filled = F.last(v, ignorenulls=True).over(w)
-        src_t = F.last(
-            F.when(F.col(v).isNotNull(), ot), ignorenulls=True
-        ).over(w)
-        if bucket_width is not None:
-            cf = F.col(f"__cf_{v}")
-            filled = F.when(src_t.isNull(), cf.getField("v")).otherwise(filled)
-            src_t = F.coalesce(src_t, cf.getField("t"))
-        if limit is not None:
-            filled = F.when(src_t - ot <= F.lit(int(limit)), filled)
-        cols.append(filled.alias(f"{v}{out_suffix}"))
-    return src.select(*orig_cols, *cols)
+    t = _order_distance(df, order_col, bucket_width is not None)
+
+    def emit(v: str, seen: dict[str, tuple[str, str]]) -> str:
+        nv, nt = seen["next"]
+        return nv if limit is None else f"CASE WHEN {nt} - {t} <= {int(limit)} THEN {nv} END"
+
+    return _fill(df, order_col, value_cols, group_vars, out_suffix, bucket_width, t,
+                 ["next"], emit)
 
 
 def interpolate_linear(
@@ -257,43 +178,13 @@ def interpolate_linear(
     Catalyst plans one exchange and two sorts, still zero joins. With
     ``bucket_width`` the windows re-key by (key, bucket) and BOTH carry
     directions come from one 1-row-per-bucket table (one extra join)."""
-    group_vars, value_cols = list(group_vars), list(value_cols)
-    _check(df, order_col, value_cols, group_vars, out_suffix, bucket_width)
-    orig_cols = df.columns
-    if bucket_width is None:
-        src, part = df, list(group_vars)
-    else:
-        src = _with_carry(df, order_col, value_cols, group_vars, bucket_width,
-                          backward=True, forward=True)
-        part = [*group_vars, "__fbk"]
-    t = F.col(order_col).cast("double")
-    wb = (
-        Window.partitionBy(*part)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy(*part)
-        .orderBy(F.desc(order_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cols: list[Column] = []
-    for v in value_cols:
-        nn = F.col(v).isNotNull()
-        pv = F.last(v, ignorenulls=True).over(wb)
-        pt = F.last(F.when(nn, t), ignorenulls=True).over(wb)
-        nv = F.last(v, ignorenulls=True).over(wf)
-        nt = F.last(F.when(nn, t), ignorenulls=True).over(wf)
-        if bucket_width is not None:
-            cb, cf = F.col(f"__cb_{v}"), F.col(f"__cf_{v}")
-            pv = F.when(pt.isNull(), cb.getField("v")).otherwise(pv)
-            pt = F.coalesce(pt, cb.getField("t").cast("double"))
-            nv = F.when(nt.isNull(), cf.getField("v")).otherwise(nv)
-            nt = F.coalesce(nt, cf.getField("t").cast("double"))
-        interp = pv + (nv - pv) * (t - pt) / (nt - pt)
-        cols.append(
-            F.when(nn, F.col(v).cast("double"))
-            .when(pv.isNotNull() & nv.isNotNull(), interp)
-            .alias(f"{v}{out_suffix}")
-        )
-    return src.select(*orig_cols, *cols)
+    t = f"CAST({_q(order_col)} AS DOUBLE)"
+
+    def emit(v: str, seen: dict[str, tuple[str, str]]) -> str:
+        (pv, pt), (nv, nt) = seen["prev"], seen["next"]
+        return (f"CASE WHEN {v} IS NOT NULL THEN CAST({v} AS DOUBLE) "
+                f"WHEN {pv} IS NOT NULL AND {nv} IS NOT NULL "
+                f"THEN {pv} + ({nv} - {pv}) * ({t} - {pt}) / ({nt} - {pt}) END")
+
+    return _fill(df, order_col, value_cols, group_vars, out_suffix, bucket_width, t,
+                 ["prev", "next"], emit)

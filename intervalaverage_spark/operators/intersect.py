@@ -42,7 +42,7 @@ def interval_intersect(
     reference errors likewise via data.table join rules).
     ``sort=False`` skips the final reference-parity orderBy (one whole
     extra range-exchange + sort at scale) for order-insensitive callers."""
-    ent = enter(x, interval_vars, group_vars, y=y, keep="xy")
+    ent = enter(x, interval_vars, group_vars, y=y, keep="xy", out=interval_vars_out)
     if validate:
         check_intervals(x, *ent.keys("x"), label="x")
         check_intervals(y, *ent.keys("y"), label="y")

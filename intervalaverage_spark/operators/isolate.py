@@ -44,7 +44,7 @@ def isolate_overlaps(
     ``sort=False`` drops that final global sort for order-insensitive
     callers (saves a full range-exchange pass at scale)."""
     (iv, gv), (out_s, out_e) = (list(interval_vars), list(group_vars)), interval_vars_out
-    ent = enter(x, iv, gv, keep="x", out=interval_vars_out)
+    ent = enter(x, iv, gv, keep="x", out=(*interval_vars_out, *iv))
     if validate:
         check_intervals(x, iv[0], iv[1], gv, label="x")
 

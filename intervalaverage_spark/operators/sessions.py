@@ -9,9 +9,10 @@ Plan: one window per key (lag + running sum of session-break flags) and,
 for bounds, one aggregate sharing the SAME (key) partitioning — Catalyst
 plans a single exchange for both. All codegen, no join, no UDF.
 
-Skew (``bucket_width``, round 4): a session is defined by consecutive
-rows, so the window cannot be NAIVELY time-sliced — but cross-bucket
-merging is itself a gaps-and-islands problem at BUCKET granularity:
+Skew (``bucket_width``): a session is defined by consecutive rows, so
+the window cannot be NAIVELY time-sliced — but cross-bucket merging is
+itself a gaps-and-islands problem at BUCKET granularity, run by
+:func:`~intervalaverage_spark.plans.slices.time_sliced`:
 
 1. sessionize within each ``(key, floor(t/width))`` bucket (hot key
    spreads across its time buckets);
@@ -19,27 +20,24 @@ merging is itself a gaps-and-islands problem at BUCKET granularity:
    per bucket;
 3. a bucket's first session continues the previous bucket's last session
    iff ``min_t − prev_max_t ≤ gap`` (exactly the flat break condition
-   at the boundary row); a window over the tiny bucket table computes
+   at the boundary row); the scan over the key's earlier buckets computes
    that flag plus the running global-id offset
    ``Σ (n_sessions − merged)`` over earlier buckets;
-4. join the offsets back on (key, bucket):
-   ``session_id = offset + local_id − merged``.
+4. the carry joins back: ``session_id = offset + local_id − merged``.
 
-Identical output to the flat path (hypothesis-tested, including the
-everything-merges ``gap ≥ width`` regime); two cheap exchanges + one
-equi join, every heavy stage keyed by (key, bucket). Same bucket+carry
-design as operators/asof.py / fill.py / analytics.rate.
+Identical output to the flat path, NULL keys included (hypothesis-tested,
+including the everything-merges ``gap ≥ width`` regime).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.plans.rangejoin import fdiv
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.plans.slices import time_sliced
+from intervalaverage_spark.validation import IntervalSchemaError, _q
 
 
 def sessionize(
@@ -63,65 +61,22 @@ def sessionize(
         raise IntervalSchemaError(f"output column {out_col!r} already exists")
     if gap < 0:
         raise IntervalSchemaError(f"gap must be >= 0, got {gap}")
-    t = F.col(ts_col).cast("long")
+    t, gap = f"CAST({_q(ts_col)} AS BIGINT)", int(gap)
 
-    if bucket_width is None:
-        w = Window.partitionBy(*group_vars).orderBy(t)
-        prev = F.lag(t).over(w)
-        brk = F.when(prev.isNull() | ((t - prev) > gap), 1).otherwise(0)
-        run = (
-            Window.partitionBy(*group_vars)
-            .orderBy(t)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return df.select("*", F.sum(brk).over(run).alias(out_col))
+    def merged(w: str) -> str:
+        """A bucket merges iff its first time is within gap of the last time
+        of the buckets before it (their max: times grow with the bucket)."""
+        return f"CASE WHEN __min - max(__max) {w} <= {gap} THEN 1 ELSE 0 END"
 
-    if bucket_width <= 0:
-        raise IntervalSchemaError(
-            f"bucket_width must be positive, got {bucket_width}")
-    reserved = ["__sbk", "__lsid", "__soff", "__smrg"]
-    clash = [c for c in reserved if c in df.columns]
-    if clash:
-        raise IntervalSchemaError(f"internal column(s) {clash} already exist in input")
-    orig_cols = df.columns
-
-    src = df.withColumn("__sbk", fdiv(t, bucket_width))
-    wb = Window.partitionBy(*group_vars, "__sbk").orderBy(t)
-    prev = F.lag(t).over(wb)
-    brk = F.when(prev.isNull() | ((t - prev) > gap), 1).otherwise(0)
-    runb = (
-        Window.partitionBy(*group_vars, "__sbk")
-        .orderBy(t)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    src = src.withColumn("__lsid", F.sum(brk).over(runb))
-
-    b = src.groupBy(*group_vars, "__sbk").agg(
-        F.min(t).alias("__min_t"),
-        F.max(t).alias("__max_t"),
-        F.max("__lsid").alias("__n_sess"),
-    )
-    wk = Window.partitionBy(*group_vars).orderBy("__sbk")
-    prev_max = F.lag("__max_t").over(wk)
-    merged = F.when(
-        prev_max.isNotNull() & ((F.col("__min_t") - prev_max) <= gap), 1
-    ).otherwise(0)
-    b = b.withColumn("__smrg", merged)
-    woff = (
-        Window.partitionBy(*group_vars)
-        .orderBy("__sbk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = b.select(
-        *group_vars, "__sbk", "__smrg",
-        F.coalesce(F.sum(F.col("__n_sess") - F.col("__smrg")).over(woff),
-                   F.lit(0)).alias("__soff"),
-    )
-    out = src.join(b, on=[*group_vars, "__sbk"], how="left")
-    return out.select(
-        *orig_cols,
-        (F.col("__soff") + F.col("__lsid") - F.col("__smrg")).alias(out_col),
-    )
+    s = time_sliced(
+        df, [*map(_q, group_vars)], t, bucket_width,
+        window=lambda p: {"__lsid": (
+            f"sum(CASE WHEN {t} - lag({t}) OVER ({p} ORDER BY {t}) <= {gap} THEN 0 ELSE 1 END) "
+            f"OVER ({p} ORDER BY {t} ROWS UNBOUNDED PRECEDING)")},
+        summary={"__min": f"min({t})", "__max": f"max({t})", "__n": "max(__lsid)"},
+        back=lambda w: {"__smrg": merged(w), "__soff": f"coalesce(sum(__n - {merged(w)}) {w}, 0)"})
+    sid = "__lsid" if bucket_width is None else "__soff + __lsid - __smrg"
+    return s.selectExpr(*map(_q, df.columns), f"{sid} AS {_q(out_col)}")
 
 
 def session_bounds(
@@ -145,17 +100,13 @@ def session_bounds(
         raise IntervalSchemaError(
             f"group_vars {clash} collide with reserved output column names "
             f"{reserved}")
+    if value_col is not None and value_col not in df.columns:
+        raise IntervalSchemaError(f"missing column {value_col!r}")
     s = sessionize(df, ts_col, gap, group_vars, bucket_width=bucket_width)
-    aggs = [
-        F.min(F.col(ts_col).cast("long")).alias("session_start"),
-        F.max(F.col(ts_col).cast("long")).alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-    ]
+    t = f"CAST({_q(ts_col)} AS BIGINT)"
+    aggs = [f"min({t}) AS session_start", f"max({t}) AS session_end", "count(1) AS n_events"]
     if value_col is not None:
-        if value_col not in df.columns:
-            raise IntervalSchemaError(f"missing column {value_col!r}")
-        aggs.append(F.sum(value_col).alias(f"sum_{value_col}"))
-    out = s.groupBy(*group_vars, "session_id").agg(*aggs)
-    return out.withColumn(
-        "duration", F.col("session_end") - F.col("session_start") + 1
-    )
+        aggs.append(f"sum({_q(value_col)}) AS {_q('sum_' + value_col)}")
+    return (s.groupBy(*(F.expr(_q(c)) for c in [*group_vars, "session_id"]))
+            .agg(*map(F.expr, aggs))
+            .selectExpr("*", "session_end - session_start + 1 AS duration"))

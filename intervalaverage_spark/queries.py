@@ -818,10 +818,10 @@ FROM events WHERE value IS NOT NULL GROUP BY 1, 2
 
 def q_streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming 1h tier over a bounded file stream (availableNow):
-    event-time tumbling windows + watermark, complete-mode memory sink for
-    the oracle compare (production sink is append parquet,
-    streaming/rollup_stream.py write_hourly_state). Values are DECIMAL so
-    the streamed Σv is exact and engine/order-independent."""
+    event-time tumbling windows + watermark
+    (streaming/rollup_stream.stream_hourly_state), into a complete-mode
+    memory sink for the oracle compare. Values are DECIMAL so the streamed
+    Σv is exact and engine/order-independent."""
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = (
         spark.readStream.schema(schema)
@@ -1223,11 +1223,11 @@ FROM e WINDOW w6 AS (PARTITION BY user_id ORDER BY t
 
 
 def q_rolling_1h_decomposable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same 1-hour RANGE frame computed WITHOUT a frame: bucketed
-    prefix sums + the engine's own bucketed as-of join
+    """The same 1-hour RANGE frame computed WITHOUT a frame: a bucketed
+    sweep-line running sum of entering and leaving values
     (rolling_decomposable — the hot-key-spreadable formulation). Values
-    are pre-rounded to integer cents so the prefix subtraction is exact
-    and the hash matches the oracle's direct window frame bit-for-bit.
+    are pre-rounded to integer cents so the running sums are exact and
+    the hash matches the oracle's direct window frame bit-for-bit.
     The point table is unique per (user, t) by construction (groupBy), so
     ``assume_unique_ts=True`` skips the collapse aggregate and the final
     join-back — one fewer shuffle + one fewer join, same hash."""

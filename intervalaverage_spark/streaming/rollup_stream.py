@@ -1,5 +1,5 @@
 """Structured-Streaming front door for the 1h tier: continuous ingestion of
-web-page visit events → per-(url, lang, hour-window) mergeable tier state.
+web-page visit events → a per-(url, lang, hour-window) point aggregate.
 
 The reference is pure batch (SURVEY.md §2.3 — no streams), and the
 north-star's 1d/30d tiers are batch-incremental over checkpoints. But the
@@ -13,19 +13,14 @@ Design:
   * event-time window  = ``window(warc_ts, "1 hour")`` tumbling;
   * watermark bounds state: visits later than ``delay`` past the max seen
     event time are dropped (at 10^12 rows unbounded state is fatal);
-  * the sink is the same parquet layout the batch cascade reads —
-    ``foreachBatch`` upserts per-window partial states, so the 1d/30d
-    batch tiers (rollup_cascade) consume streaming output unchanged.
-    Streaming state carries (sum_wv, nobs, n_visits, t_min, t_max) which
-    is the POINT-event projection of the tier state (intervals need the
-    next visit; the batch repair pass converts closed hours to interval
-    semantics exactly once the hour is sealed by the watermark).
+  * the output is the POINT-event projection of an hour —
+    ``(group, ws, we, sum_v, n_obs, t_min, t_max)`` — not the interval tier
+    state: a visit's validity interval only exists once the next visit
+    arrives. The caller picks the sink: ``q_streaming_hourly_events`` runs
+    it into a complete-mode memory sink and checks it against its oracle.
 
 This is append-only + windowed agg + watermark — Spark's native streaming
-sweet spot; no applyInPandasWithState needed for tier 1 (the interval
-derivation that WOULD need custom state is deferred to the sealed-hour
-batch repair, which reuses the exact batch operators instead of a second
-implementation that could drift).
+sweet spot; no applyInPandasWithState needed for tier 1.
 """
 
 from __future__ import annotations
@@ -42,9 +37,8 @@ def stream_hourly_state(
     ts_col: str = "warc_ts",
 ) -> DataFrame:
     """visits (streaming DF with group, event-time and value cols) →
-    streaming 1h point-state aggregate. Output mode: update/append via
-    ``writeStream`` (caller chooses sink; see :func:`write_hourly_state`).
-    """
+    streaming 1h point-state aggregate; the caller chooses the sink and
+    its output mode (``writeStream``)."""
     gv = list(group_vars)
     src = visits.withWatermark(ts_col, delay)
     # DecimalType values keep exact (order-independent) sums — the same
@@ -70,22 +64,3 @@ def stream_hourly_state(
             "sum_v", "n_obs", "t_min", "t_max",
         )
     )
-
-
-def write_hourly_state(
-    state: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    trigger_seconds: int | None = None,
-):
-    """Sink the streaming 1h state as parquet partitioned by ws-day —
-    the same layout the batch cascade scans. Returns the StreamingQuery."""
-    writer = (
-        state.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -171,26 +171,31 @@ def enter(
     value_vars: Sequence[str] = (),
     y: DataFrame | None = None,
     keep: str = "",
-    out: tuple[str, str] | None = None,
+    out: Sequence[str] = (),
     reserved_ok: bool = True,
 ) -> Entry:
     """Schema checks, then x (and y) under internal names. ``interval_vars``
     and ``group_vars`` may map x names to y names; ``keep`` names the sides
-    (``"x"``, ``"xy"``) whose other columns the output carries; ``out``
-    are output bound names that must not be any x column's."""
+    (``"x"``, ``"xy"``) whose other columns the output carries; ``out`` are
+    the names the operator adds to the output (its bounds and fixed columns),
+    which must differ from each other and from the names it carries: the
+    group columns (y's with ``"y"`` in ``keep``) and the kept columns."""
     (x_iv, y_iv), (x_gv, y_gv) = (
         (list(n), list(n.values() if isinstance(n, Mapping) else n))
         for n in (interval_vars, group_vars))
     is_date = check_schema(x, x_iv, x_gv, value_vars, reserved_ok)
     if y is not None and check_schema(y, y_iv, y_gv, reserved_ok=reserved_ok) != is_date:
         raise IntervalSchemaError("x and y interval columns must share a class (int vs date)")
-    if out is not None and set(out) & set(x.columns):
-        raise IntervalSchemaError(f"interval_vars_out {out} collide with x columns")
     x_rest = [c for c in x.columns if c not in (*x_iv, *x_gv)] if "x" in keep else []
     y_rest = [c for c in y.columns if c not in (*y_iv, *y_gv)] if "y" in keep else []
     if collide := set(x_rest) & {*y_rest, *y_gv} if "y" in keep else set():
         raise IntervalSchemaError(
             f"non-key column name collision between x and y: {sorted(collide)}")
+    shown = [*out, *(y_gv if "y" in keep else x_gv), *x_rest, *y_rest]
+    if dup := sorted({c for c in out if shown.count(c) > 1}):
+        raise IntervalSchemaError(
+            f"output names {dup} (interval_vars_out or fixed output columns) collide "
+            "with each other or with carried columns")
 
     names: dict[str, str] = {}
     types: dict[str, str] = {}

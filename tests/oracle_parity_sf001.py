@@ -1,7 +1,11 @@
-"""Manual driver-mirror: run every queries() entry vs its DuckDB oracle at
+"""Manual driver-mirror: run queries() entries vs their DuckDB oracles at
 sf0.01 (the driver's CORRECTNESS_r{N} scale; pytest uses sf0.001).
 
-Usage: python tests/oracle_parity_sf001.py [sf_dir]
+Usage: python tests/oracle_parity_sf001.py [sf_dir [query ...]]
+
+With no query names every entry runs; with names, only those (e.g.
+``fill_daily_events sessionize_events_bucketed``), so a change can re-run
+just the oracle queries it touches.
 """
 
 from __future__ import annotations
@@ -38,6 +42,11 @@ def norm(rows, cols):
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:]
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(set(names) - set(qs))
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
     from intervalaverage_spark.session import get_spark
 
     spark = get_spark(app_name="oracle-parity", master="local[16]",
@@ -47,9 +56,8 @@ def main() -> None:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failed = []
-    for name in sorted(qs):
+    for name in sorted(names or qs):
         try:
             sdf = qs[name](spark, sf_dir)
             srows = [r.asDict() for r in sdf.collect()]

@@ -158,6 +158,9 @@ def test_windowed_percentiles_approx_bounded_state_plan(pts):
 
 def test_rate_bucketed_equals_flat_on_seeded(pts):
     pdf, df = pts
+    # and a NULL key whose points straddle bucket edges
+    df = df.unionByName(df.sparkSession.createDataFrame(
+        [(None, t, float(t % 7)) for t in (490, 510, 990, 1010, 1600)], df.schema))
     flat = rate(df, "t", "v", ["k"]).toPandas().sort_values(
         ["k", "t"]).reset_index(drop=True)
     buck = rate(df, "t", "v", ["k"], bucket_width=500).toPandas().sort_values(
@@ -204,12 +207,17 @@ def test_rolling_decomposable_equals_direct_frame(spark):
             rows.append((k, t, v))
     rows += [(9, 10, 5.0), (9, 10, 7.0), (9, 40, None), (9, 41, None),
              (9, 90, 1.0)]
+    # a NULL key keeps its running sums across buckets
+    rows += [(None, t, v) for k, t, v in rows if k == 0]
     df = spark.createDataFrame(rows, "k int, t int, v double")
-    want = sorted(tuple(r) for r in rolling(
-        df, "t", "v", 100, ["k"], aggs=("sum", "count", "mean")).collect())
+
+    def _rows(out):
+        return sorted((tuple(r) for r in out.collect()),
+                      key=lambda r: tuple((x is None, x) for x in r))
+
+    want = _rows(rolling(df, "t", "v", 100, ["k"], aggs=("sum", "count", "mean")))
     for bw in (None, 1, 37, 1000):
-        got = sorted(tuple(r) for r in rolling_decomposable(
-            df, "t", "v", 100, ["k"], bucket_width=bw).collect())
+        got = _rows(rolling_decomposable(df, "t", "v", 100, ["k"], bucket_width=bw))
         assert got == want, bw
 
 

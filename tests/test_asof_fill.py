@@ -84,11 +84,16 @@ def test_asof_tolerance(lr, direction, op, tol_expr):
 
 
 def test_asof_bucketed_equals_flat_tiny_buckets(lr):
-    # bucket_width=1 forces the carry path for nearly every left row
+    # bucket_width=1 forces the carry path for nearly every left row; a
+    # copy of key 3 under a NULL key must keep its carry too, both ways
     _, _, l, r = lr
-    flat = _sorted(asof_join(l, r, ["k"], "t", "t", ["rv"]))
-    tiny = _sorted(asof_join(l, r, ["k"], "t", "t", ["rv"], bucket_width=1))
-    _match(tiny, flat)
+    l, r = (d.unionByName(d.where("k = 3").withColumn("k", F.lit(None).cast("long")))
+            for d in (l, r))
+    for direction in ("backward", "forward"):
+        flat = _sorted(asof_join(l, r, ["k"], "t", "t", ["rv"], direction=direction))
+        tiny = _sorted(asof_join(l, r, ["k"], "t", "t", ["rv"], direction=direction,
+                                 bucket_width=1))
+        _match(tiny, flat)
 
 
 def test_asof_preserves_left_columns_and_rows(lr):

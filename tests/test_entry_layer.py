@@ -16,10 +16,14 @@ from intervalaverage_spark import (
     is_overlapping,
     isolate_overlaps,
 )
+from intervalaverage_spark.operators.analytics import rate, rolling_decomposable
+from intervalaverage_spark.operators.asof import asof_join
 from intervalaverage_spark.operators.coalesce import interval_concurrency, interval_gaps
 from intervalaverage_spark.operators.difference import interval_difference
+from intervalaverage_spark.operators.fill import interpolate_linear, locf, nocb
 from intervalaverage_spark.operators.overlap import overlap_flags
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.operators.sessions import session_bounds, sessionize
+from intervalaverage_spark.validation import IntervalSchemaError, _q
 from tests.conftest import _py4j_calls
 
 #: names spelled like SQL keywords, internal, state or output columns, or
@@ -117,6 +121,57 @@ def test_any_name_any_key(frames, plain_results, op, names):
         assert got == want
     else:
         assert got == ([rename.get(c, c) for c in want[0]], want[1])
+
+
+#: the point-series operators over a frame of key, time and value columns
+#: ``k``, ``t`` and ``v``, flat and bucketed (``bw``)
+POINT_OPS = {
+    "asof-backward": lambda d, bw, k, t, v: asof_join(
+        d, d.where(f"{_q(v)} IS NOT NULL"), [k], t, t, [v], bucket_width=bw),
+    "asof-forward": lambda d, bw, k, t, v: asof_join(
+        d, d.where(f"{_q(v)} IS NOT NULL"), [k], t, t, [v], direction="forward", bucket_width=bw),
+    "locf": lambda d, bw, k, t, v: locf(d, t, [v], [k], limit=20, bucket_width=bw),
+    "nocb": lambda d, bw, k, t, v: nocb(d, t, [v], [k], bucket_width=bw),
+    "interpolate": lambda d, bw, k, t, v: interpolate_linear(d, t, [v], [k], bucket_width=bw),
+    "rate": lambda d, bw, k, t, v: rate(d, t, v, [k], bucket_width=bw, validate=True),
+    "sessionize": lambda d, bw, k, t, v: sessionize(d, t, 8, [k], bucket_width=bw),
+    "session_bounds": lambda d, bw, k, t, v: session_bounds(d, t, 8, [k], v, bucket_width=bw),
+    "rolling": lambda d, bw, k, t, v: rolling_decomposable(d, t, v, 15, [k], bucket_width=bw),
+    "rolling-unique": lambda d, bw, k, t, v: rolling_decomposable(
+        d, t, v, 15, [k], bucket_width=bw, assume_unique_ts=True, validate=True),
+}
+
+
+def _renamed(col, names):
+    """``col`` of a plain-name output under the key/order/value ``names``."""
+    for plain, name in names.items():
+        if col == plain or col.startswith(plain + "_"):
+            return name + col[len(plain):]
+        if col.endswith("_" + plain):
+            return col[:-len(plain)] + name
+    return col
+
+
+@pytest.fixture(scope="module")
+def points(spark):
+    """Keys 0, 1 and NULL; points 10 apart with NULL values."""
+    return spark.createDataFrame(
+        [(k, t, None if t % 30 == 0 else float(t % 7)) for k in (0, 1, None)
+         for t in range(0, 60, 5 if k else 10)], "k long, t long, v double")
+
+
+@pytest.mark.parametrize("bw", [None, 10])
+@pytest.mark.parametrize("op", list(POINT_OPS))
+@pytest.mark.parametrize("names", [{"k": "a.b", "t": "g`x", "v": "v.`w"},
+                                   {"k": "g`x", "t": "a.b", "v": "x y"}],
+                         ids=["dot-key", "dot-order"])
+def test_point_ops_any_name(points, op, bw, names):
+    """A key, order or value column of any name gives the columns and rows
+    of the plain-name run, flat and bucketed."""
+    want = _result(POINT_OPS[op](points, bw, "k", "t", "v"))
+    got = _result(POINT_OPS[op](points.withColumnsRenamed(names), bw,
+                                names["k"], names["t"], names["v"]))
+    assert got == ([_renamed(c, names) for c in want[0]], want[1])
 
 
 def test_plans_build_in_few_py4j_calls(spark, monkeypatch):

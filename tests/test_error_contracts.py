@@ -12,7 +12,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from intervalaverage_spark import interval_average, interval_intersect, isolate_overlaps
+from intervalaverage_spark import (
+    interval_average,
+    interval_coalesce,
+    interval_intersect,
+    isolate_overlaps,
+)
+from intervalaverage_spark.operators.coalesce import interval_concurrency, interval_gaps
 from intervalaverage_spark.operators.difference import interval_difference
 from intervalaverage_spark.validation import (
     IntervalDataError,
@@ -118,6 +124,28 @@ def test_role_overlap_rejected(spark, xy):
         interval_intersect(x, y.withColumn("v", F.lit(0.0)), ("start", "end"), ["g"])
     with pytest.raises(IntervalSchemaError, match="collide"):
         isolate_overlaps(x, ("start", "end"), ["g"], interval_vars_out=("v", "e"))
+    # output bounds and fixed output columns never duplicate a carried
+    # column: a carried x or y column, or a group column
+    xs = x.withColumnsRenamed({"start": "s", "end": "e"}).withColumn("start", F.lit(1))
+    for sort in (True, False):
+        with pytest.raises(IntervalSchemaError, match="collide"):
+            interval_intersect(xs, y, {"s": "start", "e": "end"}, ["g"], sort=sort)
+        with pytest.raises(IntervalSchemaError, match="collide"):
+            interval_intersect(x, y.withColumn("fe", F.lit(1)), ("start", "end"), ["g"],
+                               interval_vars_out=("fs", "fe"), sort=sort)
+        with pytest.raises(IntervalSchemaError, match="collide"):
+            interval_difference(xs, y, {"s": "start", "e": "end"}, ["g"], sort=sort)
+        with pytest.raises(IntervalSchemaError, match="collide"):
+            interval_coalesce(xs.drop("start").withColumnRenamed("g", "start"), ("s", "e"),
+                              ["start"], sort=sort)
+        with pytest.raises(IntervalSchemaError, match="collide"):
+            interval_coalesce(x, ("start", "end"), ["g"], interval_vars_out=("g", "e"), sort=sort)
+        with pytest.raises(IntervalSchemaError, match="collide"):
+            interval_gaps(x, ("start", "end"), ["g"], interval_vars_out=("gap_len", "ge"),
+                          sort=sort)
+        with pytest.raises(IntervalSchemaError, match="collide"):
+            interval_concurrency(x.withColumnRenamed("g", "n_open"), ("start", "end"),
+                                 ["n_open"], sort=sort)
 
 
 def test_check_intervals_reports_first_problem(spark):

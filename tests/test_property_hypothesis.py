@@ -11,7 +11,7 @@ import bisect
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from intervalaverage_spark.operators.asof import asof_join
@@ -105,35 +105,44 @@ series = st.lists(
 
 
 def _fill_frames(spark, pts):
-    pdf = pd.DataFrame({"k": 1, "t": [t for t, _ in pts],
-                        "v": [v for _, v in pts]}).astype({"v": "float64"})
-    return spark.createDataFrame(pdf)
+    """The series under key 1 and again under a NULL key."""
+    return spark.createDataFrame([(k, t, v) for k in (1, None) for t, v in pts],
+                                 "k int, t long, v double")
+
+
+def _by_key(df):
+    return df.toPandas().sort_values(["k", "t"])
+
+
+#: observations two buckets of width 10 apart around a lone NULL: the
+#: fills of its bucket need the carry
+CARRY = [(0, None), (5, 2.0), (15, None), (25, 3.0)]
 
 
 @SET
 @given(pts=series, bw=st.integers(1, 100),
        limit=st.one_of(st.none(), st.integers(0, 50)))
+@example(pts=CARRY, bw=10, limit=None)
 def test_locf_nocb_bucketed_equals_flat(spark, pts, bw, limit):
     from intervalaverage_spark.operators.fill import locf, nocb
 
     df = _fill_frames(spark, pts)
     for op in (locf, nocb):
-        flat = op(df, "t", ["v"], ["k"], limit=limit).toPandas().sort_values("t")
-        buck = op(df, "t", ["v"], ["k"], limit=limit,
-                  bucket_width=bw).toPandas().sort_values("t")
+        flat = _by_key(op(df, "t", ["v"], ["k"], limit=limit))
+        buck = _by_key(op(df, "t", ["v"], ["k"], limit=limit, bucket_width=bw))
         assert flat["v_filled"].fillna(-1e18).tolist() \
             == buck["v_filled"].fillna(-1e18).tolist(), op.__name__
 
 
 @SET
 @given(pts=series, bw=st.integers(1, 100))
+@example(pts=CARRY, bw=10)
 def test_interpolate_bucketed_equals_flat(spark, pts, bw):
     from intervalaverage_spark.operators.fill import interpolate_linear
 
     df = _fill_frames(spark, pts)
-    flat = interpolate_linear(df, "t", ["v"], ["k"]).toPandas().sort_values("t")
-    buck = interpolate_linear(df, "t", ["v"], ["k"],
-                              bucket_width=bw).toPandas().sort_values("t")
+    flat = _by_key(interpolate_linear(df, "t", ["v"], ["k"]))
+    buck = _by_key(interpolate_linear(df, "t", ["v"], ["k"], bucket_width=bw))
     f = flat["v_filled"].to_numpy()
     b = buck["v_filled"].to_numpy()
     assert ((pd.isna(f) & pd.isna(b)) | np.isclose(f, b, equal_nan=True)).all()
@@ -142,14 +151,13 @@ def test_interpolate_bucketed_equals_flat(spark, pts, bw):
 @SET
 @given(pts=series, bw=st.integers(1, 100),
        reset=st.sampled_from(["none", "zero"]))
+@example(pts=[(5, 1.0), (15, 3.0)], bw=10, reset="none")
 def test_rate_bucketed_equals_flat(spark, pts, bw, reset):
     from intervalaverage_spark.operators.analytics import rate as _rate
 
     df = _fill_frames(spark, pts)
-    flat = _rate(df, "t", "v", ["k"], counter_reset=reset).toPandas(
-    ).sort_values("t")
-    buck = _rate(df, "t", "v", ["k"], counter_reset=reset,
-                 bucket_width=bw).toPandas().sort_values("t")
+    flat = _by_key(_rate(df, "t", "v", ["k"], counter_reset=reset))
+    buck = _by_key(_rate(df, "t", "v", ["k"], counter_reset=reset, bucket_width=bw))
     f, b = flat["rate"].to_numpy(), buck["rate"].to_numpy()
     assert ((pd.isna(f) & pd.isna(b)) | np.isclose(f, b, equal_nan=True)).all()
 
@@ -160,17 +168,20 @@ def test_rate_bucketed_equals_flat(spark, pts, bw, reset):
     gap=st.integers(0, 30),
     bw=st.integers(1, 120),
 )
+@example(ts=[0, 5, 15, 40], gap=10, bw=10)
 def test_sessionize_bucketed_equals_flat(spark, ts, gap, bw):
     """Time-sliced sessionize (within-bucket islands + bucket-granularity
     merge pass) must assign the IDENTICAL session ids as the flat window —
-    including duplicate timestamps, gap=0, and the everything-merges
-    gap >= bucket_width regime."""
-    pdf = pd.DataFrame({"k": 1, "t": ts})
-    df = spark.createDataFrame(pdf)
+    including duplicate timestamps, gap=0, the everything-merges
+    gap >= bucket_width regime, and the same times under a NULL key."""
+    df = spark.createDataFrame([(k, t) for k in (1, None) for t in ts], "k int, t long")
     flat = sessionize(df, "t", gap, ["k"]).toPandas()
     buck = sessionize(df, "t", gap, ["k"], bucket_width=bw).toPandas()
-    assert sorted(zip(flat["t"], flat["session_id"])) \
-        == sorted(zip(buck["t"], buck["session_id"]))
+
+    def ids(out):
+        return sorted(zip(out["k"].fillna(-1), out["t"], out["session_id"]))
+
+    assert ids(flat) == ids(buck)
 
 
 @SET
@@ -182,9 +193,8 @@ def test_rolling_minmax_equals_direct_frame(spark, pts, w):
     from intervalaverage_spark.operators.analytics import rolling, rolling_minmax
 
     df = _fill_frames(spark, pts)
-    want = rolling(df, "t", "v", w, ["k"], aggs=("min", "max")).toPandas(
-    ).sort_values("t")
-    got = rolling_minmax(df, "t", "v", w, ["k"]).toPandas().sort_values("t")
+    want = _by_key(rolling(df, "t", "v", w, ["k"], aggs=("min", "max")))
+    got = _by_key(rolling_minmax(df, "t", "v", w, ["k"]))
     for c in ("v_roll_min", "v_roll_max"):
         f, b = want[c].to_numpy(), got[c].to_numpy()
         assert ((pd.isna(f) & pd.isna(b)) | np.isclose(f, b, equal_nan=True)).all(), c

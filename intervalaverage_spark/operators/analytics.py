@@ -1,11 +1,24 @@
 """Series analytics: rate/derivative, time-range rolling aggregates,
-exact + approximate windowed percentiles.
+windowed percentiles, trend and autocorrelation, cadence, seasonal
+baselines and anomaly screens.
 
 The read-side toolkit a monitoring/telemetry engine layers over tier
 points (PromQL's rate/irate, SQL's RANGE-frame moving aggregates,
-percentile panels). All are single-exchange window/groupBy shapes —
-no UDFs; the only non-codegen node is the percentile buffer (see
-:func:`windowed_percentiles` for the exact/approx trade-off).
+percentile panels). No UDFs; the only non-codegen node is the percentile
+buffer (see :func:`windowed_percentiles` for the exact/approx trade-off).
+Most operators are one window or groupBy per key; each docstring's "Scale
+shape" states the exceptions — :func:`rolling_minmax` (two block windows
+and a forward as-of), :func:`theil_sen` (a key-bounded pair self-join)
+and :func:`robust_anomalies` (two key aggregates joined back).
+
+Every operator enters through
+:func:`~intervalaverage_spark.validation.enter_points`: its columns are
+checked and aliased to internal names in one quoted projection, the
+kernel is SQL text over those names, and the last projection restores
+the user's — so any column name works. The (key, ts) collapse to a 6-dp
+decimal mean is one helper (:func:`~intervalaverage_spark.operators.
+changepoint._collapse`) for autocorr, theil_sen, the seasonal pair,
+robust_anomalies and cusum.
 
 Skew: a window partitioned only by the group key puts an entire hot key
 in one task. :func:`rate` and :func:`rolling_decomposable` take
@@ -19,50 +32,28 @@ included, is property-tested (tests/test_property_hypothesis.py).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.plans.rangejoin import fdiv
+from intervalaverage_spark.operators.asof import asof_join
+from intervalaverage_spark.operators.changepoint import _DEC, _collapse, _dbl
+from intervalaverage_spark.plans.rangejoin import fdiv_sql
 from intervalaverage_spark.plans.slices import time_sliced
-from intervalaverage_spark.validation import IntervalDataError, IntervalSchemaError, _q
+from intervalaverage_spark.validation import (
+    Entry,
+    IntervalDataError,
+    IntervalSchemaError,
+    _agg,
+    _over,
+    _q,
+    check_unique_ts,
+    enter_points,
+)
 
-_AGGS = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max, "count": F.count}
-
-
-def _need(df: DataFrame, *cols: str) -> None:
-    for c in cols:
-        if c not in df.columns:
-            raise IntervalSchemaError(f"missing column {c!r}")
-
-
-def _no_clash(df: DataFrame, *cols: str) -> None:
-    clash = [c for c in cols if c in df.columns]
-    if clash:
-        raise IntervalSchemaError(f"output column(s) {clash} already exist")
-
-
-def check_unique_ts(df: DataFrame, ts_col: str, group_vars: Sequence[str]) -> None:
-    """Raise :class:`IntervalDataError` if any (key, ts) appears more than
-    once — the eager analogue of the reference's non-overlap validation
-    (R/intervalaverage_functions.R:307-338, skippable there too). One
-    aggregate + head(1): the collect is bounded to a single row."""
-    cols = [*group_vars, ts_col]
-    dup = (
-        df.selectExpr(*(f"{_q(c)} AS __c{i}" for i, c in enumerate(cols)))
-        .groupBy(*(f"__c{i}" for i in range(len(cols))))
-        .count()
-        .filter(F.col("count") > 1)
-        .head(1)
-    )
-    if dup:
-        *values, n = dup[0]
-        raise IntervalDataError(
-            f"duplicate (key, {ts_col}) rows — e.g. {dict(zip(cols, values))} appears "
-            f"{n} times; the matched predecessor would be "
-            "sort-order-dependent. Dedup upstream or aggregate first."
-        )
+_AGGS = {"mean": "avg", "sum": "sum", "min": "min", "max": "max", "count": "count"}
+_SEASONAL = ("phase", "x", "mean_v", "sd_v", "rz")
 
 
 def rate(
@@ -97,16 +88,13 @@ def rate(
     if counter_reset not in ("none", "zero"):
         raise IntervalSchemaError(
             f"counter_reset must be none/zero, got {counter_reset!r}")
-    group_vars = list(group_vars)
-    _need(df, ts_col, value_col, *group_vars)
-    _no_clash(df, out_col)
+    e = enter_points(df, ts_col, [value_col], group_vars, out=[out_col], keep=True)
     if validate:
         check_unique_ts(df, ts_col, group_vars)
-    t = f"CAST({_q(ts_col)} AS BIGINT)"
-    v = f"CAST({_q(value_col)} AS DOUBLE)"
+    t, v = "CAST(__xt0 AS BIGINT)", "CAST(__xv0 AS DOUBLE)"
     pt = f"named_struct('t', {t}, 'v', {v})"
     s = time_sliced(
-        df, [*map(_q, group_vars)], t, bucket_width,
+        e.x, e.cols("xg"), t, bucket_width,
         window=lambda p: {"__prev": f"lag({pt}) OVER ({p} ORDER BY {t})"},
         summary={"__last": f"max_by({pt}, {t})"},
         back=lambda w: {"__carry": f"last(__last) {w}"})
@@ -114,8 +102,34 @@ def rate(
     dv = (f"CASE WHEN {v} >= {prev}.v THEN {v} - {prev}.v ELSE {v} END"
           if counter_reset == "zero" else f"{v} - {prev}.v")
     return s.selectExpr(
-        *map(_q, df.columns),
+        *e.restore(*df.columns),
         f"CASE WHEN {t} > {prev}.t THEN ({dv}) / ({t} - {prev}.t) END AS {_q(out_col)}")
+
+
+def _per_t(e: Entry, ft: str, aggs: Mapping[str, str]) -> tuple[DataFrame, list[str]]:
+    """The entered rows collapsed to one per key and time ``ft`` (BIGINT),
+    with ``aggs`` over the DOUBLE value ``__v``, and the key names: the keys
+    are renamed ``__k0…``, so the result can join back to the rows."""
+    keys = [f"__k{i}" for i in range(len(e.cols("xg")))]
+    rows = e.x.selectExpr(*(f"{g} AS {k}" for g, k in zip(e.cols("xg"), keys)),
+                          f"CAST(__xt0 AS BIGINT) AS {ft}", "CAST(__xv0 AS DOUBLE) AS __v")
+    return _agg(rows, [*keys, ft], aggs), keys
+
+
+def _rolled(e: Entry, columns: Sequence[str], frame: DataFrame, roll: Sequence[str],
+            ft: str | None = None) -> DataFrame:
+    """The input rows ``columns`` plus the per-(key, t) results ``__r0…`` of
+    ``frame`` as the ``roll`` names. ``frame`` holds the input rows
+    themselves, or — with its time column ``ft`` — is a :func:`_per_t`
+    collapse and joins back on its keys and time."""
+    if ft is not None:
+        keys = [f"__k{i}" for i in range(len(e.cols("xg")))]
+        on = [*(f"{g} <=> {k}" for g, k in zip(e.cols("xg"), keys)),
+              f"CAST(__xt0 AS BIGINT) = {ft}"]
+        frame = e.x.join(frame.selectExpr(*keys, ft, *(f"__r{i}" for i in range(len(roll)))),
+                         F.expr(" AND ".join(on)), "left")
+    return frame.selectExpr(*e.restore(*columns),
+                            *(f"__r{i} AS {_q(r)}" for i, r in enumerate(roll)))
 
 
 def rolling(
@@ -141,26 +155,16 @@ def rolling(
     genuinely need this direct frame (non-invertible),
     where hot-key mitigation is the key model itself (url-hash keys) or
     pre-aggregating to a coarser tier first."""
-    group_vars = list(group_vars)
-    _need(df, ts_col, value_col, *group_vars)
-    bad = [a for a in aggs if a not in _AGGS]
-    if bad:
+    if bad := [a for a in aggs if a not in _AGGS]:
         raise IntervalSchemaError(f"unknown aggs {bad}; choose from {sorted(_AGGS)}")
     if window < 0:
         raise IntervalSchemaError(f"window must be >= 0, got {window}")
-    _no_clash(df, *[f"{value_col}_roll_{a}" for a in aggs])
-    t = F.col(ts_col).cast("long")
-    w = (
-        Window.partitionBy(*group_vars)
-        .orderBy(t)
-        .rangeBetween(-window, 0)
-    )
-    cols = [
-        _AGGS[a](F.col(value_col).cast("double")).over(w)
-        .alias(f"{value_col}_roll_{a}")
-        for a in aggs
-    ]
-    return df.select("*", *cols)
+    roll = [f"{value_col}_roll_{a}" for a in aggs]
+    e = enter_points(df, ts_col, [value_col], group_vars, out=roll, keep=True)
+    over = _over(e.cols("xg"), "CAST(__xt0 AS BIGINT)",
+                 f"RANGE BETWEEN {int(window)} PRECEDING AND CURRENT ROW")
+    return e.x.selectExpr(*e.restore(*df.columns), *(
+        f"{_AGGS[a]}(CAST(__xv0 AS DOUBLE)) {over} AS {_q(r)}" for a, r in zip(aggs, roll)))
 
 
 def rolling_decomposable(
@@ -212,42 +216,34 @@ def rolling_decomposable(
     promise is broken — pass ``validate=True`` to check it eagerly (one
     bounded aggregate, the reference's skippable eager-validation
     split)."""
-    group_vars = list(group_vars)
-    _need(df, ts_col, value_col, *group_vars)
     allowed = ("sum", "count", "mean")
-    bad = [a for a in aggs if a not in allowed]
-    if bad:
+    if bad := [a for a in aggs if a not in allowed]:
         raise IntervalSchemaError(
             f"aggs {bad} are not decomposable; choose from {allowed} "
             "(min/max need the direct rolling())")
     if window < 0:
         raise IntervalSchemaError(f"window must be >= 0, got {window}")
     roll = [f"{value_col}_roll_{a}" for a in aggs]
-    _no_clash(df, *roll)
-    t, v = f"CAST({_q(ts_col)} AS BIGINT)", f"CAST({_q(value_col)} AS DOUBLE)"
+    e = enter_points(df, ts_col, [value_col], group_vars, out=roll, keep=True)
+    t, v = "CAST(__xt0 AS BIGINT)", "CAST(__xv0 AS DOUBLE)"
 
     if assume_unique_ts:
         if validate:
             check_unique_ts(df, ts_col, group_vars)
         # 1 row per (key, t) promised: the input rows ARE the per-t points,
         # so skip both the collapse aggregate and the final join-back.
-        keys = group_vars
-        _no_clash(df, "__rd_t", "__rd_in", "__s", "__c")
-        pts = df.selectExpr("*", f"{t} AS __rd_t", f"{v} AS __s",
-                            f"CAST({v} IS NOT NULL AS BIGINT) AS __c")
+        keys = e.cols("xg")
+        pts = e.x.selectExpr("*", f"{t} AS __rd_t", f"{v} AS __s",
+                             f"CAST({v} IS NOT NULL AS BIGINT) AS __c")
     else:
-        keys = [f"__k{i}" for i in range(len(group_vars))]
-        _no_clash(df, "__rd_t", *keys)
-        pts = df.selectExpr(*(f"{_q(g)} AS {k}" for g, k in zip(group_vars, keys)),
-                            f"{t} AS __rd_t", f"{v} AS __v").groupBy(*keys, "__rd_t").agg(
-            F.expr("sum(__v) AS __s"), F.expr("count(__v) AS __c"))
-    leave = pts.selectExpr(*map(_q, keys), f"__rd_t + {int(window) + 1} AS __rd_t",
+        pts, keys = _per_t(e, "__rd_t", {"__s": "sum(__v)", "__c": "count(__v)"})
+    leave = pts.selectExpr(*keys, f"__rd_t + {int(window) + 1} AS __rd_t",
                            "0 AS __rd_in", "-__s AS __s", "-__c AS __c")
     ev = pts.selectExpr("*", "1 AS __rd_in").unionByName(leave, allowMissingColumns=True)
 
     run = "ORDER BY __rd_t, __rd_in ROWS UNBOUNDED PRECEDING"
     s = time_sliced(
-        ev, [*map(_q, keys)], "__rd_t", bucket_width,
+        ev, keys, "__rd_t", bucket_width,
         window=lambda p: {"__ws": f"sum(__s) OVER ({p} {run})",
                           "__wc": f"sum(__c) OVER ({p} {run})"},
         summary={"__bs": "sum(__s)", "__bc": "sum(__c)"},
@@ -262,13 +258,9 @@ def rolling_decomposable(
     # direct RANGE frame does — X − X = 0 would be wrong
     exprs = {"sum": f"CASE WHEN {fc} > 0 THEN {fs} END", "count": f"CAST({fc} AS BIGINT)",
              "mean": f"CASE WHEN {fc} > 0 THEN {fs} / {fc} END"}
-    frame_cols = [f"{exprs[a]} AS {_q(r)}" for a, r in zip(aggs, roll)]
-    s = s.where("__rd_in = 1")
-    if assume_unique_ts:
-        return s.selectExpr(*map(_q, df.columns), *frame_cols)
-    frame = s.selectExpr(*keys, "__rd_t", *frame_cols)
-    on = " AND ".join([*(f"{_q(g)} <=> {k}" for g, k in zip(group_vars, keys)), f"{t} = __rd_t"])
-    return df.join(frame, F.expr(on), "left").selectExpr(*map(_q, [*df.columns, *roll]))
+    frame = s.where("__rd_in = 1").selectExpr(
+        "*", *(f"{exprs[a]} AS __r{i}" for i, a in enumerate(aggs)))
+    return _rolled(e, df.columns, frame, roll, None if assume_unique_ts else "__rd_t")
 
 
 def rolling_minmax(
@@ -317,107 +309,50 @@ def rolling_minmax(
     the same double cast :func:`rolling` applies, so results are
     IDENTICAL to the direct frame (min/max never round). Integer time
     domain required."""
-    group_vars = list(group_vars)
-    _need(df, ts_col, value_col, *group_vars)
     allowed = ("min", "max")
-    bad = [a for a in aggs if a not in allowed]
-    if bad:
+    if bad := [a for a in aggs if a not in allowed]:
         raise IntervalSchemaError(
             f"aggs {bad} not supported; choose from {allowed} "
             "(sum/count/mean have rolling_decomposable)")
     if window < 0:
         raise IntervalSchemaError(f"window must be >= 0, got {window}")
-    _no_clash(df, *[f"{value_col}_roll_{a}" for a in aggs])
-    _no_clash(df, "__rm_t", "__rm_mn", "__rm_mx")
-    t = F.col(ts_col).cast("long")
-    v = F.col(value_col).cast("double")
-
-    if assume_unique_ts:
-        if validate:
-            check_unique_ts(df, ts_col, group_vars)
-        _no_clash(df, "__rm_bk", "__rm_qb", "__rm_qt",
-                  "__pmn", "__pmx", "__smn", "__smx")
-        pts = df.select("*", t.alias("__rm_t"), v.alias("__rm_mn"),
-                        v.alias("__rm_mx"))
-    else:
-        pts = df.select(*group_vars, t.alias("__rm_t"), v.alias("__v")).groupBy(
-            *group_vars, "__rm_t"
-        ).agg(F.min("__v").alias("__rm_mn"), F.max("__v").alias("__rm_mx"))
-    keep = [c for c in pts.columns if c not in ("__rm_mn", "__rm_mx")]
+    roll = [f"{value_col}_roll_{a}" for a in aggs]
+    e = enter_points(df, ts_col, [value_col], group_vars, out=roll, keep=True)
+    g, t, v = e.cols("xg"), "CAST(__xt0 AS BIGINT)", "CAST(__xv0 AS DOUBLE)"
 
     if window == 0:
         # frame = the point's same-t peer rows: one window partitioned by
-        # (key, t) directly over df — still (key, block)-grained spreading
-        # (block == t here), and neither collapse nor join-back is needed
-        # (joining the collapsed frame back would be a self-join on the
-        # groupBy's pass-through attributes — ambiguous by construction)
-        w0 = Window.partitionBy(*group_vars, t)
-        exprs0 = {"min": F.min(v).over(w0), "max": F.max(v).over(w0)}
-        return df.select(
-            "*", *[exprs0[a].alias(f"{value_col}_roll_{a}") for a in aggs])
-
-    bk = fdiv(F.col("__rm_t"), window)
-    p2 = pts.withColumn("__rm_bk", bk)
-    wasc = (
-        Window.partitionBy(*group_vars, "__rm_bk")
-        .orderBy("__rm_t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wdesc = (
-        Window.partitionBy(*group_vars, "__rm_bk")
-        .orderBy(F.desc("__rm_t"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pref = p2.select(
-        *keep, "__rm_bk",
-        F.min("__rm_mn").over(wasc).alias("__pmn"),
-        F.max("__rm_mx").over(wasc).alias("__pmx"),
-    )
-    suf = p2.select(
-        *group_vars, "__rm_bk", "__rm_t",
-        F.min("__rm_mn").over(wdesc).alias("__smn"),
-        F.max("__rm_mx").over(wdesc).alias("__smx"),
-    )
-
-    from intervalaverage_spark.operators.asof import asof_join
-
-    q = pref.select(
-        "*",
-        (F.col("__rm_bk") - 1).alias("__rm_qb"),
-        (F.col("__rm_t") - F.lit(int(window))).alias("__rm_qt"),
-    ).drop("__rm_bk")
+        # (key, t) directly over the input — still (key, block)-grained
+        # spreading (block == t here), and neither collapse nor join-back
+        # is needed
+        w0 = f"OVER (PARTITION BY {', '.join([*g, t])})"
+        return _rolled(e, df.columns, e.x.selectExpr(
+            "*", *(f"{a}({v}) {w0} AS __r{i}" for i, a in enumerate(aggs))), roll)
+    if assume_unique_ts:
+        if validate:
+            check_unique_ts(df, ts_col, group_vars)
+        keys = g
+        pts = e.x.selectExpr("*", f"{t} AS __rm_t", f"{v} AS __rm_mn", f"{v} AS __rm_mx")
+    else:
+        pts, keys = _per_t(e, "__rm_t", {"__rm_mn": "min(__v)", "__rm_mx": "max(__v)"})
+    keep = [c for c in pts.columns if c not in ("__rm_mn", "__rm_mx")]
+    blocks = pts.selectExpr("*", f"{fdiv_sql('__rm_t', str(int(window)))} AS __rm_bk")
+    run = {d: _over([*keys, "__rm_bk"], f"__rm_t{d}", "ROWS UNBOUNDED PRECEDING")
+           for d in ("", " DESC")}
+    pref = blocks.selectExpr(
+        *keep, "__rm_bk - 1 AS __rm_qb", f"__rm_t - {int(window)} AS __rm_qt",
+        f"min(__rm_mn) {run['']} AS __pmn", f"max(__rm_mx) {run['']} AS __pmx")
+    suf = blocks.selectExpr(
+        *keys, "__rm_bk AS __rm_qb", "__rm_t",
+        f"min(__rm_mn) {run[' DESC']} AS __smn", f"max(__rm_mx) {run[' DESC']} AS __smx")
     m = asof_join(
-        q, suf.withColumnRenamed("__rm_bk", "__rm_qb"),
-        on=[*group_vars, "__rm_qb"], left_ts="__rm_qt", right_ts="__rm_t",
-        right_cols=["__smn", "__smx"], direction="forward", suffix="__m",
-    )
+        pref, suf, on=[*keys, "__rm_qb"], left_ts="__rm_qt", right_ts="__rm_t",
+        right_cols=["__smn", "__smx"], direction="forward", suffix="__m")
     # least/greatest skip NULLs; all-NULL (or block-bk-1-empty) terms fall
     # through to the other term, both NULL → NULL like the direct frame
-    exprs = {"min": F.least(F.col("__pmn"), F.col("__smn__m")),
-             "max": F.greatest(F.col("__pmx"), F.col("__smx__m"))}
-    frame = m.select(
-        *keep, *[exprs[a].alias(f"{value_col}_roll_{a}") for a in aggs]
-    )
-    return _rm_emit(df, frame, t, group_vars, value_col, aggs,
-                    assume_unique_ts)
-
-
-def _rm_emit(df, frame, t, group_vars, value_col, aggs, assume_unique):
-    """Join-back (collapsed mode) or direct emit (assume_unique mode) —
-    shared by both rolling_minmax branches."""
-    roll_cols = [f"{value_col}_roll_{a}" for a in aggs]
-    if assume_unique:
-        return frame.select(*[F.col(c) for c in df.columns], *roll_cols)
-    from functools import reduce
-
-    cond = reduce(
-        lambda a_, b_: a_ & b_,
-        [df[g].eqNullSafe(frame[g]) for g in group_vars]
-        + [t == frame["__rm_t"]],
-    )
-    out = df.join(frame, on=cond, how="left")
-    return out.select(*[df[c] for c in df.columns],
-                      *[frame[c] for c in roll_cols])
+    exprs = {"min": "least(__pmn, __smn__m)", "max": "greatest(__pmx, __smx__m)"}
+    frame = m.selectExpr(*keep, *(f"{exprs[a]} AS __r{i}" for i, a in enumerate(aggs)))
+    return _rolled(e, df.columns, frame, roll, None if assume_unique_ts else "__rm_t")
 
 
 def percentile_col_name(p: float) -> str:
@@ -461,8 +396,6 @@ def windowed_percentiles(
     bucket can blow executor memory regardless of its row count. That
     bounded-state property (not the node name) is what makes it the
     10^12-row panel path; see BENCH/PLANS.md §percentiles."""
-    group_vars = list(group_vars)
-    _need(df, ts_col, value_col, *group_vars)
     for p in percentiles:
         if not 0.0 <= p <= 1.0:
             raise IntervalSchemaError(f"percentile {p} outside [0, 1]")
@@ -475,32 +408,21 @@ def windowed_percentiles(
     elif len(names) != len(percentiles):
         raise IntervalSchemaError(
             f"{len(names)} names for {len(percentiles)} percentiles")
-    # the output schema is group_vars…, bucket, <names>…, n_points — every
-    # name must be unique (percentiles=[0.5, 0.5] would otherwise emit two
-    # ambiguous p50 columns; a name equal to a group var or the reserved
-    # bucket/n_points would shadow it)
-    out_schema = [*group_vars, "bucket", *names, "n_points"]
-    seen: set[str] = set()
-    dup = sorted({n for n in out_schema if n in seen or seen.add(n)})
-    if dup:
-        raise IntervalSchemaError(
-            f"duplicate output column name(s) {dup}: percentile names must "
-            "be unique and distinct from group_vars/'bucket'/'n_points'")
-    t = F.col(ts_col).cast("long")
-    varr = F.col(value_col).cast("double")
-    parr = F.array(*[F.lit(float(p)) for p in percentiles])
-    if exact:
-        pct = F.percentile(varr, parr)
-    else:
-        pct = F.percentile_approx(varr, parr, F.lit(int(accuracy)))
-    agg = df.groupBy(*group_vars, fdiv(t, bucket_width).alias("bucket")).agg(
-        pct.alias("__p"), F.count(F.lit(1)).alias("n_points")
-    )
-    return agg.select(
-        *group_vars, "bucket",
-        *[F.col("__p").getItem(i).alias(n) for i, n in enumerate(names)],
-        "n_points",
-    )
+    # the output is group_vars…, bucket, <names>…, n_points: percentiles=
+    # [0.5, 0.5] would emit two p50 columns, a name equal to a group var or
+    # bucket/n_points would shadow it — the entry rejects both
+    e = enter_points(df, ts_col, [value_col], group_vars, out=["bucket", *names, "n_points"])
+    g = e.cols("xg")
+    v, ps = "CAST(__xv0 AS DOUBLE)", ", ".join(map(_dbl, percentiles))
+    pct = (f"percentile({v}, array({ps}))" if exact
+           else f"percentile_approx({v}, array({ps}), {int(accuracy)})")
+    bucket = fdiv_sql("__xt0", str(int(bucket_width)))
+    agg = _agg(e.x, [*g, f"{bucket} AS bucket"], {"__p": pct, "n_points": "count(1)"})
+    return agg.selectExpr(*e.user(*g), "bucket",
+                          *(f"__p[{i}] AS {_q(n)}" for i, n in enumerate(names)), "n_points")
+
+
+_TREND = ("n_points", "t0", "slope", "intercept", "r2")
 
 
 def trend(
@@ -535,14 +457,11 @@ def trend(
     between them; no window, no sort, no UDF. At 100 TB each key costs
     one pass however long its history.
     """
-    if not group_vars:
-        raise IntervalSchemaError("trend: group_vars must be non-empty")
-    for c in (ts_col, value_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"trend: missing column {c!r}")
-    g = list(group_vars)
-    pts = trend_points(df, ts_col, value_col, g)
-    return trend_from_moments(trend_moments(pts, g, trend_t0(pts, g)))
+    e = enter_points(df, ts_col, [value_col], group_vars, out=_TREND, keyed=True)
+    g = e.cols("xg")
+    pts = trend_points(e.x, "__xt0", "__xv0", g)
+    return trend_from_moments(trend_moments(pts, g, trend_t0(pts, g))).selectExpr(
+        *e.user(*g), *_TREND)
 
 
 def trend_points(
@@ -554,20 +473,16 @@ def trend_points(
     """The ``(…keys, __t epoch-seconds, __x 6-dp decimal)`` projection
     shared by the batch and STREAMING trend paths (NULLs excluded) —
     factored out so both compute moments over bit-identical inputs."""
-    g = list(group_vars)
-    return df.where(F.col(value_col).isNotNull()).select(
-        *g,
-        F.col(ts_col).cast("timestamp").cast("long").alias("__t"),
-        F.round(F.col(value_col).cast("double"), 6)
-        .cast("decimal(18,6)").alias("__x"),
-    )
+    return df.where(f"{_q(value_col)} IS NOT NULL").selectExpr(
+        *map(_q, group_vars), f"CAST(CAST({_q(ts_col)} AS TIMESTAMP) AS BIGINT) AS __t",
+        f"CAST(round(CAST({_q(value_col)} AS DOUBLE), 6) AS {_DEC}) AS __x")
 
 
 def trend_t0(pts: DataFrame, group_vars: Sequence[str]) -> DataFrame:
     """Per-key centring reference ``(…keys, t0 = min __t)`` — batch
     computes it inline; the streaming path takes it as the OFFLINE
     CALIBRATION artifact (the cusum mu/kappa/h pattern)."""
-    return pts.groupBy(*group_vars).agg(F.min("__t").alias("t0"))
+    return _agg(pts, [*map(_q, group_vars)], {"t0": "min(__t)"})
 
 
 def trend_moments(
@@ -580,21 +495,17 @@ def trend_moments(
     streaming_trend_moments) with state = one row per key — and a
     bounded streaming replay's moments equal this batch fold
     bit-for-bit."""
-    g = list(group_vars)
-    ctr = pts.join(t0, g).select(
-        *g, "t0",
-        (F.col("__t") - F.col("t0")).cast("decimal(12,0)").alias("__u"),
-        "__x",
-    )
-    return ctr.groupBy(*g).agg(
-        F.max("t0").alias("t0"),
-        F.count(F.lit(1)).alias("n_points"),
-        F.sum("__u").alias("_su"),
-        F.sum("__x").alias("_sx"),
-        F.sum(F.col("__u") * F.col("__x")).alias("_sux"),
-        F.sum(F.col("__u") * F.col("__u")).alias("_suu"),
-        F.sum(F.col("__x") * F.col("__x")).alias("_sxx"),
-    )
+    g = [*map(_q, group_vars)]
+    ctr = pts.join(t0, list(group_vars)).selectExpr(
+        *g, "t0", "CAST(__t - t0 AS DECIMAL(12,0)) AS __u", "__x")
+    return _agg(ctr, g, {"t0": "max(t0)", "n_points": "count(1)", "_su": "sum(__u)",
+                         "_sx": "sum(__x)", "_sux": "sum(__u * __x)",
+                         "_suu": "sum(__u * __u)", "_sxx": "sum(__x * __x)"})
+
+
+def _doubles(*cols: str) -> list[str]:
+    """``cols`` cast to DOUBLE, as SQL."""
+    return [f"CAST({c} AS DOUBLE)" for c in cols]
 
 
 def trend_from_moments(m: DataFrame) -> DataFrame:
@@ -603,33 +514,19 @@ def trend_from_moments(m: DataFrame) -> DataFrame:
     −0.0-normalised; NULL for degenerate fits. Runs identically on the
     batch fold and on a streamed moments sink, which is what pins
     stream == batch exactly."""
-    g = [c for c in m.columns
-         if c not in ("t0", "n_points", "_su", "_sx", "_sux", "_suu", "_sxx")]
-    n = F.col("n_points").cast("double")
-    su = F.col("_su").cast("double")
-    sx = F.col("_sx").cast("double")
-    sux = F.col("_sux").cast("double")
-    suu = F.col("_suu").cast("double")
-    sxx = F.col("_sxx").cast("double")
-    cov_n = n * sux - su * sx      # n² · covariance
-    var_t = n * suu - su * su      # n² · time variance
-    var_x = n * sxx - sx * sx      # n² · value variance
-    slope = F.when(var_t > 0.0, cov_n / var_t)
-    intercept = F.when(
-        var_t > 0.0, (sx - (cov_n / var_t) * su) / n
-    )
-    r2 = F.when(
-        (var_t > 0.0) & (var_x > 0.0),
-        (cov_n * cov_n) / (var_t * var_x),
-    )
-    return m.select(
-        *g,
-        "n_points",
-        "t0",
-        (F.round(slope * 86400.0, 6) + F.lit(0.0)).alias("slope"),
-        (F.round(intercept, 6) + F.lit(0.0)).alias("intercept"),
-        F.round(r2, 6).alias("r2"),
-    )
+    moments = ("n_points", "_su", "_sx", "_sux", "_suu", "_sxx")
+    g = [_q(c) for c in m.columns if c not in ("t0", *moments)]
+    n, su, sx, sux, suu, sxx = _doubles(*moments)
+    cov_n = f"({n} * {sux} - {su} * {sx})"     # n² · covariance
+    var_t = f"({n} * {suu} - {su} * {su})"     # n² · time variance
+    var_x = f"({n} * {sxx} - {sx} * {sx})"     # n² · value variance
+    return m.selectExpr(
+        *g, "n_points", "t0",
+        f"round(CASE WHEN {var_t} > 0 THEN {cov_n} / {var_t} END * 86400D, 6) + 0D AS slope",
+        f"round(CASE WHEN {var_t} > 0 THEN ({sx} - ({cov_n} / {var_t}) * {su}) / {n} END, 6)"
+        " + 0D AS intercept",
+        f"round(CASE WHEN {var_t} > 0 AND {var_x} > 0 "
+        f"THEN ({cov_n} * {cov_n}) / ({var_t} * {var_x}) END, 6) AS r2")
 
 
 def autocorr(
@@ -672,65 +569,26 @@ def autocorr(
     never materialises its history more than once, and there is no
     join at all.
     """
-    from intervalaverage_spark.operators.changepoint import cusum_points
-
     if max_lag < 1:
         raise IntervalSchemaError(
             f"autocorr: max_lag must be >= 1, got {max_lag}")
-    if not group_vars:
-        raise IntervalSchemaError("autocorr: group_vars must be non-empty")
-    for c in (ts_col, value_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"autocorr: missing column {c!r}")
-    g = list(group_vars)
-    pts = cusum_points(df, ts_col, value_col, g)
-
-    w = Window.partitionBy(*g).orderBy(ts_col)
-    lead_cols = [
-        F.lead("x", lag).over(w).alias(f"__b{lag}")
-        for lag in range(1, max_lag + 1)
-    ]
-    lagged = pts.select(*g, F.col("x").alias("__a"), *lead_cols)
-    pairs = lagged.select(
-        *g,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(lag).cast("int").alias("lag"),
-                    F.col("__a").alias("a"),
-                    F.col(f"__b{lag}").alias("b"),
-                )
-                for lag in range(1, max_lag + 1)
-            ])
-        ).alias("__p"),
-    ).select(
-        *g, "__p.lag", F.col("__p.a").alias("__a"), F.col("__p.b").alias("__b")
-    ).where(F.col("__b").isNotNull())
-
-    m = pairs.groupBy(*g, "lag").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum("__a").alias("_sa"),
-        F.sum("__b").alias("_sb"),
-        F.sum(F.col("__a") * F.col("__b")).alias("_sab"),
-        F.sum(F.col("__a") * F.col("__a")).alias("_saa"),
-        F.sum(F.col("__b") * F.col("__b")).alias("_sbb"),
-    )
-    n = F.col("n_pairs").cast("double")
-    sa = F.col("_sa").cast("double")
-    sb = F.col("_sb").cast("double")
-    sab = F.col("_sab").cast("double")
-    saa = F.col("_saa").cast("double")
-    sbb = F.col("_sbb").cast("double")
-    num = n * sab - sa * sb
-    va = n * saa - sa * sa
-    vb = n * sbb - sb * sb
-    acf = F.when((va > 0.0) & (vb > 0.0), num / F.sqrt(va * vb))
-    return m.select(
-        *g,
-        "lag",
-        "n_pairs",
-        (F.round(acf, 6) + F.lit(0.0)).alias("acf"),
-    )
+    e = enter_points(df, ts_col, [value_col], group_vars, out=("lag", "n_pairs", "acf"),
+                     keyed=True)
+    g, lags = e.cols("xg"), range(1, max_lag + 1)
+    over = _over(g, "__t")
+    pairs = (_collapse(e.x, "__xt0", g)
+             .selectExpr(*g, "x AS __a", *(f"lead(x, {lag}) {over} AS __b{lag}" for lag in lags))
+             .selectExpr(*g, "inline(array({}))".format(", ".join(
+                 f"named_struct('lag', {lag}, 'a', __a, 'b', __b{lag})" for lag in lags)))
+             .where("b IS NOT NULL"))
+    m = _agg(pairs, [*g, "lag"], {"n_pairs": "count(1)", "_sa": "sum(a)", "_sb": "sum(b)",
+                                  "_sab": "sum(a * b)", "_saa": "sum(a * a)",
+                                  "_sbb": "sum(b * b)"})
+    n, sa, sb, sab, saa, sbb = _doubles("n_pairs", "_sa", "_sb", "_sab", "_saa", "_sbb")
+    va, vb = f"({n} * {saa} - {sa} * {sa})", f"({n} * {sbb} - {sb} * {sb})"
+    acf = (f"CASE WHEN {va} > 0 AND {vb} > 0 "
+           f"THEN ({n} * {sab} - {sa} * {sb}) / sqrt({va} * {vb}) END")
+    return m.selectExpr(*e.user(*g), "lag", "n_pairs", f"round({acf}, 6) + 0D AS acf")
 
 
 def theil_sen(
@@ -771,70 +629,31 @@ def theil_sen(
     if max_points < 2:
         raise IntervalDataError(
             f"theil_sen: max_points must be >= 2, got {max_points}")
-    if not group_vars:
-        raise IntervalSchemaError("theil_sen: group_vars must be non-empty")
-    for c in (ts_col, value_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"theil_sen: missing column {c!r}")
-    g = list(group_vars)
+    out = ("n_points", "n_pairs", "ts_slope", "ts_intercept")
+    e = enter_points(df, ts_col, [value_col], group_vars, out=out, keyed=True)
+    g = e.cols("xg")
     # collapse on the FLOOR-SECOND (not the raw timestamp): slopes
     # divide by Δt in whole seconds, so two sub-second observations
     # must fuse BEFORE pairing or Δt = 0 pairs would divide by zero
-    t = F.col(ts_col).cast("timestamp").cast("long")
-    xd = F.round(F.col(value_col).cast("double"), 6).cast("decimal(18,6)")
-    pts = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(*g, t.alias("__t"))
-        .agg(F.sum(xd).alias("_sx"), F.count(F.lit(1)).alias("_cn"))
-        .select(
-            *g, "__t",
-            F.round(F.col("_sx").cast("double") / F.col("_cn"), 6)
-            .cast("decimal(18,6)").alias("x"),
-        )
-    )
-    bounds = pts.groupBy(*g).agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.min("__t").alias("__t0"),
-    ).where((F.col("n_points") >= 2) & (F.col("n_points") <= max_points))
+    pts = _collapse(e.x, "CAST(CAST(__xt0 AS TIMESTAMP) AS BIGINT)", g)
+    bounds = _agg(pts, g, {"n_points": "count(1)", "__t0": "min(__t)"}).where(
+        f"n_points >= 2 AND n_points <= {int(max_points)}")
     kp = pts.join(bounds, g)
-
-    a = kp.select(*g, F.col("__t").alias("__t1"), F.col("x").alias("__x1"))
-    b = kp.select(*g, F.col("__t").alias("__t2"), F.col("x").alias("__x2"))
+    pairs = kp.selectExpr(*g, "__t AS __t1", "x AS __x1").join(
+        kp.selectExpr(*g, "__t AS __t2", "x AS __x2"), g).where("__t1 < __t2")
     # slopes stay RAW doubles into the median: each is bit-identical
     # cross-engine (decimal Δx → double exact, integer Δt), and the
     # 0.5-interpolation midpoint of raw doubles almost never lands on a
     # 6-dp round boundary — whereas pre-rounded slopes put EVERY odd
     # midpoint exactly on the 7th-digit 5 (measured flapping at sf0.01)
-    slope = (
-        ((F.col("__x2") - F.col("__x1")).cast("double") * 86400.0)
-        / (F.col("__t2") - F.col("__t1")).cast("double")
-    )
-    med_slope = (
-        a.join(b, g).where(F.col("__t1") < F.col("__t2"))
-        .groupBy(*g)
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            (F.round(F.percentile(slope, F.lit(0.5)), 6) + F.lit(0.0))
-            .alias("ts_slope"),
-        )
-    )
-    resid = (
-        F.col("x").cast("double")
-        - F.col("ts_slope")
-        * ((F.col("__t") - F.col("__t0")).cast("double") / 86400.0)
-    )
-    out = (
-        kp.join(med_slope, g)
-        .groupBy(*g)
-        .agg(
-            F.max("n_points").alias("n_points"),
-            F.max("n_pairs").alias("n_pairs"),
-            F.max("ts_slope").alias("ts_slope"),
-            (F.round(F.percentile(resid, F.lit(0.5)), 6) + F.lit(0.0))
-            .alias("ts_intercept"),
-        )
-    )
-    return out.select(*g, "n_points", "n_pairs", "ts_slope", "ts_intercept")
+    slope = "CAST(__x2 - __x1 AS DOUBLE) * 86400D / CAST(__t2 - __t1 AS DOUBLE)"
+    med = _agg(pairs, g, {"n_pairs": "count(1)",
+                          "ts_slope": f"round(percentile({slope}, 0.5D), 6) + 0D"})
+    resid = "CAST(x AS DOUBLE) - ts_slope * (CAST(__t - __t0 AS DOUBLE) / 86400D)"
+    return _agg(kp.join(med, g), g, {
+        "n_points": "max(n_points)", "n_pairs": "max(n_pairs)", "ts_slope": "max(ts_slope)",
+        "ts_intercept": f"round(percentile({resid}, 0.5D), 6) + 0D"},
+    ).selectExpr(*e.user(*g), *out)
 
 
 def cadence_stats(
@@ -866,59 +685,70 @@ def cadence_stats(
     the documented short-series trade, same as robust_anomalies). No
     join; per-key cost is one sorted scan of its distinct times.
     """
-    if not group_vars:
-        raise IntervalSchemaError(
-            "cadence_stats: group_vars must be non-empty")
-    for c in (ts_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(
-                f"cadence_stats: missing column {c!r}")
-    g = list(group_vars)
-    t = F.col(ts_col).cast("timestamp").cast("long")
-    obs = (
-        df.where(F.col(ts_col).isNotNull())
-        .groupBy(*g, t.alias("__t"))
-        .agg(F.count(F.lit(1)).alias("__dup"))
-        .drop("__dup")
-    )
-    w = Window.partitionBy(*g).orderBy("__t")
-    gaps = obs.select(
-        *g,
-        (F.col("__t") - F.lag("__t").over(w)).alias("__gap"),
-    )
-    gd = F.col("__gap").cast("decimal(18,0)")
-    agg = gaps.groupBy(*g).agg(
-        F.count(F.lit(1)).alias("n_obs"),
-        F.count("__gap").alias("n_gaps"),
-        F.min("__gap").alias("min_gap"),
-        F.max("__gap").alias("max_gap"),
-        F.sum(gd).alias("_sg"),
-        F.sum(gd * gd).alias("_sgg"),
-        F.percentile(F.col("__gap").cast("double"), F.lit(0.5))
-        .alias("_p50"),
-        F.percentile(F.col("__gap").cast("double"), F.lit(0.95))
-        .alias("_p95"),
-    )
-    n = F.col("n_gaps").cast("double")
-    sg = F.col("_sg").cast("double")
-    sgg = F.col("_sgg").cast("double")
-    mean_gap = F.when(F.col("n_gaps") > 0, sg / n)
+    out = ("n_obs", "n_gaps", "min_gap", "max_gap", "mean_gap", "p50_gap", "p95_gap", "cv_gap")
+    e = enter_points(df, ts_col, [], group_vars, out=out, keyed=True)
+    g = e.cols("xg")
+    gaps = (e.x.where("__xt0 IS NOT NULL")
+            .selectExpr(*g, "CAST(CAST(__xt0 AS TIMESTAMP) AS BIGINT) AS __t").distinct()
+            .selectExpr(*g, f"__t - lag(__t) {_over(g, '__t')} AS __gap"))
+    gd = "CAST(__gap AS DECIMAL(18,0))"
+    agg = _agg(gaps, g, {
+        "n_obs": "count(1)", "n_gaps": "count(__gap)", "min_gap": "min(__gap)",
+        "max_gap": "max(__gap)", "_sg": f"sum({gd})", "_sgg": f"sum({gd} * {gd})",
+        "_p50": "percentile(CAST(__gap AS DOUBLE), 0.5D)",
+        "_p95": "percentile(CAST(__gap AS DOUBLE), 0.95D)"})
+    n, sg, sgg = _doubles("n_gaps", "_sg", "_sgg")
     # population cv = sqrt(n·Σg² − (Σg)²) / Σg  (σ/μ with one fixed order)
-    cv = F.when(
-        (F.col("n_gaps") > 0) & (sg > 0.0),
-        F.sqrt(F.greatest(F.lit(0.0), n * sgg - sg * sg)) / sg,
-    )
-    return agg.select(
-        *g,
-        "n_obs",
-        "n_gaps",
-        "min_gap",
-        "max_gap",
-        F.round(mean_gap, 6).alias("mean_gap"),
-        F.round("_p50", 6).alias("p50_gap"),
-        F.round("_p95", 6).alias("p95_gap"),
-        F.round(cv, 6).alias("cv_gap"),
-    )
+    cv = f"sqrt(greatest(0D, {n} * {sgg} - {sg} * {sg})) / {sg}"
+    return agg.selectExpr(
+        *e.user(*g), *out[:4], f"round(CASE WHEN n_gaps > 0 THEN {sg} / {n} END, 6) AS mean_gap",
+        "round(_p50, 6) AS p50_gap", "round(_p95, 6) AS p95_gap",
+        f"round(CASE WHEN n_gaps > 0 AND {sg} > 0 THEN {cv} END, 6) AS cv_gap")
+
+
+def _phase(period: int, buckets: int, op: str) -> str:
+    """SQL of the phase bucket of the point time ``__t``: ``(epoch mod
+    period) ÷ (period/buckets)`` in integer arithmetic."""
+    if buckets < 1 or period < 1 or period % buckets != 0:
+        raise IntervalDataError(
+            f"{op}: need period >= buckets >= 1 with period % buckets == 0, "
+            f"got period={period} buckets={buckets}")
+    return (f"CAST(pmod(CAST(CAST(__t AS TIMESTAMP) AS BIGINT), {int(period)}) "
+            f"/ {period // buckets} AS BIGINT)")
+
+
+def _k_decimal(k: float, op: str) -> str:
+    """SQL of the 6-dp decimal threshold multiplier ``k`` (NaN and negative
+    ``k`` rejected)."""
+    if not (k == k) or k < 0:
+        raise IntervalDataError(f"{op}: k must be >= 0, got {k}")
+    return f"CAST({_dbl(round(float(k), 6))} AS {_DEC})"
+
+
+def _profile(pts: DataFrame, g: Sequence[str], phase: str) -> DataFrame:
+    """Per (key, phase) of the collapsed points ``pts``: ``n_obs``,
+    ``mean_v`` and the population ``sd_v`` (NULL when n_obs < 2)."""
+    agg = _agg(pts.selectExpr(*g, f"{phase} AS phase", "x"), [*g, "phase"],
+               {"n_obs": "count(1)", "_s1": "sum(x)", "_s2": "sum(x * x)"})
+    n, s1, s2 = _doubles("n_obs", "_s1", "_s2")
+    sd = f"sqrt(greatest(0D, {s2} / {n} - ({s1} / {n}) * ({s1} / {n})))"
+    return agg.selectExpr(*g, "phase", "n_obs", f"round({s1} / {n}, 6) AS mean_v",
+                          f"round(CASE WHEN n_obs >= 2 THEN {sd} END, 6) AS sd_v")
+
+
+def _seasonal_flag(e: Entry, pts: DataFrame, prof: DataFrame, ts_col: str, phase: str,
+                   k: str) -> DataFrame:
+    """The seasonal anomalies of the points ``pts`` (keys, time ``__t``,
+    6-dp decimal ``x``) against the profile ``prof`` (keys, ``phase``,
+    ``mean_v``, ``sd_v``): the flag compare runs in decimal, ``rz`` is one
+    fixed-order float. Output under the user's names of entry ``e``."""
+    g = e.cols("xg")
+    md, sd = f"CAST(mean_v AS {_DEC})", f"CAST(sd_v AS {_DEC})"
+    rz = f"CASE WHEN {sd} > 0 THEN CAST(x - {md} AS DOUBLE) / CAST({sd} AS DOUBLE) END"
+    return (pts.selectExpr(*g, "__t", f"{phase} AS phase", "x").join(prof, [*g, "phase"])
+            .where(f"CASE WHEN {sd} IS NULL THEN false ELSE abs(x - {md}) > {k} * {sd} END")
+            .selectExpr(*e.user(*g), f"__t AS {_q(ts_col)}", "phase", "CAST(x AS DOUBLE) AS x",
+                        "mean_v", "sd_v", f"round({rz}, 6) + 0D AS rz"))
 
 
 def seasonal_profile(
@@ -952,45 +782,11 @@ def seasonal_profile(
     nightly and broadcast at detection time. No window, no join, no
     UDF.
     """
-    if buckets < 1 or period < 1 or period % buckets != 0:
-        raise IntervalDataError(
-            "seasonal_profile: need period >= buckets >= 1 with "
-            f"period % buckets == 0, got period={period} buckets={buckets}")
-    if not group_vars:
-        raise IntervalSchemaError(
-            "seasonal_profile: group_vars must be non-empty")
-    for c in (ts_col, value_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(
-                f"seasonal_profile: missing column {c!r}")
-    from intervalaverage_spark.operators.changepoint import cusum_points
-
-    g = list(group_vars)
-    width = period // buckets
-    pts = cusum_points(df, ts_col, value_col, g)
-    t = F.col(ts_col).cast("timestamp").cast("long")
-    ph = pts.select(
-        *g,
-        (F.pmod(t, F.lit(period)) / F.lit(width)).cast("long").alias("phase"),
-        "x",
-    )
-    agg = ph.groupBy(*g, "phase").agg(
-        F.count(F.lit(1)).alias("n_obs"),
-        F.sum("x").alias("_s1"),
-        F.sum(F.col("x") * F.col("x")).alias("_s2"),
-    )
-    n = F.col("n_obs").cast("double")
-    s1 = F.col("_s1").cast("double")
-    s2 = F.col("_s2").cast("double")
-    sd = F.when(
-        F.col("n_obs") >= 2,
-        F.sqrt(F.greatest(F.lit(0.0), s2 / n - (s1 / n) * (s1 / n))),
-    )
-    return agg.select(
-        *g, "phase", "n_obs",
-        F.round(s1 / n, 6).alias("mean_v"),
-        F.round(sd, 6).alias("sd_v"),
-    )
+    phase = _phase(period, buckets, "seasonal_profile")
+    out = ("phase", "n_obs", "mean_v", "sd_v")
+    e = enter_points(df, ts_col, [value_col], group_vars, out=out, keyed=True)
+    g = e.cols("xg")
+    return _profile(_collapse(e.x, "__xt0", g), g, phase).selectExpr(*e.user(*g), *out)
 
 
 def seasonal_anomalies(
@@ -1016,38 +812,12 @@ def seasonal_anomalies(
     key-phase equi join back (profile is keys × buckets rows —
     broadcastable); no window.
     """
-    if not (k == k) or k < 0:
-        raise IntervalDataError(
-            f"seasonal_anomalies: k must be >= 0, got {k}")
-    from intervalaverage_spark.operators.changepoint import cusum_points
-
-    g = list(group_vars)
-    prof = seasonal_profile(df, ts_col, value_col, g, period, buckets)
-    width = period // buckets
-    pts = cusum_points(df, ts_col, value_col, g)
-    t = F.col(ts_col).cast("timestamp").cast("long")
-    ph = pts.select(
-        *g, ts_col,
-        (F.pmod(t, F.lit(period)) / F.lit(width)).cast("long").alias("phase"),
-        "x",
-    )
-    kd = F.lit(round(float(k), 6)).cast("decimal(18,6)")
-    md = F.col("mean_v").cast("decimal(18,6)")
-    sd = F.col("sd_v").cast("decimal(18,6)")
-    dev = F.abs(F.col("x") - md)
-    flagged = ph.join(prof, [*g, "phase"]).where(
-        F.when(sd.isNull(), F.lit(False)).otherwise(dev > kd * sd)
-    )
-    rz = F.when(
-        sd > 0,
-        (F.col("x") - md).cast("double") / sd.cast("double"),
-    )
-    return flagged.select(
-        *g, ts_col, "phase",
-        F.col("x").cast("double").alias("x"),
-        "mean_v", "sd_v",
-        (F.round(rz, 6) + F.lit(0.0)).alias("rz"),
-    )
+    kd = _k_decimal(k, "seasonal_anomalies")
+    phase = _phase(period, buckets, "seasonal_anomalies")
+    e = enter_points(df, ts_col, [value_col], group_vars, out=(ts_col, *_SEASONAL),
+                     keyed=True)
+    pts = _collapse(e.x, "__xt0", e.cols("xg"))
+    return _seasonal_flag(e, pts, _profile(pts, e.cols("xg"), phase), ts_col, phase, kd)
 
 
 def robust_anomalies(
@@ -1091,47 +861,18 @@ def robust_anomalies(
     right trade; for million-point single keys compose with the
     histogram sketch (functions/quantiles.py) instead.
     """
-    from intervalaverage_spark.operators.changepoint import cusum_points
-
-    if not group_vars:
-        raise IntervalSchemaError(
-            "robust_anomalies: group_vars must be non-empty")
-    for c in (ts_col, value_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(
-                f"robust_anomalies: missing column {c!r}")
-    if not (k == k) or k < 0:  # NaN or negative
-        raise IntervalDataError(
-            f"robust_anomalies: k must be >= 0, got {k}")
-    g = list(group_vars)
-    kd = F.lit(round(float(k), 6)).cast("decimal(18,6)")
-    pts = cusum_points(df, ts_col, value_col, g)
-
-    med = pts.groupBy(*g).agg(
-        F.round(F.percentile(F.col("x").cast("double"), F.lit(0.5)), 6)
-        .cast("decimal(18,6)").alias("__med")
-    )
-    dev = pts.join(med, g).select(
-        *g, ts_col, "x", "__med",
-        F.abs(F.col("x") - F.col("__med")).alias("__dev"),
-    )
-    mad = dev.groupBy(*g).agg(
-        F.round(F.percentile(F.col("__dev").cast("double"), F.lit(0.5)), 6)
-        .cast("decimal(18,6)").alias("__mad")
-    )
-    flagged = dev.join(mad, g).where(
-        F.col("__dev") > kd * F.col("__mad")
-    )
-    rz = F.when(
-        F.col("__mad") > 0,
-        (F.col("x") - F.col("__med")).cast("double")
-        / (F.lit(1.4826) * F.col("__mad").cast("double")),
-    )
-    return flagged.select(
-        *g,
-        ts_col,
-        F.col("x").cast("double").alias("x"),
-        F.col("__med").cast("double").alias("med"),
-        F.col("__mad").cast("double").alias("mad"),
-        (F.round(rz, 6) + F.lit(0.0)).alias("rz"),
-    )
+    kd = _k_decimal(k, "robust_anomalies")
+    e = enter_points(df, ts_col, [value_col], group_vars,
+                     out=(ts_col, "x", "med", "mad", "rz"), keyed=True)
+    g = e.cols("xg")
+    pts = _collapse(e.x, "__xt0", g)
+    med = _agg(pts, g, {"__med": f"CAST(round(percentile(CAST(x AS DOUBLE), 0.5D), 6) AS {_DEC})"})
+    dev = pts.join(med, g).selectExpr(*g, "__t", "x", "__med", "abs(x - __med) AS __dev")
+    mad = _agg(dev, g,
+               {"__mad": f"CAST(round(percentile(CAST(__dev AS DOUBLE), 0.5D), 6) AS {_DEC})"})
+    rz = ("CASE WHEN __mad > 0 "
+          "THEN CAST(x - __med AS DOUBLE) / (1.4826D * CAST(__mad AS DOUBLE)) END")
+    return dev.join(mad, g).where(f"__dev > {kd} * __mad").selectExpr(
+        *e.user(*g), f"__t AS {_q(ts_col)}", "CAST(x AS DOUBLE) AS x",
+        "CAST(__med AS DOUBLE) AS med", "CAST(__mad AS DOUBLE) AS mad",
+        f"round({rz}, 6) + 0D AS rz")

@@ -36,7 +36,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 from intervalaverage_spark.plans.slices import time_sliced
-from intervalaverage_spark.validation import IntervalSchemaError, _q
+from intervalaverage_spark.validation import IntervalSchemaError, _q, check_unique_ts
 
 
 def asof_join(
@@ -86,8 +86,6 @@ def asof_join(
     if clash:
         raise IntervalSchemaError(f"suffix {suffix!r} collides with left columns {clash}")
     if validate:
-        from intervalaverage_spark.operators.analytics import check_unique_ts
-
         check_unique_ts(right, right_ts, on)
 
     # both sides under internal names: keys __k<i>, time __t (negated for

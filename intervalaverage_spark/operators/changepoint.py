@@ -42,13 +42,29 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.validation import IntervalSchemaError, _agg, _over, _q, enter_points
 
-_DEC = "decimal(18,6)"
+_DEC = "DECIMAL(18,6)"
 _OUT_COLS = ("x", "s_pos", "s_neg", "alarm")
+
+
+def _dbl(v: float) -> str:
+    """SQL of the double ``v``, exactly (its repr round-trips)."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def _collapse(x: DataFrame, t: str, keys: Sequence[str]) -> DataFrame:
+    """One row per (``keys``, ``t``) of an entered frame: ``(…keys, __t, x)``
+    with ``__t`` the SQL time ``t`` and ``x`` the 6-dp decimal mean of the
+    non-NULL values ``__xv0`` (exact decimal sum → one IEEE divide → 6-dp
+    round → decimal). Collapsing duplicates makes a per-key window order
+    TOTAL — the precondition for determinism and the prefix identity."""
+    s = _agg(x.where("__xv0 IS NOT NULL"), [*keys, f"{t} AS __t"],
+             {"_sx": f"sum(CAST(round(CAST(__xv0 AS DOUBLE), 6) AS {_DEC}))",
+              "_cn": "count(1)"})
+    return s.selectExpr(*keys, "__t", f"CAST(round(CAST(_sx AS DOUBLE) / _cn, 6) AS {_DEC}) AS x")
 
 
 def cusum_points(
@@ -57,24 +73,11 @@ def cusum_points(
     value_col: str,
     group_vars: Sequence[str],
 ) -> DataFrame:
-    """One row per (key, ts): the 6-dp decimal mean of ``value_col``
-    (exact decimal sum → one IEEE divide → 6-dp round → decimal).
-    Collapsing duplicates makes the detector's window order TOTAL —
-    the precondition for determinism and the prefix identity."""
-    g = list(group_vars)
-    xd = F.round(F.col(value_col).cast("double"), 6).cast(_DEC)
-    return (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(*g, ts_col)
-        .agg(F.sum(xd).alias("_sx"), F.count(F.lit(1)).alias("_cn"))
-        .select(
-            *g,
-            ts_col,
-            F.round(
-                F.col("_sx").cast("double") / F.col("_cn"), 6
-            ).cast(_DEC).alias("x"),
-        )
-    )
+    """One row per (key, ts): the 6-dp decimal mean of ``value_col`` as
+    ``x`` — :func:`_collapse` on the raw ``ts_col``."""
+    e = enter_points(df, ts_col, [value_col], group_vars)
+    g = e.cols("xg")
+    return _collapse(e.x, "__xt0", g).selectExpr(*e.user(*g), f"__t AS {_q(ts_col)}", "x")
 
 
 def cusum_calibration_from_points(
@@ -89,21 +92,14 @@ def cusum_calibration_from_points(
     offline-calibration artifact the STREAMING detector consumes
     (streaming/cusum_stream.py): calibrate on history, monitor the
     stream against it."""
-    g = list(group_vars)
-    stats = pts.groupBy(*g).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("x").alias("_s1"),
-        F.sum(F.col("x") * F.col("x")).alias("_s2"),
-    )
-    mean = F.col("_s1").cast("double") / F.col("_n")
-    ex2 = F.col("_s2").cast("double") / F.col("_n")
-    sigma = F.sqrt(F.greatest(F.lit(0.0), ex2 - mean * mean))
-    return stats.select(
-        *g,
-        F.round(mean, 6).cast(_DEC).alias("mu"),
-        F.round(sigma * kappa_mult, 6).cast(_DEC).alias("kappa"),
-        F.round(sigma * h_mult, 6).cast(_DEC).alias("h"),
-    )
+    g = [*map(_q, group_vars)]
+    stats = _agg(pts, g, {"_n": "count(1)", "_s1": "sum(x)", "_s2": "sum(x * x)"})
+    mean = "(CAST(_s1 AS DOUBLE) / _n)"
+    sigma = f"sqrt(greatest(0D, CAST(_s2 AS DOUBLE) / _n - {mean} * {mean}))"
+    return stats.selectExpr(
+        *g, f"CAST(round({mean}, 6) AS {_DEC}) AS mu",
+        f"CAST(round({sigma} * {_dbl(kappa_mult)}, 6) AS {_DEC}) AS kappa",
+        f"CAST(round({sigma} * {_dbl(h_mult)}, 6) AS {_DEC}) AS h")
 
 
 def cusum(
@@ -137,56 +133,25 @@ def cusum(
         raise IntervalSchemaError(
             f"cusum: h_mult must be > 0, got {h_mult}"
         )
-    if not group_vars:
-        raise IntervalSchemaError("cusum: group_vars must be non-empty")
-    for c in (ts_col, value_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"cusum: missing column {c!r}")
-    clash = [c for c in _OUT_COLS if c in df.columns]
-    if clash:
+    e = enter_points(df, ts_col, [value_col], group_vars, keyed=True,
+                     out=(ts_col, "x", "s_pos", "s_neg", "h", "alarm"))
+    if clash := [c for c in _OUT_COLS if c in df.columns]:
         raise IntervalSchemaError(
             f"cusum: input columns clash with output names {clash}"
         )
-
-    g = list(group_vars)
-    pts = cusum_points(df, ts_col, value_col, g)
+    g = e.cols("xg")
+    pts = _collapse(e.x, "__xt0", g)
     cal = cusum_calibration_from_points(pts, g, kappa_mult, h_mult)
-    cal = cal.select(
-        *g,
-        F.col("mu").alias("_mu"),
-        F.col("kappa").alias("_kappa"),
-        F.col("h").alias("_h"),
-    )
-
-    w = Window.partitionBy(*g).orderBy(ts_col)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    d_pos = F.col("x") - F.col("_mu") - F.col("_kappa")
-    d_neg = F.col("_mu") - F.col("_kappa") - F.col("x")
-    zero = F.lit(0).cast(_DEC)
-
-    out = (
-        pts.join(cal, g)
-        .withColumn("_pp", F.sum(d_pos).over(run))
-        .withColumn("_pn", F.sum(d_neg).over(run))
-        .withColumn(
-            "_sp", F.col("_pp") - F.least(zero, F.min("_pp").over(run))
-        )
-        .withColumn(
-            "_sn", F.col("_pn") - F.least(zero, F.min("_pn").over(run))
-        )
-        .withColumn(
-            "alarm",
-            (F.col("_sp") > F.col("_h")) | (F.col("_sn") > F.col("_h")),
-        )
-    )
+    run = _over(g, "__t", "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
+    out = (pts.join(cal, g)
+           .selectExpr("*", f"sum(x - mu - kappa) {run} AS _pp",
+                       f"sum(mu - kappa - x) {run} AS _pn")
+           .selectExpr("*", *(f"_p{s} - least(CAST(0 AS {_DEC}), min(_p{s}) {run}) AS _s{s}"
+                              for s in "pn"))
+           .selectExpr("*", "_sp > h OR _sn > h AS alarm"))
     if alarms_only:
-        out = out.where(F.col("alarm"))
-    return out.select(
-        *g,
-        ts_col,
-        F.col("x").cast("double").alias("x"),
-        F.round(F.col("_sp").cast("double"), 6).alias("s_pos"),
-        F.round(F.col("_sn").cast("double"), 6).alias("s_neg"),
-        F.round(F.col("_h").cast("double"), 6).alias("h"),
-        "alarm",
-    )
+        out = out.where("alarm")
+    return out.selectExpr(
+        *e.user(*g), f"__t AS {_q(ts_col)}", "CAST(x AS DOUBLE) AS x",
+        "round(CAST(_sp AS DOUBLE), 6) AS s_pos", "round(CAST(_sn AS DOUBLE), 6) AS s_neg",
+        "round(CAST(h AS DOUBLE), 6) AS h", "alarm")

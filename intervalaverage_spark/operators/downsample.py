@@ -33,11 +33,33 @@ from collections.abc import Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from intervalaverage_spark.plans.rangejoin import fdiv
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.plans.rangejoin import fdiv_sql
+from intervalaverage_spark.validation import IntervalSchemaError, _agg, enter_points
+
+#: the M4 state columns after the keys and bucket
+M4_COLS = ("t_first", "v_first", "t_last", "v_last", "t_min", "v_min", "t_max", "v_max",
+           "n_points")
+
+
+def _m4(x: DataFrame, keys: Sequence[str], bucket: str, tv: Sequence[tuple[str, str]],
+        n: str) -> DataFrame:
+    """Per (``keys``, ``bucket``) the M4 state of the (time, value) SQL
+    pairs ``tv`` — first, last, min, max — and the point count ``n``, via
+    lexicographic struct min/max: (t, v) orders by time for first/last,
+    (v, t) by value then earliest time — a deterministic tie-break. NULL
+    structs (NULL v) are ignored by min/max."""
+    def pick(f: str, i: int, tv_order: bool) -> str:
+        t, v = tv[i]
+        fields = f"'t', {t}, 'v', {v}" if tv_order else f"'v', {v}, 't', {t}"
+        return f"{f}(CASE WHEN {v} IS NOT NULL THEN named_struct({fields}) END)"
+
+    agg = _agg(x, [*keys, f"{bucket} AS bucket"], {
+        "__f": pick("min", 0, True), "__l": pick("max", 1, True),
+        "__mn": pick("min", 2, False), "__mx": pick("max", 3, False), "n_points": n})
+    return agg.selectExpr(*keys, "bucket", *(f"__{s}.{c} AS {c}_{p}" for s, p in (
+        ("f", "first"), ("l", "last"), ("mn", "min"), ("mx", "max")) for c in "tv"), "n_points")
 
 
 def m4_downsample(
@@ -54,38 +76,13 @@ def m4_downsample(
     Output: group_vars…, bucket, t_first, v_first, t_last, v_last,
     t_min, v_min, t_max, v_max, n_points.
     """
-    for c in (ts_col, value_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"missing column {c!r}")
+    e = enter_points(df, ts_col, [value_col], group_vars, out=("bucket", *M4_COLS))
     if bucket_width <= 0:
         raise IntervalSchemaError(f"bucket_width must be positive, got {bucket_width}")
-    group_vars = list(group_vars)
-    t = F.col(ts_col).cast("long")
-    v = F.col(value_col)
-    nn = v.isNotNull()
-    # lexicographic struct min/max: (v, t) orders by value then earliest
-    # timestamp — deterministic tie-break; (t, v) orders by time for
-    # first/last. NULL structs (null v) are ignored by min/max.
-    vt = F.when(nn, F.struct(v.alias("v"), t.alias("t")))
-    tv = F.when(nn, F.struct(t.alias("t"), v.alias("v")))
-    agg = (
-        df.groupBy(*group_vars, fdiv(t, bucket_width).alias("bucket"))
-        .agg(
-            F.min(tv).alias("__f"),
-            F.max(tv).alias("__l"),
-            F.min(vt).alias("__mn"),
-            F.max(vt).alias("__mx"),
-            F.count(F.lit(1)).alias("n_points"),
-        )
-    )
-    return agg.select(
-        *group_vars, "bucket",
-        F.col("__f.t").alias("t_first"), F.col("__f.v").alias("v_first"),
-        F.col("__l.t").alias("t_last"), F.col("__l.v").alias("v_last"),
-        F.col("__mn.t").alias("t_min"), F.col("__mn.v").alias("v_min"),
-        F.col("__mx.t").alias("t_max"), F.col("__mx.v").alias("v_max"),
-        "n_points",
-    )
+    g = e.cols("xg")
+    t = "CAST(__xt0 AS BIGINT)"
+    return _m4(e.x, g, fdiv_sql(t, str(int(bucket_width))), [(t, "__xv0")] * 4,
+               "count(1)").selectExpr(*e.user(*g), "bucket", *M4_COLS)
 
 
 def m4_cascade(
@@ -106,36 +103,11 @@ def m4_cascade(
     if to_width % from_width:
         raise IntervalSchemaError(
             f"{to_width} not a multiple of {from_width}: M4 levels must tile")
-    group_vars = list(group_vars)
-    for c in ("bucket", "t_first", "v_first", "t_last", "v_last",
-              "t_min", "v_min", "t_max", "v_max", "n_points", *group_vars):
-        if c not in state.columns:
-            raise IntervalSchemaError(f"missing M4 state column {c!r}")
-    k = fdiv(F.col("bucket") * from_width, to_width)
-
-    def vt(t_c: str, v_c: str):
-        nn = F.col(v_c).isNotNull()
-        return F.when(nn, F.struct(F.col(v_c).alias("v"), F.col(t_c).alias("t")))
-
-    def tv(t_c: str, v_c: str):
-        nn = F.col(v_c).isNotNull()
-        return F.when(nn, F.struct(F.col(t_c).alias("t"), F.col(v_c).alias("v")))
-
-    agg = state.groupBy(*group_vars, k.alias("bucket")).agg(
-        F.min(tv("t_first", "v_first")).alias("__f"),
-        F.max(tv("t_last", "v_last")).alias("__l"),
-        F.min(vt("t_min", "v_min")).alias("__mn"),
-        F.max(vt("t_max", "v_max")).alias("__mx"),
-        F.sum("n_points").alias("n_points"),
-    )
-    return agg.select(
-        *group_vars, "bucket",
-        F.col("__f.t").alias("t_first"), F.col("__f.v").alias("v_first"),
-        F.col("__l.t").alias("t_last"), F.col("__l.v").alias("v_last"),
-        F.col("__mn.t").alias("t_min"), F.col("__mn.v").alias("v_min"),
-        F.col("__mx.t").alias("t_max"), F.col("__mx.v").alias("v_max"),
-        "n_points",
-    )
+    e = enter_points(state, "bucket", M4_COLS, group_vars, label="M4 state ")
+    g, c = e.cols("xg"), e.cols("xv")
+    bucket = fdiv_sql(f"__xt0 * {int(from_width)}", str(int(to_width)))
+    return _m4(e.x, g, bucket, [(c[i], c[i + 1]) for i in range(0, 8, 2)],
+               f"sum({c[8]})").selectExpr(*e.user(*g), "bucket", *M4_COLS)
 
 
 def lttb_numpy(t: np.ndarray, v: np.ndarray, n_out: int) -> np.ndarray:
@@ -185,31 +157,20 @@ def lttb(
     dominant points of each (group…) series. NULL values are dropped
     first (they carry no triangle area). Output schema: group_vars…,
     ts_col (long), value_col (double)."""
-    for c in (ts_col, value_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"missing column {c!r}")
     if n_out < 3:
         raise IntervalSchemaError(f"n_out must be >= 3, got {n_out}")
-    group_vars = list(group_vars)
-    if not group_vars:
-        raise IntervalSchemaError("lttb needs >=1 group var (per-series operator)")
-    slim = df.select(
-        *group_vars,
-        F.col(ts_col).cast("long").alias(ts_col),
-        F.col(value_col).cast("double").alias(value_col),
-    ).filter(F.col(value_col).isNotNull())
-    schema = T.StructType(
-        [slim.schema[g] for g in group_vars]
-        + [T.StructField(ts_col, T.LongType()), T.StructField(value_col, T.DoubleType())]
-    )
+    e = enter_points(df, ts_col, [value_col], group_vars, keyed=True)
+    g = e.cols("xg")
+    slim = e.x.selectExpr(*g, "CAST(__xt0 AS BIGINT) AS __xt0",
+                          "CAST(__xv0 AS DOUBLE) AS __xv0").where("__xv0 IS NOT NULL")
+    schema = T.StructType([slim.schema[c] for c in g] + [
+        T.StructField("__xt0", T.LongType()), T.StructField("__xv0", T.DoubleType())])
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
-        idx = lttb_numpy(
-            pdf[ts_col].to_numpy(np.float64),
-            pdf[value_col].to_numpy(np.float64),
-            n_out,
-        )
-        return pdf.iloc[idx][[*group_vars, ts_col, value_col]]
+        pdf = pdf.sort_values("__xt0", kind="mergesort").reset_index(drop=True)
+        idx = lttb_numpy(pdf["__xt0"].to_numpy(np.float64), pdf["__xv0"].to_numpy(np.float64),
+                         n_out)
+        return pdf.iloc[idx][[*g, "__xt0", "__xv0"]]
 
-    return slim.groupBy(*group_vars).applyInPandas(_one, schema)
+    return slim.groupBy(*g).applyInPandas(_one, schema).selectExpr(
+        *e.user(*g, "__xt0", "__xv0"))

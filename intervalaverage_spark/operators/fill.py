@@ -29,17 +29,16 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from intervalaverage_spark.plans.slices import time_sliced
-from intervalaverage_spark.validation import IntervalSchemaError, _q
+from intervalaverage_spark.validation import Entry, _q, enter_points
 
 #: per scan direction: window order, the bucket's pick, and the carry scan
 _DIRS = {"prev": ("", "max_by", "back"), "next": (" DESC", "min_by", "fwd")}
 
 
-def _order_distance(df: DataFrame, order_col: str, bucketed: bool) -> str:
+def _order_distance(e: Entry, bucketed: bool, double: bool = False) -> str:
     """SQL of the order used for ``limit`` distances and carried times.
     Numeric order columns keep their NATIVE type on the flat path (a long
     cast would silently truncate a double order column, changing limit
@@ -48,13 +47,15 @@ def _order_distance(df: DataFrame, order_col: str, bucketed: bool) -> str:
     integer ``limit``. Date columns go through ``unix_date`` (epoch DAYS):
     Spark 3+/4 forbids a date→numeric cast outright, and the day unit is
     what a daily-grid ``limit`` means. The bucketed path always long-izes
-    the order: its carry times are long."""
-    dt, o = df.schema[order_col].dataType, _q(order_col)
-    if isinstance(dt, T.DateType):
-        return f"unix_date({o})"
-    if bucketed or isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return f"CAST({o} AS BIGINT)"
-    return o
+    the order: its carry times are long. ``double`` casts the native
+    order (days for a date) to DOUBLE — interpolation weights."""
+    if e.is_date:
+        o = "unix_date(__xt0)"
+    elif double or not (bucketed or e.types["__xt0"].startswith("timestamp")):
+        o = "__xt0"
+    else:
+        o = "CAST(__xt0 AS BIGINT)"
+    return f"CAST({o} AS DOUBLE)" if double else o
 
 
 def _fill(
@@ -64,28 +65,27 @@ def _fill(
     group_vars: Sequence[str],
     out_suffix: str,
     bucket_width: int | None,
-    t: str,
     dirs: Sequence[str],
-    emit: Callable[[str, dict[str, tuple[str, str]]], str],
+    emit: Callable[[str, dict[str, tuple[str, str]], str], str],
+    double: bool = False,
 ) -> DataFrame:
-    """``df`` plus ``<v><out_suffix>`` = ``emit(v, seen)`` per value column,
-    where ``seen[d]`` is the SQL (value, ``t``) of the nearest non-NULL
-    observation in direction ``d`` of ``dirs`` ("prev": at or before the
-    row, "next": at or after it) — one window per direction, the carry
-    from other buckets filling in when ``bucket_width`` slices them."""
-    group_vars, value_cols = list(group_vars), list(value_cols)
-    for c in (order_col, *value_cols, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"missing column {c!r}")
-    clash = [f"{v}{out_suffix}" for v in value_cols if f"{v}{out_suffix}" in df.columns]
-    if clash:
-        raise IntervalSchemaError(f"output column(s) {clash} already exist")
-    vs = [*map(_q, value_cols)]
+    """``df`` plus ``<v><out_suffix>`` = ``emit(v, seen, t)`` per value
+    column, where ``t`` is the row's order (:func:`_order_distance`, as a
+    DOUBLE if ``double``) and ``seen[d]`` the SQL (value, ``t``) of the
+    nearest non-NULL observation in direction ``d`` of ``dirs`` ("prev":
+    at or before the row, "next": at or after it) — one window per
+    direction, the carry from other buckets filling in when
+    ``bucket_width`` slices them."""
+    value_cols = list(value_cols)
+    e = enter_points(df, order_col, value_cols, group_vars,
+                     out=[f"{v}{out_suffix}" for v in value_cols], keep=True)
+    t = _order_distance(e, bucket_width is not None, double)
+    vs = e.cols("xv")
 
     def window(p: str) -> dict[str, str]:
         out = {}
         for d in dirs:
-            w = f"OVER ({p} ORDER BY {_q(order_col)}{_DIRS[d][0]} ROWS UNBOUNDED PRECEDING)"
+            w = f"OVER ({p} ORDER BY __xt0{_DIRS[d][0]} ROWS UNBOUNDED PRECEDING)"
             for i, v in enumerate(vs):
                 out[f"__{d}v{i}"] = f"last({v}, true) {w}"
                 out[f"__{d}t{i}"] = f"last(CASE WHEN {v} IS NOT NULL THEN {t} END, true) {w}"
@@ -96,19 +96,19 @@ def _fill(
                           for d in dirs if _DIRS[d][2] == side for i in range(len(vs))}
 
     s = time_sliced(
-        df, [*map(_q, group_vars)], _order_distance(df, order_col, True), bucket_width, window,
+        e.x, e.cols("xg"), _order_distance(e, True), bucket_width, window,
         summary={f"__{d}b{i}": f"{_DIRS[d][1]}(named_struct('t', {t}, 'v', {v}), "
                                f"CASE WHEN {v} IS NOT NULL THEN {t} END)"
                  for d in dirs for i, v in enumerate(vs)},
         back=carry("back"), fwd=carry("fwd"))
     cols = []
-    for i, v in enumerate(value_cols):
+    for i, (v, name) in enumerate(zip(vs, value_cols)):
         seen = {d: (f"__{d}v{i}", f"__{d}t{i}") for d in dirs}
         if bucket_width is not None:
             seen = {d: (f"CASE WHEN {dt} IS NULL THEN __{d}c{i}.v ELSE {dv} END",
                         f"coalesce({dt}, __{d}c{i}.t)") for d, (dv, dt) in seen.items()}
-        cols.append(f"{emit(_q(v), seen)} AS {_q(v + out_suffix)}")
-    return s.selectExpr(*map(_q, df.columns), *cols)
+        cols.append(f"{emit(v, seen, t)} AS {_q(name + out_suffix)}")
+    return s.selectExpr(*e.restore(*df.columns), *cols)
 
 
 def locf(
@@ -129,13 +129,11 @@ def locf(
     path casts to long (its carry times are long), so it requires
     an integer order domain anyway. ``bucket_width``: time-sliced skew
     path (module docstring)."""
-    t = _order_distance(df, order_col, bucket_width is not None)
-
-    def emit(v: str, seen: dict[str, tuple[str, str]]) -> str:
+    def emit(v: str, seen: dict[str, tuple[str, str]], t: str) -> str:
         pv, pt = seen["prev"]
         return pv if limit is None else f"CASE WHEN {t} - {pt} <= {int(limit)} THEN {pv} END"
 
-    return _fill(df, order_col, value_cols, group_vars, out_suffix, bucket_width, t,
+    return _fill(df, order_col, value_cols, group_vars, out_suffix, bucket_width,
                  ["prev"], emit)
 
 
@@ -152,13 +150,11 @@ def nocb(
     order axis (same single-exchange plan, descending sort; same
     ``bucket_width`` skew path with the carry scanned from LATER
     buckets)."""
-    t = _order_distance(df, order_col, bucket_width is not None)
-
-    def emit(v: str, seen: dict[str, tuple[str, str]]) -> str:
+    def emit(v: str, seen: dict[str, tuple[str, str]], t: str) -> str:
         nv, nt = seen["next"]
         return nv if limit is None else f"CASE WHEN {nt} - {t} <= {int(limit)} THEN {nv} END"
 
-    return _fill(df, order_col, value_cols, group_vars, out_suffix, bucket_width, t,
+    return _fill(df, order_col, value_cols, group_vars, out_suffix, bucket_width,
                  ["next"], emit)
 
 
@@ -177,14 +173,14 @@ def interpolate_linear(
     Two windows (ascending + descending) over the SAME key partitioning —
     Catalyst plans one exchange and two sorts, still zero joins. With
     ``bucket_width`` the windows re-key by (key, bucket) and BOTH carry
-    directions come from one 1-row-per-bucket table (one extra join)."""
-    t = f"CAST({_q(order_col)} AS DOUBLE)"
-
-    def emit(v: str, seen: dict[str, tuple[str, str]]) -> str:
+    directions come from one 1-row-per-bucket table (one extra join).
+    A DATE order interpolates over epoch days, like the other fills'
+    ``limit``."""
+    def emit(v: str, seen: dict[str, tuple[str, str]], t: str) -> str:
         (pv, pt), (nv, nt) = seen["prev"], seen["next"]
         return (f"CASE WHEN {v} IS NOT NULL THEN CAST({v} AS DOUBLE) "
                 f"WHEN {pv} IS NOT NULL AND {nv} IS NOT NULL "
                 f"THEN {pv} + ({nv} - {pv}) * ({t} - {pt}) / ({nt} - {pt}) END")
 
-    return _fill(df, order_col, value_cols, group_vars, out_suffix, bucket_width, t,
-                 ["prev", "next"], emit)
+    return _fill(df, order_col, value_cols, group_vars, out_suffix, bucket_width,
+                 ["prev", "next"], emit, double=True)

@@ -34,10 +34,9 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from intervalaverage_spark.plans.slices import time_sliced
-from intervalaverage_spark.validation import IntervalSchemaError, _q
+from intervalaverage_spark.validation import IntervalSchemaError, _agg, _q, enter_points
 
 
 def sessionize(
@@ -53,15 +52,10 @@ def sessionize(
     timestamps share a session (distance 0 ≤ gap). ``bucket_width``
     selects the time-sliced hot-key path (module docstring) — identical
     ids, spread windows."""
-    group_vars = list(group_vars)
-    for c in (ts_col, *group_vars):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"missing column {c!r}")
-    if out_col in df.columns:
-        raise IntervalSchemaError(f"output column {out_col!r} already exists")
     if gap < 0:
         raise IntervalSchemaError(f"gap must be >= 0, got {gap}")
-    t, gap = f"CAST({_q(ts_col)} AS BIGINT)", int(gap)
+    e = enter_points(df, ts_col, [], group_vars, out=[out_col], keep=True)
+    t, gap = "CAST(__xt0 AS BIGINT)", int(gap)
 
     def merged(w: str) -> str:
         """A bucket merges iff its first time is within gap of the last time
@@ -69,14 +63,14 @@ def sessionize(
         return f"CASE WHEN __min - max(__max) {w} <= {gap} THEN 1 ELSE 0 END"
 
     s = time_sliced(
-        df, [*map(_q, group_vars)], t, bucket_width,
+        e.x, e.cols("xg"), t, bucket_width,
         window=lambda p: {"__lsid": (
             f"sum(CASE WHEN {t} - lag({t}) OVER ({p} ORDER BY {t}) <= {gap} THEN 0 ELSE 1 END) "
             f"OVER ({p} ORDER BY {t} ROWS UNBOUNDED PRECEDING)")},
         summary={"__min": f"min({t})", "__max": f"max({t})", "__n": "max(__lsid)"},
         back=lambda w: {"__smrg": merged(w), "__soff": f"coalesce(sum(__n - {merged(w)}) {w}, 0)"})
     sid = "__lsid" if bucket_width is None else "__soff + __lsid - __smrg"
-    return s.selectExpr(*map(_q, df.columns), f"{sid} AS {_q(out_col)}")
+    return s.selectExpr(*e.restore(*df.columns), f"{sid} AS {_q(out_col)}")
 
 
 def session_bounds(
@@ -93,20 +87,15 @@ def session_bounds(
     ``value_col``. The groupBy reuses the window's (key) partitioning —
     still a single exchange (flat path); ``bucket_width`` passes through
     to :func:`sessionize` for the hot-key keying."""
-    reserved = ["session_id", "session_start", "session_end", "n_events",
-                "duration"] + ([f"sum_{value_col}"] if value_col else [])
-    clash = [g for g in group_vars if g in reserved]
-    if clash:
-        raise IntervalSchemaError(
-            f"group_vars {clash} collide with reserved output column names "
-            f"{reserved}")
-    if value_col is not None and value_col not in df.columns:
-        raise IntervalSchemaError(f"missing column {value_col!r}")
-    s = sessionize(df, ts_col, gap, group_vars, bucket_width=bucket_width)
-    t = f"CAST({_q(ts_col)} AS BIGINT)"
-    aggs = [f"min({t}) AS session_start", f"max({t}) AS session_end", "count(1) AS n_events"]
-    if value_col is not None:
-        aggs.append(f"sum({_q(value_col)}) AS {_q('sum_' + value_col)}")
-    return (s.groupBy(*(F.expr(_q(c)) for c in [*group_vars, "session_id"]))
-            .agg(*map(F.expr, aggs))
-            .selectExpr("*", "session_end - session_start + 1 AS duration"))
+    sums = [f"sum_{value_col}"] if value_col else []
+    out = ["session_id", "session_start", "session_end", "n_events", "duration", *sums]
+    e = enter_points(df, ts_col, [value_col] if value_col else [], group_vars, out=out)
+    g = e.cols("xg")
+    s = sessionize(e.x, "__xt0", gap, g, bucket_width=bucket_width)
+    aggs = {"session_start": "min(CAST(__xt0 AS BIGINT))",
+            "session_end": "max(CAST(__xt0 AS BIGINT))", "n_events": "count(1)"}
+    if value_col:
+        aggs["__sum"] = "sum(__xv0)"
+    return _agg(s, [*g, "session_id"], aggs).selectExpr(
+        *e.user(*g), *out[:4], *(f"__sum AS {_q(c)}" for c in sums),
+        "session_end - session_start + 1 AS duration")

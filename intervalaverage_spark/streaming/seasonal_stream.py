@@ -32,9 +32,10 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from intervalaverage_spark.validation import IntervalDataError, IntervalSchemaError
+from intervalaverage_spark.operators.analytics import _SEASONAL, _k_decimal, _phase, _seasonal_flag
+from intervalaverage_spark.operators.changepoint import _DEC
+from intervalaverage_spark.validation import enter_points
 
 
 def streaming_seasonal_anomalies(
@@ -54,52 +55,13 @@ def streaming_seasonal_anomalies(
     mean_v, sd_v, rz)`` per anomalous OBSERVATION (see module
     docstring for the observation-level contract). Works identically
     on a batch ``stream_df`` — pure expressions + one static join."""
-    if buckets < 1 or period < 1 or period % buckets != 0:
-        raise IntervalDataError(
-            "streaming_seasonal_anomalies: need period >= buckets >= 1 "
-            f"with period % buckets == 0, got period={period} "
-            f"buckets={buckets}")
-    if not (k == k) or k < 0:
-        raise IntervalDataError(
-            f"streaming_seasonal_anomalies: k must be >= 0, got {k}")
-    g = list(group_vars)
-    if not g:
-        raise IntervalSchemaError(
-            "streaming_seasonal_anomalies: group_vars must be non-empty")
-    for c in (ts_col, value_col, *g):
-        if c not in stream_df.columns:
-            raise IntervalSchemaError(
-                f"streaming_seasonal_anomalies: missing column {c!r}")
-    for c in (*g, "phase", "mean_v", "sd_v"):
-        if c not in profile_df.columns:
-            raise IntervalSchemaError(
-                "streaming_seasonal_anomalies: profile missing column "
-                f"{c!r}")
-    width = period // buckets
-    t = F.col(ts_col).cast("timestamp").cast("long")
-    obs = stream_df.where(F.col(value_col).isNotNull()).select(
-        *g,
-        ts_col,
-        (F.pmod(t, F.lit(period)) / F.lit(width)).cast("long").alias("phase"),
-        F.round(F.col(value_col).cast("double"), 6)
-        .cast("decimal(18,6)").alias("x"),
-    )
-    prof = profile_df.select(*g, "phase", "mean_v", "sd_v")
-    kd = F.lit(round(float(k), 6)).cast("decimal(18,6)")
-    md = F.col("mean_v").cast("decimal(18,6)")
-    sd = F.col("sd_v").cast("decimal(18,6)")
-    dev = F.abs(F.col("x") - md)
-    rz = F.when(
-        sd > 0,
-        (F.col("x") - md).cast("double") / sd.cast("double"),
-    )
-    return (
-        obs.join(prof, [*g, "phase"])
-        .where(F.when(sd.isNull(), F.lit(False)).otherwise(dev > kd * sd))
-        .select(
-            *g, ts_col, "phase",
-            F.col("x").cast("double").alias("x"),
-            "mean_v", "sd_v",
-            (F.round(rz, 6) + F.lit(0.0)).alias("rz"),
-        )
-    )
+    op = "streaming_seasonal_anomalies"
+    phase, kd = _phase(period, buckets, op), _k_decimal(k, op)
+    e = enter_points(stream_df, ts_col, [value_col], group_vars, out=(ts_col, *_SEASONAL),
+                     keyed=True)
+    p = enter_points(profile_df, "phase", ["mean_v", "sd_v"], group_vars, label="profile ")
+    g = e.cols("xg")
+    pts = e.x.where("__xv0 IS NOT NULL").selectExpr(
+        *g, "__xt0 AS __t", f"CAST(round(CAST(__xv0 AS DOUBLE), 6) AS {_DEC}) AS x")
+    prof = p.x.selectExpr(*g, "__xt0 AS phase", "__xv0 AS mean_v", "__xv1 AS sd_v")
+    return _seasonal_flag(e, pts, prof, ts_col, phase, kd)

@@ -7,7 +7,9 @@ columns an operator reads to internal names in one quoted ``selectExpr``,
 and ONE Spark job per table for the data-dependent checks. Kernels are SQL
 text over the internal names, and :class:`Entry` restores the user's names
 in the final projection: no user name is ever parsed as a column path, so
-any name works (``a.b``, ``g`x``, ``ws``, …).
+any name works (``a.b``, ``g`x``, ``ws``, …). The point-series operators
+(the series analytics, fills, sessions, changepoint and downsampling) enter
+the same way through :func:`enter_points`.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from collections.abc import Mapping, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -45,6 +48,50 @@ def _over(keys: Sequence[str], order: str, frame: str = "") -> str:
     """SQL window clause partitioned by the SQL expressions ``keys``."""
     part = f"PARTITION BY {', '.join(keys)} " if keys else ""
     return f"OVER ({part}ORDER BY {order} {frame})"
+
+
+def _agg(df: DataFrame, keys: Sequence[str], aggs: Mapping[str, str]) -> DataFrame:
+    """``df`` grouped by the SQL expressions ``keys``: one row per group with
+    the keys and the SQL aggregate ``aggs[name]`` as each ``name``."""
+    return df.groupBy(*map(F.expr, keys)).agg(*(F.expr(f"{e} AS {a}") for a, e in aggs.items()))
+
+
+def _roles(p: str, **roles: Sequence[str]) -> dict[str, str]:
+    """Internal name → user name of side ``p``'s columns: ``__<p><role><i>``."""
+    return {f"__{p}{k}{i}": c for k, cs in roles.items() for i, c in enumerate(cs)}
+
+
+def _aliased(df: DataFrame, names: Mapping[str, str], *extra: str) -> DataFrame:
+    """``df``'s columns under internal ``names`` (internal → user), then the
+    select items ``extra``: one quoted projection."""
+    return df.selectExpr(*(f"{_q(c)} AS {a}" for a, c in names.items()), *extra)
+
+
+def _no_collision(out: Sequence[str], carried: Sequence[str]) -> None:
+    """Raise unless the names ``out`` an operator adds differ from each
+    other and from the ``carried`` names its output keeps."""
+    shown = [*out, *carried]
+    if dup := sorted({c for c in out if shown.count(c) > 1}):
+        raise IntervalSchemaError(
+            f"duplicate output column name(s) {dup}: the name already exists among the "
+            "carried columns or collides with another output column")
+
+
+def check_unique_ts(df: DataFrame, ts_col: str, group_vars: Sequence[str]) -> None:
+    """Raise :class:`IntervalDataError` if any (key, ts) appears more than
+    once — the eager analogue of the reference's non-overlap validation
+    (R/intervalaverage_functions.R:307-338, skippable there too). One
+    aggregate + head(1): the collect is bounded to a single row."""
+    cols = [*group_vars, ts_col]
+    dup = (df.selectExpr(*(f"{_q(c)} AS __c{i}" for i, c in enumerate(cols)))
+           .groupBy(*(f"__c{i}" for i in range(len(cols)))).count()
+           .where("count > 1").head(1))
+    if dup:
+        *values, n = dup[0]
+        raise IntervalDataError(
+            f"duplicate (key, {ts_col}) rows — e.g. {dict(zip(cols, values))} appears "
+            f"{n} times; the matched predecessor would be "
+            "sort-order-dependent. Dedup upstream or aggregate first.")
 
 
 def check_schema(
@@ -133,7 +180,9 @@ class Entry:
     """Inputs under internal names: side ``p`` (x, and y if given) holds
     group columns ``__pg0…``, carried columns ``__pc0…``, values ``__pv0…``
     and BIGINT bounds ``__ps``, ``__pe`` (dates as days). ``names`` maps them
-    to the user's names, ``types`` the bounds to the user's SQL types."""
+    to the user's names, ``types`` the bounds to the user's SQL types. A
+    point entry (:func:`enter_points`) has side x only, with its order
+    column ``__xt0`` in the user's type (``is_date`` if a DATE)."""
 
     x: DataFrame
     y: DataFrame | None
@@ -153,6 +202,14 @@ class Entry:
     def user(self, *cols: str) -> list[str]:
         """Select items restoring the user's names of internal ``cols``."""
         return [f"{c} AS {_q(self.names[c])}" for c in cols]
+
+    def restore(self, *cols: str) -> list[str]:
+        """Select items giving back the user's columns ``cols``, each read
+        from the internal name of its first role."""
+        first: dict[str, str] = {}
+        for a, c in self.names.items():
+            first.setdefault(c, a)
+        return self.user(*(first[c] for c in cols))
 
     def bound(self, sql: str, name: str, like: str | None = None) -> str:
         """Select item of the BIGINT bound ``sql`` as ``name``: a DATE for
@@ -191,26 +248,51 @@ def enter(
     if collide := set(x_rest) & {*y_rest, *y_gv} if "y" in keep else set():
         raise IntervalSchemaError(
             f"non-key column name collision between x and y: {sorted(collide)}")
-    shown = [*out, *(y_gv if "y" in keep else x_gv), *x_rest, *y_rest]
-    if dup := sorted({c for c in out if shown.count(c) > 1}):
-        raise IntervalSchemaError(
-            f"output names {dup} (interval_vars_out or fixed output columns) collide "
-            "with each other or with carried columns")
+    _no_collision(out, [*(y_gv if "y" in keep else x_gv), *x_rest, *y_rest])
 
     names: dict[str, str] = {}
     types: dict[str, str] = {}
 
     def alias(df: DataFrame, p: str, iv, gv, rest, values) -> DataFrame:
-        cols = {f"__{p}{k}{i}": c for k, cs in (("g", gv), ("c", rest), ("v", values))
-                for i, c in enumerate(cs)}
+        cols = _roles(p, g=gv, c=rest, v=values)
         bounds = {f"__{p}s": iv[0], f"__{p}e": iv[1]}
         names.update(cols, **bounds)
         types.update({a: df.schema[c].dataType.simpleString() for a, c in bounds.items()})
         day = "datediff({}, DATE'" + _EPOCH + "')" if is_date else "{}"
-        return df.selectExpr(*(f"{_q(c)} AS {a}" for a, c in cols.items()),
-                             *(f"CAST({day.format(_q(c))} AS BIGINT) AS {a}"
-                               for a, c in bounds.items()))
+        return _aliased(df, cols, *(f"CAST({day.format(_q(c))} AS BIGINT) AS {a}"
+                                    for a, c in bounds.items()))
 
     return Entry(alias(x, "x", x_iv, x_gv, x_rest, value_vars),
                  None if y is None else alias(y, "y", y_iv, y_gv, y_rest, ()),
                  is_date, names, types)
+
+
+def enter_points(
+    df: DataFrame,
+    ts: str,
+    values: Sequence[str],
+    keys: Sequence[str],
+    out: Sequence[str] = (),
+    keep: bool = False,
+    keyed: bool = False,
+    label: str = "",
+) -> Entry:
+    """The point-series operators' entry: the checks, then ``df`` under
+    internal names in one quoted projection — keys ``__xg0…``, the order
+    column ``__xt0``, values ``__xv0…`` and, with ``keep``, every other
+    column ``__xc0…``. ``out`` are the names the operator adds, which must
+    differ from each other and from the names it carries: the keys, and
+    with ``keep`` every input column. ``keyed`` operators need a key;
+    ``label`` names the frame in the missing-column message."""
+    keys, values = list(keys), list(values)
+    if missing := [c for c in (ts, *values, *keys) if c not in df.columns]:
+        raise IntervalSchemaError(f"missing {label}column(s) {missing}")
+    if keyed and not keys:
+        raise IntervalSchemaError(
+            "group_vars must be non-empty (a per-series operator needs >= 1 group var)")
+    _no_collision(out, df.columns if keep else keys)
+    rest = [c for c in df.columns if c not in (ts, *values, *keys)] if keep else []
+    names = _roles("x", g=keys, t=[ts], v=values, c=rest)
+    dt = df.schema[ts].dataType
+    return Entry(_aliased(df, names), None,
+                 isinstance(dt, T.DateType), names, {"__xt0": dt.simpleString()})

@@ -222,3 +222,22 @@ def test_fill_limit_double_order_exact_on_flat_path(spark):
                 "o", ["v"], ["k"], limit=1).toPandas().sort_values("o")
     assert pd.isna(back["v_filled"].tolist()[0])
     assert back["v_filled"].tolist()[1] == 2.0
+
+
+@pytest.mark.parametrize("bw", [None, 3])
+def test_fills_take_date_orders_as_days(fill_df, bw):
+    """A DATE order column fills like its epoch-day number: limits count
+    days and interpolation weighs by days, flat and bucketed."""
+    _, df = fill_df
+    days = df.withColumn("t", (F.col("t") / 10).cast("int"))
+    dates = days.withColumn("t", F.date_add(F.lit("1970-01-01").cast("date"), F.col("t")))
+
+    def run(d, day):
+        out = interpolate_linear(
+            nocb(locf(d, "t", ["v"], ["k"], limit=2, out_suffix="_f", bucket_width=bw),
+                 "t", ["v"], ["k"], out_suffix="_b", bucket_width=bw),
+            "t", ["v"], ["k"], bucket_width=bw)
+        return sorted(out.selectExpr("k", f"{day} AS t", "v", "v_f", "v_b", "v_filled")
+                      .collect(), key=repr)
+
+    assert run(dates, "unix_date(t)") == run(days, "t")

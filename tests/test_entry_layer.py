@@ -16,13 +16,29 @@ from intervalaverage_spark import (
     is_overlapping,
     isolate_overlaps,
 )
-from intervalaverage_spark.operators.analytics import rate, rolling_decomposable
+from intervalaverage_spark.operators.analytics import (
+    autocorr,
+    cadence_stats,
+    rate,
+    robust_anomalies,
+    rolling,
+    rolling_decomposable,
+    rolling_minmax,
+    seasonal_anomalies,
+    seasonal_profile,
+    theil_sen,
+    trend,
+    windowed_percentiles,
+)
 from intervalaverage_spark.operators.asof import asof_join
+from intervalaverage_spark.operators.changepoint import cusum, cusum_points
 from intervalaverage_spark.operators.coalesce import interval_concurrency, interval_gaps
 from intervalaverage_spark.operators.difference import interval_difference
+from intervalaverage_spark.operators.downsample import M4_COLS, lttb, m4_downsample
 from intervalaverage_spark.operators.fill import interpolate_linear, locf, nocb
 from intervalaverage_spark.operators.overlap import overlap_flags
 from intervalaverage_spark.operators.sessions import session_bounds, sessionize
+from intervalaverage_spark.streaming.seasonal_stream import streaming_seasonal_anomalies
 from intervalaverage_spark.validation import IntervalSchemaError, _q
 from tests.conftest import _py4j_calls
 
@@ -142,8 +158,38 @@ POINT_OPS = {
 }
 
 
+#: the series analytics, changepoint and downsampling operators over the
+#: same frame; they take no ``bw``
+SERIES_OPS = {
+    "rolling-direct": lambda d, bw, k, t, v: rolling(d, t, v, 15, [k], aggs=("mean", "max")),
+    "rolling_minmax": lambda d, bw, k, t, v: rolling_minmax(d, t, v, 15, [k]),
+    "rolling_minmax-unique": lambda d, bw, k, t, v: rolling_minmax(
+        d, t, v, 15, [k], assume_unique_ts=True, validate=True),
+    "windowed_percentiles": lambda d, bw, k, t, v: windowed_percentiles(
+        d, t, v, 20, [0.5, 0.9], [k]),
+    "trend": lambda d, bw, k, t, v: trend(d, t, v, [k]),
+    "autocorr": lambda d, bw, k, t, v: autocorr(d, t, v, [k], max_lag=2),
+    "theil_sen": lambda d, bw, k, t, v: theil_sen(d, t, v, [k]),
+    "cadence_stats": lambda d, bw, k, t, v: cadence_stats(d, t, [k]),
+    "seasonal_profile": lambda d, bw, k, t, v: seasonal_profile(d, t, v, [k], 20, 4),
+    "seasonal_anomalies": lambda d, bw, k, t, v: seasonal_anomalies(d, t, v, [k], 20, 4, k=0.5),
+    "streaming_seasonal_anomalies": lambda d, bw, k, t, v: streaming_seasonal_anomalies(
+        d, seasonal_profile(d, t, v, [k], 20, 4), t, v, [k], 20, 4, k=0.5),
+    "robust_anomalies": lambda d, bw, k, t, v: robust_anomalies(d, t, v, [k], k=0.5),
+    "cusum": lambda d, bw, k, t, v: cusum(d, t, v, [k], alarms_only=False),
+    "cusum_points": lambda d, bw, k, t, v: cusum_points(d, t, v, [k]),
+    "m4": lambda d, bw, k, t, v: m4_downsample(d, t, v, 20, [k]),
+    "lttb": lambda d, bw, k, t, v: lttb(d, t, v, 3, [k]),
+}
+
+#: fixed output names that only look derived from the input names
+FIXED = {*M4_COLS, "mean_v", "sd_v"}
+
+
 def _renamed(col, names):
     """``col`` of a plain-name output under the key/order/value ``names``."""
+    if col in FIXED:
+        return col
     for plain, name in names.items():
         if col == plain or col.startswith(plain + "_"):
             return name + col[len(plain):]
@@ -160,17 +206,49 @@ def points(spark):
          for t in range(0, 60, 5 if k else 10)], "k long, t long, v double")
 
 
-@pytest.mark.parametrize("bw", [None, 10])
-@pytest.mark.parametrize("op", list(POINT_OPS))
+#: (op, bw): the point-series operators flat and bucketed, the series
+#: operators once
+POINT_CASES = [*((op, bw) for op in POINT_OPS for bw in (None, 10)),
+               *((op, None) for op in SERIES_OPS)]
+
+
+@pytest.mark.parametrize("op,bw", POINT_CASES, ids=[f"{op}-{bw}" for op, bw in POINT_CASES])
 @pytest.mark.parametrize("names", [{"k": "a.b", "t": "g`x", "v": "v.`w"},
                                    {"k": "g`x", "t": "a.b", "v": "x y"}],
                          ids=["dot-key", "dot-order"])
 def test_point_ops_any_name(points, op, bw, names):
     """A key, order or value column of any name gives the columns and rows
     of the plain-name run, flat and bucketed."""
-    want = _result(POINT_OPS[op](points, bw, "k", "t", "v"))
-    got = _result(POINT_OPS[op](points.withColumnsRenamed(names), bw,
-                                names["k"], names["t"], names["v"]))
+    build = {**POINT_OPS, **SERIES_OPS}[op]
+    want = _result(build(points, bw, "k", "t", "v"))
+    got = _result(build(points.withColumnsRenamed(names), bw,
+                        names["k"], names["t"], names["v"]))
+    assert got == ([_renamed(c, names) for c in want[0]], want[1])
+
+
+#: a key or order column named like an output (the operator raises a
+#: named error) or like an internal column (it gives the plain-name run)
+NAME_CLASHES = [("autocorr", {"k": "lag"}, True), ("seasonal_profile", {"k": "phase"}, True),
+                ("trend", {"k": "t0"}, True),
+                *((op, {"k": "__t"}, False) for op in ("trend", "theil_sen", "cadence_stats")),
+                *((op, {"t": "x"}, False) for op in ("autocorr", "seasonal_profile"))]
+
+
+@pytest.mark.parametrize("op,names,raises", NAME_CLASHES,
+                         ids=[f"{op}-{','.join(f'{r}={c}' for r, c in n.items())}"
+                              for op, n, _ in NAME_CLASHES])
+def test_series_ops_output_and_internal_names(points, op, names, raises):
+    """Output names among the key columns raise IntervalSchemaError; the
+    operators' internal names are free for the user."""
+    build = SERIES_OPS[op]
+    names = {"k": "k", "t": "t", "v": "v", **names}
+    renamed = points.withColumnsRenamed(names)
+    if raises:
+        with pytest.raises(IntervalSchemaError):
+            build(renamed, None, names["k"], names["t"], names["v"])
+        return
+    want = _result(build(points, None, "k", "t", "v"))
+    got = _result(build(renamed, None, names["k"], names["t"], names["v"]))
     assert got == ([_renamed(c, names) for c in want[0]], want[1])
 
 
@@ -188,3 +266,15 @@ def test_plans_build_in_few_py4j_calls(spark, monkeypatch):
     n_intersect = _py4j_calls(spark, monkeypatch, lambda: interval_intersect(
         x, y, {"s": "ys", "e": "ye"}, ["g"], validate=False, strategy="sortmerge"))
     assert n_isolate <= 300 and n_intersect <= 200, (n_isolate, n_intersect)
+
+
+def test_series_plans_build_in_few_py4j_calls(spark, monkeypatch):
+    """robust_anomalies and cusum are SQL text over internal names:
+    building their plans (one group, timestamp ts) takes at most half the
+    driver → JVM calls of the Column-built plans (787 and 1,216)."""
+    x = spark.createDataFrame([("a", datetime.datetime(2024, 1, 1), 1.0)],
+                              "g string, ts timestamp, v double")
+    x.schema  # noqa: B018 — the schema is fetched once, outside the count
+    n_robust = _py4j_calls(spark, monkeypatch, lambda: robust_anomalies(x, "ts", "v", ["g"]))
+    n_cusum = _py4j_calls(spark, monkeypatch, lambda: cusum(x, "ts", "v", ["g"]))
+    assert n_robust <= 393 and n_cusum <= 608, (n_robust, n_cusum)

@@ -31,12 +31,17 @@ from __future__ import annotations
 # leaves the hint unresolvable and the decorator raises UNSUPPORTED_SIGNATURE
 # at definition time (the round-6 regression).
 import math
+from collections.abc import Callable, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from intervalaverage_spark.validation import _aliased, _no_collision, _q, _roles
 
 #: mix constants (Knuth multiplicative hashing; public domain folklore)
 _A = 2654435761
@@ -116,8 +121,19 @@ def _norm(a: Column) -> Column:
     )
 
 
-def _dot(vec: Column, lits: list[float]) -> Column:
-    return _dot_lit(vec, lits)
+def _normed(e: DataFrame) -> DataFrame:
+    """Entered vectors ``e`` plus ``nrm``, the L2 norm of ``v``."""
+    return e.withColumn("nrm", _norm(F.col("v").cast("array<double>")))
+
+
+def _plus(df: DataFrame, names: dict[str, str], out: Sequence[str]) -> tuple[DataFrame, list]:
+    """The entry of a function that returns ``df`` plus the columns ``out``:
+    ``df`` with its columns ``names`` (internal → user) and every column as
+    ``__xc<i>``, and the select items (Columns) giving those back under
+    their names."""
+    _no_collision(out, df.columns)
+    keep = _roles("x", c=df.columns)
+    return _aliased(df, {**keep, **names}), [F.col(a).alias(c) for a, c in keep.items()]
 
 
 def _fold_dot_py(a, b):
@@ -140,7 +156,8 @@ def _rerank_cogroup(
     left: DataFrame, right: DataFrame, dim: int, exclude_self: bool,
 ) -> DataFrame:
     """Exact cosine scoring of all (query, candidate) pairs that share an
-    IVF cell — the kNN rerank as a CO-GROUPED Arrow kernel instead of an
+    IVF cell — rows ``(id, v, nrm, cell)`` of the entered queries ``left``
+    and index ``right`` — the kNN rerank as a CO-GROUPED Arrow kernel instead of an
     equi-join + per-pair interpreted fold.
 
     Why (round-8, guide §4.2/§2.3): the join materialized every candidate
@@ -160,17 +177,14 @@ def _rerank_cogroup(
     real scores for two same-but-odd-width vectors). Equality is pinned
     against the join-path output by fingerprint and by the DuckDB oracle
     rows (knn_join_embeddings / knn_join_self_embeddings)."""
-    import pyarrow as pa
-
-    q_t = left.schema["__knn_qid"].dataType.simpleString()
-    n_t = right.schema["__knn_nid"].dataType.simpleString()
+    q_t = left.schema["id"].dataType.simpleString()
+    n_t = right.schema["id"].dataType.simpleString()
     out_schema = f"q_id {q_t}, nn_id {n_t}, __c double"
 
     def _matrix(col):
         """(n×dim float64 matrix, None) on the regular fast path, or
         (None, list-of-python-lists) when any irregularity is present."""
         arr = col.combine_chunks()
-        import pyarrow.compute as pc
         if (arr.null_count == 0
                 and arr.values.null_count == 0
                 and pc.all(pc.equal(pc.list_value_length(arr), dim)).as_py()):
@@ -178,19 +192,18 @@ def _rerank_cogroup(
             return flat.astype(np.float64, copy=False).reshape(len(arr), dim), None
         return None, arr.to_pylist()
 
-    def score(lt: "pa.Table", rt: "pa.Table") -> "pa.Table":
-        import pyarrow as pa
+    def score(lt: pa.Table, rt: pa.Table) -> pa.Table:
         nq, ni = lt.num_rows, rt.num_rows
         if nq == 0 or ni == 0:
             return pa.table({
-                "q_id": pa.array([], type=lt.schema.field("__knn_qid").type),
-                "nn_id": pa.array([], type=rt.schema.field("__knn_nid").type),
+                "q_id": pa.array([], type=lt.schema.field("id").type),
+                "nn_id": pa.array([], type=rt.schema.field("id").type),
                 "__c": pa.array([], type=pa.float64()),
             })
-        qids, nids = lt.column("__knn_qid"), rt.column("__knn_nid")
-        qn_col, nb_col = lt.column("__knn_qn"), rt.column("__knn_nb")
-        Q, q_rows = _matrix(lt.column("__knn_qv"))
-        V, v_rows = _matrix(rt.column("__knn_nv"))
+        qids, nids = lt.column("id"), rt.column("id")
+        qn_col, nb_col = lt.column("nrm"), rt.column("nrm")
+        Q, q_rows = _matrix(lt.column("v"))
+        V, v_rows = _matrix(rt.column("v"))
         regular = (
             Q is not None and V is not None
             and qids.null_count == 0 and nids.null_count == 0
@@ -255,8 +268,8 @@ def _rerank_cogroup(
         })
 
     out = (
-        left.groupby("__knn_cell")
-        .cogroup(right.groupby("ivf_cell"))
+        left.groupby("cell")
+        .cogroup(right.groupby("cell"))
         .applyInArrow(score, schema=out_schema)
     )
     return out.select(
@@ -275,7 +288,7 @@ def srp_bucket(vec: Column, dims: int, band: int, planes: int = 8) -> Column:
     """Bucket id for one band: integer whose bit p is sign(vec · w_bp)."""
     out = F.lit(0).cast("long")
     for p in range(planes):
-        bit = F.when(_dot(vec, plane_vector(band, p, dims)) >= 0, F.lit(1 << p)).otherwise(0)
+        bit = F.when(_dot_lit(vec, plane_vector(band, p, dims)) >= 0, F.lit(1 << p)).otherwise(0)
         out = out + bit.cast("long")
     return out
 
@@ -298,27 +311,40 @@ def with_srp_buckets(
     """Append ``srp_b{i}`` bucket columns — write-time layout step: store
     the table partitioned/bucketed by ``srp_b0`` and band-bucket scans
     become partition-pruned."""
-    v = F.col(vec_col).cast("array<double>")
-    return df.select(
-        "*", *[srp_bucket(v, dims, b, planes).alias(f"srp_b{b}") for b in range(bands)]
+    out = [f"srp_b{b}" for b in range(bands)]
+    e, back = _plus(df, {"v": vec_col}, out)
+    v = F.col("v").cast("array<double>")
+    return e.select(*back, *(srp_bucket(v, dims, b, planes).alias(c) for b, c in enumerate(out)))
+
+
+def _ranked(
+    df: DataFrame, query_vec: list[float], id_col: str, vec_col: str, k: int,
+    probe: Callable[[DataFrame], DataFrame] = lambda e: e,
+) -> DataFrame:
+    """Exact cosine top-``k`` against the literal ``query_vec`` over the
+    rows ``probe`` keeps of ``df``'s id and vector columns, entered as
+    ``id`` and ``v``: ``(id_col, cosine)``, ties → id asc.
+
+    Unrolled literal dot (bit-identical — see :func:`_dot_lit`); the query
+    norm is a pre-folded constant (:func:`_norm_py`)."""
+    _no_collision(["cosine"], [id_col])
+    qf = [float(x) for x in query_vec]
+    v = F.col("v").cast("array<double>")
+    cos = _dot_lit_unrolled(v, qf) / (_norm(v) * F.lit(_norm_py(qf)))
+    return (
+        probe(_aliased(df, {"id": id_col, "v": vec_col}))
+        .select("id", F.round(cos, 6).alias("cosine"))
+        .orderBy(F.desc("cosine"), "id")
+        .limit(k)
+        .withColumnRenamed("id", id_col)
     )
 
 
 def brute_topk(
     df: DataFrame, query_vec: list[float], id_col: str, vec_col: str, k: int = 10
 ) -> DataFrame:
-    """Exact cosine top-k against a literal query vector (ties → id asc).
-
-    Unrolled literal dot (bit-identical — see :func:`_dot_lit`); the query
-    norm is a pre-folded constant (:func:`_norm_py`)."""
-    qf = [float(x) for x in query_vec]
-    v = F.col(vec_col).cast("array<double>")
-    cos = _dot_lit_unrolled(v, qf) / (_norm(v) * F.lit(_norm_py(qf)))
-    return (
-        df.select(F.col(id_col), F.round(cos, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
-    )
+    """Exact cosine top-k against a literal query vector (ties → id asc)."""
+    return _ranked(df, query_vec, id_col, vec_col, k)
 
 
 def _cos_py(a: list[float], b: list[float]) -> float:
@@ -341,8 +367,6 @@ def _centroid_matrix(cents: list[tuple[int, list[float]]]):
     assignment path. Ascending cid order makes numpy's first-occurrence
     ``argmax`` the same tie-break as the literal path's ``greatest`` over
     (cosine, -cid) structs: among equal rounded cosines, lowest cid."""
-    import numpy as np
-
     cids = np.array([c for c, _ in cents], dtype=np.int64)
     order = np.argsort(cids)
     cids = cids[order]
@@ -443,28 +467,8 @@ def assign_cells_broadcast(
     :func:`_round_half_up`). NULL / ragged / zero-norm vectors get a NULL
     cell instead of crashing the batch, matching the literal path's
     degrade-to-NULL behavior."""
-    bc = df.sparkSession.sparkContext.broadcast(_centroid_matrix(cents))
-    dim = len(cents[0][1])
-
-    @pandas_udf("long")
-    def _cell(vs: pd.Series) -> pd.Series:
-        cids, cmat = bc.value
-        out = pd.array([None] * len(vs), dtype="Int64")
-        if len(vs) == 0:
-            return pd.Series(out)
-        ok, vn = _clean_vectors(vs, dim)
-        if vn.shape[0]:
-            scores = _round_half_up(vn @ cmat.T)
-            out[np.flatnonzero(ok)] = cids[scores.argmax(axis=1)]
-        return pd.Series(out)
-
-    # asNondeterministic: a downstream filter on the cell column (e.g. the
-    # knn_join equi-join's isnotnull) is otherwise pushed below this
-    # projection and the optimizer DUPLICATES the UDF — the round-start
-    # plan ran the GEMM assignment twice per index row (two ArrowEvalPython
-    # nodes; guide §4.4). The function is pure, the marker only pins a
-    # single evaluation.
-    return df.withColumn(out_col, _cell.asNondeterministic()(F.col(vec_col)))
+    e, back = _plus(df, {"v": vec_col}, [out_col])
+    return _cells(e, cents, "broadcast").select(*back, F.col("cell").alias(out_col))
 
 
 def probe_cells_broadcast(
@@ -484,8 +488,6 @@ def probe_cells_broadcast(
     def _probes(vs: pd.Series) -> pd.Series:
         cids, cmat = bc.value
         out = [None] * len(vs)
-        if len(vs) == 0:
-            return pd.Series(out, dtype="object")
         ok, vn = _clean_vectors(vs, dim)
         if vn.shape[0]:
             scores = _round_half_up(vn @ cmat.T)
@@ -506,7 +508,10 @@ def probe_cells_broadcast(
                     out[i] = cids[idx[j]].tolist()
         return pd.Series(out, dtype="object")
 
-    return _probes(F.col(vec_col) if isinstance(vec_col, str) else vec_col)
+    # asNondeterministic: pure, like the assignment UDF (:func:`_cells`);
+    # the marker only pins a single evaluation under downstream filters
+    return _probes.asNondeterministic()(
+        F.expr(_q(vec_col)) if isinstance(vec_col, str) else vec_col)
 
 
 def ivf_cells(
@@ -536,36 +541,68 @@ def ivf_cells(
     (:func:`assign_cells_broadcast`) — the n_cells ≈ √n regime (10^4
     cells at 10^8 vectors), where a literal plan tree stops compiling
     sensibly. Both produce the IDENTICAL assignment (equality-pinned)."""
+    e, back = _plus(df, {"id": id_col, "v": vec_col}, ["ivf_cell"])
+    cents = _centroids(e, n_cells)
+    return _cells(_normed(e), cents, method).select(*back, F.col("cell").alias("ivf_cell")), cents
+
+
+def _centroids(e: DataFrame, n_cells: int) -> list[tuple[int, list[float]]]:
+    """The ``n_cells`` lowest-id vectors of the entered ``(id, v)`` rows
+    ``e``: the sampled centroids of :func:`ivf_cells`."""
+    return [(int(i), [float(x) for x in v])
+            for i, v in e.select("id", "v").orderBy("id").limit(n_cells).collect()]
+
+
+def _cells(e: DataFrame, cents: list[tuple[int, list[float]]], method: str) -> DataFrame:
+    """Entered vectors ``e`` plus ``cell``, the id of the centroid nearest
+    ``v``: argmax ROUND(cosine, 6), ties → lowest centroid id, by the
+    ``method`` of :func:`ivf_cells`. The literal method reads ``v``'s norm
+    from ``nrm`` (:func:`_normed`)."""
     if method not in ("literal", "broadcast"):
         raise ValueError(f"method must be 'literal' or 'broadcast', got {method!r}")
-    cents = [
-        (int(r[id_col]), [float(x) for x in r[vec_col]])
-        for r in df.select(id_col, vec_col).orderBy(id_col).limit(n_cells).collect()
-    ]
     if method == "broadcast":
-        return assign_cells_broadcast(df, vec_col, cents), cents
-    v = F.col(vec_col).cast("array<double>")
-    # round-8 (guide §4.1/§1.2): the vector's own norm is hoisted to ONE
-    # per-row column (it was re-folded once per centroid), each centroid's
-    # norm is a pre-folded constant (:func:`_norm_py` — same fold order,
-    # same bits), and the per-centroid dot is the unrolled codegen form of
-    # the identical expression (:func:`_dot_lit`).
-    cands = [
+        bc = e.sparkSession.sparkContext.broadcast(_centroid_matrix(cents))
+        dim = len(cents[0][1])
+
+        @pandas_udf("long")
+        def _cell(vs: pd.Series) -> pd.Series:
+            cids, cmat = bc.value
+            out = pd.array([None] * len(vs), dtype="Int64")
+            ok, vn = _clean_vectors(vs, dim)
+            if vn.shape[0]:
+                scores = _round_half_up(vn @ cmat.T)
+                out[np.flatnonzero(ok)] = cids[scores.argmax(axis=1)]
+            return pd.Series(out)
+
+        # asNondeterministic: a downstream filter on the cell column (e.g.
+        # the knn_join equi-join's isnotnull) is otherwise pushed below this
+        # projection and the optimizer DUPLICATES the UDF — the round-start
+        # plan ran the GEMM assignment twice per index row (two
+        # ArrowEvalPython nodes; guide §4.4). The function is pure, the
+        # marker only pins a single evaluation.
+        return e.withColumn("cell", _cell.asNondeterministic()(F.col("v")))
+    return e.withColumn("cell", F.greatest(*_scored(cents))["cid"])
+
+
+def _scored(cents: list[tuple[int, list[float]]]) -> list[Column]:
+    """Per centroid, the struct ``(c, nid, cid)`` of entered vectors: ``c``
+    the ROUND(cosine, 6) of ``v`` (norm ``nrm``) and the centroid, ``nid``
+    = −cid, so the greatest struct (or a descending sort) puts the nearest
+    centroid first, ties → lowest centroid id.
+
+    round-8 (guide §4.1/§1.2): the vector's own norm is ONE per-row column
+    (it was re-folded once per centroid), each centroid's norm is a
+    pre-folded constant (:func:`_norm_py` — same fold order, same bits),
+    and the per-centroid dot is the fold :func:`_dot_lit`."""
+    v = F.col("v").cast("array<double>")
+    return [
         F.struct(
-            F.round(
-                _dot_lit(v, cv) / (F.col("__ivf_na") * F.lit(_norm_py(cv))), 6
-            ).alias("c"),
-            F.lit(-cid).cast("long").alias("nid"),  # ties → lowest centroid id
+            F.round(_dot_lit(v, cv) / (F.col("nrm") * F.lit(_norm_py(cv))), 6).alias("c"),
+            F.lit(-cid).cast("long").alias("nid"),
             F.lit(cid).cast("long").alias("cid"),
         )
         for cid, cv in cents
     ]
-    assigned = (
-        df.withColumn("__ivf_na", _norm(v))
-        .withColumn("ivf_cell", F.greatest(*cands)["cid"])
-        .drop("__ivf_na")
-    )
-    return assigned, cents
 
 
 def ivf_probe_cells(
@@ -597,11 +634,12 @@ def ivf_topk(
     centroid, probe the ``nprobe`` cells nearest the query, exact-rerank
     by cosine inside them. Deterministic; recall < 1 by design (vectors
     whose cell isn't probed are missed — the nprobe knob)."""
-    assigned, cents = ivf_cells(df, id_col, vec_col, n_cells)
-    probes = ivf_probe_cells(query_vec, cents, nprobe)
-    return brute_topk(
-        assigned.filter(F.col("ivf_cell").isin(probes)), query_vec, id_col, vec_col, k
-    )
+    def probe(e: DataFrame) -> DataFrame:
+        cents = _centroids(e, n_cells)
+        probes = ivf_probe_cells(query_vec, cents, nprobe)
+        return _cells(_normed(e), cents, "literal").filter(F.col("cell").isin(probes))
+
+    return _ranked(df, query_vec, id_col, vec_col, k, probe)
 
 
 def knn_join(
@@ -626,10 +664,10 @@ def knn_join(
     lowest-id index vectors): index rows are assigned to their nearest
     cell, each query emits its ``nprobe`` nearest cells (a zero-shuffle
     projection — literal-centroid cosines, ``sort_array`` desc with
-    centroid-id tie-break, ``slice``, explode), and candidates meet in
-    an equi-join on the cell id — never a cartesian product. Exact
-    cosine re-rank per query (``row_number ≤ k``, cosine-desc /
-    neighbor-id tie-break) finishes it.
+    centroid-id tie-break, ``slice``, explode), and candidates meet on
+    the cell id in a cogroup — never a cartesian product. Exact cosine
+    scoring per cell (:func:`_rerank_cogroup`) and a per-query
+    ``row_number ≤ k`` (cosine-desc / neighbor-id tie-break) finish it.
 
     Scale: candidate volume per query ≈ nprobe · n/n_cells — tune
     ``n_cells`` up with table size so cells stay bounded; the re-rank
@@ -639,54 +677,29 @@ def knn_join(
     table). Output schema is FIXED — ``(q_id, nn_id, cosine, rank)`` —
     because self-kNN makes the two input id names collide.
 
-    Rerank stays the JVM expression fold ON MEASUREMENT: an
-    Arrow-batched numpy rerank (pandas_udf einsum) was built and timed
-    at 1.9× SLOWER (200k×64d: 93 s vs 177 s; 50k×512d: 58 s vs 91 s,
-    local[32]) — serializing both candidate vectors through Arrow costs
-    more than the interpreted fold at every realistic width, and the
-    expression keeps the cross-engine bit-guarantee the oracle needs.
-    (That verdict is about the RERANK. Cell ASSIGNMENT at large n_cells
-    is the opposite regime — ``method="broadcast"`` routes it through
-    :func:`assign_cells_broadcast` / :func:`probe_cells_broadcast`,
-    where one GEMM replaces n_cells folds per row; output equality with
-    the literal path is fixture-verified — see the summation-order
-    caveat on :func:`_round_half_up`.)"""
+    ``method="broadcast"`` assigns and probes cells by one GEMM per Arrow
+    batch against a broadcast centroid matrix (:func:`_cells`,
+    :func:`probe_cells_broadcast`) instead of n_cells folds per row — the
+    large-n_cells regime; output equality with the literal path is
+    fixture-verified (see the summation-order caveat on
+    :func:`_round_half_up`)."""
     if nprobe < 1 or nprobe > n_cells:
         raise ValueError(f"need 1 <= nprobe <= n_cells, got {nprobe}")
-    assigned, cents = ivf_cells(index, id_col, vec_col, n_cells, method=method)
-    qv = F.col(q_vec_col).cast("array<double>")
     # round-8 rerank restructure (guide §4.1, bit-identical): each side's
     # norm is computed ONCE PER ROW before the join (it was re-folded per
     # candidate pair), so the per-pair work is one dot fold; the division
     # keeps the original dot / (na · nb) association.
-    assigned = assigned.withColumn(
-        "__knn_nb", _norm(F.col(vec_col).cast("array<double>"))
-    )
-    qbase = queries.withColumn("__knn_qn", _norm(qv))
+    index_e = _normed(_aliased(index, {"id": id_col, "v": vec_col}))
+    cents = _centroids(index_e, n_cells)
+    right = _cells(index_e, cents, method).filter(F.col("cell").isNotNull())
+    q = _normed(_aliased(queries, {"id": q_id_col, "v": q_vec_col}))
     if method == "broadcast":
-        probes = probe_cells_broadcast(queries, q_vec_col, cents, nprobe)
+        probes = probe_cells_broadcast(q, F.col("v"), cents, nprobe)
     else:
-        cand = [
-            F.struct(
-                F.round(
-                    _dot_lit(qv, cv) / (F.col("__knn_qn") * F.lit(_norm_py(cv))),
-                    6,
-                ).alias("c"),
-                F.lit(-cid).cast("long").alias("nid"),  # desc-sort ⇒ cid asc ties
-                F.lit(cid).cast("long").alias("cid"),
-            )
-            for cid, cv in cents
-        ]
         probes = F.transform(
-            F.slice(F.sort_array(F.array(*cand), asc=False), 1, nprobe),
+            F.slice(F.sort_array(F.array(*_scored(cents)), asc=False), 1, nprobe),
             lambda s: s["cid"],
         )
-    qp = qbase.select(
-        F.col(q_id_col).alias("__knn_qid"),
-        F.col(q_vec_col).alias("__knn_qv"),
-        F.col("__knn_qn"),
-        F.explode(probes).alias("__knn_cell"),
-    )
     # candidates still meet ON THE CELL ID — but as a cogroup, not an
     # equi-join: the join materialized every pair with both vectors and
     # paid an interpreted fold per pair (guide §2.3 "shuffle keys and
@@ -695,18 +708,10 @@ def knn_join(
     # set: inner-join semantics are restored by dropping null cells and
     # by fn returning nothing for one-sided groups; exclude_self applies
     # inside the kernel (identical null-id handling — see _rerank_cogroup).
-    right = assigned.filter(F.col("ivf_cell").isNotNull()).select(
-        F.col(id_col).alias("__knn_nid"),
-        F.col(vec_col).alias("__knn_nv"),
-        F.col("__knn_nb"),
-        F.col("ivf_cell"),
-    )
+    left = q.select("id", "v", "nrm", F.explode(probes).alias("cell"))
     scored = _rerank_cogroup(
-        qp.filter(F.col("__knn_cell").isNotNull()), right,
-        len(cents[0][1]), exclude_self,
+        left.filter(F.col("cell").isNotNull()), right, len(cents[0][1]), exclude_self,
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "nn_id")
     return (
         scored.select("*", F.row_number().over(w).alias("rank"))
@@ -728,12 +733,12 @@ def srp_topk(
     (that's the ANN trade-off the bands knob controls)."""
     dims = len(query_vec)
     qb = [srp_bucket_py(query_vec, b, planes) for b in range(bands)]
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("v").cast("array<double>")
     cond = None
     for b in range(bands):
         c = srp_bucket(v, dims, b, planes) == F.lit(qb[b])
         cond = c if cond is None else (cond | c)
-    return brute_topk(df.filter(cond), query_vec, id_col, vec_col, k)
+    return _ranked(df, query_vec, id_col, vec_col, k, lambda e: e.filter(cond))
 
 
 def quantizer_quality(
@@ -743,17 +748,15 @@ def quantizer_quality(
     the spherical-k-means objective. One broadcast-GEMM assignment + one
     JVM cosine fold against the centroid looked up from a literal map;
     higher is a tighter quantizer (⇒ better recall at a given nprobe)."""
-    assigned = assign_cells_broadcast(df, vec_col, cents).filter(
-        F.col("ivf_cell").isNotNull()
+    assigned = _cells(_aliased(df, {"v": vec_col}), cents, "broadcast").filter(
+        F.col("cell").isNotNull()
     )
     cmap = F.create_map(
         *[x for cid, cv in cents
           for x in (F.lit(cid), F.array(*[F.lit(v) for v in cv]))]
     )
-    cos = cosine(F.col(vec_col).cast("array<double>"),
-                 F.element_at(cmap, F.col("ivf_cell")))
-    row = assigned.agg(F.avg(cos).alias("q")).first()
-    return float(row["q"])
+    cos = cosine(F.col("v").cast("array<double>"), F.element_at(cmap, F.col("cell")))
+    return float(assigned.agg(F.avg(cos)).first()[0])
 
 
 def train_ivf_centroids(
@@ -799,29 +802,21 @@ def train_ivf_centroids(
     checkpoints. The QUERY-side structure (quantize → probe → rerank)
     is unchanged and stays fully oracled via the sampled-centroid path.
     """
-    base = df.select(id_col, vec_col)
+    base = _aliased(df, {"id": id_col, "v": vec_col})
     if sample_every and sample_every > 1:
-        base = base.filter(F.col(id_col) % sample_every == 0)
-    _, cents = ivf_cells(base, id_col, vec_col, n_cells, method="broadcast")
+        base = base.filter(F.col("id") % sample_every == 0)
+    cents = _centroids(base, n_cells)
     dim = len(cents[0][1])
     for _ in range(n_iter):
-        assigned = assign_cells_broadcast(base, vec_col, cents).filter(
-            F.col("ivf_cell").isNotNull()
-        )
-        aggs = [
-            F.avg(F.col(vec_col)[i].cast("double")).alias(f"_c{i}")
-            for i in range(dim)
-        ]
-        means = assigned.groupBy("ivf_cell").agg(*aggs)
+        assigned = _cells(base, cents, "broadcast").filter(F.col("cell").isNotNull())
+        means = assigned.groupBy("cell").agg(
+            *(F.avg(F.col("v")[i].cast("double")).alias(f"_c{i}") for i in range(dim)))
         arr = F.array(*[F.col(f"_c{i}") for i in range(dim)])
-        nrm = F.sqrt(
-            F.aggregate(F.transform(arr, lambda x: x * x), F.lit(0.0),
-                        lambda s, p: s + p)
-        )
+        nrm = _norm(arr)
         new = {
             int(r["cid"]): [float(x) for x in r["c"]]
             for r in means.select(
-                F.col("ivf_cell").alias("cid"),
+                F.col("cell").alias("cid"),
                 F.when(nrm > 0, F.transform(arr, lambda x: x / nrm))
                  .alias("c"),
             ).collect()

@@ -36,7 +36,9 @@ import math
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from intervalaverage_spark.functions.ann import _norm
 from intervalaverage_spark.functions.textstats import bind_once, tokens
+from intervalaverage_spark.validation import _aliased, _no_collision
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -52,6 +54,12 @@ def _ckpt(df: DataFrame) -> DataFrame:
     shape. A scoped, lazy ``persist()`` in its place measured slower
     (BENCH/NOTES.md)."""
     return df.localCheckpoint()
+
+
+def _docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """The detectors' one entry: ``df``'s id and text columns as ``id``
+    and ``text`` in one quoted projection, so any column name works."""
+    return _aliased(df, {"id": id_col, "text": text_col})
 
 
 # --------------------------------------------------------------- shingles
@@ -78,12 +86,11 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return bind_once(tokens(col), body)
 
 
-def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """The exploded ``(id, sh)`` table: one row per distinct shingle of
-    each doc. Only these two columns: a sibling ``size(shingles())`` in the
-    generate projection would re-evaluate per output row (~90× slower)."""
-    return df.select(F.col(id_col).alias("id"),
-                     F.explode(shingles(text_col, n)).alias("sh"))
+def _shingle_rows(d: DataFrame, n: int) -> DataFrame:
+    """The exploded ``(id, sh)`` table of entered docs: one row per distinct
+    shingle of each doc. Only these two columns: a sibling ``size(shingles())``
+    in the generate projection would re-evaluate per output row (~90× slower)."""
+    return d.select("id", F.explode(shingles("text", n)).alias("sh"))
 
 
 def _stop_list(sh: DataFrame, max_df: int) -> DataFrame:
@@ -94,9 +101,9 @@ def _stop_list(sh: DataFrame, max_df: int) -> DataFrame:
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact duplicate groups: md5(text) → (hash, n_docs, canonical_id)."""
-    return df.groupBy(F.md5(text_col).alias("text_md5")).agg(
+    return _docs(df, id_col, text_col).groupBy(F.md5("text").alias("text_md5")).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.min(id_col).alias("canonical_id"),
+        F.min("id").alias("canonical_id"),
     )
 
 
@@ -139,7 +146,7 @@ def ngram_jaccard_pairs(
     tokenize+shingle scan — the round-start physical plan scanned the
     source 20× (guide §3.3: materialise shared intermediates).
     """
-    sh = _shingle_rows(df, id_col, text_col, n).transform(_ckpt)
+    sh = _shingle_rows(_docs(df, id_col, text_col), n).transform(_ckpt)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     kept = sh
     if max_df is not None:
@@ -232,9 +239,10 @@ def prefix_jaccard_pairs(
     # loosens pruning — the exact verify keeps precision at 1.0.
     t_floor = math.floor(float(threshold) * 1_000_000) / 1_000_000
     td = F.lit(t_floor).cast("decimal(9,6)")
+    d = _docs(df, id_col, text_col)
     # one materialized shingle table: the plan otherwise re-runs the
     # tokenize+shingle explode for the df fold and the rank window
-    sh = _shingle_rows(df, id_col, text_col, n).transform(_ckpt)
+    sh = _shingle_rows(d, n).transform(_ckpt)
     # document frequency attached via a count-over-window on the shingle
     # partitioning instead of a groupBy + join back: one exchange of the
     # shingle table replaces the aggregate exchange PLUS the sort-merge
@@ -293,7 +301,7 @@ def prefix_jaccard_pairs(
         .distinct()
         .transform(_ckpt)
     )
-    return _verify_jaccard(df, cand, id_col, text_col, n, threshold)
+    return _verify_jaccard(d, cand, n, threshold)
 
 
 # ------------------------------------------------------- MinHash + LSH
@@ -312,7 +320,7 @@ def hot_shingles(
     list the existing signatures used — the precondition for
     ``incremental == full-recompute`` equality. Refresh it (and re-sign)
     on the cadence the corpus' boilerplate drifts."""
-    return _stop_list(_shingle_rows(df, id_col, text_col, n), max_df)
+    return _stop_list(_shingle_rows(_docs(df, id_col, text_col), n), max_df)
 
 
 def minhash_signature(
@@ -341,9 +349,15 @@ def minhash_signature(
     :func:`hot_shingles` table) instead of recomputing it from ``df`` —
     the incremental-ingest path, where the new batch must be signed
     against the index's frozen stop list, not its own tiny histogram."""
+    return _signature(_docs(df, id_col, text_col), n, num_hashes, max_df, stop_shingles)
+
+
+def _signature(d: DataFrame, n: int, num_hashes: int, max_df: int | None,
+               stop_shingles: DataFrame | None) -> DataFrame:
+    """:func:`minhash_signature` of entered docs ``d``."""
     if max_df is not None and stop_shingles is not None:
         raise ValueError("pass max_df OR stop_shingles, not both")
-    sh = _shingle_rows(df, id_col, text_col, n)
+    sh = _shingle_rows(d, n)
     if max_df is not None:
         # the stop list derives from sh AND sh feeds the anti-join below:
         # materialize once instead of exploding the corpus twice
@@ -375,12 +389,16 @@ def minhash_band_index(
     generation for a new batch then touches only the buckets the batch's
     own band keys hit (:func:`incremental_minhash_lsh_pairs`), never the
     rest of the corpus."""
+    return _band_index(_docs(df, id_col, text_col), n, num_hashes, bands, max_df, stop_shingles)
+
+
+def _band_index(d: DataFrame, n: int, num_hashes: int, bands: int, max_df: int | None,
+                stop_shingles: DataFrame | None) -> DataFrame:
+    """:func:`minhash_band_index` of entered docs ``d``."""
     if num_hashes % bands:
         raise ValueError("num_hashes must divide evenly into bands")
     r = num_hashes // bands
-    sig = minhash_signature(df, id_col, text_col, n, num_hashes,
-                            max_df=max_df, stop_shingles=stop_shingles)
-    return sig.select(
+    return _signature(d, n, num_hashes, max_df, stop_shingles).select(
         "id",
         F.explode(F.array(*[
             F.struct(
@@ -421,8 +439,8 @@ def minhash_lsh_pairs(
     # candidate set three times inside the verify; without materialization
     # each reference re-runs the whole signature pipeline — the
     # round-start physical plan scanned the source 24× (guide §3.3)
-    band_rows = minhash_band_index(df, id_col, text_col, n, num_hashes,
-                                   bands, max_df=max_df).transform(_ckpt)
+    d = _docs(df, id_col, text_col)
+    band_rows = _band_index(d, n, num_hashes, bands, max_df, None).transform(_ckpt)
     a, b_ = band_rows.alias("a"), band_rows.alias("b")
     cand = (
         a.join(b_, (F.col("a.band") == F.col("b.band"))
@@ -432,39 +450,27 @@ def minhash_lsh_pairs(
         .distinct()
         .transform(_ckpt)
     )
-    return _verify_jaccard(df, cand, id_col, text_col, n, threshold)
+    return _verify_jaccard(d, cand, n, threshold)
 
 
-def _verify_jaccard(
-    df: DataFrame,
-    cand: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    threshold: float,
-) -> DataFrame:
+def _verify_jaccard(d: DataFrame, cand: DataFrame, n: int, threshold: float) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs (id1, id2) against
-    the corpus' FULL shingle sets → (id1, id2, jaccard ≥ threshold).
+    the FULL shingle sets of entered docs ``d`` → (id1, id2, jaccard ≥
+    threshold).
 
     Bounds the verify shuffle: only docs that appear in ≥1 candidate pair
     need their (wide) shingle array built and shuffled — semi-join the
     corpus to candidate ids FIRST, so the array-bearing exchange carries
     O(candidate docs), not O(corpus). At 10^9 docs the candidate set is
     orders of magnitude smaller than the table."""
-    cand_ids = (
-        cand.select(F.col("id1").alias("cid"))
-        .unionByName(cand.select(F.col("id2").alias("cid")))
-        .distinct()
-    )
+    cand_ids = (cand.select(F.col("id1").alias("id"))
+                .unionByName(cand.select(F.col("id2").alias("id"))).distinct())
     # shingle sets built ONCE per candidate doc (sz derived from the same
     # array instead of a second shingles() evaluation) and materialized:
     # both pair-join sides read this table
     sh = (
-        df.join(cand_ids, F.col(id_col) == F.col("cid"), "left_semi")
-        .select(
-            F.col(id_col).alias("id"),
-            shingles(text_col, n).alias("shs"),
-        )
+        d.join(cand_ids, "id", "left_semi")
+        .select("id", shingles("text", n).alias("shs"))
         .select("id", F.size("shs").alias("sz"), "shs")
         .transform(_ckpt)
     )
@@ -525,10 +531,8 @@ def incremental_minhash_lsh_pairs(
     sort-merge join on the band key — uniform md5 keys, no skew)."""
     # the delta's band rows are referenced three times (new×old probe,
     # both new×new sides) and returned — sign the delta once
-    new_bands = minhash_band_index(
-        new_docs, id_col, text_col, n, num_hashes, bands,
-        stop_shingles=stop_shingles,
-    ).transform(_ckpt)
+    new_bands = _band_index(_docs(new_docs, id_col, text_col), n, num_hashes, bands,
+                            None, stop_shingles).transform(_ckpt)
     probe = F.broadcast(new_bands) if broadcast_delta else new_bands
     a, b_ = probe.alias("a"), band_index.alias("b")
     # new × old: either id order is possible — normalize to id1 < id2
@@ -548,7 +552,7 @@ def incremental_minhash_lsh_pairs(
         .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
     )
     cand = no.unionByName(nn).distinct().transform(_ckpt)
-    return _verify_jaccard(corpus, cand, id_col, text_col, n, threshold), new_bands
+    return _verify_jaccard(_docs(corpus, id_col, text_col), cand, n, threshold), new_bands
 
 
 # ------------------------------------------------------------- SimHash
@@ -567,7 +571,7 @@ def simhash_table(
     fused sum-aggregates (partial aggregation map-side, whole-stage
     codegen) → recombine bits in a projection. No higher-order folds (they
     run interpreted, ~µs/row), no collect_list."""
-    t = df.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok"))
+    t = _docs(df, id_col, text_col).select("id", F.explode(tokens("text")).alias("tok"))
     hx = F.substring(F.md5("tok"), 1, 15)
     aggs = []
     for b in range(60):
@@ -664,13 +668,14 @@ def dedup_clusters(
     with no signal. Raise ``max_iter`` for long chains (or pre-shorten
     them with pointer doubling); duplicate clusters in practice are dense,
     so the default converges in a handful of rounds."""
+    _no_collision(["canonical_id", "cluster_size"], [id_col])
     a, b = pair_cols
-    e = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    e = _aliased(pairs, {"src": a, "dst": b})
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
     labels = (
-        nodes.select(F.col(id_col).alias("n"))
+        _aliased(nodes, {"n": id_col})
         .unionByName(edges.select(F.col("src").alias("n")))
         .distinct().select("n", F.col("n").alias("lab"))
     )
@@ -725,13 +730,11 @@ def embedding_neardup_pairs(
     re-folded per pair), so per-pair work is one dot fold + a divide."""
     a = F.col("a.v")
     b = F.col("b.v")
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")]
-    if group_col:
-        cols.append(F.col(group_col).alias("g"))
-    nrm = lambda c: F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda s, p: s + p))  # noqa: E731
-    base = df.select(*cols).withColumn("__nrm", nrm(F.col("v")))
+    base = (_aliased(df, {"id": id_col, "v": vec_col, **({"g": group_col} if group_col else {})})
+            .withColumn("v", F.col("v").cast("array<double>"))
+            .withColumn("nrm", _norm(F.col("v"))))
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, p: s + p)
-    cos = dot / (F.col("a.__nrm") * F.col("b.__nrm"))
+    cos = dot / (F.col("a.nrm") * F.col("b.nrm"))
     cond = F.col("a.id") < F.col("b.id")
     if group_col:
         cond = cond & (F.col("a.g") == F.col("b.g"))

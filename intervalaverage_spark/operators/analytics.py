@@ -46,6 +46,7 @@ from intervalaverage_spark.validation import (
     IntervalDataError,
     IntervalSchemaError,
     _agg,
+    _no_collision,
     _over,
     _q,
     check_unique_ts,
@@ -482,6 +483,7 @@ def trend_t0(pts: DataFrame, group_vars: Sequence[str]) -> DataFrame:
     """Per-key centring reference ``(…keys, t0 = min __t)`` — batch
     computes it inline; the streaming path takes it as the OFFLINE
     CALIBRATION artifact (the cusum mu/kappa/h pattern)."""
+    _no_collision(["t0"], group_vars)
     return _agg(pts, [*map(_q, group_vars)], {"t0": "min(__t)"})
 
 
@@ -495,12 +497,13 @@ def trend_moments(
     streaming_trend_moments) with state = one row per key — and a
     bounded streaming replay's moments equal this batch fold
     bit-for-bit."""
+    moments = {"t0": "max(t0)", "n_points": "count(1)", "_su": "sum(__u)", "_sx": "sum(__x)",
+               "_sux": "sum(__u * __x)", "_suu": "sum(__u * __u)", "_sxx": "sum(__x * __x)"}
+    _no_collision(list(moments), group_vars)
     g = [*map(_q, group_vars)]
     ctr = pts.join(t0, list(group_vars)).selectExpr(
         *g, "t0", "CAST(__t - t0 AS DECIMAL(12,0)) AS __u", "__x")
-    return _agg(ctr, g, {"t0": "max(t0)", "n_points": "count(1)", "_su": "sum(__u)",
-                         "_sx": "sum(__x)", "_sux": "sum(__u * __x)",
-                         "_suu": "sum(__u * __u)", "_sxx": "sum(__x * __x)"})
+    return _agg(ctr, g, moments)
 
 
 def _doubles(*cols: str) -> list[str]:

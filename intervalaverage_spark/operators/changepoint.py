@@ -44,7 +44,14 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-from intervalaverage_spark.validation import IntervalSchemaError, _agg, _over, _q, enter_points
+from intervalaverage_spark.validation import (
+    IntervalSchemaError,
+    _agg,
+    _no_collision,
+    _over,
+    _q,
+    enter_points,
+)
 
 _DEC = "DECIMAL(18,6)"
 _OUT_COLS = ("x", "s_pos", "s_neg", "alarm")
@@ -92,6 +99,7 @@ def cusum_calibration_from_points(
     offline-calibration artifact the STREAMING detector consumes
     (streaming/cusum_stream.py): calibrate on history, monitor the
     stream against it."""
+    _no_collision(["mu", "kappa", "h"], group_vars)
     g = [*map(_q, group_vars)]
     stats = _agg(pts, g, {"_n": "count(1)", "_s1": "sum(x)", "_s2": "sum(x * x)"})
     mean = "(CAST(_s1 AS DOUBLE) / _n)"

@@ -9,7 +9,11 @@ text over the internal names, and :class:`Entry` restores the user's names
 in the final projection: no user name is ever parsed as a column path, so
 any name works (``a.b``, ``g`x``, ``ws``, …). The point-series operators
 (the series analytics, fills, sessions, changepoint and downsampling) enter
-the same way through :func:`enter_points`.
+the same way through :func:`enter_points`, and so do ``functions/dedup``
+and ``functions/ann``: each public call reads its id, text or vector
+columns through one :func:`_aliased` projection to fixed internal names,
+and a call that returns its input plus columns checks them with
+:func:`_no_collision`.
 """
 
 from __future__ import annotations

@@ -16,6 +16,21 @@ from intervalaverage_spark import (
     is_overlapping,
     isolate_overlaps,
 )
+from intervalaverage_spark.functions.ann import (
+    assign_cells_broadcast,
+    brute_topk,
+    ivf_cells,
+    knn_join,
+    with_srp_buckets,
+)
+from intervalaverage_spark.functions.dedup import (
+    dedup_clusters,
+    embedding_neardup_pairs,
+    exact_dedup,
+    minhash_lsh_pairs,
+    prefix_jaccard_pairs,
+    simhash_pairs,
+)
 from intervalaverage_spark.operators.analytics import (
     autocorr,
     cadence_stats,
@@ -28,10 +43,17 @@ from intervalaverage_spark.operators.analytics import (
     seasonal_profile,
     theil_sen,
     trend,
+    trend_moments,
+    trend_points,
+    trend_t0,
     windowed_percentiles,
 )
 from intervalaverage_spark.operators.asof import asof_join
-from intervalaverage_spark.operators.changepoint import cusum, cusum_points
+from intervalaverage_spark.operators.changepoint import (
+    cusum,
+    cusum_calibration_from_points,
+    cusum_points,
+)
 from intervalaverage_spark.operators.coalesce import interval_concurrency, interval_gaps
 from intervalaverage_spark.operators.difference import interval_difference
 from intervalaverage_spark.operators.downsample import M4_COLS, lttb, m4_downsample
@@ -226,10 +248,21 @@ def test_point_ops_any_name(points, op, bw, names):
     assert got == ([_renamed(c, names) for c in want[0]], want[1])
 
 
+#: the public fold pieces the streaming twins consume
+PIECES = {
+    "cusum_calibration": lambda d, bw, k, t, v: cusum_calibration_from_points(
+        cusum_points(d, t, v, [k]), [k]),
+    "trend_t0": lambda d, bw, k, t, v: trend_t0(trend_points(d, t, v, [k]), [k]),
+    "trend_moments": lambda d, bw, k, t, v: trend_moments(
+        trend_points(d, t, v, [k]), [k], trend_t0(trend_points(d, t, v, [k]), [k])),
+}
+
 #: a key or order column named like an output (the operator raises a
 #: named error) or like an internal column (it gives the plain-name run)
 NAME_CLASHES = [("autocorr", {"k": "lag"}, True), ("seasonal_profile", {"k": "phase"}, True),
                 ("trend", {"k": "t0"}, True),
+                *(("cusum_calibration", {"k": n}, True) for n in ("mu", "kappa", "h")),
+                ("trend_t0", {"k": "t0"}, True), ("trend_moments", {"k": "n_points"}, True),
                 *((op, {"k": "__t"}, False) for op in ("trend", "theil_sen", "cadence_stats")),
                 *((op, {"t": "x"}, False) for op in ("autocorr", "seasonal_profile"))]
 
@@ -240,7 +273,7 @@ NAME_CLASHES = [("autocorr", {"k": "lag"}, True), ("seasonal_profile", {"k": "ph
 def test_series_ops_output_and_internal_names(points, op, names, raises):
     """Output names among the key columns raise IntervalSchemaError; the
     operators' internal names are free for the user."""
-    build = SERIES_OPS[op]
+    build = {**SERIES_OPS, **PIECES}[op]
     names = {"k": "k", "t": "t", "v": "v", **names}
     renamed = points.withColumnsRenamed(names)
     if raises:
@@ -250,6 +283,84 @@ def test_series_ops_output_and_internal_names(points, op, names, raises):
     want = _result(build(points, None, "k", "t", "v"))
     got = _result(build(renamed, None, names["k"], names["t"], names["v"]))
     assert got == ([_renamed(c, names) for c in want[0]], want[1])
+
+
+#: the dedup and ANN calls over documents ``d`` (id, text) or vectors
+#: ``v`` (id, embedding), with the id column ``i`` and text or vector ``x``
+DOC_OPS = {
+    "exact_dedup": lambda d, v, i, x: exact_dedup(d, i, x),
+    "minhash_lsh_pairs": lambda d, v, i, x: minhash_lsh_pairs(d, i, x, threshold=0.3),
+    "prefix_jaccard_pairs": lambda d, v, i, x: prefix_jaccard_pairs(d, i, x, threshold=0.3),
+    "simhash_pairs": lambda d, v, i, x: simhash_pairs(d, i, x),
+    "dedup_clusters": lambda d, v, i, x: dedup_clusters(
+        d, minhash_lsh_pairs(d, i, x, threshold=0.3), i),
+    "embedding_neardup_pairs": lambda d, v, i, x: embedding_neardup_pairs(v, i, x, threshold=0.5),
+    **{f"knn_join-{m}": (lambda d, v, i, x, m=m: knn_join(
+        v, v, i, x, i, x, k=2, n_cells=2, nprobe=1, exclude_self=True, method=m))
+       for m in ("literal", "broadcast")},
+}
+
+#: (op, names, raises): id and text or vector columns named as column
+#: paths; ids named like the columns the calls add (the semi-join's
+#: ``cid``, knn_join's cell and norm columns); an id named like an output
+DOC_CASES = [*((op, n, False) for op in DOC_OPS
+               for n in ({"id": "a.b", "x": "g`x"}, {"id": "g`x", "x": "a.b"})),
+             *((op, {"id": "cid"}, False) for op in ("minhash_lsh_pairs", "prefix_jaccard_pairs")),
+             *((op, {"id": n}, False) for op in ("knn_join-literal", "knn_join-broadcast")
+               for n in ("ivf_cell", "__knn_qn", "__knn_nb")),
+             ("dedup_clusters", {"id": "canonical_id"}, True)]
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    """Documents (an exact and a near duplicate, a stranger) and vectors."""
+    fox = "the quick brown fox jumps over the lazy"
+    docs = spark.createDataFrame(
+        [(1, f"{fox} dog"), (2, f"{fox} cat"), (3, f"{fox} dog"), (4, "lorem ipsum dolor sit")],
+        "id bigint, x string")
+    vecs = spark.createDataFrame([(i, [float(i % 3), 1.0, i / 4]) for i in range(6)],
+                                 "id bigint, x array<double>")
+    return docs, vecs
+
+
+@pytest.mark.parametrize("op,names,raises", DOC_CASES,
+                         ids=[f"{op}-{','.join(n.values())}" for op, n, _ in DOC_CASES])
+def test_doc_ops_any_name(corpus, plain_results, op, names, raises):
+    """An id, text or vector column of any name gives the columns and
+    rows of the plain-name run; an id named like an output column raises
+    IntervalSchemaError."""
+    docs, vecs = corpus
+    build = DOC_OPS[op]
+    args = (docs.withColumnsRenamed(names), vecs.withColumnsRenamed(names),
+            names.get("id", "id"), names.get("x", "x"))
+    if raises:
+        with pytest.raises(IntervalSchemaError):
+            build(*args)
+        return
+    if op not in plain_results:
+        plain_results[op] = _result(build(docs, vecs, "id", "x"))
+    want = plain_results[op]
+    assert _result(build(*args)) == ([names.get(c, c) for c in want[0]], want[1])
+
+
+#: ANN calls that return input columns beside a column they add, with the
+#: added column's name, over vectors ``v`` whose id column is ``i``
+ADDS = {
+    "ivf_cells": ("ivf_cell", lambda v, i: ivf_cells(v, i, "x", n_cells=2)),
+    "assign_cells_broadcast": ("ivf_cell", lambda v, i: assign_cells_broadcast(
+        v, "x", [(0, [1.0, 1.0, 0.5])])),
+    "with_srp_buckets": ("srp_b0", lambda v, i: with_srp_buckets(v, "x", 3, bands=1)),
+    "brute_topk": ("cosine", lambda v, i: brute_topk(v, [1.0, 1.0, 0.5], i, "x", k=2)),
+}
+
+
+@pytest.mark.parametrize("op", list(ADDS))
+def test_added_column_named_like_an_input_raises(corpus, op):
+    """An input column named like the column a call adds raises
+    IntervalSchemaError instead of being overwritten."""
+    name, build = ADDS[op]
+    with pytest.raises(IntervalSchemaError):
+        build(corpus[1].withColumnRenamed("id", name), name)
 
 
 def test_plans_build_in_few_py4j_calls(spark, monkeypatch):

@@ -31,7 +31,7 @@ from __future__ import annotations
 # leaves the hint unresolvable and the decorator raises UNSUPPORTED_SIGNATURE
 # at definition time (the round-6 regression).
 import math
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from intervalaverage_spark.validation import _aliased, _no_collision, _q, _roles
+from intervalaverage_spark.validation import _aliased, _no_collision, _plus, _q
 
 #: mix constants (Knuth multiplicative hashing; public domain folklore)
 _A = 2654435761
@@ -124,16 +124,6 @@ def _norm(a: Column) -> Column:
 def _normed(e: DataFrame) -> DataFrame:
     """Entered vectors ``e`` plus ``nrm``, the L2 norm of ``v``."""
     return e.withColumn("nrm", _norm(F.col("v").cast("array<double>")))
-
-
-def _plus(df: DataFrame, names: dict[str, str], out: Sequence[str]) -> tuple[DataFrame, list]:
-    """The entry of a function that returns ``df`` plus the columns ``out``:
-    ``df`` with its columns ``names`` (internal → user) and every column as
-    ``__xc<i>``, and the select items (Columns) giving those back under
-    their names."""
-    _no_collision(out, df.columns)
-    keep = _roles("x", c=df.columns)
-    return _aliased(df, {**keep, **names}), [F.col(a).alias(c) for a, c in keep.items()]
 
 
 def _fold_dot_py(a, b):

@@ -59,12 +59,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.functions.sampling import _md5_48
+from intervalaverage_spark.validation import IntervalSchemaError, _aliased, _plus
 
 #: word width in bits — 32 so ``1 << (pos % 32)`` stays far from BIGINT
 #: sign trouble in every engine (DuckDB, Spark, numpy int64)
 WORD_BITS = 32
-_SEP = "\x1f"
+#: select items of bit position ``p``'s word and its bit in that word
+_WORD_MASK = (f"CAST(p / {WORD_BITS} AS BIGINT) AS word_idx",
+              f"shiftleft(CAST(1 AS BIGINT), CAST(p % {WORD_BITS} AS INT)) AS mask")
 
 
 def _check(m_bits: int, k: int) -> None:
@@ -77,12 +80,14 @@ def _check(m_bits: int, k: int) -> None:
 
 def bit_position(key: Column, i: int, m_bits: int, seed: str = "") -> Column:
     """Bit position of hash ``i`` for ``key``: first 48 bits of
-    ``md5(seed ␟ i ␟ key)`` mod ``m_bits``. 48-bit value is positive,
-    so plain ``%`` matches every engine."""
-    h = F.md5(F.concat_ws(_SEP, F.lit(seed), F.lit(str(i)),
-                          key.cast("string")))
-    return (F.conv(F.substring(h, 1, 12), 16, 10).cast("long")
-            % F.lit(int(m_bits)))
+    ``md5(seed ␟ i ␟ key)`` (:func:`_md5_48`) mod ``m_bits``. The 48-bit
+    value is positive, so plain ``%`` matches every engine."""
+    return _md5_48(seed, F.lit(str(i)), key) % F.lit(int(m_bits))
+
+
+def _positions(m_bits: int, k: int, seed: str) -> Column:
+    """The array of the ``k`` bit positions of the entered column ``key``."""
+    return F.array(*(bit_position(F.col("key"), i, m_bits, seed) for i in range(k)))
 
 
 def bloom_build(
@@ -97,16 +102,10 @@ def bloom_build(
     OR is idempotent, so duplicate keys and position collisions need no
     pre-``distinct`` — the ``bit_or`` groupBy absorbs them map-side."""
     _check(m_bits, k)
-    if key_col not in df.columns:
-        raise IntervalSchemaError(f"missing column {key_col!r}")
-    pos = F.explode(F.array(*[
-        bit_position(F.col(key_col), i, m_bits, seed) for i in range(k)
-    ])).alias("p")
     return (
-        df.select(pos)
-        .select((F.col("p") / WORD_BITS).cast("long").alias("word_idx"),
-                F.expr(f"shiftleft(CAST(1 AS BIGINT), "
-                       f"CAST(p % {WORD_BITS} AS INT))").alias("mask"))
+        _aliased(df, {"key": key_col})
+        .select(F.explode(_positions(m_bits, k, seed)).alias("p"))
+        .selectExpr(*_WORD_MASK)
         .groupBy("word_idx")
         .agg(F.bit_or("mask").alias("word"))
     )
@@ -123,30 +122,25 @@ def bloom_probe(
 ) -> DataFrame:
     """JOIN-path probe: append ``out_col`` — True iff ALL ``k`` of the
     key's bits are set in ``words``. The oracle-replayable reference
-    semantics; :func:`bloom_probe_broadcast` must equal it exactly."""
+    semantics; :func:`bloom_probe_broadcast` must equal it exactly. The
+    key column comes first, as in a join using it."""
     _check(m_bits, k)
-    if key_col not in delta.columns:
-        raise IntervalSchemaError(f"missing column {key_col!r}")
-    if out_col in delta.columns:
-        raise IntervalSchemaError(f"output column {out_col!r} already exists")
-    pos = F.explode(F.array(*[
-        bit_position(F.col(key_col), i, m_bits, seed) for i in range(k)
-    ])).alias("p")
+    e, back = _plus(delta, {"key": key_col}, [out_col])
     probes = (
-        delta.select(key_col).distinct().select(key_col, pos)
-        .select(key_col,
-                (F.col("p") / WORD_BITS).cast("long").alias("word_idx"),
-                F.expr(f"shiftleft(CAST(1 AS BIGINT), "
-                       f"CAST(p % {WORD_BITS} AS INT))").alias("mask"))
+        e.select("key").distinct()
+        .select("key", F.explode(_positions(m_bits, k, seed)).alias("p"))
+        .selectExpr("key", *_WORD_MASK)
     )
     hit = (F.col("word").isNotNull()
            & (F.col("word").bitwiseAND(F.col("mask")) != 0))
     verdict = (
         probes.join(F.broadcast(words), "word_idx", "left")
-        .groupBy(key_col)
-        .agg((F.sum(hit.cast("int")) == F.lit(k)).alias(out_col))
+        .groupBy("key")
+        .agg((F.sum(hit.cast("int")) == F.lit(k)).alias("hit"))
     )
-    return delta.join(verdict, key_col, "left")
+    j = delta.columns.index(key_col)
+    return e.join(verdict, "key", "left").select(
+        F.col("key").alias(key_col), *back[:j], *back[j + 1:], F.col("hit").alias(out_col))
 
 
 def bloom_words_to_array(words: DataFrame, m_bits: int):
@@ -179,14 +173,12 @@ def bloom_probe_broadcast(
     from pyspark.sql.functions import pandas_udf
 
     _check(m_bits, k)
-    if out_col in delta.columns:
-        raise IntervalSchemaError(f"output column {out_col!r} already exists")
     expected = m_bits // WORD_BITS
     if len(words_arr) != expected:
         raise IntervalSchemaError(
             f"words_arr has {len(words_arr)} words, expected {expected}")
-    spark = delta.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(words_arr, dtype=np.int64))
+    e, back = _plus(delta, {"key": key_col}, [out_col])
+    bc = delta.sparkSession.sparkContext.broadcast(np.asarray(words_arr, dtype=np.int64))
 
     @pandas_udf("boolean")
     def _probe(positions: pd.Series) -> pd.Series:
@@ -201,10 +193,9 @@ def bloom_probe_broadcast(
                         & (np.int64(1) << (p % WORD_BITS))) != 0
         return pd.Series(out)
 
-    pos_arr = F.array(*[
-        bit_position(F.col(key_col), i, m_bits, seed) for i in range(k)
-    ])
-    return delta.withColumn(out_col, _probe(pos_arr))
+    # asNondeterministic: pure, like ann's broadcast UDFs; the marker only
+    # pins a single evaluation under downstream filters
+    return e.select(*back, _probe.asNondeterministic()(_positions(m_bits, k, seed)).alias(out_col))
 
 
 def bloom_fp_theory(n_keys: int, m_bits: int, k: int) -> float:

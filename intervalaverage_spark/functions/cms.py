@@ -42,8 +42,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.functions.bloom import _SEP
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.functions.bloom import _positions, bit_position
+from intervalaverage_spark.validation import IntervalSchemaError, _aliased, _plus
 
 
 def _check(width: int, depth: int) -> None:
@@ -53,13 +53,13 @@ def _check(width: int, depth: int) -> None:
         raise IntervalSchemaError(f"depth must be in [1, 16], got {depth}")
 
 
-def cms_position(key: Column, i: int, width: int, seed: str = "") -> Column:
-    """Column for row ``i``: first 48 bits of ``md5(seed ␟ i ␟ key)``
-    mod ``width`` — positive, so plain ``%`` matches every engine."""
-    h = F.md5(F.concat_ws(_SEP, F.lit(seed), F.lit(str(i)),
-                          key.cast("string")))
-    return (F.conv(F.substring(h, 1, 12), 16, 10).cast("long")
-            % F.lit(int(width)))
+def _counters(width: int, depth: int, seed: str) -> Column:
+    """The array of the entered column ``key``'s ``depth`` counters: in
+    row ``i``, column :func:`~intervalaverage_spark.functions.bloom.
+    bit_position` ``i`` mod ``width``."""
+    return F.array(*(F.struct(F.lit(i).alias("row"),
+                              bit_position(F.col("key"), i, width, seed).alias("col"))
+                     for i in range(depth)))
 
 
 def cms_build(
@@ -76,25 +76,14 @@ def cms_build(
     building from the exact vocab relation instead of the raw stream
     gives the identical sketch for a fraction of the explode."""
     _check(width, depth)
-    if key_col not in df.columns:
-        raise IntervalSchemaError(f"missing column {key_col!r}")
-    if weight_col is not None and weight_col not in df.columns:
-        raise IntervalSchemaError(f"missing column {weight_col!r}")
-    w = (F.col(weight_col).cast("long") if weight_col is not None
-         else F.lit(1).cast("long"))
-    per_row = df.select(
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("row"),
-                     cms_position(F.col(key_col), i, width, seed)
-                     .alias("col"))
-            for i in range(depth)
-        ])).alias("rc"),
-        w.alias("__w"),
+    weight = {} if weight_col is None else {"w": weight_col}
+    w = F.col("w") if weight else F.lit(1)
+    return (
+        _aliased(df, {"key": key_col, **weight})
+        .select(F.explode(_counters(width, depth, seed)).alias("rc"), w.cast("long").alias("w"))
+        .groupBy(F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
+        .agg(F.sum("w").alias("cnt"))
     )
-    return (per_row
-            .groupBy(F.col("rc.row").alias("row"),
-                     F.col("rc.col").alias("col"))
-            .agg(F.sum("__w").alias("cnt")))
 
 
 def cms_estimate(
@@ -108,30 +97,23 @@ def cms_estimate(
 ) -> DataFrame:
     """JOIN-path estimate: append ``out_col`` = min over the key's
     ``depth`` counters (0 where no counter exists). The
-    oracle-replayable reference semantics."""
+    oracle-replayable reference semantics. The key column comes first,
+    as in a join using it."""
     _check(width, depth)
-    if key_col not in keys.columns:
-        raise IntervalSchemaError(f"missing column {key_col!r}")
-    if out_col in keys.columns:
-        raise IntervalSchemaError(f"output column {out_col!r} already exists")
+    e, back = _plus(keys, {"key": key_col}, [out_col])
     probes = (
-        keys.select(key_col).distinct()
-        .select(key_col, F.explode(F.array(*[
-            F.struct(F.lit(i).alias("row"),
-                     cms_position(F.col(key_col), i, width, seed)
-                     .alias("col"))
-            for i in range(depth)
-        ])).alias("rc"))
-        .select(key_col, F.col("rc.row").alias("row"),
-                F.col("rc.col").alias("col"))
+        e.select("key").distinct()
+        .select("key", F.explode(_counters(width, depth, seed)).alias("rc"))
+        .select("key", F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
     )
     est = (
         probes.join(F.broadcast(cms), ["row", "col"], "left")
-        .groupBy(key_col)
-        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0).cast("long")))
-             .alias(out_col))
+        .groupBy("key")
+        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0).cast("long"))).alias("est"))
     )
-    return keys.join(est, key_col, "left")
+    j = keys.columns.index(key_col)
+    return e.join(est, "key", "left").select(
+        F.col("key").alias(key_col), *back[:j], *back[j + 1:], F.col("est").alias(out_col))
 
 
 def cms_to_array(cms: DataFrame, width: int, depth: int):
@@ -162,14 +144,12 @@ def cms_estimate_broadcast(
     from pyspark.sql.functions import pandas_udf
 
     _check(width, depth)
-    if out_col in keys.columns:
-        raise IntervalSchemaError(f"output column {out_col!r} already exists")
     mat = np.asarray(cms_arr, dtype=np.int64)
     if mat.shape != (depth, width):
         raise IntervalSchemaError(
             f"cms_arr has shape {mat.shape}, expected {(depth, width)}")
-    spark = keys.sparkSession
-    bc = spark.sparkContext.broadcast(mat)
+    e, back = _plus(keys, {"key": key_col}, [out_col])
+    bc = keys.sparkSession.sparkContext.broadcast(mat)
 
     @pandas_udf("long")
     def _est(positions: pd.Series) -> pd.Series:
@@ -180,10 +160,9 @@ def cms_estimate_broadcast(
         rows = np.arange(cols.shape[1])                # gather row i at col_i
         return pd.Series(m[rows, cols].min(axis=1))
 
-    pos_arr = F.array(*[
-        cms_position(F.col(key_col), i, width, seed) for i in range(depth)
-    ])
-    return keys.withColumn(out_col, _est(pos_arr))
+    # asNondeterministic: pure, like ann's broadcast UDFs; the marker only
+    # pins a single evaluation under downstream filters
+    return e.select(*back, _est.asNondeterministic()(_positions(width, depth, seed)).alias(out_col))
 
 
 def cms_error_theory(n_total: int, width: int, depth: int) -> tuple[float, float]:

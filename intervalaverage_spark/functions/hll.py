@@ -46,11 +46,11 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.functions.sampling import _md5_48
+from intervalaverage_spark.validation import IntervalSchemaError, _aliased, _no_collision, _roles
 
 #: md5-derived hash width (12 hex chars — same as the rest of the family)
 HASH_BITS = 48
-_SEP = "\x1f"
 
 
 def _check(b: int) -> None:
@@ -73,9 +73,7 @@ def hll_rank(key: Column, b: int, seed: str = "") -> tuple[Column, Column]:
     the register; rank = leading zeros of the remaining ``48−b`` bits
     + 1, computed as ``(48−b) − length(bin(w)) + 1`` — pure integer
     arithmetic, identical in Spark and DuckDB."""
-    h = (F.conv(F.substring(
-        F.md5(F.concat_ws(_SEP, F.lit(seed), key.cast("string"))),
-        1, 12), 16, 10).cast("long"))
+    h = _md5_48(seed, key)
     m = 1 << b
     reg = h % F.lit(m)
     w = F.floor(h / F.lit(m)).cast("long")
@@ -97,14 +95,19 @@ def hll_registers(
     group, whatever the input size. max() is idempotent, so duplicate
     keys cost nothing and the fold combines map-side."""
     _check(b)
-    gc = list(group_cols or [])
-    for c in (key_col, *gc):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"missing column {c!r}")
-    reg, rank = hll_rank(F.col(key_col), b, seed)
-    return (df.select(*gc, reg.alias("reg"), rank.alias("rank"))
-            .groupBy(*gc, "reg")
-            .agg(F.max("rank").alias("max_rank")))
+    groups = _roles("x", g=group_cols or [])
+    _no_collision(["reg", "max_rank"], list(groups.values()))
+    reg, rank = hll_rank(F.col("key"), b, seed)
+    e = _aliased(df, {**groups, "key": key_col})
+    return _fold(e.select(*groups, reg.alias("reg"), rank.alias("rank")), groups, "rank")
+
+
+def _fold(e: DataFrame, groups: dict[str, str], rank: str) -> DataFrame:
+    """The register-wise max of ``rank`` over ``e`` per entered group
+    ``groups`` (internal → user), under the user's names."""
+    return (e.groupBy(*groups, "reg")
+            .agg(F.max(rank).alias("max_rank"))
+            .select(*(F.col(g).alias(c) for g, c in groups.items()), "reg", "max_rank"))
 
 
 def hll_merge(
@@ -114,10 +117,9 @@ def hll_merge(
 ) -> DataFrame:
     """Register-wise max — the sketch of the UNION of the two inputs.
     Shards sketch independently; merging is this one bounded fold."""
-    gc = list(group_cols or [])
-    return (a.unionByName(b_df)
-            .groupBy(*gc, "reg")
-            .agg(F.max("max_rank").alias("max_rank")))
+    groups = _roles("x", g=group_cols or [])
+    cols = {**groups, "reg": "reg", "max_rank": "max_rank"}
+    return _fold(_aliased(a, cols).unionByName(_aliased(b_df, cols)), groups, "max_rank")
 
 
 def hll_estimate(
@@ -136,11 +138,12 @@ def hll_estimate(
     — the oracle replays it hash-exact."""
     _check(b)
     m = 1 << b
-    gc = list(group_cols or [])
+    groups = _roles("x", g=group_cols or [])
+    _no_collision([out_col], list(groups.values()))
     # coalesce: a GLOBAL agg over an empty register relation still emits
     # one row with SUM = NULL — an empty sketch must estimate 0 (all m
     # registers empty → linear counting gives m·ln(m/m) = 0), not NULL
-    agg = (registers.groupBy(*gc)
+    agg = (_aliased(registers, {**groups, "max_rank": "max_rank"}).groupBy(*groups)
            .agg(F.coalesce(
                     F.sum(F.pow(F.lit(2.0), -F.col("max_rank"))),
                     F.lit(0.0)).alias("__z_occ"),
@@ -151,7 +154,8 @@ def hll_estimate(
     est = F.when((raw < F.lit(2.5 * m)) & (v > 0),
                  F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double"))
                  ).otherwise(raw)
-    return agg.select(*gc, F.round(est, 6).alias(out_col))
+    return agg.select(*(F.col(g).alias(c) for g, c in groups.items()),
+                      F.round(est, 6).alias(out_col))
 
 
 def hll_error_theory(b: int) -> float:

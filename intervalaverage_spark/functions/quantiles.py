@@ -56,7 +56,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.validation import IntervalSchemaError, _aliased, _no_collision, _roles
 
 
 def _check(lo: float, hi: float, bins: int) -> float:
@@ -87,13 +87,19 @@ def hist_registers(
     """Histogram sketch of ``value_col``: ``(*group_cols, bin, cnt)``,
     ≤ ``bins`` rows per group. NULL values are excluded."""
     _check(lo, hi, bins)
-    gc = list(group_cols)
-    return (
-        df.where(F.col(value_col).isNotNull())
-        .select(*gc, hist_bin(F.col(value_col), lo, hi, bins).alias("bin"))
-        .groupBy(*gc, "bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    groups = _roles("x", g=group_cols)
+    _no_collision(["bin", "cnt"], list(groups.values()))
+    e = _aliased(df, {**groups, "v": value_col}).where("v IS NOT NULL")
+    return _fold(e.select(*groups, hist_bin(F.col("v"), lo, hi, bins).alias("bin")),
+                 groups, F.count(F.lit(1)))
+
+
+def _fold(e: DataFrame, groups: dict[str, str], cnt: Column) -> DataFrame:
+    """The aggregate ``cnt`` per bin of ``e`` and entered group ``groups``
+    (internal → user), under the user's names."""
+    return (e.groupBy(*groups, "bin")
+            .agg(cnt.alias("cnt"))
+            .select(*(F.col(g).alias(c) for g, c in groups.items()), "bin", "cnt"))
 
 
 def hist_merge(
@@ -101,12 +107,9 @@ def hist_merge(
 ) -> DataFrame:
     """Bin-wise sum: the sketch of the union of the two inputs. Exact —
     integer counters, any merge order."""
-    gc = list(group_cols)
-    return (
-        a.unionByName(b)
-        .groupBy(*gc, "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    groups = _roles("x", g=group_cols)
+    cols = {**groups, "bin": "bin", "cnt": "cnt"}
+    return _fold(_aliased(a, cols).unionByName(_aliased(b, cols)), groups, F.sum("cnt"))
 
 
 def hist_quantiles(
@@ -138,10 +141,12 @@ def hist_quantiles(
     for q in qs:
         if not 0.0 <= q <= 1.0:
             raise IntervalSchemaError(f"quantiles must be in [0, 1], got {q}")
-    gc = list(group_cols)
+    groups = _roles("x", g=group_cols)
+    _no_collision(["q", "hist_est", "n_points"], list(groups.values()))
+    gc = list(groups)
     w = Window.partitionBy(*gc).orderBy("bin")
     cum = (
-        sketch.select(
+        _aliased(sketch, {**groups, "bin": "bin", "cnt": "cnt"}).select(
             *gc,
             "bin",
             "cnt",
@@ -175,4 +180,4 @@ def hist_quantiles(
         F.min_by(est, F.col("bin")).alias("hist_est"),
         F.min("n_points").alias("n_points"),
     )
-    return picked.select(*gc, "q", "hist_est", "n_points")
+    return picked.select(*(F.col(g).alias(c) for g, c in groups.items()), "q", "hist_est", "n_points")

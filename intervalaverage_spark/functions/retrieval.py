@@ -40,8 +40,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.validation import IntervalSchemaError, _aliased, _no_collision
 from intervalaverage_spark.functions.textstats import tokens
+
+
+def _postings(e: DataFrame) -> DataFrame:
+    """:func:`bm25_postings` of the entered docs ``e`` (``id``, ``t``)."""
+    posts = (
+        e.select("id", F.explode(tokens(F.lower(F.col("t")))).alias("term"))
+        .groupBy("id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    return posts.withColumn("dl", F.sum("tf").over(Window.partitionBy("id")))
 
 
 def bm25_postings(
@@ -55,16 +65,9 @@ def bm25_postings(
     than a sibling ``F.size`` projection — never co-project a scalar
     with its own explode (the sibling re-evaluates per output row).
     """
-    posts = (
-        docs.select(
-            F.col(id_col),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-        )
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dl = Window.partitionBy(id_col)
-    return posts.withColumn("dl", F.sum("tf").over(dl))
+    _no_collision(["term", "tf", "dl"], [id_col])
+    return _postings(_aliased(docs, {"id": id_col, "t": text_col})).select(
+        F.col("id").alias(id_col), "term", "tf", "dl")
 
 
 def bm25_topk(
@@ -108,10 +111,11 @@ def bm25_topk(
     if k < 1:
         raise IntervalSchemaError(f"bm25: k must be >= 1, got {k}")
 
+    _no_collision(["query_id", "score", "n_terms_hit", "rnk"], [id_col])
     posts = (
-        postings
-        if postings is not None
-        else bm25_postings(docs, id_col, text_col)
+        _postings(_aliased(docs, {"id": id_col, "t": text_col}))
+        if postings is None
+        else _aliased(postings, {"id": id_col, "term": "term", "tf": "tf", "dl": "dl"})
     )
 
     stats = docs.agg(
@@ -120,7 +124,7 @@ def bm25_topk(
     # avgdl: exact integer token-count sum ÷ exact doc count — ONE IEEE
     # division, replayable cross-engine. Token counts come from the
     # postings (sum of tf == dl), not a second tokenise pass.
-    lens = posts.groupBy(id_col).agg(F.max("dl").alias("dl"))
+    lens = posts.groupBy("id").agg(F.max("dl").alias("dl"))
     avg = lens.agg(
         F.sum("dl").alias("sum_dl"), F.count(F.lit(1)).alias("n_len")
     )
@@ -130,12 +134,11 @@ def bm25_topk(
     )
 
     df_stats = posts.groupBy("term").agg(
-        F.countDistinct(id_col).alias("df")
+        F.countDistinct("id").alias("df")
     )
 
-    qterms = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.explode(tokens(F.lower(F.col(qtext_col)))).alias("term"),
+    qterms = _aliased(queries, {"query_id": qid_col, "qt": qtext_col}).select(
+        "query_id", F.explode(tokens(F.lower(F.col("qt")))).alias("term")
     ).distinct()
 
     # broadcast the small side: query terms (+ their df) meet the
@@ -162,24 +165,22 @@ def bm25_topk(
     contrib = F.round(idf * tf_part, 6).cast("decimal(18,6)")
 
     scored = (
-        matched.select(
-            "query_id", F.col(id_col), contrib.alias("w")
-        )
-        .groupBy("query_id", id_col)
+        matched.select("query_id", "id", contrib.alias("w"))
+        .groupBy("query_id", "id")
         .agg(
             F.sum("w").alias("score_dec"),
             F.count(F.lit(1)).alias("n_terms_hit"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("score_dec").desc(), F.col(id_col).asc()
+        F.col("score_dec").desc(), F.col("id").asc()
     )
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
             "query_id",
-            id_col,
+            F.col("id").alias(id_col),
             F.col("score_dec").cast("double").alias("score"),
             "n_terms_hit",
             F.col("rnk").cast("long").alias("rnk"),

@@ -40,7 +40,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.validation import IntervalSchemaError
+from intervalaverage_spark.validation import IntervalSchemaError, _q
 
 #: 2^48 — 12 hex chars of md5; exactly representable in a double, so the
 #: division is one rounding step and every engine lands on the same value
@@ -49,19 +49,23 @@ _U_DENOM = float(1 << 48)
 _SEP = "\x1f"
 
 
-def md5_uniform(key_cols: Sequence[str], seed: str = "") -> Column:
-    """Deterministic pseudo-uniform in [0, 1): first 48 bits of
-    ``md5(seed ␟ key1 ␟ key2 …)`` divided by 2^48.
+def _md5_48(seed: str, *parts: Column) -> Column:
+    """First 48 bits of ``md5(seed ␟ part1 ␟ part2 …)`` as a non-negative
+    BIGINT — the one hash of the sampling and sketch functions (the Bloom
+    and count-min positions, the HLL register and rank, the uniform here).
+    The SQL twin is ``CAST(('0x' || substr(md5(concat_ws(chr(31), seed,
+    part…)), 1, 12)) AS BIGINT)``: 48 bits, so positive and exact in every
+    engine."""
+    h = F.md5(F.concat_ws(_SEP, F.lit(seed), *(p.cast("string") for p in parts)))
+    return F.conv(F.substring(h, 1, 12), 16, 10).cast("long")
 
-    Engine-portable by construction — the SQL twin is
-    ``CAST(('0x' || substr(md5(seed || chr(31) || key…), 1, 12)) AS
-    BIGINT) / 281474976710656.0`` (see the driver queries) — and exact:
-    48 bits < 2^53 so the integer is lossless in a double and both
-    engines perform the identical single division."""
-    h = F.md5(F.concat_ws(
-        _SEP, F.lit(seed), *[F.col(c).cast("string") for c in key_cols]
-    ))
-    return F.conv(F.substring(h, 1, 12), 16, 10).cast("double") / F.lit(_U_DENOM)
+
+def md5_uniform(key_cols: Sequence[str], seed: str = "") -> Column:
+    """Deterministic pseudo-uniform in [0, 1): :func:`_md5_48` of the key
+    columns divided by 2^48 — exact, as 48 bits < 2^53 are lossless in a
+    double and every engine performs the identical single division (the
+    SQL twin is ``queries_pipeline._u_sql``)."""
+    return _md5_48(seed, *(F.expr(_q(c)) for c in key_cols)).cast("double") / F.lit(_U_DENOM)
 
 
 def deterministic_sample(

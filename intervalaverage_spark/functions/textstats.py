@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from intervalaverage_spark.validation import _plus
+
 #: small fixed marker-stopword profiles for the n-gram language heuristic.
 #: Deterministic tie-break: first language in this dict order wins.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -149,19 +151,25 @@ def _trunc6(c: Column) -> Column:
     return F.floor(c * 1000000.0) / 1000000.0
 
 
+def _frac(num: Column, den: Column) -> Column:
+    """``num / den`` truncated to 6 dp, 0.0 where ``den`` is not positive."""
+    return _trunc6(F.when(den > 0, num / den).otherwise(F.lit(0.0)))
+
+
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append the full stat set as columns (one projection, zero shuffles)."""
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        bpe_token_count(c).alias("n_bpe_tokens"),
-        _trunc6(punct_ratio(c)).alias("punct_ratio"),
-        _trunc6(stopword_ratio(c)).alias("stopword_ratio"),
-        _trunc6(quality_score(c)).alias("quality"),
-        lang_id(c).alias("lang_pred"),
-        fingerprint(c).alias("fingerprint"),
-    )
+    c = F.col("t")
+    stats = {
+        "n_tokens": token_count(c),
+        "n_bpe_tokens": bpe_token_count(c),
+        "punct_ratio": _trunc6(punct_ratio(c)),
+        "stopword_ratio": _trunc6(stopword_ratio(c)),
+        "quality": _trunc6(quality_score(c)),
+        "lang_pred": lang_id(c),
+        "fingerprint": fingerprint(c),
+    }
+    e, back = _plus(df, {"t": text_col}, list(stats))
+    return e.select(*back, *(v.alias(n) for n, v in stats.items()))
 
 
 def ngram_list(col: Column | str, n: int) -> Column:
@@ -204,68 +212,35 @@ def repetition_stats(
     together), no Python. Fractions are floor-truncated to 6 dp
     (cross-engine rounding-mode safety, like :func:`text_stats`).
     Docs with no lines/grams get 0.0 fractions."""
-    c = F.col(text_col)
-    base = df.select(F.col(id_col).alias("__rs_id"), c.alias("__rs_text"))
+    out = ["n_lines", "dup_line_frac", "dup_line_char_frac",
+           *(c for n in ns for c in (f"dup_{n}gram_frac", f"top_{n}gram_char_frac"))]
+    e, back = _plus(df, {"id": id_col, "t": text_col}, out)
 
-    lines = base.select(
-        "__rs_id", F.explode(F.split("__rs_text", "\n")).alias("__ln")
+    lc = (e.select("id", F.explode(F.split("t", "\n")).alias("ln"))
+          .groupBy("id", "ln").agg(F.count(F.lit(1)).alias("c")))
+    ln_chars = F.length("ln") * F.col("c")
+    line_stats = lc.groupBy("id").agg(
+        F.sum("c").cast("long").alias("n_lines"),
+        F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0)).alias("dl"),
+        F.sum(F.when(F.col("c") > 1, ln_chars).otherwise(0)).alias("dlc"),
+        F.sum(ln_chars).alias("lc"),
     )
-    lc = lines.groupBy("__rs_id", "__ln").agg(F.count(F.lit(1)).alias("__c"))
-    ln_chars = F.length("__ln") * F.col("__c")
-    line_stats = lc.groupBy("__rs_id").agg(
-        F.sum("__c").cast("long").alias("n_lines"),
-        F.sum(F.when(F.col("__c") > 1, F.col("__c")).otherwise(0)).alias("__dl"),
-        F.sum(F.when(F.col("__c") > 1, ln_chars).otherwise(0)).alias("__dlc"),
-        F.sum(ln_chars).alias("__lc"),
-    )
-    zero = F.lit(0.0)
-    line_stats = line_stats.select(
-        "__rs_id", "n_lines",
-        _trunc6(F.when(F.col("n_lines") > 0,
-                       F.col("__dl") / F.col("n_lines")).otherwise(zero))
-        .alias("dup_line_frac"),
-        _trunc6(F.when(F.col("__lc") > 0,
-                       F.col("__dlc") / F.col("__lc")).otherwise(zero))
-        .alias("dup_line_char_frac"),
-    )
-
-    out = df.join(line_stats, df[id_col] == line_stats["__rs_id"], "left").drop(
-        "__rs_id"
-    )
+    res = e.join(line_stats.select(
+        "id", "n_lines",
+        _frac(F.col("dl"), F.col("n_lines")).alias("dup_line_frac"),
+        _frac(F.col("dlc"), F.col("lc")).alias("dup_line_char_frac"),
+    ), "id", "left")
     for n in ns:
-        g = base.select(
-            "__rs_id", F.explode(ngram_list("__rs_text", n)).alias("__g")
-        )
-        gc = g.groupBy("__rs_id", "__g").agg(F.count(F.lit(1)).alias("__c"))
-        top = F.max(F.struct(F.col("__c"), F.length("__g").alias("__l"),
-                             F.col("__g")))
-        gs = gc.groupBy("__rs_id").agg(
-            F.sum("__c").alias("__tot"),
-            F.count(F.lit(1)).alias("__dst"),
-            top.alias("__top"),
-        )
-        gs = gs.select(
-            "__rs_id",
-            _trunc6(F.when(F.col("__tot") > 0,
-                           (F.col("__tot") - F.col("__dst")) / F.col("__tot"))
-                    .otherwise(zero)).alias(f"dup_{n}gram_frac"),
-            (F.col("__top")["__c"] * F.col("__top")["__l"]).alias("__topc"),
-        )
-        out = (
-            out.join(gs, out[id_col] == gs["__rs_id"], "left")
-            .drop("__rs_id")
-            .withColumn(
-                f"top_{n}gram_char_frac",
-                _trunc6(F.when(
-                    F.length(F.col(text_col)) > 0,
-                    F.coalesce(F.col("__topc"), F.lit(0)) / F.length(F.col(text_col)),
-                ).otherwise(zero)),
-            )
-            .drop("__topc")
-        )
-    fill = {
-        "n_lines": 0, "dup_line_frac": 0.0, "dup_line_char_frac": 0.0,
-        **{f"dup_{n}gram_frac": 0.0 for n in ns},
-        **{f"top_{n}gram_char_frac": 0.0 for n in ns},
-    }
-    return out.fillna(fill)
+        gc = (e.select("id", F.explode(ngram_list("t", n)).alias("g"))
+              .groupBy("id", "g").agg(F.count(F.lit(1)).alias("c")))
+        top = F.max(F.struct(F.col("c"), F.length("g").alias("l"), F.col("g")))
+        gs = gc.groupBy("id").agg(
+            F.sum("c").alias("tot"), F.count(F.lit(1)).alias("dst"), top.alias("top"))
+        res = res.join(gs.select(
+            "id",
+            _frac(F.col("tot") - F.col("dst"), F.col("tot")).alias(f"dup_{n}gram_frac"),
+            (F.col("top")["c"] * F.col("top")["l"]).alias(f"top{n}"),
+        ), "id", "left")
+    tops = {f"top_{n}gram_char_frac": _frac(F.coalesce(f"top{n}", F.lit(0)), F.length("t"))
+            for n in ns}
+    return res.select(*back, *(tops.get(c, F.coalesce(c, F.lit(0))).alias(c) for c in out))

@@ -474,6 +474,7 @@ def trend_points(
     """The ``(…keys, __t epoch-seconds, __x 6-dp decimal)`` projection
     shared by the batch and STREAMING trend paths (NULLs excluded) —
     factored out so both compute moments over bit-identical inputs."""
+    _no_collision(["__t", "__x"], group_vars)
     return df.where(f"{_q(value_col)} IS NOT NULL").selectExpr(
         *map(_q, group_vars), f"CAST(CAST({_q(ts_col)} AS TIMESTAMP) AS BIGINT) AS __t",
         f"CAST(round(CAST({_q(value_col)} AS DOUBLE), 6) AS {_DEC}) AS __x")
@@ -499,7 +500,7 @@ def trend_moments(
     bit-for-bit."""
     moments = {"t0": "max(t0)", "n_points": "count(1)", "_su": "sum(__u)", "_sx": "sum(__x)",
                "_sux": "sum(__u * __x)", "_suu": "sum(__u * __u)", "_sxx": "sum(__x * __x)"}
-    _no_collision(list(moments), group_vars)
+    _no_collision([*moments, "__u"], group_vars)
     g = [*map(_q, group_vars)]
     ctr = pts.join(t0, list(group_vars)).selectExpr(
         *g, "t0", "CAST(__t - t0 AS DECIMAL(12,0)) AS __u", "__x")

@@ -82,7 +82,7 @@ def cusum_points(
 ) -> DataFrame:
     """One row per (key, ts): the 6-dp decimal mean of ``value_col`` as
     ``x`` — :func:`_collapse` on the raw ``ts_col``."""
-    e = enter_points(df, ts_col, [value_col], group_vars)
+    e = enter_points(df, ts_col, [value_col], group_vars, out=[ts_col, "x"])
     g = e.cols("xg")
     return _collapse(e.x, "__xt0", g).selectExpr(*e.user(*g), f"__t AS {_q(ts_col)}", "x")
 

@@ -26,9 +26,8 @@ BATCH sketch SQL against the streamed result.
 """
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from intervalaverage_spark.functions.hll import _check, hll_rank
+from intervalaverage_spark.functions.hll import hll_registers
 
 
 def streaming_hll_registers(
@@ -37,15 +36,13 @@ def streaming_hll_registers(
     b: int,
     seed: str = "",
 ) -> DataFrame:
-    """Streaming register fold: the same md5/bin integer expressions as
-    the batch operator, grouped into the state-store-backed max. Use
-    with ``outputMode("complete")`` — state ≤ 2^b rows by construction
+    """Streaming register fold: the batch fold
+    :func:`~intervalaverage_spark.functions.hll.hll_registers` verbatim —
+    a pure select + groupBy + max, so Catalyst swaps in the
+    state-store-backed aggregate when the input is a streaming relation.
+    Use with ``outputMode("complete")`` — state ≤ 2^b rows by construction
     (same ``b`` bounds as the batch fold)."""
-    _check(b)
-    reg, rank = hll_rank(F.col(key_col), b, seed)
-    return (stream_df.select(reg.alias("reg"), rank.alias("rank"))
-            .groupBy("reg")
-            .agg(F.max("rank").alias("max_rank")))
+    return hll_registers(stream_df, key_col, b, seed)
 
 
 def streaming_hist_registers(

@@ -9,10 +9,12 @@ text over the internal names, and :class:`Entry` restores the user's names
 in the final projection: no user name is ever parsed as a column path, so
 any name works (``a.b``, ``g`x``, ``ws``, …). The point-series operators
 (the series analytics, fills, sessions, changepoint and downsampling) enter
-the same way through :func:`enter_points`, and so do ``functions/dedup``
-and ``functions/ann``: each public call reads its id, text or vector
-columns through one :func:`_aliased` projection to fixed internal names,
-and a call that returns its input plus columns checks them with
+the same way through :func:`enter_points`, and so do the ``functions/``
+modules dedup, ann, textstats, retrieval and the sketches (bloom, cms, hll,
+quantiles): each public call reads its id, text, key, group, value or
+vector columns through one :func:`_aliased` projection to fixed internal
+names, a call that returns its input plus columns enters through
+:func:`_plus`, and every name a call adds is checked with
 :func:`_no_collision`.
 """
 
@@ -67,8 +69,21 @@ def _roles(p: str, **roles: Sequence[str]) -> dict[str, str]:
 
 def _aliased(df: DataFrame, names: Mapping[str, str], *extra: str) -> DataFrame:
     """``df``'s columns under internal ``names`` (internal → user), then the
-    select items ``extra``: one quoted projection."""
+    select items ``extra``: one quoted projection. Raises naming the
+    columns ``df`` lacks."""
+    if missing := [c for c in dict.fromkeys(names.values()) if c not in df.columns]:
+        raise IntervalSchemaError(f"missing column(s) {missing}")
     return df.selectExpr(*(f"{_q(c)} AS {a}" for a, c in names.items()), *extra)
+
+
+def _plus(df: DataFrame, names: dict[str, str], out: Sequence[str]) -> tuple[DataFrame, list]:
+    """The entry of a function that returns ``df`` plus the columns ``out``:
+    ``df`` with its columns ``names`` (internal → user) and every column as
+    ``__xc<i>``, and the select items (Columns) giving those back under
+    their names."""
+    _no_collision(out, df.columns)
+    keep = _roles("x", c=df.columns)
+    return _aliased(df, {**keep, **names}), [F.col(a).alias(c) for a, c in keep.items()]
 
 
 def _no_collision(out: Sequence[str], carried: Sequence[str]) -> None:

@@ -16,6 +16,23 @@ from intervalaverage_spark import (
     is_overlapping,
     isolate_overlaps,
 )
+from intervalaverage_spark.functions.bloom import (
+    bloom_build,
+    bloom_probe,
+    bloom_probe_broadcast,
+    bloom_words_to_array,
+)
+from intervalaverage_spark.functions.cms import (
+    cms_build,
+    cms_estimate,
+    cms_estimate_broadcast,
+    cms_to_array,
+)
+from intervalaverage_spark.functions.hll import hll_estimate, hll_merge, hll_registers
+from intervalaverage_spark.functions.quantiles import hist_merge, hist_quantiles, hist_registers
+from intervalaverage_spark.functions.retrieval import bm25_postings, bm25_topk
+from intervalaverage_spark.functions.sampling import deterministic_sample, md5_uniform
+from intervalaverage_spark.functions.textstats import repetition_stats, text_stats
 from intervalaverage_spark.functions.ann import (
     assign_cells_broadcast,
     brute_topk,
@@ -61,6 +78,7 @@ from intervalaverage_spark.operators.fill import interpolate_linear, locf, nocb
 from intervalaverage_spark.operators.overlap import overlap_flags
 from intervalaverage_spark.operators.sessions import session_bounds, sessionize
 from intervalaverage_spark.streaming.seasonal_stream import streaming_seasonal_anomalies
+from intervalaverage_spark.streaming.sketch_stream import streaming_hll_registers
 from intervalaverage_spark.validation import IntervalSchemaError, _q
 from tests.conftest import _py4j_calls
 
@@ -252,6 +270,7 @@ def test_point_ops_any_name(points, op, bw, names):
 PIECES = {
     "cusum_calibration": lambda d, bw, k, t, v: cusum_calibration_from_points(
         cusum_points(d, t, v, [k]), [k]),
+    "trend_points": lambda d, bw, k, t, v: trend_points(d, t, v, [k]),
     "trend_t0": lambda d, bw, k, t, v: trend_t0(trend_points(d, t, v, [k]), [k]),
     "trend_moments": lambda d, bw, k, t, v: trend_moments(
         trend_points(d, t, v, [k]), [k], trend_t0(trend_points(d, t, v, [k]), [k])),
@@ -264,7 +283,12 @@ NAME_CLASHES = [("autocorr", {"k": "lag"}, True), ("seasonal_profile", {"k": "ph
                 *(("cusum_calibration", {"k": n}, True) for n in ("mu", "kappa", "h")),
                 ("trend_t0", {"k": "t0"}, True), ("trend_moments", {"k": "n_points"}, True),
                 *((op, {"k": "__t"}, False) for op in ("trend", "theil_sen", "cadence_stats")),
-                *((op, {"t": "x"}, False) for op in ("autocorr", "seasonal_profile"))]
+                *((op, {"t": "x"}, False) for op in ("autocorr", "seasonal_profile")),
+                *((op, {"k": n}, True) for op in ("trend_points", "trend_t0", "trend_moments")
+                  for n in ("__t", "__x")),
+                ("trend_moments", {"k": "__u"}, True),
+                *((op, n, True) for op in ("cusum_points", "cusum_calibration")
+                  for n in ({"k": "x"}, {"t": "x"}))]
 
 
 @pytest.mark.parametrize("op,names,raises", NAME_CLASHES,
@@ -343,14 +367,24 @@ def test_doc_ops_any_name(corpus, plain_results, op, names, raises):
     assert _result(build(*args)) == ([names.get(c, c) for c in want[0]], want[1])
 
 
-#: ANN calls that return input columns beside a column they add, with the
-#: added column's name, over vectors ``v`` whose id column is ``i``
+#: calls that return input columns beside a column they add, with the added
+#: column's name, over documents ``d`` (id, text ``x``) or vectors ``v``
+#: (id, embedding ``x``) whose id column is ``i``
 ADDS = {
-    "ivf_cells": ("ivf_cell", lambda v, i: ivf_cells(v, i, "x", n_cells=2)),
-    "assign_cells_broadcast": ("ivf_cell", lambda v, i: assign_cells_broadcast(
+    "ivf_cells": ("ivf_cell", lambda d, v, i: ivf_cells(v, i, "x", n_cells=2)),
+    "assign_cells_broadcast": ("ivf_cell", lambda d, v, i: assign_cells_broadcast(
         v, "x", [(0, [1.0, 1.0, 0.5])])),
-    "with_srp_buckets": ("srp_b0", lambda v, i: with_srp_buckets(v, "x", 3, bands=1)),
-    "brute_topk": ("cosine", lambda v, i: brute_topk(v, [1.0, 1.0, 0.5], i, "x", k=2)),
+    "with_srp_buckets": ("srp_b0", lambda d, v, i: with_srp_buckets(v, "x", 3, bands=1)),
+    "brute_topk": ("cosine", lambda d, v, i: brute_topk(v, [1.0, 1.0, 0.5], i, "x", k=2)),
+    "text_stats": ("n_tokens", lambda d, v, i: text_stats(d, "x")),
+    "bloom_probe": ("maybe_present", lambda d, v, i: bloom_probe(
+        d, "x", bloom_build(d, "x", 64, 2), 64, 2)),
+    "bloom_probe_broadcast": ("maybe_present", lambda d, v, i: bloom_probe_broadcast(
+        d, "x", [0, 0], 64, 2)),
+    "cms_estimate": ("cms_est", lambda d, v, i: cms_estimate(
+        d, "x", cms_build(d, "x", 16, 2), 16, 2)),
+    "cms_estimate_broadcast": ("cms_est", lambda d, v, i: cms_estimate_broadcast(
+        d, "x", [[0] * 16] * 2, 16, 2)),
 }
 
 
@@ -359,8 +393,122 @@ def test_added_column_named_like_an_input_raises(corpus, op):
     """An input column named like the column a call adds raises
     IntervalSchemaError instead of being overwritten."""
     name, build = ADDS[op]
+    docs, vecs = (f.withColumnRenamed("id", name) for f in corpus)
     with pytest.raises(IntervalSchemaError):
-        build(corpus[1].withColumnRenamed("id", name), name)
+        build(docs, vecs, name)
+
+
+def _sub(d, n):
+    """The rows of ``d`` with an id below 3: the members a sketch is built of."""
+    return d.where(f"{_q(n['id'])} < 3")
+
+
+#: the text, retrieval, sampling and sketch calls over documents ``d`` (id,
+#: text ``x``, group ``g``, value ``v``) and queries ``q`` (id ``qid``,
+#: text ``qt``), with the roles each reads; ``n`` maps a role to its name
+TEXT_OPS = {
+    "text_stats": ("x", lambda d, q, n: text_stats(d, n["x"])),
+    "repetition_stats": ("id x", lambda d, q, n: repetition_stats(d, n["id"], n["x"])),
+    "bm25_postings": ("id x", lambda d, q, n: bm25_postings(d, n["id"], n["x"])),
+    "bm25_topk": ("id x", lambda d, q, n: bm25_topk(
+        d, q, n["id"], n["x"], n["qid"], n["qt"], k=2)),
+    "bm25_topk-postings": ("id x", lambda d, q, n: bm25_topk(
+        d, q, n["id"], n["x"], n["qid"], n["qt"], k=2,
+        postings=bm25_postings(d, n["id"], n["x"]))),
+    "md5_uniform": ("id x", lambda d, q, n: d.select(
+        md5_uniform([n["id"], n["x"]], "s").alias("u"))),
+    "deterministic_sample": ("x", lambda d, q, n: deterministic_sample(d, 0.5, [n["x"]], "s")),
+    "bloom_build": ("x", lambda d, q, n: bloom_build(d, n["x"], 64, 2)),
+    "bloom_probe": ("x", lambda d, q, n: bloom_probe(
+        d, n["x"], bloom_build(_sub(d, n), n["x"], 64, 2), 64, 2)),
+    "bloom_probe_broadcast": ("x", lambda d, q, n: bloom_probe_broadcast(
+        d, n["x"], bloom_words_to_array(bloom_build(_sub(d, n), n["x"], 64, 2), 64), 64, 2)),
+    "cms_build": ("id x", lambda d, q, n: cms_build(d, n["x"], 16, 2, weight_col=n["id"])),
+    "cms_estimate": ("x", lambda d, q, n: cms_estimate(
+        d, n["x"], cms_build(_sub(d, n), n["x"], 16, 2), 16, 2)),
+    "cms_estimate_broadcast": ("x", lambda d, q, n: cms_estimate_broadcast(
+        d, n["x"], cms_to_array(cms_build(_sub(d, n), n["x"], 16, 2), 16, 2), 16, 2)),
+    "hll_registers": ("x g", lambda d, q, n: hll_registers(d, n["x"], 4, group_cols=[n["g"]])),
+    "hll_merge": ("x g", lambda d, q, n: hll_merge(
+        hll_registers(_sub(d, n), n["x"], 4, group_cols=[n["g"]]),
+        hll_registers(d, n["x"], 4, group_cols=[n["g"]]), [n["g"]])),
+    "hll_estimate": ("x g", lambda d, q, n: hll_estimate(
+        hll_registers(d, n["x"], 4, group_cols=[n["g"]]), 4, [n["g"]])),
+    "streaming_hll_registers": ("x", lambda d, q, n: streaming_hll_registers(d, n["x"], 4)),
+    "hist_registers": ("g v", lambda d, q, n: hist_registers(d, n["v"], 0.0, 8.0, 4, [n["g"]])),
+    "hist_merge": ("g v", lambda d, q, n: hist_merge(
+        hist_registers(_sub(d, n), n["v"], 0.0, 8.0, 4, [n["g"]]),
+        hist_registers(d, n["v"], 0.0, 8.0, 4, [n["g"]]), [n["g"]])),
+    "hist_quantiles": ("g v", lambda d, q, n: hist_quantiles(
+        hist_registers(d, n["v"], 0.0, 8.0, 4, [n["g"]]), [0.5, 1.0], 0.0, 8.0, 4, [n["g"]])),
+}
+
+#: ``a.b`` and ``g`x`` in each role a call reads
+TEXT_NAMES = [{"id": "a.b", "x": "g`x", "qid": "a.b", "qt": "g`x"},
+              {"id": "g`x", "x": "a.b", "qid": "g`x", "qt": "a.b"},
+              {"g": "a.b", "v": "g`x"}, {"g": "g`x", "v": "a.b"}]
+
+#: (op, names, raises): column paths in the roles a call reads; names the
+#: calls use inside (the plain-name rows) or add to their output (a named
+#: error)
+TEXT_CASES = [*((op, n, False) for op, (reads, _) in TEXT_OPS.items()
+                for n in TEXT_NAMES if set(n) & set(reads.split())),
+              *(("bm25_topk", {"id": n}, False) for n in ("term", "tf", "dl", "df")),
+              ("cms_estimate", {"x": "row"}, False),
+              *(("bloom_probe", {"x": n}, False) for n in ("word_idx", "mask")),
+              ("repetition_stats", {"g": "n_lines"}, True),
+              *(("bm25_topk", {"id": n}, True)
+                for n in ("query_id", "score", "n_terms_hit", "rnk")),
+              *(("hll_registers", {"g": n}, True) for n in ("reg", "max_rank")),
+              *(("hist_registers", {"g": n}, True) for n in ("bin", "cnt")),
+              ("hll_estimate", {"g": "hll_est"}, True),
+              *(("hist_quantiles", {"g": n}, True) for n in ("q", "hist_est", "n_points"))]
+
+
+@pytest.fixture(scope="module")
+def texts(spark):
+    """Documents with a repeated line and an empty text, and two queries."""
+    fox = "the quick brown fox jumps over the lazy"
+    docs = spark.createDataFrame(
+        [(1, f"{fox} dog\n{fox} dog", "a", 1.5), (2, f"{fox} cat", "b", 2.5),
+         (3, "the dog", "a", None), (4, "", "b", 7.0), (5, "lorem ipsum", None, 3.0)],
+        "id bigint, x string, g string, v double")
+    queries = spark.createDataFrame([(1, "quick dog"), (2, "lorem the")], "qid bigint, qt string")
+    return docs, queries
+
+
+@pytest.mark.parametrize("op,names,raises", TEXT_CASES,
+                         ids=[f"{op}-{','.join(f'{r}={c}' for r, c in n.items())}"
+                              for op, n, _ in TEXT_CASES])
+def test_text_ops_any_name(texts, plain_results, op, names, raises):
+    """An id, text, key, group or value column of any name gives the
+    columns and rows of the plain-name run; one named like an output
+    column raises IntervalSchemaError."""
+    docs, queries = texts
+    _, build = TEXT_OPS[op]
+    n = {r: names.get(r, r) for r in ("id", "x", "g", "v", "qid", "qt")}
+    args = (docs.withColumnsRenamed({r: n[r] for r in ("id", "x", "g", "v")}),
+            queries.withColumnsRenamed({r: n[r] for r in ("qid", "qt")}), n)
+    if raises:
+        with pytest.raises(IntervalSchemaError):
+            build(*args)
+        return
+    if op not in plain_results:
+        plain_results[op] = _result(build(docs, queries, {r: r for r in n}))
+    want = plain_results[op]
+    assert _result(build(*args)) == ([n.get(c, c) for c in want[0]], want[1])
+
+
+@pytest.mark.parametrize("op", ["bloom_probe_broadcast", "cms_estimate_broadcast"])
+def test_filtered_broadcast_probe_runs_its_udf_once(texts, op):
+    """A filter on the column a broadcast probe adds plans its pandas UDF
+    once: pushed below the projection, it would evaluate it twice."""
+    docs, queries = texts
+    n = {r: r for r in ("id", "x", "g", "v", "qid", "qt")}
+    out = TEXT_OPS[op][1](docs, queries, n)
+    out = out.filter("NOT maybe_present" if op.startswith("bloom") else "cms_est > 1")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_plans_build_in_few_py4j_calls(spark, monkeypatch):

@@ -176,13 +176,16 @@ def main() -> None:
     # window, never a single-partition exchange
     from pyspark.sql import Window as W
 
+    from intervalaverage_spark.validation import _plus
+
     dd = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "n_chars")
-    pre = dd.repartitionByRange(F.col("doc_id")).withColumn(
-        "__pid", F.spark_partition_id()
+    e, _ = _plus(dd, {"id": "doc_id", "w": "n_chars"}, ["cum_weight", "shard"])
+    pre = e.repartitionByRange(F.col("id")).withColumn(
+        "pid", F.spark_partition_id()
     ).withColumn(
-        "__cs",
-        F.sum(F.col("n_chars").cast("long")).over(
-            W.partitionBy("__pid").orderBy("doc_id")
+        "cs",
+        F.sum(F.col("w").cast("long")).over(
+            W.partitionBy("pid").orderBy("id")
         ),
     )
     add(
@@ -192,7 +195,7 @@ def main() -> None:
         must_not=["Exchange SinglePartition", "BatchEvalPython"],
         note=(
             "The stage the checkpoint materializes (mirrors "
-            "functions/sharding.py:54-60 exactly): range shuffle + "
+            "functions/sharding.py:54-62 exactly): range shuffle + "
             "per-partition sort + partitioned running sum. No global "
             "single-task window anywhere in the operator."
         ),

@@ -42,8 +42,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from intervalaverage_spark.validation import _aliased, _no_collision
 
-def _epoch_secs(col: Column | str) -> Column:
+
+def _epoch_secs(col: str) -> Column:
     """Epoch seconds (floor) for TIMESTAMP *and* TIMESTAMP_NTZ order
     columns: Spark 4 forbids a direct NTZ→numeric cast (the same
     DATATYPE_MISMATCH family as date→long, round-6 ADVICE on fill.py),
@@ -51,17 +53,40 @@ def _epoch_secs(col: Column | str) -> Column:
     UTC (intervalaverage_spark.session), so NTZ epoch arithmetic
     matches DuckDB's naive ``epoch_us // 1e6`` exactly; gaps are
     tz-invariant either way (both endpoints shift together)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("timestamp").cast("long")
+    return F.col(col).cast("timestamp").cast("long")
 
 
-def _fingerprint(col: Column | str) -> Column:
+def _fingerprint(col: str) -> Column:
     """16-byte hex payload fingerprint. md5 (not xxhash64): cross-engine
     reproducible, so oracle value-hash compares cover the operator; the
     collision risk at 10^12 rows (~2^-49 per pair under birthday bound
     within one key's few-hundred snapshots) is below hardware error."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(c.cast("string"))
+    return F.md5(F.col(col).cast("string"))
+
+
+def _snapshots(df: DataFrame, key_col: str, ts_col: str, payload_col: str) -> DataFrame:
+    """The churn functions' one entry, batch and streaming: ``df``'s key,
+    ts and payload as ``(key, ts, fingerprint)`` in one quoted projection,
+    so any column name works and only the fingerprint leaves the scan."""
+    return _aliased(df, {"key": key_col, "ts": ts_col, "p": payload_col}).select(
+        "key", "ts", _fingerprint("p").alias("fingerprint"))
+
+
+def _changes(df: DataFrame, key_col: str, ts_col: str, payload_col: str) -> DataFrame:
+    """:func:`snapshot_changes` over internal names: ``(key, ts,
+    fingerprint, is_changed, revisit_secs)``."""
+    w = Window.partitionBy("key").orderBy("ts", "fingerprint")
+    return (
+        _snapshots(df, key_col, ts_col, payload_col)
+        .withColumn("prev_fp", F.lag("fingerprint").over(w))
+        .withColumn("prev_ts", F.lag("ts").over(w))
+        .select(
+            "key", "ts", "fingerprint",
+            (F.col("prev_fp").isNull() | (F.col("prev_fp") != F.col("fingerprint")))
+            .alias("is_changed"),
+            (_epoch_secs("ts") - _epoch_secs("prev_ts")).alias("revisit_secs"),
+        )
+    )
 
 
 def snapshot_changes(
@@ -87,28 +112,10 @@ def snapshot_changes(
     identical consecutive snapshots — delta storage. Ties on ts within
     a key are ordered by fingerprint for determinism.
     """
-    w = Window.partitionBy(key_col).orderBy(ts_col, "fingerprint")
-    return (
-        df.select(
-            F.col(key_col),
-            F.col(ts_col),
-            _fingerprint(payload_col).alias("fingerprint"),
-        )
-        .withColumn("_prev_fp", F.lag("fingerprint").over(w))
-        .withColumn("_prev_ts", F.lag(ts_col).over(w))
-        .select(
-            key_col,
-            ts_col,
-            "fingerprint",
-            (
-                F.col("_prev_fp").isNull()
-                | (F.col("_prev_fp") != F.col("fingerprint"))
-            ).alias("is_changed"),
-            (
-                _epoch_secs(ts_col) - _epoch_secs("_prev_ts")
-            ).alias("revisit_secs"),
-        )
-    )
+    _no_collision(["fingerprint", "is_changed", "revisit_secs"], [key_col, ts_col])
+    return _changes(df, key_col, ts_col, payload_col).select(
+        F.col("key").alias(key_col), F.col("ts").alias(ts_col),
+        "fingerprint", "is_changed", "revisit_secs")
 
 
 def snapshot_intervals(
@@ -140,26 +147,23 @@ def snapshot_intervals(
     all partition by the key — EnsureRequirements plans ONE
     hashpartitioning exchange for the whole chain.
     """
-    ch = snapshot_changes(df, key_col, ts_col, payload_col)
-    w_run = (
-        Window.partitionBy(key_col)
-        .orderBy(ts_col, "fingerprint")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    _no_collision(["fingerprint", "valid_from", "valid_to", "last_seen", "n_snapshots"], [key_col])
+    w_run = (Window.partitionBy("key").orderBy("ts", "fingerprint")
+             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    runs = _changes(df, key_col, ts_col, payload_col).withColumn(
+        "run", F.sum(F.col("is_changed").cast("long")).over(w_run)
     )
-    runs = ch.withColumn(
-        "_run", F.sum(F.col("is_changed").cast("long")).over(w_run)
-    )
-    iv = runs.groupBy(key_col, "_run").agg(
+    iv = runs.groupBy("key", "run").agg(
         # constant within a run — min() rather than first() so the agg
         # stays order-insensitive (first() is formally non-deterministic)
         F.min("fingerprint").alias("fingerprint"),
-        F.min(ts_col).alias("valid_from"),
-        F.max(ts_col).alias("last_seen"),
+        F.min("ts").alias("valid_from"),
+        F.max("ts").alias("last_seen"),
         F.count(F.lit(1)).alias("n_snapshots"),
     )
-    w_next = Window.partitionBy(key_col).orderBy("_run")
+    w_next = Window.partitionBy("key").orderBy("run")
     return iv.select(
-        key_col,
+        F.col("key").alias(key_col),
         "fingerprint",
         "valid_from",
         F.lead("valid_from").over(w_next).alias("valid_to"),
@@ -190,9 +194,10 @@ def churn_stats(
     Shares the key-hash exchange with the window above — one shuffle
     end to end.
     """
-    ch = snapshot_changes(df, key_col, ts_col, payload_col)
+    _no_collision(["n_snapshots", "n_changes", "change_rate", "avg_revisit_secs"], [key_col])
     return (
-        ch.groupBy(key_col)
+        _changes(df, key_col, ts_col, payload_col)
+        .groupBy("key")
         .agg(
             F.count(F.lit(1)).alias("n_snapshots"),
             F.sum(
@@ -204,7 +209,7 @@ def churn_stats(
         )
         .filter(F.col("n_snapshots") >= min_snapshots)
         .select(
-            key_col,
+            F.col("key").alias(key_col),
             "n_snapshots",
             "n_changes",
             F.round(
@@ -252,32 +257,34 @@ def recrawl_priority(
     is a 1-row global max broadcast-cross-joined in — no second scan
     shuffles, no collect in the lineage.
     """
+    _no_collision(["n_snapshots", "decayed_changes", "decayed_visit_mass",
+                   "decayed_change_rate", "secs_since_last"], [key_col])
     lam = float(half_life_secs)
-    ch = snapshot_changes(df, key_col, ts_col, payload_col)
-    anchor = ch.agg(F.max(_epoch_secs(ts_col)).alias("__as_of"))
+    ch = _changes(df, key_col, ts_col, payload_col)
+    anchor = ch.agg(F.max(_epoch_secs("ts")).alias("as_of"))
     rev = ch.crossJoin(F.broadcast(anchor))
-    age = F.col("__as_of") - _epoch_secs(ts_col)
+    age = F.col("as_of") - _epoch_secs("ts")
     w = F.pow(F.lit(2.0), -age.cast("double") / F.lit(lam))
     is_rev = F.col("revisit_secs").isNotNull()
     return (
-        rev.groupBy(key_col)
+        rev.groupBy("key")
         .agg(
             F.count(F.lit(1)).alias("n_snapshots"),
             F.sum(
                 F.when(is_rev & F.col("is_changed"), w).otherwise(F.lit(0.0))
-            ).alias("__dc"),
-            F.sum(F.when(is_rev, w).otherwise(F.lit(0.0))).alias("__dv"),
-            (F.first("__as_of") - F.max(_epoch_secs(ts_col))).alias(
+            ).alias("dc"),
+            F.sum(F.when(is_rev, w).otherwise(F.lit(0.0))).alias("dv"),
+            (F.first("as_of") - F.max(_epoch_secs("ts"))).alias(
                 "secs_since_last"
             ),
         )
         .filter(F.col("n_snapshots") >= min_snapshots)
         .select(
-            key_col,
+            F.col("key").alias(key_col),
             "n_snapshots",
-            F.round("__dc", 6).alias("decayed_changes"),
-            F.round("__dv", 6).alias("decayed_visit_mass"),
-            F.round(F.col("__dc") / F.col("__dv"), 6).alias(
+            F.round("dc", 6).alias("decayed_changes"),
+            F.round("dv", 6).alias("decayed_visit_mass"),
+            F.round(F.col("dc") / F.col("dv"), 6).alias(
                 "decayed_change_rate"
             ),
             "secs_since_last",

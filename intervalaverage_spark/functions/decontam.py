@@ -37,20 +37,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.functions.textstats import bind_once
-
-
-def _gram_tokens(col: Column | str) -> Column:
-    """Lowercased whitespace tokens (empty-safe) — the decontamination
-    token domain. Lowercasing is standard: eval prompts are quoted with
-    arbitrary casing in crawls."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), r"\s+"), lambda t: t != "")
+from intervalaverage_spark.functions.textstats import bind_once, tokens
+from intervalaverage_spark.validation import _aliased, _plus
 
 
 def distinct_ngrams(col: Column | str, n: int) -> Column:
     """DISTINCT word ``n``-grams of the lowercased text (space-joined
-    strings; empty array for docs shorter than ``n`` words)."""
+    strings; empty array for docs shorter than ``n`` words). Lowercasing
+    is standard: eval prompts are quoted with arbitrary casing in crawls."""
     def body(toks: Column) -> Column:
         k = F.size(toks)
         grams = F.transform(
@@ -62,7 +56,7 @@ def distinct_ngrams(col: Column | str, n: int) -> Column:
         )
 
     # let-bound so tokenization runs once per doc, not once per gram
-    return bind_once(_gram_tokens(col), body)
+    return bind_once(tokens(F.lower(col)), body)
 
 
 def contaminant_grams(
@@ -72,7 +66,8 @@ def contaminant_grams(
     ``gram``. Persist this once per benchmark release; every corpus
     snapshot probes the same table."""
     return (
-        contaminants.select(F.explode(distinct_ngrams(text_col, n)).alias("gram"))
+        _aliased(contaminants, {"t": text_col})
+        .select(F.explode(distinct_ngrams("t", n)).alias("gram"))
         .distinct()
     )
 
@@ -95,20 +90,18 @@ def decontaminate(
     some pipelines tolerate 1-2 incidental overlaps); the stats row is
     the reusable primitive. The contaminant gram set rides a broadcast
     join, so the corpus side never shuffles (module docstring)."""
+    e, back = _plus(docs, {"id": id_col, "t": text_col}, ["n_contam_grams", "is_contaminated"])
     grams = F.broadcast(contaminant_grams(contaminants, contam_text_col, n))
     # explode ALONE (no sibling scalar of the same expensive expression)
-    exploded = docs.select(
-        F.col(id_col).alias("__dc_id"),
-        F.explode(distinct_ngrams(text_col, n)).alias("gram"),
-    )
     hits = (
-        exploded.join(grams, "gram")
-        .groupBy("__dc_id")
-        .agg(F.count("*").alias("__dc_hits"))  # grams are distinct per doc
+        e.select("id", F.explode(distinct_ngrams("t", n)).alias("gram"))
+        .join(grams, "gram")
+        .groupBy("id")
+        .agg(F.count("*").alias("hits"))  # grams are distinct per doc
     )
-    out = docs.join(hits, docs[id_col] == hits["__dc_id"], "left")
-    return out.select(
-        *docs.columns,
-        F.coalesce(F.col("__dc_hits"), F.lit(0)).cast("long").alias("n_contam_grams"),
-        (F.coalesce(F.col("__dc_hits"), F.lit(0)) > 0).alias("is_contaminated"),
+    n_hits = F.coalesce(F.col("hits"), F.lit(0))
+    return e.join(hits, "id", "left").select(
+        *back,
+        n_hits.cast("long").alias("n_contam_grams"),
+        (n_hits > 0).alias("is_contaminated"),
     )

@@ -36,6 +36,22 @@ from pyspark.sql import functions as F
 from intervalaverage_spark.functions.sharding import assign_shards
 from intervalaverage_spark.functions.textstats import token_count, tokens
 from intervalaverage_spark.plans.rangejoin import fdiv
+from intervalaverage_spark.validation import _aliased, _no_collision
+
+
+def _packed(df: DataFrame, id_col: str, text_col: str, budget: int) -> DataFrame:
+    """:func:`pack_sequences` with the id column named ``id``."""
+    e = _aliased(df, {"id": id_col, "t": text_col})
+    with_cum = assign_shards(
+        e.select("id", token_count("t").alias("n_tokens")), "id", "n_tokens", budget)
+    start = (F.col("cum_weight") - F.col("n_tokens")).alias("start_offset")
+    seq_first = F.col("shard").alias("seq_first")  # floor(start/budget)
+    seq_last = fdiv(
+        F.greatest(F.col("cum_weight") - 1, F.col("cum_weight") - F.col("n_tokens")),
+        budget,
+    ).alias("seq_last")
+    return with_cum.select("id", "n_tokens", start, seq_first, seq_last).withColumn(
+        "crosses_boundary", (F.col("seq_last") > F.col("seq_first")))
 
 
 def pack_sequences(
@@ -56,28 +72,9 @@ def pack_sequences(
     boundary), and ``crosses_boundary`` whether a cut falls inside the
     doc (the tax concat-and-chunk pays vs never-split sharding).
     """
-    toks = token_count(text_col).alias("n_tokens")
-    with_cum = assign_shards(
-        df.select(F.col(id_col), toks),
-        id_col=id_col,
-        weight_col="n_tokens",
-        shard_weight=budget,
-    )
-    start = (F.col("cum_weight") - F.col("n_tokens")).alias("start_offset")
-    seq_first = F.col("shard").alias("seq_first")  # floor(start/budget)
-    seq_last = fdiv(
-        F.greatest(F.col("cum_weight") - 1, F.col("cum_weight") - F.col("n_tokens")),
-        budget,
-    ).alias("seq_last")
-    return with_cum.select(
-        id_col,
-        "n_tokens",
-        start,
-        seq_first,
-        seq_last,
-    ).withColumn(
-        "crosses_boundary", (F.col("seq_last") > F.col("seq_first"))
-    )
+    _no_collision(["n_tokens", "start_offset", "seq_first", "seq_last", "crosses_boundary"],
+                  [id_col])
+    return _packed(df, id_col, text_col, budget).withColumnRenamed("id", id_col)
 
 
 def sequence_fill_stats(
@@ -94,24 +91,17 @@ def sequence_fill_stats(
     the last is exactly full by construction (``fill_fraction`` 1.0);
     the tail sequence's fraction is the padding the run would waste.
     """
-    packed = pack_sequences(df, id_col, text_col, budget).filter(
-        F.col("n_tokens") > 0
-    )
-    seqs = packed.select(
-        id_col,
-        "n_tokens",
-        "start_offset",
-        F.explode(F.sequence("seq_first", "seq_last")).alias("seq"),
-    )
+    _no_collision(["seq", "n_docs", "n_tokens", "fill_fraction"], [id_col])
+    seqs = _packed(df, id_col, text_col, budget).filter(F.col("n_tokens") > 0).select(
+        "id", "n_tokens", "start_offset",
+        F.explode(F.sequence("seq_first", "seq_last")).alias("seq"))
     lo = F.greatest(F.col("start_offset"), F.col("seq") * budget)
-    hi = F.least(
-        F.col("start_offset") + F.col("n_tokens"), (F.col("seq") + 1) * budget
-    )
+    hi = F.least(F.col("start_offset") + F.col("n_tokens"), (F.col("seq") + 1) * budget)
     return (
-        seqs.select(F.col("seq"), (hi - lo).alias("__t"), F.col(id_col))
+        seqs.select(F.col("seq"), (hi - lo).alias("__t"), F.col("id"))
         .groupBy("seq")
         .agg(
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("id").alias("n_docs"),
             F.sum("__t").alias("n_tokens"),
         )
         .select(
@@ -165,22 +155,23 @@ def chunk_documents(
         raise ValueError(
             "chunk_documents: overlap_tokens must satisfy "
             f"0 <= overlap < chunk_tokens, got {overlap_tokens}")
+    _no_collision(["chunk_id", "start_token", "n_tokens", "chunk_text"], [id_col])
     stride = chunk_tokens - overlap_tokens
-    toks = tokens(text_col)
+    toks = tokens("t")
     n = F.size(toks)
     starts = F.sequence(
         F.lit(1),
         F.greatest(n - F.lit(overlap_tokens), F.lit(1)),
         F.lit(stride),
     )
-    ex = df.select(
-        F.col(id_col),
-        toks.alias("__tk"),
+    ex = _aliased(df, {"id": id_col, "t": text_col}).select(
+        "id",
+        toks.alias("tk"),
         F.posexplode(starts).alias("chunk_id", "start_token"),
     )
-    piece = F.slice(F.col("__tk"), F.col("start_token"), chunk_tokens)
+    piece = F.slice(F.col("tk"), F.col("start_token"), chunk_tokens)
     return ex.select(
-        id_col,
+        F.col("id").alias(id_col),
         "chunk_id",
         "start_token",
         F.size(piece).cast("long").alias("n_tokens"),

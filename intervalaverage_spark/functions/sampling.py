@@ -37,10 +37,11 @@ from __future__ import annotations
 
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.validation import IntervalSchemaError, _q
+from intervalaverage_spark.validation import (IntervalSchemaError, _aliased, _no_collision,
+                                              _plus, _q, _roles)
 
 #: 2^48 — 12 hex chars of md5; exactly representable in a double, so the
 #: division is one rounding step and every engine lands on the same value
@@ -104,14 +105,14 @@ def assign_splits(
     ``DataFrame.randomSplit`` cannot give you."""
     if not key_cols:
         raise IntervalSchemaError("key_cols must name at least one column")
-    if out_col in df.columns:
-        raise IntervalSchemaError(f"output column {out_col!r} already exists")
     if not weights or any(w <= 0 for w in weights.values()):
         raise IntervalSchemaError("weights must be a non-empty map of positives")
     total = sum(weights.values())
     if abs(total - 1.0) > 1e-9:
         raise IntervalSchemaError(f"weights must sum to 1, got {total}")
-    u = md5_uniform(key_cols, seed)
+    keys = _roles("x", k=key_cols)
+    e, back = _plus(df, keys, [out_col])
+    u = md5_uniform(list(keys), seed)
     expr = None
     acc = 0.0
     names = list(weights)
@@ -121,7 +122,7 @@ def assign_splits(
         expr = case if expr is None else expr.when(u < F.lit(acc), F.lit(name))
     expr = (expr.otherwise(F.lit(names[-1])) if expr is not None
             else F.lit(names[-1]))
-    return df.select("*", expr.alias(out_col))
+    return e.select(*back, expr.alias(out_col))
 
 
 def leakage_safe_splits(
@@ -173,15 +174,16 @@ def split_straddle_pairs(
     of LSH banding) against a 2-column (id, split) projection — both
     sides key-partitioned, no window, no state."""
     a, b = pair_cols
-    lab = splits.select(F.col(id_col).alias("__sid"),
-                        F.col(split_col).alias("__slab"))
+    _no_collision(["split_1", "split_2"], pairs.columns)
+    rest = _roles("x", c=[c for c in pairs.columns if c not in (a, b)])
     return (
-        pairs
-        .join(lab.withColumnRenamed("__sid", a)
-                 .withColumnRenamed("__slab", "split_1"), a)
-        .join(lab.withColumnRenamed("__sid", b)
-                 .withColumnRenamed("__slab", "split_2"), b)
+        _aliased(pairs, {"a": a, "b": b, **rest})
+        .join(_aliased(splits, {"a": id_col, "split_1": split_col}), "a")
+        .join(_aliased(splits, {"b": id_col, "split_2": split_col}), "b")
         .filter(F.col("split_1") != F.col("split_2"))
+        # the column order of the USING joins on a, then b
+        .select(F.col("b").alias(b), F.col("a").alias(a),
+                *(F.col(x).alias(c) for x, c in rest.items()), "split_1", "split_2")
     )
 
 
@@ -218,25 +220,17 @@ def weighted_sample(
     partitions — retries and re-runs select identically."""
     if k < 1:
         raise IntervalSchemaError(f"k must be >= 1, got {k}")
-    if weight_col not in df.columns:
-        raise IntervalSchemaError(f"missing column {weight_col!r}")
-    if pri_out in df.columns:
-        raise IntervalSchemaError(f"output column {pri_out!r} already exists")
-    gc = list(group_cols or [])
-    u = md5_uniform(id_cols, seed)
-    pri = F.round(
-        F.pow(u, F.lit(1.0) / F.col(weight_col).cast("double")), 6)
-    pool = (df.filter(F.col(weight_col).isNotNull()
-                      & (F.col(weight_col) > 0))
-            .select("*", pri.alias(pri_out)))
-    if not gc:
-        # single global group: same plan via a constant key, dropped after
-        pool = pool.select("*", F.lit(1).alias("__ws_g"))
-        out = cap_per_key(pool, ["__ws_g"], k, id_cols,
-                          order_col=pri_out, descending=True, seed=seed)
-        return out.drop("__ws_g")
-    return cap_per_key(pool, gc, k, id_cols,
-                       order_col=pri_out, descending=True, seed=seed)
+    if not id_cols:
+        raise IntervalSchemaError("id_cols must be non-empty")
+    keys, ids = _roles("x", g=group_cols or []), _roles("x", i=id_cols)
+    e, back = _plus(df, {**keys, **ids, "__w": weight_col}, [pri_out])
+    w = F.col("__w")
+    pri = F.round(F.pow(md5_uniform(list(ids), seed), F.lit(1.0) / w.cast("double")), 6)
+    # single global group: the same plan via a constant key
+    pool = e.filter(w.isNotNull() & (w > 0)).select(
+        "*", pri.alias("__pri"), *([] if keys else [F.lit(1).alias("__xg")]))
+    return _top_n(pool, list(keys) or ["__xg"], k, list(ids), "__pri", True, seed).select(
+        *back, F.col("__pri").alias(pri_out))
 
 
 def token_mix_sample(
@@ -282,18 +276,16 @@ def token_mix_sample(
     total = sum(targets.values())
     if abs(total - 1.0) > 1e-9:
         raise IntervalSchemaError(f"target shares must sum to 1, got {total}")
-    for c in (stratum_col, weight_col, *key_cols):
-        if c not in df.columns:
-            raise IntervalSchemaError(f"missing column {c!r}")
-    if rate_out in df.columns:
-        raise IntervalSchemaError(f"output column {rate_out!r} already exists")
+    keys = _roles("x", k=key_cols)
+    e, back = _plus(df, {"s": stratum_col, "w": weight_col, **keys}, [rate_out])
+    stratum = F.col("s").cast("string")
     # one bounded row per stratum — driver-side metadata, not a data read
     actual = {
-        r["__s"]: int(r["__w"])
-        for r in df.groupBy(F.col(stratum_col).cast("string").alias("__s"))
-        .agg(F.sum(F.col(weight_col).cast("long")).alias("__w"))
+        r["s"]: int(r["w"])
+        for r in e.groupBy(stratum.alias("s"))
+        .agg(F.sum(F.col("w").cast("long")).alias("w"))
         .collect()
-        if r["__s"] in targets
+        if r["s"] in targets
     }
     missing = [s for s in targets if actual.get(s, 0) <= 0]
     if missing:
@@ -307,13 +299,14 @@ def token_mix_sample(
     }
     rate = None
     for s, r in rates.items():
-        case = (F.col(stratum_col).cast("string") == s, F.lit(r))
+        case = (stratum == s, F.lit(r))
         rate = F.when(*case) if rate is None else rate.when(*case)
     rate = rate.otherwise(F.lit(None).cast("double"))
-    u = md5_uniform(key_cols, seed)
+    u = md5_uniform(list(keys), seed)
     return (
-        df.select("*", rate.alias(rate_out))
-        .filter(F.col(rate_out).isNotNull() & (u < F.col(rate_out)))
+        e.select("*", rate.alias("rate"))
+        .filter(F.col("rate").isNotNull() & (u < F.col("rate")))
+        .select(*back, F.col("rate").alias(rate_out))
     )
 
 
@@ -340,37 +333,39 @@ def cap_per_key(
     then global top-n over the ≤ B·n survivors per key. Bit-identical to
     the flat path: every global top-n row is in its own bucket's local
     top-n, so phase 2 ranks a superset of the winners."""
-    key_cols, id_cols = list(key_cols), list(id_cols)
     if not key_cols or not id_cols:
         raise IntervalSchemaError("key_cols and id_cols must be non-empty")
     if n < 1:
         raise IntervalSchemaError(f"n must be >= 1, got {n}")
-    missing = [c for c in (*key_cols, *id_cols) if c not in df.columns]
-    if order_col is not None and order_col not in df.columns:
-        missing.append(order_col)
-    if missing:
-        raise IntervalSchemaError(f"missing column(s) {missing}")
-    u = md5_uniform(id_cols, seed)
+    if salt_buckets is not None and salt_buckets < 1:
+        raise IntervalSchemaError(f"salt_buckets must be >= 1, got {salt_buckets}")
+    keys, ids = _roles("x", g=key_cols), _roles("x", i=id_cols)
+    order = {"__xo": order_col} if order_col is not None else {}
+    e, back = _plus(df, {**keys, **ids, **order}, [])
+    return _top_n(e, list(keys), n, list(ids), "__xo" if order else None, descending, seed,
+                  salt_buckets).select(*back)
+
+
+def _top_n(df: DataFrame, keys: list[str], n: int, ids: list[str], order_col: str | None,
+           descending: bool, seed: str, salt_buckets: int | None = None) -> DataFrame:
+    """:func:`cap_per_key` over the internal names ``keys``, ``ids`` and
+    ``order_col`` of ``df``: its rows that survive, with every column."""
+    u = md5_uniform(ids, seed)
     order = [u.asc()]
     if order_col is not None:
         lead = F.col(order_col).desc() if descending else F.col(order_col).asc()
         order = [lead, u.asc()]
 
-    from pyspark.sql import Window
-
-    def topn(frame: DataFrame, part_cols: list[Column | str]) -> DataFrame:
-        w = Window.partitionBy(*part_cols).orderBy(*order)
+    def topn(frame: DataFrame, part: list[str]) -> DataFrame:
+        w = Window.partitionBy(*part).orderBy(*order)
         return (
-            frame.select("*", F.row_number().over(w).alias("__cpk_rn"))
-            .filter(F.col("__cpk_rn") <= n)
-            .drop("__cpk_rn")
+            frame.select("*", F.row_number().over(w).alias("__rn"))
+            .filter(F.col("__rn") <= n)
+            .drop("__rn")
         )
 
     if salt_buckets is None:
-        return topn(df, key_cols)
-    if salt_buckets < 1:
-        raise IntervalSchemaError(f"salt_buckets must be >= 1, got {salt_buckets}")
-    bucket = F.pmod(F.xxhash64(*[F.col(c) for c in id_cols]),
-                    F.lit(int(salt_buckets)))
-    local = topn(df.withColumn("__cpk_b", bucket), [*key_cols, "__cpk_b"])
-    return topn(local, key_cols).drop("__cpk_b")
+        return topn(df, keys)
+    bucket = F.pmod(F.xxhash64(*map(F.col, ids)), F.lit(int(salt_buckets)))
+    local = topn(df.withColumn("__cpk_b", bucket), [*keys, "__cpk_b"])
+    return topn(local, keys)

@@ -22,7 +22,7 @@ query's DuckDB oracle is a plain ``SUM() OVER (ORDER BY id)``).
 CORRECTNESS NOTE (the subtle trap): ``repartitionByRange`` SAMPLES its
 range boundaries per execution (RangePartitioner seeds from the RDD id),
 so the totals job and a later output action would otherwise see DIFFERENT
-``__pid`` assignments for rows near boundaries — silently wrong
+``pid`` assignments for rows near boundaries — silently wrong
 cum_weight. The partitioned frame is therefore eagerly materialized with
 ``localCheckpoint`` BEFORE totals are collected: both the totals job and
 every downstream action read the same frozen partitioning. (On a real
@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from intervalaverage_spark.plans.rangejoin import fdiv
+from intervalaverage_spark.validation import _plus
 
 
 def assign_shards(
@@ -50,26 +51,27 @@ def assign_shards(
     order) and ``shard`` = (cum_weight − weight) div shard_weight.
     A document larger than the budget still lands in exactly one shard
     (greedy packing never splits a document)."""
-    w = F.col(weight_col).cast("long")
-    part = df.repartitionByRange(F.col(id_col)).withColumn(
-        "__pid", F.spark_partition_id()
+    e, back = _plus(df, {"id": id_col, "w": weight_col}, ["cum_weight", "shard"])
+    w = F.col("w").cast("long")
+    part = e.repartitionByRange(F.col("id")).withColumn(
+        "pid", F.spark_partition_id()
     )
-    wspec = Window.partitionBy("__pid").orderBy(id_col)
+    wspec = Window.partitionBy("pid").orderBy("id")
     # freeze the sampled range partitioning (module docstring: boundaries
-    # re-sample per execution) so totals and output read identical __pid
-    base = part.withColumn("__cs", F.sum(w).over(wspec)).localCheckpoint()
+    # re-sample per execution) so totals and output read identical pid
+    base = part.withColumn("cs", F.sum(w).over(wspec)).localCheckpoint()
     # one row per partition — bounded driver-side metadata, not a data read
     totals = {
-        r["__pid"]: r["__t"]
-        for r in base.groupBy("__pid").agg(F.sum(w).alias("__t")).collect()
+        r["pid"]: r["t"]
+        for r in base.groupBy("pid").agg(F.sum(w).alias("t")).collect()
     }
     pids = sorted(totals)
     offsets = dict(zip(pids, accumulate([0] + [totals[p] for p in pids[:-1]])))
     off = F.element_at(
         F.create_map(*[F.lit(x) for p in pids for x in (p, offsets[p])]),
-        F.col("__pid"),
+        F.col("pid"),
     ).cast("long")
-    cum = (F.col("__cs") + off).alias("cum_weight")
+    cum = (F.col("cs") + off).alias("cum_weight")
     return base.select(
-        *df.columns, cum, fdiv(F.col("__cs") + off - w, shard_weight).alias("shard")
+        *back, cum, fdiv(F.col("cs") + off - w, shard_weight).alias("shard")
     )

@@ -43,15 +43,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.functions.decontam import _gram_tokens
-from intervalaverage_spark.functions.textstats import bind_once
+from intervalaverage_spark.functions.textstats import bind_once, tokens
 from intervalaverage_spark.operators.coalesce import interval_coalesce
+from intervalaverage_spark.validation import _aliased, _no_collision
 
 
-def _pos_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """``(id, pos, gkey)`` — one row per word n-gram occurrence; ``pos``
-    is the 1-based token index of the gram's first word, ``gkey`` the
-    md5 of the space-joined gram."""
+def _pos_grams(docs: DataFrame, n: int) -> DataFrame:
+    """``(id, pos, gkey)`` of the entered ``docs`` (``id``, ``t``) — one
+    row per word n-gram occurrence; ``pos`` is the 1-based token index of
+    the gram's first word, ``gkey`` the md5 of the space-joined gram."""
     def body(tk):
         return F.when(
             F.size(tk) >= n,
@@ -65,10 +65,10 @@ def _pos_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
         ).otherwise(F.array().cast("array<struct<pos:int,gkey:string>>"))
 
     # let-bound so tokenization runs once per doc, not once per gram
-    grams = bind_once(_gram_tokens(text_col), body)
+    grams = bind_once(tokens(F.lower("t")), body)
     return (
-        df.select(F.col(id_col), F.explode(grams).alias("g"))
-        .select(id_col, F.col("g.pos").alias("pos"), F.col("g.gkey").alias("gkey"))
+        docs.select("id", F.explode(grams).alias("g"))
+        .select("id", F.col("g.pos").alias("pos"), F.col("g.gkey").alias("gkey"))
     )
 
 
@@ -88,35 +88,34 @@ def duplicated_span_stats(
     double-counted), and ``dup_fraction`` = dup_tokens / n_tokens
     (rounded 6 dp; 0.0 for docs shorter than ``n`` tokens).
     """
-    pg = _pos_grams(df, id_col, text_col, n)
+    _no_collision(["n_tokens", "dup_tokens", "dup_fraction"], [id_col])
+    docs = _aliased(df, {"id": id_col, "t": text_col})
+    pg = _pos_grams(docs, n)
     dup = (
         pg.groupBy("gkey")
-        .agg(F.countDistinct(id_col).alias("_nd"))
-        .filter(F.col("_nd") >= min_docs)
+        .agg(F.countDistinct("id").alias("nd"))
+        .filter(F.col("nd") >= min_docs)
         .select("gkey")
     )
     spans = pg.join(dup, "gkey").select(
-        id_col,
+        "id",
         F.col("pos").cast("long").alias("s"),
         (F.col("pos") + (n - 1)).cast("long").alias("e"),
     )
     covered = (
-        interval_coalesce(spans, ["s", "e"], [id_col])
-        .groupBy(id_col)
-        .agg(F.sum("covered").alias("dup_tokens"))
+        interval_coalesce(spans, ["s", "e"], ["id"])
+        .groupBy("id")
+        .agg(F.sum("covered").alias("dup"))
     )
-    base = df.select(
-        F.col(id_col), F.size(_gram_tokens(text_col)).cast("long").alias("n_tokens")
-    )
+    dup_tokens = F.coalesce(F.col("dup"), F.lit(0))
     return (
-        base.join(covered, id_col, "left")
+        docs.select("id", F.size(tokens(F.lower("t"))).cast("long").alias("n"))
+        .join(covered, "id", "left")
         .select(
-            id_col,
-            "n_tokens",
-            F.coalesce(F.col("dup_tokens"), F.lit(0)).cast("long").alias("dup_tokens"),
-            F.when(F.col("n_tokens") > 0,
-                   F.round(F.coalesce(F.col("dup_tokens"), F.lit(0))
-                           / F.col("n_tokens"), 6))
+            F.col("id").alias(id_col),
+            F.col("n").alias("n_tokens"),
+            dup_tokens.cast("long").alias("dup_tokens"),
+            F.when(F.col("n") > 0, F.round(dup_tokens / F.col("n"), 6))
             .otherwise(F.lit(0.0))
             .alias("dup_fraction"),
         )

@@ -28,6 +28,34 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from intervalaverage_spark.functions.textstats import tokens
+from intervalaverage_spark.validation import _aliased, _no_collision
+
+#: the per-term statistics, after the group column
+_STATS = ["term", "cf", "df", "n_docs", "idf"]
+
+
+def _term_stats(df: DataFrame, id_col: str, text_col: str, group_col: str | None,
+                out: list[str]) -> DataFrame:
+    """:func:`term_stats` with the group column named ``g``, after
+    checking that the output names ``out`` differ from the id and group."""
+    g = {"g": group_col} if group_col else {}
+    _no_collision(out, [id_col, *g.values()])
+    e = _aliased(df, {"id": id_col, "t": text_col, **g})
+    words = e.select(*g, "id", F.explode(tokens(F.lower(F.col("t")))).alias("term"))
+    per_term = words.groupBy(*g, "term").agg(
+        F.count(F.lit(1)).alias("cf"),
+        F.countDistinct("id").alias("df"),
+    )
+    if g:
+        ndocs = e.groupBy("g").agg(F.countDistinct("id").alias("n_docs"))
+        per_term = per_term.join(F.broadcast(ndocs), "g")
+    else:
+        ndocs = e.agg(F.countDistinct("id").alias("n_docs"))
+        per_term = per_term.crossJoin(F.broadcast(ndocs))
+    idf = F.round(
+        F.log((F.col("n_docs") + 1) / (F.col("df") + 1)) + 1, 6
+    ).alias("idf")
+    return per_term.select(*g, "term", "cf", "df", "n_docs", idf)
 
 
 def term_stats(
@@ -45,28 +73,8 @@ def term_stats(
     sklearn-style smoothed idf — never negative, defined for unseen
     terms). Tokenisation is lowercased whitespace (textstats.tokens).
     """
-    gcols = [group_col] if group_col else []
-    words = df.select(
-        *gcols,
-        F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
-    per_term = words.groupBy(*gcols, "term").agg(
-        F.count(F.lit(1)).alias("cf"),
-        F.countDistinct(id_col).alias("df"),
-    )
-    if gcols:
-        ndocs = df.groupBy(*gcols).agg(
-            F.countDistinct(id_col).alias("n_docs")
-        )
-        per_term = per_term.join(F.broadcast(ndocs), gcols)
-    else:
-        ndocs = df.agg(F.countDistinct(id_col).alias("n_docs"))
-        per_term = per_term.crossJoin(F.broadcast(ndocs))
-    idf = F.round(
-        F.log((F.col("n_docs") + 1) / (F.col("df") + 1)) + 1, 6
-    ).alias("idf")
-    return per_term.select(*gcols, "term", "cf", "df", "n_docs", idf)
+    stats = _term_stats(df, id_col, text_col, group_col, _STATS)
+    return stats.withColumnsRenamed({"g": group_col} if group_col else {})
 
 
 def top_terms(
@@ -83,12 +91,10 @@ def top_terms(
     rank window partitions by group over the group's VOCABULARY —
     bounded rows per partition regardless of corpus size.
     """
-    stats = term_stats(df, id_col, text_col, group_col)
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("cf").desc(), F.col("term").asc()
-    )
+    stats = _term_stats(df, id_col, text_col, group_col, [*_STATS, "rnk"])
+    w = Window.partitionBy("g").orderBy(F.col("cf").desc(), F.col("term").asc())
     return (
         stats.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
-        .select(group_col, "term", "cf", "df", "n_docs", "idf", "rnk")
+        .withColumnRenamed("g", group_col)
     )

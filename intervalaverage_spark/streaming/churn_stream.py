@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     LongType,
     StringType,
@@ -51,6 +50,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from intervalaverage_spark.functions.churn import _snapshots
+from intervalaverage_spark.validation import INTEGRAL_TYPES, IntervalSchemaError
 
 #: output rows: the kept (changed) snapshots
 _OUT_SCHEMA = StructType([
@@ -88,6 +90,24 @@ def _delta_fn(
         yield pd.concat(out)
 
 
+def _keyed(src: DataFrame, key_col: str, ts_col: str, payload_col: str, delay: str) -> DataFrame:
+    """The two streams' one entry: the batch ``(key, ts, fingerprint)``,
+    the key as BIGINT. A key that is not integral raises at build time:
+    the cast would merge keys 1.2 and 1.7, or fail mid-stream on a url."""
+    e = _snapshots(src, key_col, ts_col, payload_col)
+    if not isinstance(t := e.schema["key"].dataType, INTEGRAL_TYPES):
+        raise IntervalSchemaError(
+            f"key column {key_col!r} must be integral (the output key is BIGINT), "
+            f"got {t.simpleString()}")
+    return e.select(
+        F.col("key").cast("long").alias("key"),
+        # NTZ sources (plain parquet timestamps) cast to session-tz
+        # TIMESTAMP: event-time watermarks reject TIMESTAMP_NTZ
+        F.col("ts").cast("timestamp").alias("ts"),
+        "fingerprint",
+    ).withWatermark("ts", delay)
+
+
 def streaming_snapshot_deltas(
     src: DataFrame,
     key_col: str,
@@ -97,22 +117,14 @@ def streaming_snapshot_deltas(
 ) -> DataFrame:
     """Changed-snapshot filter over a STREAMING DataFrame.
 
-    ``src`` must be a streaming DataFrame with a long key, a timestamp,
-    and a string payload. Returns the streaming DataFrame of kept rows
+    ``src`` must be a streaming DataFrame with an integral key (any other
+    key type raises :class:`IntervalSchemaError`), a timestamp, and a
+    payload. Returns the streaming DataFrame of kept rows
     ``(key, ts, fingerprint)`` — append mode; pair with any sink. The
     watermark bounds state-store eviction bookkeeping only (state here
     never grows past one fingerprint per key regardless).
     """
-    keyed = (
-        src.select(
-            F.col(key_col).cast("long").alias("key"),
-            # NTZ sources (plain parquet timestamps) cast to session-tz
-            # TIMESTAMP: event-time watermarks reject TIMESTAMP_NTZ
-            F.col(ts_col).cast("timestamp").alias("ts"),
-            F.md5(F.col(payload_col).cast("string")).alias("fingerprint"),
-        )
-        .withWatermark("ts", watermark_delay)
-    )
+    keyed = _keyed(src, key_col, ts_col, payload_col, watermark_delay)
     return keyed.groupBy("key").applyInPandasWithState(
         _delta_fn,
         outputStructType=_OUT_SCHEMA,
@@ -228,18 +240,11 @@ def streaming_decayed_churn(
     timestamp, two doubles, one count per key). Totals are monotone in
     ``n_snapshots``: a downstream reader takes each key's max-n row and
     rescales to any global anchor with one ``2^(−Δ/hl)`` factor. Same
-    cross-micro-batch event-time-order contract as
+    integral-key rule and cross-micro-batch event-time-order contract as
     :func:`streaming_snapshot_deltas`; the batch operator
     (functions/churn.py recrawl_priority) is the reconciliation path.
     """
-    keyed = (
-        src.select(
-            F.col(key_col).cast("long").alias("key"),
-            F.col(ts_col).cast("timestamp").alias("ts"),
-            F.md5(F.col(payload_col).cast("string")).alias("fingerprint"),
-        )
-        .withWatermark("ts", watermark_delay)
-    )
+    keyed = _keyed(src, key_col, ts_col, payload_col, watermark_delay)
     return keyed.groupBy("key").applyInPandasWithState(
         _decayed_churn_factory(half_life_secs),
         outputStructType=_CHURN_OUT_SCHEMA,

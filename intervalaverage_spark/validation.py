@@ -9,13 +9,12 @@ text over the internal names, and :class:`Entry` restores the user's names
 in the final projection: no user name is ever parsed as a column path, so
 any name works (``a.b``, ``g`x``, ``ws``, …). The point-series operators
 (the series analytics, fills, sessions, changepoint and downsampling) enter
-the same way through :func:`enter_points`, and so do the ``functions/``
-modules dedup, ann, textstats, retrieval and the sketches (bloom, cms, hll,
-quantiles): each public call reads its id, text, key, group, value or
-vector columns through one :func:`_aliased` projection to fixed internal
-names, a call that returns its input plus columns enters through
-:func:`_plus`, and every name a call adds is checked with
-:func:`_no_collision`.
+the same way through :func:`enter_points`, and so does every ``functions/``
+frame call but ``gorilla.encode_segments``, with the churn streams: each
+public call reads its id, text, key, group, value or vector columns through
+one :func:`_aliased` projection to fixed internal names, a call that
+returns its input plus columns enters through :func:`_plus`, and every name
+a call adds is checked with :func:`_no_collision`.
 """
 
 from __future__ import annotations
@@ -78,12 +77,15 @@ def _aliased(df: DataFrame, names: Mapping[str, str], *extra: str) -> DataFrame:
 
 def _plus(df: DataFrame, names: dict[str, str], out: Sequence[str]) -> tuple[DataFrame, list]:
     """The entry of a function that returns ``df`` plus the columns ``out``:
-    ``df`` with its columns ``names`` (internal → user) and every column as
-    ``__xc<i>``, and the select items (Columns) giving those back under
-    their names."""
+    ``df`` with its columns ``names`` (internal → user) and every other
+    column as ``__xc<i>``, and the select items (Columns) giving every
+    column back under its name. A column is carried once: one in ``names``
+    comes back from its first internal name."""
     _no_collision(out, df.columns)
-    keep = _roles("x", c=df.columns)
-    return _aliased(df, {**keep, **names}), [F.col(a).alias(c) for a, c in keep.items()]
+    first = {c: a for a, c in reversed(names.items())}
+    keep = {f"__xc{i}": c for i, c in enumerate(df.columns) if c not in first}
+    return _aliased(df, {**keep, **names}), [
+        F.col(first.get(c, f"__xc{i}")).alias(c) for i, c in enumerate(df.columns)]
 
 
 def _no_collision(out: Sequence[str], carried: Sequence[str]) -> None:

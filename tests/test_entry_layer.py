@@ -5,6 +5,8 @@ and plans are SQL text, so they build in few driver → JVM calls."""
 from __future__ import annotations
 
 import datetime
+import tempfile
+import uuid
 from decimal import Decimal
 
 import pytest
@@ -22,17 +24,41 @@ from intervalaverage_spark.functions.bloom import (
     bloom_probe_broadcast,
     bloom_words_to_array,
 )
+from intervalaverage_spark.functions.churn import (
+    churn_stats,
+    recrawl_priority,
+    snapshot_changes,
+    snapshot_intervals,
+)
 from intervalaverage_spark.functions.cms import (
     cms_build,
     cms_estimate,
     cms_estimate_broadcast,
     cms_to_array,
 )
+from intervalaverage_spark.functions.decontam import contaminant_grams, decontaminate
 from intervalaverage_spark.functions.hll import hll_estimate, hll_merge, hll_registers
+from intervalaverage_spark.functions.packing import (
+    chunk_documents,
+    pack_sequences,
+    sequence_fill_stats,
+)
 from intervalaverage_spark.functions.quantiles import hist_merge, hist_quantiles, hist_registers
 from intervalaverage_spark.functions.retrieval import bm25_postings, bm25_topk
-from intervalaverage_spark.functions.sampling import deterministic_sample, md5_uniform
+from intervalaverage_spark.functions.sampling import (
+    assign_splits,
+    cap_per_key,
+    deterministic_sample,
+    leakage_safe_splits,
+    md5_uniform,
+    split_straddle_pairs,
+    token_mix_sample,
+    weighted_sample,
+)
+from intervalaverage_spark.functions.sharding import assign_shards
+from intervalaverage_spark.functions.substr import duplicated_span_stats
 from intervalaverage_spark.functions.textstats import repetition_stats, text_stats
+from intervalaverage_spark.functions.vocab import term_stats, top_terms
 from intervalaverage_spark.functions.ann import (
     assign_cells_broadcast,
     brute_topk,
@@ -77,6 +103,10 @@ from intervalaverage_spark.operators.downsample import M4_COLS, lttb, m4_downsam
 from intervalaverage_spark.operators.fill import interpolate_linear, locf, nocb
 from intervalaverage_spark.operators.overlap import overlap_flags
 from intervalaverage_spark.operators.sessions import session_bounds, sessionize
+from intervalaverage_spark.streaming.churn_stream import (
+    streaming_decayed_churn,
+    streaming_snapshot_deltas,
+)
 from intervalaverage_spark.streaming.seasonal_stream import streaming_seasonal_anomalies
 from intervalaverage_spark.streaming.sketch_stream import streaming_hll_registers
 from intervalaverage_spark.validation import IntervalSchemaError, _q
@@ -385,6 +415,12 @@ ADDS = {
         d, "x", cms_build(d, "x", 16, 2), 16, 2)),
     "cms_estimate_broadcast": ("cms_est", lambda d, v, i: cms_estimate_broadcast(
         d, "x", [[0] * 16] * 2, 16, 2)),
+    "assign_splits": ("split", lambda d, v, i: assign_splits(d, {"a": 1.0}, ["x"])),
+    "weighted_sample": ("sample_priority", lambda d, v, i: weighted_sample(d, 1, i, ["x"])),
+    "token_mix_sample": ("mix_rate", lambda d, v, i: token_mix_sample(
+        d, "x", {"a": 1.0}, i, ["x"])),
+    "decontaminate": ("n_contam_grams", lambda d, v, i: decontaminate(d, d, i, "x", "x", n=2)),
+    "assign_shards": ("cum_weight", lambda d, v, i: assign_shards(d, i, i, 3)),
 }
 
 
@@ -401,6 +437,25 @@ def test_added_column_named_like_an_input_raises(corpus, op):
 def _sub(d, n):
     """The rows of ``d`` with an id below 3: the members a sketch is built of."""
     return d.where(f"{_q(n['id'])} < 3")
+
+
+def _replay(d, build):
+    """The stream ``build`` makes of ``d`` replayed once (availableNow)
+    into a memory table, and that table."""
+    spark, name = d.sparkSession, f"replay_{uuid.uuid4().hex}"
+    with tempfile.TemporaryDirectory() as tmp:
+        d.write.parquet(tmp + "/d")
+        src = spark.readStream.schema(d.schema).parquet(tmp + "/d")
+        q = (build(src).writeStream.format("memory").queryName(name)
+             .outputMode("append").trigger(availableNow=True).start())
+        assert q.awaitTermination(120)
+        q.stop()
+    return spark.table(name)
+
+
+def _pairs(d, n):
+    """Pairs (id, 6 − id) of ``d``'s ids, named like the text and id columns."""
+    return d.selectExpr(f"{_q(n['id'])} AS {_q(n['x'])}", f"6 - {_q(n['id'])} AS {_q(n['id'])}")
 
 
 #: the text, retrieval, sampling and sketch calls over documents ``d`` (id,
@@ -441,6 +496,41 @@ TEXT_OPS = {
         hist_registers(d, n["v"], 0.0, 8.0, 4, [n["g"]]), [n["g"]])),
     "hist_quantiles": ("g v", lambda d, q, n: hist_quantiles(
         hist_registers(d, n["v"], 0.0, 8.0, 4, [n["g"]]), [0.5, 1.0], 0.0, 8.0, 4, [n["g"]])),
+    # churn: the group is the key, the id the snapshot time, the text the payload
+    "snapshot_changes": ("g id x", lambda d, q, n: snapshot_changes(d, n["g"], n["id"], n["x"])),
+    "snapshot_intervals": ("g id x", lambda d, q, n: snapshot_intervals(
+        d, n["g"], n["id"], n["x"])),
+    "churn_stats": ("g id x", lambda d, q, n: churn_stats(d, n["g"], n["id"], n["x"])),
+    "recrawl_priority": ("g id x", lambda d, q, n: recrawl_priority(
+        d, n["g"], n["id"], n["x"], half_life_secs=2)),
+    # the streams key by an integral column: the id is key and time
+    "streaming_snapshot_deltas": ("id x", lambda d, q, n: _replay(
+        d, lambda s: streaming_snapshot_deltas(s, n["id"], n["id"], n["x"]))),
+    "streaming_decayed_churn": ("id x", lambda d, q, n: _replay(
+        d, lambda s: streaming_decayed_churn(s, n["id"], n["id"], n["x"], half_life_secs=2))),
+    **{f"cap_per_key-{b}": ("g id v", lambda d, q, n, b=b: cap_per_key(
+        d, [n["g"]], 1, [n["id"]], order_col=n["v"], salt_buckets=b)) for b in (None, 2)},
+    "split_straddle_pairs": ("id x", lambda d, q, n: split_straddle_pairs(
+        _pairs(d, n), d, n["id"], (n["x"], n["id"]), n["x"])),
+    "assign_splits": ("id x", lambda d, q, n: assign_splits(
+        d, {"a": 0.5, "b": 0.5}, [n["id"], n["x"]], "s")),
+    "leakage_safe_splits": ("id", lambda d, q, n: leakage_safe_splits(
+        d, {"a": 0.5, "b": 0.5}, "s", n["id"])),
+    "weighted_sample": ("id g v", lambda d, q, n: weighted_sample(
+        d, 1, n["v"], [n["id"]], [n["g"]], "s")),
+    "token_mix_sample": ("g id x", lambda d, q, n: token_mix_sample(
+        d, n["g"], {"a": 0.5, "b": 0.5}, n["id"], [n["x"]], "s")),
+    "pack_sequences": ("id x", lambda d, q, n: pack_sequences(d, n["id"], n["x"], 4)),
+    "sequence_fill_stats": ("id x", lambda d, q, n: sequence_fill_stats(d, n["id"], n["x"], 4)),
+    "chunk_documents": ("id x", lambda d, q, n: chunk_documents(d, n["id"], n["x"], 3, 1)),
+    "assign_shards": ("id", lambda d, q, n: assign_shards(d, n["id"], n["id"], 3)),
+    "term_stats": ("id x g", lambda d, q, n: term_stats(d, n["id"], n["x"], n["g"])),
+    "top_terms": ("id x g", lambda d, q, n: top_terms(d, n["id"], n["x"], n["g"], k=2)),
+    "contaminant_grams": ("qt", lambda d, q, n: contaminant_grams(q, n["qt"], 1)),
+    "decontaminate": ("id x qt", lambda d, q, n: decontaminate(
+        d, q, n["id"], n["x"], n["qt"], n=1)),
+    "duplicated_span_stats": ("id x", lambda d, q, n: duplicated_span_stats(
+        d, n["id"], n["x"], n=2)),
 }
 
 #: ``a.b`` and ``g`x`` in each role a call reads
@@ -462,7 +552,19 @@ TEXT_CASES = [*((op, n, False) for op, (reads, _) in TEXT_OPS.items()
               *(("hll_registers", {"g": n}, True) for n in ("reg", "max_rank")),
               *(("hist_registers", {"g": n}, True) for n in ("bin", "cnt")),
               ("hll_estimate", {"g": "hll_est"}, True),
-              *(("hist_quantiles", {"g": n}, True) for n in ("q", "hist_est", "n_points"))]
+              *(("hist_quantiles", {"g": n}, True) for n in ("q", "hist_est", "n_points")),
+              *(("duplicated_span_stats", {"id": n}, False) for n in ("gkey", "s")),
+              ("pack_sequences", {"id": "shard"}, False),
+              ("assign_shards", {"g": "__pid"}, False),
+              ("cap_per_key-None", {"x": "__cpk_rn"}, False),
+              ("snapshot_changes", {"g": "fingerprint"}, True),
+              *(("churn_stats", {"g": n}, True) for n in ("n_snapshots", "change_rate")),
+              ("term_stats", {"id": "term"}, True),
+              ("term_stats", {"g": "cf"}, True),
+              ("top_terms", {"g": "idf"}, True),
+              *(("pack_sequences", {"id": n}, True) for n in ("n_tokens", "seq_first")),
+              ("chunk_documents", {"id": "chunk_id"}, True),
+              ("sequence_fill_stats", {"id": "seq"}, True)]
 
 
 @pytest.fixture(scope="module")
@@ -497,6 +599,20 @@ def test_text_ops_any_name(texts, plain_results, op, names, raises):
         plain_results[op] = _result(build(docs, queries, {r: r for r in n}))
     want = plain_results[op]
     assert _result(build(*args)) == ([n.get(c, c) for c in want[0]], want[1])
+
+
+def test_churn_streams_reject_a_key_they_would_merge(spark, tmp_path):
+    """The churn streams key their output as BIGINT: a DOUBLE key raises
+    IntervalSchemaError when the stream is built, where the cast would
+    merge keys 1.2 and 1.7 into key 1 and lose a change."""
+    t0 = datetime.datetime(2024, 1, 1)
+    d = spark.createDataFrame([(1.2, t0, "A"), (1.7, t0, "A"), (1.7, t0.replace(hour=1), "B")],
+                              "k double, ts timestamp, p string")
+    d.write.parquet(str(tmp_path / "d"))
+    src = spark.readStream.schema(d.schema).parquet(str(tmp_path / "d"))
+    for stream in (streaming_snapshot_deltas, streaming_decayed_churn):
+        with pytest.raises(IntervalSchemaError, match="integral"):
+            stream(src, "k", "ts", "p")
 
 
 @pytest.mark.parametrize("op", ["bloom_probe_broadcast", "cms_estimate_broadcast"])
